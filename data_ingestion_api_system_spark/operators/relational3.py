@@ -965,6 +965,11 @@ edges AS (
 # every SF (see the TOP_EDGES comment).
 KCORE_K = 3
 KCORE_ROUNDS = 3
+# The peel fold iterates F.sequence(1, KCORE_ROUNDS), which auto-steps -1
+# when start > stop: KCORE_ROUNDS = 0 would peel rounds [1, 0] instead of
+# none. Guard the constant, as MMR_K is guarded in similarity.py.
+if KCORE_ROUNDS < 1:
+    raise ValueError("KCORE_ROUNDS must be >= 1: the fold iterates sequence(1, KCORE_ROUNDS)")
 
 
 def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:

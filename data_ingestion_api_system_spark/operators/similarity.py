@@ -1850,7 +1850,8 @@ MMR_K = 5  # diversified picks
 # auto-steps -1 when start > stop, so MMR_K = 1 would silently produce a
 # DESCENDING [2, 1] and two bogus picks where the old unrolled loop
 # produced none (ADVICE r14). Guard the constant, not the call site.
-assert MMR_K >= 2, "MMR_K must be >= 2: the selection fold iterates sequence(2, MMR_K)"
+if MMR_K < 2:
+    raise ValueError("MMR_K must be >= 2: the selection fold iterates sequence(2, MMR_K)")
 _MMR_LAM_REL = 7  # λ=0.7 (×10)
 _MMR_LAM_DIV = 3  # 1−λ (×10)
 

@@ -11,6 +11,14 @@ Design (SURVEY §3.4, §4.3):
   the recompute-from-log design that makes every transition idempotent
   under retries (the exactly-once concern Delta MERGE would otherwise
   cover; the reference gets this for free by being single-threaded).
+- **Appends are driver-side file commits, reads are Spark queries.** Each
+  append of a few rows is one Arrow-built parquet file written by the
+  driver under a hidden ``.part-<uuid>.parquet`` name and renamed into
+  place — the write-temp-then-rename commit Structured Streaming uses for
+  its offset and commit logs, and no Spark job. Spark's file index skips
+  names starting with ``.`` or ``_``, so a reader sees a whole file or
+  none of it. Every read, join, rollup and top-1 runs as a Spark query
+  over the table directories.
 - **The queue is a query.** There is no queue data structure: pending =
   ``batches ⟕ latest-log WHERE status='yet_to_start' ORDER BY
   priority_level DESC, created_at ASC, request_seq ASC, batch_seq ASC
@@ -31,17 +39,22 @@ Design (SURVEY §3.4, §4.3):
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import threading
 import time
 import uuid
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..ingestion.core import priority_level
 from ..schemas import (
@@ -131,22 +144,17 @@ class IngestionPipeline:
         state_dir: str,
         config: DrainConfig | None = None,
         clock: Callable[[], datetime] | None = None,
-        durable: bool = True,
     ):
-        """``durable=True`` (production): state tables are parquet on disk,
-        surviving restarts. ``durable=False``: state rows live in driver
-        memory and materialize as DataFrames on read — identical query
-        semantics (every rollup/join/top-1 still runs through Spark), no
-        per-operation file-commit overhead; used by the fast test suite
-        (a durable-mode test keeps the parquet path covered)."""
+        """State tables are parquet directories under ``state_dir`` and
+        survive restarts: opening a pipeline over an existing directory
+        finishes or rolls back an interrupted compaction, deletes files an
+        interrupted append left under their hidden temporary name, and
+        resumes the request and log sequence counters after the highest
+        values already stored."""
         self.spark = spark
         self.state_dir = state_dir
         self.config = config or DrainConfig()
         self.clock = clock or (lambda: datetime.now(timezone.utc))
-        self.durable = durable
-        self._request_seq = 0
-        self._log_seq = 0
-        self._mem: dict[str, list] = {}
         # Run-to-completion lock: the reference executes every route handler
         # and drain cycle on one Node event loop, so no two operations ever
         # interleave mid-state-mutation. The HTTP shim + fire-and-forget
@@ -157,8 +165,11 @@ class IngestionPipeline:
         # status/ingest interleave between cycles exactly as Node timers do.
         self._op_lock = threading.RLock()
         os.makedirs(state_dir, exist_ok=True)
-        if durable:
-            self._recover_compaction()
+        self._recover_compaction()
+        for tmp in glob.glob(os.path.join(state_dir, "*", ".part-*.parquet")):
+            os.remove(tmp)  # an append that died before its rename
+        self._request_seq = self._next_seq("ingestions", _INGESTIONS_SCHEMA, "request_seq")
+        self._log_seq = self._next_seq("batch_log", _BATCH_LOG_SCHEMA, "log_seq")
 
     # -- state table helpers -------------------------------------------------
 
@@ -166,21 +177,32 @@ class IngestionPipeline:
         return os.path.join(self.state_dir, name)
 
     def _read(self, name: str, schema: T.StructType) -> DataFrame:
-        if not self.durable:
-            return self.spark.createDataFrame(self._mem.get(name, []), schema)
         path = self._path(name)
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except Exception:  # no data yet
+        if not os.path.isdir(path):  # nothing appended yet
             return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(path)
+
+    def _next_seq(self, name: str, schema: T.StructType, column: str) -> int:
+        if not os.path.isdir(self._path(name)):  # skip the query on a fresh state_dir
+            return 0
+        top = self._read(name, schema).agg(F.max(column)).head()[0]
+        return 0 if top is None else top + 1
 
     def _append(self, name: str, rows: list, schema: T.StructType) -> None:
-        if not self.durable:
-            self._mem.setdefault(name, []).extend(rows)
-            return
-        self.spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(self._path(name))
+        """Append ``rows`` as one new parquet file, written on the driver.
+        Values go through ``schema.toInternal`` first, so a naive datetime
+        keeps PySpark's local-time meaning exactly as ``createDataFrame``
+        would store it."""
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, schema.toInternal(r.asDict()))) for r in rows],
+            schema=to_arrow_schema(schema),
+        )
+        path = self._path(name)
+        os.makedirs(path, exist_ok=True)
+        part = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(path, "." + part)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, part))
 
     # -- A2-A5: ingest -------------------------------------------------------
 
@@ -293,21 +315,9 @@ class IngestionPipeline:
     # -- A6-A13: drain -------------------------------------------------------
 
     def _next_pending(self) -> Row | None:
-        """A6+A7: top-1 of the pending set under (priority DESC, created_at
-        ASC, request_seq ASC, batch_seq ASC) — TakeOrderedAndProject, not a
-        global sort."""
-        rows = (
-            self._batches_with_status()
-            .filter(F.col("status") == STATUS_YET_TO_START)
-            .withColumn("priority_level", priority_level("priority"))
-            .orderBy(
-                F.desc("priority_level"),
-                F.asc("created_at"),
-                F.asc("request_seq"),
-                F.asc("batch_seq"),
-            )
-            .head(1)
-        )
+        """A6+A7: top-1 of :meth:`queue_snapshot` — TakeOrderedAndProject,
+        not a global sort."""
+        rows = self.queue_snapshot().head(1)
         return rows[0] if rows else None
 
     def _log(self, batch_id: str, status: str) -> None:
@@ -369,8 +379,6 @@ class IngestionPipeline:
         Either way the surviving ``batch_log`` is a complete, consistent
         log and the leftover staging directories are cleared.
         """
-        import shutil
-
         log_p = self._path("batch_log")
         staged = self._path("batch_log__compacted")
         retired = self._path("batch_log__retired")
@@ -413,15 +421,6 @@ class IngestionPipeline:
                     F.col("m.log_seq").alias("log_seq"),
                 )
             )
-            if not self.durable:
-                rows = [
-                    Row(batch_id=r.batch_id, status=r.status, log_seq=r.log_seq)
-                    for r in compacted.collect()
-                ]
-                self._mem["batch_log"] = rows
-                return len(rows)
-            import shutil
-
             staged = self._path("batch_log__compacted")
             retired = self._path("batch_log__retired")
             compacted.write.mode("overwrite").parquet(staged)
@@ -440,8 +439,6 @@ class IngestionPipeline:
         and restart sequence counters — the test-harness hook. On a Delta
         deployment this is TRUNCATE TABLE; on raw parquet state it drops
         the directories."""
-        import shutil
-
         with self._op_lock:
             for name in (
                 "ingestions",
@@ -452,7 +449,6 @@ class IngestionPipeline:
                 "processed",
             ):
                 shutil.rmtree(self._path(name), ignore_errors=True)
-            self._mem.clear()
             self._request_seq = 0
             self._log_seq = 0
 
@@ -485,7 +481,8 @@ class IngestionPipeline:
     # -- observability -------------------------------------------------------
 
     def queue_snapshot(self) -> DataFrame:
-        """The pending set in dequeue order (A6) — what the reference's
+        """The pending set in dequeue order (A6): priority DESC, created_at
+        ASC, request_seq ASC, batch_seq ASC — what the reference's
         batchQueue array would contain."""
         return (
             self._batches_with_status()

@@ -9,7 +9,13 @@ over the library pipeline, using only the stdlib.
 
 Ingest triggers the drain loop fire-and-forget on a worker thread —
 the async boundary the reference creates with an un-awaited
-``processBatches()`` (src/app.js:152). A lock serializes drains (A13).
+``processBatches()`` (src/app.js:152). A lock serializes drains (A13),
+and a wake flag keeps a wakeup from being lost: every ingest sets the flag
+before starting its thread, and whichever thread holds the lock clears
+the flag before it drains and checks it again after releasing the lock.
+An ingest that lands while an earlier drain is exiting (its queue already
+seen empty, the lock still held) therefore gets drained by that thread's
+next loop instead of waiting for the next POST.
 The library API (drain.IngestionPipeline) stays the primary surface; this
 shim exists for black-box route-level parity testing.
 """
@@ -25,15 +31,18 @@ from .drain import IngestionPipeline, InvalidRequest, NotFound
 
 def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServer:
     drain_lock = threading.Lock()
+    wake = threading.Event()
+
+    def run() -> None:
+        while wake.is_set() and drain_lock.acquire(blocking=False):  # A13
+            try:
+                wake.clear()
+                pipeline.drain_all()
+            finally:
+                drain_lock.release()
 
     def drain_async() -> None:
-        def run() -> None:
-            if drain_lock.acquire(blocking=False):  # A13: single drain loop
-                try:
-                    pipeline.drain_all()
-                finally:
-                    drain_lock.release()
-
+        wake.set()
         threading.Thread(target=run, daemon=True).start()
 
     class Handler(BaseHTTPRequestHandler):

@@ -22,8 +22,10 @@ from datetime import datetime, timedelta, timezone
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from data_ingestion_api_system_spark.streaming.drain import (
+    _BATCHES_SCHEMA,
     DrainConfig,
     IngestionPipeline,
 )
@@ -103,7 +105,6 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
         str(tmp_path_factory.mktemp("drain_prop")),
         DrainConfig(),
         clock=lambda: _EPOCH + timedelta(seconds=clock["t"]),
-        durable=False,
     )
     model = ReferenceModel()
     requests: list[tuple[int, int, str]] = []  # (model_seq, n_ids, ing_id)
@@ -140,11 +141,16 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
 
 def _batch_key(pipe: IngestionPipeline, batch_id: str) -> tuple[int, int]:
     """(request_seq, batch_seq) identity of a drained batch — read from the
-    non-durable state rows; white-box but exact."""
-    for row in pipe._mem["batches"]:
-        if row.batch_id == batch_id:
-            return (row.request_seq, row.batch_seq)
-    raise AssertionError(f"unknown batch_id {batch_id}")
+    ``batches`` state table; white-box but exact."""
+    rows = (
+        pipe._read("batches", _BATCHES_SCHEMA)
+        .filter(F.col("batch_id") == batch_id)
+        .select("request_seq", "batch_seq")
+        .collect()
+    )
+    if len(rows) != 1:
+        raise AssertionError(f"batch_id {batch_id} stored {len(rows)} times")
+    return (rows[0].request_seq, rows[0].batch_seq)
 
 
 def test_gap_after_work_arithmetic(spark, tmp_path):
@@ -157,7 +163,6 @@ def test_gap_after_work_arithmetic(spark, tmp_path):
         spark,
         str(tmp_path),
         DrainConfig(per_id_delay=per_id, batch_gap=gap),
-        durable=False,
     )
     pipe.ingest([1, 2, 3, 4], "HIGH")  # batches: [1,2,3], [4]
     t0 = time.perf_counter()
@@ -174,7 +179,6 @@ def test_no_gap_when_queue_empty(spark, tmp_path):
         spark,
         str(tmp_path),
         DrainConfig(per_id_delay=0.5, batch_gap=5.0),
-        durable=False,
     )
     t0 = time.perf_counter()
     assert pipe.drain_step() is None

@@ -6,6 +6,9 @@ between steps instead of at timed checkpoints."""
 
 from __future__ import annotations
 
+import time
+from datetime import datetime, timezone
+
 import pytest
 
 from data_ingestion_api_system_spark.streaming.drain import (
@@ -18,14 +21,12 @@ from data_ingestion_api_system_spark.streaming.drain import (
 
 @pytest.fixture()
 def pipeline(spark, tmp_path):
-    # in-memory state: same Spark query semantics, no per-op parquet commits
-    return IngestionPipeline(spark, str(tmp_path / "state"), durable=False)
+    return IngestionPipeline(spark, str(tmp_path / "state"))
 
 
 def test_durable_state_survives_reopen(spark, tmp_path):
-    """The parquet-backed (durable=True) path: state written by one
-    pipeline object is visible to a fresh one over the same state dir —
-    the restart-survival property the in-memory mode trades away."""
+    """State written by one pipeline object is visible to a fresh one over
+    the same state dir."""
     state = str(tmp_path / "state")
     p1 = IngestionPipeline(spark, state)
     ing = p1.ingest([1, 2, 3, 4], "HIGH")
@@ -295,3 +296,154 @@ def test_compaction_crash_recovery(spark, tmp_path):
     p3 = IngestionPipeline(spark, state)
     assert os.path.exists(log_p) and not os.path.exists(staged)
     assert p3.status(ing) == before
+
+
+# -- durable state: driver-side appends, reopen, read errors ------------------
+
+_T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+
+
+def test_append_starts_no_spark_job(spark, pipeline):
+    """An ingest (two appends) and a status-log append are file commits on
+    the driver: no Spark job runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("append-probe", "append-probe")
+    try:
+        ing = pipeline.ingest([1, 2, 3, 4], "HIGH")
+        pipeline._log("some-batch", "triggered")
+        jobs = sc.statusTracker().getJobIdsForGroup("append-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert len(pipeline.status(ing)["batches"]) == 2
+
+
+@pytest.fixture()
+def pacific_time(monkeypatch):
+    """A non-UTC process time zone, so a naive datetime's local-time
+    meaning differs from reading it as UTC."""
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_append_round_trips_every_column_type(spark, pipeline, pacific_time):
+    """string, int32, int64, array<bigint> and timestamps from tz-aware and
+    naive clocks read back exactly as ``createDataFrame`` stores them; a
+    naive datetime keeps PySpark's local-time meaning."""
+    from pyspark.sql import Row
+
+    from data_ingestion_api_system_spark.streaming.drain import _BATCHES_SCHEMA
+
+    aware = datetime(2024, 7, 1, 12, 30, 45, 123456, tzinfo=timezone.utc)
+    naive = datetime(2024, 1, 15, 8, 5, 9, 654321)
+    rows = [
+        Row(batch_id="b-aware", ingestion_id="i-ü", request_seq=2**62,
+            batch_seq=2**31 - 1, ids=[1, 2**62], priority="HIGH", created_at=aware),
+        Row(batch_id="b-naive", ingestion_id="i", request_seq=0,
+            batch_seq=-(2**31), ids=[], priority="LOW", created_at=naive),
+    ]
+    pipeline._append("batches", rows, _BATCHES_SCHEMA)
+    got = sorted(pipeline._read("batches", _BATCHES_SCHEMA).collect())
+    assert got == sorted(spark.createDataFrame(rows, _BATCHES_SCHEMA).collect())
+    by_id = {r.batch_id: r for r in got}
+    assert by_id["b-naive"].created_at == naive
+    assert by_id["b-aware"].created_at == aware.astimezone().replace(tzinfo=None)
+
+
+def test_leftover_temp_file_ignored_and_removed_at_open(spark, tmp_path):
+    """A file an interrupted append left under its hidden temporary name
+    is invisible to reads and deleted when the pipeline is next opened."""
+    import glob
+    import os
+    import shutil
+
+    state = str(tmp_path / "state")
+    p = IngestionPipeline(spark, state)
+    ing = p.ingest([1, 2, 3, 4], "HIGH")
+    (part,) = glob.glob(os.path.join(state, "batches", "part-*.parquet"))
+    leftover = os.path.join(state, "batches", ".part-interrupted.parquet")
+    shutil.copy(part, leftover)  # same rows: a reader that saw it would double them
+    assert len(p.status(ing)["batches"]) == 2
+    p2 = IngestionPipeline(spark, state)
+    assert not os.path.exists(leftover)
+    assert len(p2.status(ing)["batches"]) == 2
+
+
+def test_reads_and_extends_spark_written_state(spark, tmp_path):
+    """State directories committed by Spark's own parquet writer read back
+    exactly and keep accepting driver-side appends."""
+    import os
+
+    from pyspark.sql import Row
+
+    from data_ingestion_api_system_spark.streaming.drain import (
+        _BATCH_LOG_SCHEMA,
+        _BATCHES_SCHEMA,
+        _INGESTIONS_SCHEMA,
+    )
+
+    state = str(tmp_path / "state")
+    old = {
+        "ingestions": ([Row(ingestion_id="old", request_seq=0, priority="LOW",
+                            created_at=_T0)], _INGESTIONS_SCHEMA),
+        "batches": ([Row(batch_id=f"old-{i}", ingestion_id="old", request_seq=0,
+                         batch_seq=i, ids=ids, priority="LOW", created_at=_T0)
+                     for i, ids in enumerate([[1, 2, 3], [4]])], _BATCHES_SCHEMA),
+        "batch_log": ([Row(batch_id="old-0", status="triggered", log_seq=0),
+                       Row(batch_id="old-0", status="completed", log_seq=1)],
+                      _BATCH_LOG_SCHEMA),
+    }
+    for name, (rows, schema) in old.items():
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
+            os.path.join(state, name)
+        )
+    p = IngestionPipeline(spark, state, clock=lambda: _T0)
+    assert sorted(p._read("batches", _BATCHES_SCHEMA).collect()) == sorted(
+        spark.createDataFrame(old["batches"][0], _BATCHES_SCHEMA).collect()
+    )
+    assert [b["status"] for b in p.status("old")["batches"]] == ["completed", "yet_to_start"]
+    new = p.ingest([5, 6], "LOW")
+    assert p.drain_all() == 2
+    assert p.status("old")["status"] == p.status(new)["status"] == "completed"
+    assert sorted(r.id for r in p.processed_results().collect()) == [4, 5, 6]
+
+
+def test_reopen_resumes_sequence_counters(spark, tmp_path):
+    """Request and log sequence numbers continue after the stored maxima on
+    reopen: a new request sorts after an older one with the same
+    created_at, and new log rows sort after every existing one."""
+    from data_ingestion_api_system_spark.streaming.drain import _BATCH_LOG_SCHEMA
+
+    state = str(tmp_path / "state")
+    p1 = IngestionPipeline(spark, state, clock=lambda: _T0)
+    first = p1.ingest([1, 2, 3, 4, 5, 6], "LOW")  # two batches
+    p1.drain_step()
+    old_seqs = [r.log_seq for r in p1._read("batch_log", _BATCH_LOG_SCHEMA).collect()]
+
+    p2 = IngestionPipeline(spark, state, clock=lambda: _T0)
+    second = p2.ingest([7], "LOW")
+    assert p2.drain_step() == p2.status(first)["batches"][1]["batch_id"]
+    assert p2.drain_step() == p2.status(second)["batches"][0]["batch_id"]
+    seqs = [r.log_seq for r in p2._read("batch_log", _BATCH_LOG_SCHEMA).collect()]
+    new_seqs = sorted(set(seqs) - set(old_seqs))
+    assert len(seqs) == len(set(seqs)) == len(old_seqs) + 4
+    assert min(new_seqs) > max(old_seqs)
+
+
+def test_state_read_error_is_not_a_404(pipeline, monkeypatch):
+    """Only a missing table directory reads as empty; any other failure to
+    read state surfaces instead of turning into 'not found'."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    ing = pipeline.ingest([1], "LOW")
+
+    def unreadable(self, *paths, **options):
+        raise RuntimeError("unreadable state table")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
+    with pytest.raises(RuntimeError, match="unreadable state table"):
+        pipeline.status(ing)

@@ -77,7 +77,7 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
 def test_streaming_drain_processes_batches(spark, tmp_path):
     """The always-on drain (rate-source heartbeat + foreachBatch) completes
     queued work without manual stepping."""
-    pipeline = IngestionPipeline(spark, str(tmp_path / "state"), durable=False)
+    pipeline = IngestionPipeline(spark, str(tmp_path / "state"))
     ing = pipeline.ingest([1, 2, 3, 4], "HIGH")
     q = pipeline.start_streaming_drain(trigger_seconds=0.5)
     try:
