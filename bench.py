@@ -1,13 +1,25 @@
 #!/usr/bin/env python3
-"""Per-round benchmark: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"""Full-registry benchmark: times every ``__spark_entry__.queries()`` entry
+at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS].
 
-The headline set covers every operator family (ingestion dataflow,
-TPC-H-style joins/aggs, windows, events, text, dedup incl. MinHash-LSH,
-embedding similarity, the Pandas-UDF multimodal path) so a regression in
-any family moves the number.
+Protocol ``warm_b3_m5`` (``time_entry``): each entry runs once untimed to
+absorb codegen compile and broadcast build. If that warm rep took >= 1 s
+the entry reports the best of three timed reps; otherwise the median of
+five, because at sub-second scale scheduler jitter is a large share of
+the number and a best-of-three drifts where the median holds. Before
+every rep the entry's pins are released and the session cache cleared
+(``operators.fresh_build``), so each rep executes the full plan. The
+clock covers the DataFrame build plus the Arrow ``toPandas`` collect.
+
+Record: one JSON object per run, written to $SPARK_GRAFT_BENCH_OUT
+(default ``BENCH_LAST_FULL.json``) after every entry with
+``"complete": false``, so a truncated run leaves a parseable prefix, and
+once more at the end with ``"complete": true``. It holds each entry's
+value (``queries``) and raw timed samples (``samples``); ``value`` is the
+total over all entries and ``comparable_value`` the total over the fixed
+``HEADLINE`` set. Stdout gets the full record, then a compact summary as
+the last line so a tail-truncated capture still ends in parseable JSON.
 """
 
 from __future__ import annotations
@@ -17,9 +29,12 @@ import os
 import sys
 import time
 from pathlib import Path
+from statistics import median
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+# A fixed set spanning every operator family, so ``comparable_value`` stays
+# comparable across runs while the registry grows.
 HEADLINE = [
     "pipeline_status_rollup",
     "tpch_q1_pricing_summary",
@@ -39,514 +54,113 @@ HEADLINE = [
     "multimodal_features",
 ]
 
-# Added round 7 (VERDICT r6 #3): the round-6 operators with nontrivial
-# shuffle/join shapes previously had zero perf accountability, plus the
-# re-planned RFM segmentation (global_ntile instead of global-sort ntile).
-# Kept in a separate list so cross-round total comparisons can subtract
-# them ("queries_added" in the JSON) instead of reading growth of the
-# headline set as a regression.
-ADDED_R7 = [
-    "dedup_semantic",
-    "graph_triangle_count",
-    "basket_brand_pairs",
-    "text_inverted_index",
-    "prep_dsir_weights",
-    "events_rfm_segmentation",
-    # round-7 additions with nontrivial shuffle/join/Python-exec shapes —
-    # benched from birth so they never accrue a perf-accountability gap:
-    "cdc_apply_log",
-    "attribution_multi_touch",
-    "dq_skew_report",
-    "revenue_share_hier",
-    "prep_source_kl_drift",
-    "multimodal_phash_dedup",
-    # round-7c: layout/sketch/sweep operators with nontrivial shapes
-    # (stack+constant-width agg, mergeable HLL, two-level prefix sum,
-    # single-WindowExec five-frame feature pass)
-    "layout_zorder_skipping",
-    "sketch_hll_union_rollup",
-    "orders_backlog_sweep",
-    "events_ts_features",
-    "join_incremental_delta",
-    "events_path_mining",
-    "sim_centroid_drift",
-    "text_ngram_novelty",
-    "events_ab_test",
-    "events_linreg_trend",
-    "layout_compaction_bins",
-    "sketch_join_size_estimate",
-    "events_cusum_changepoint",
-    "dq_mad_outliers",
-    "events_seasonal_backtest",
-    "text_entropy_score",
-    "streaming_static_enrich",
-    "sim_pq_adc_search",
-    "io_partitioned_roundtrip",
-    "arrow_cents_ledger",
-    "events_streaks",
-    "events_dau_wau",
-    "sim_ndcg_eval",
-]
-
-# Added round 8: benched from birth (same policy as ADDED_R7) — the two
-# gaps-and-islands/window shapes, the label-prop join loop, the MG
-# candidate+verify sketch, the broadcast-batch hard-negative scorer, the
-# CSV sink cycle, the streaming windowed top-k, and the two narrow-map
-# audits (Benford, length buckets).
-ADDED_R8 = [
-    "events_interval_merge",
-    "orders_pareto_frontier",
-    "graph_label_prop",
-    "text_length_buckets",
-    "sim_hard_negatives",
-    "sketch_heavy_hitters",
-    "dq_benford_check",
-    "streaming_windowed_topk",
-    "io_csv_roundtrip",
-    "multimodal_audio_windows",
-    "orders_abc_classification",
-    "graph_common_neighbors",
-    "io_json_roundtrip",
-    "sql_lateral_topk",
-    "orders_cohort_ltv",
-    "text_rake_keyphrases",
-    "dedup_lsh_tuning_sweep",
-    "sim_ivf_nprobe_sweep",
-    "join_salted_skew",
-    "text_tokenizer_fertility",
-]
-
-# Added round 9: benched from birth — the ORC typed-columnar sink cycle,
-# the deterministic KMV distinct sketch (merged + direct paths), PMI
-# collocation mining, truncated-Katz walk counts, and the MMR
-# diversified-retrieval unroll.
-ADDED_R9 = [
-    "io_orc_roundtrip",
-    "sketch_kmv_distinct",
-    "text_pmi_collocations",
-    "graph_katz_centrality",
-    "sim_mmr_diversify",
-    # round-9b: the curation funnel, the BPE pair-count trainer step, the
-    # incremental bloom dedup (K chained broadcast joins + verify join),
-    # the theta-sketch overlap, the FK orphan sweep (7 anti-joins), the
-    # survival risk-set table, the k-core peel loop, and the Heaps curve
-    "text_filter_funnel",
-    "text_bpe_merge_step",
-    "dedup_incremental_bloom",
-    "sketch_theta_intersection",
-    "dq_referential_orphans",
-    "events_survival_hazard",
-    "graph_kcore_peel",
-    "text_heaps_vocab_growth",
-    # round-9c: the merge-schema sink cycle, the one-pass-per-table
-    # ANALYZE stats (multi-distinct Expand), and the global-quartile
-    # curriculum scheduler
-    "io_schema_evolution",
-    "layout_column_stats",
-    "prep_curriculum_order",
-    # round-9d: exact-integer Kneser-Ney scoring (three count-table
-    # joins), per-user bot screening (one reused exchange), cumulative
-    # reach (first-occurrence identity)
-    "text_kneser_ney_score",
-    "events_bot_score",
-    "events_cumulative_reach",
-    # round-9e: cluster-purity eval (broadcast argmax + bounded eval),
-    # WoW growth (bounded lag window), class migration (two global_ntile
-    # range exchanges + 9-cell matrix)
-    "sim_cluster_purity",
-    "events_wow_growth",
-    "orders_class_migration",
-    # round-9f: the ppm power iteration, the inter-order gap histogram,
-    # and the fixed-point dimension-variance ranking
-    "events_markov_stationary",
-    "orders_repeat_purchase",
-    "sim_dim_variance_topk",
-    # round-9g: SLO burn accounting, the big-big ship-latency join, and
-    # the broadcast-vocab OOV audit
-    "events_error_budget_burn",
-    "orders_ship_latency",
-    "text_vocab_coverage",
-]
+SUMMARY_KEYS = (
+    "metric",
+    "value",
+    "unit",
+    "comparable_value",
+    "sf",
+    "timing",
+    "load_1m_at_start",
+    "load_1m_at_end",
+)
 
 
-# Added round 10 (VERDICT r9 #3): the full-registry backfill — every entry
-# added in rounds 1-6 that was in neither HEADLINE nor a later cohort had
-# no solo bench series, so round-over-round regressions there were
-# invisible. With this cohort the bench covers the ENTIRE registry
-# (206/206); per-entry wall cost is bounded by the same warm_b3_m5
-# methodology, and the per-query checkpoint file (below) means a driver-side
-# timeout truncates the record to a usable prefix instead of losing it.
-ADDED_R10 = [
-    "pipeline_validate",
-    "pipeline_chunk",
-    "pipeline_queue_order",
-    "pipeline_status_counts",
-    "scalar_functions",
-    "tpch_q7_nation_volume",
-    "tpch_q9_product_profit",
-    "asof_join_attribution",
-    "tpch_q8_market_share",
-    "tpch_q13_order_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    "salted_aggregation",
-    "prep_training_mix",
-    "prep_decontaminate",
-    "prep_temperature_mix",
-    "dedup_containment",
-    "sim_quantize_int8",
-    "sim_pq_codes",
-    "sim_recall_eval",
-    "text_chunk_windows",
-    "text_tfidf_topk",
-    "text_cross_doc_spans",
-    "text_perplexity_ngram",
-    "text_weighted_sample",
-    "multimodal_resize",
-    "streaming_stateful_totals",
-    "events_markov_transitions",
-    "window_time_range_frame",
-    "tpch_q6_forecast_revenue",
-    "tpch_q10_returned_items",
-    "join_semi_anti",
-    "set_ops",
-    "agg_rollup",
-    "sketch_histogram_quantiles",
-    "sketch_bloom_membership",
-    "text_bigram_coherence",
-    "events_gap_fill",
-    "sim_kmeans_train",
-    "sql_recursive_backoff",
-    "events_funnel",
-    "events_anomaly",
-    "orders_scd2",
-    "events_variant_shred",
-    "rollup_incremental",
-    "group_median",
-    "graph_pagerank",
-    "dq_constraint_report",
-    "cohort_retention",
-    "train_test_split",
-    "fuzzy_name_match",
-    "text_repetition_score",
-    "dedup_embedding_cosine",
-    "dedup_ngram_jaccard",
-    "sim_intra_label_stats",
-    "sim_lsh_bucket_stats",
-    "sim_matryoshka_recall",
-    "text_bpe_tokens",
-    "text_word_freq",
-    "text_ngram_profile",
-    "text_sequence_pack",
-    "text_stratified_sample",
-    "multimodal_size_rollup",
-    "join_full_outer_reconcile",
-    "agg_cube",
-    "distinct_agg",
-    "tpch_q4_order_priority",
-    "tpch_q14_promo_effect",
-    "tpch_q19_discounted_revenue",
-    "pivot_priority_by_year",
-    "sql_scalar_subquery",
-    "sql_grouping_sets",
-    "approx_distinct_sketch",
-    "date_functions",
-    "tpch_q22_sales_opportunity",
-    "unpivot_measures",
-    "map_columns_roundtrip",
-    "dedup_lsh_verified",
-    "dedup_cluster_cc",
-    "dedup_simhash",
-    "sim_ivf_ann",
-    "sim_lsh_ann",
-    "sim_kmeans_step",
-    "text_quality_score",
-    "text_lang_id",
-    "text_pii_redact",
-    "sketch_count_min",
-    "events_decay_value",
-    "multimodal_frame_sample",
-    "range_join_binned",
-    "streaming_tumbling_window",
-    "streaming_sliding_window",
-    "streaming_session_window",
-    "streaming_dedup",
-    "streaming_stream_join",
-    "events_sliding_window",
-    "events_json_extract",
-    "events_type_stats",
-    "window_distribution_funcs",
-    "window_lag_lead",
-    "window_rank_dense",
-    "window_moving_avg",
-    "set_ops_bag",
-    "pandas_udf_token_count",
-    "apply_in_pandas_rank",
-    "grouped_agg_udaf",
-    "udtf_chunk_text",
-]
+def time_entry(spark, fn, sf_dir: str) -> tuple[float, list[float], int]:
+    """Time one entry under warm_b3_m5 -> (value, timed samples, rows)."""
+    from data_ingestion_api_system_spark.operators import fresh_build
 
-# Added round 11: the four partsupp-only TPC-H queries over the derived
-# deterministic partsupp (operators/tpch_ps.py) — keeps the bench total
-# over the whole registry.
-ADDED_R11 = [
-    "tpch_q2_min_cost_supplier",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_variety",
-    "tpch_q20_promotion_stock",
-]
+    def rep() -> tuple[float, int]:
+        start: list[float] = []
 
-# Added round 12: Zipf OLS fit, RRF hybrid-retrieval fusion, per-type Gini.
-ADDED_R12 = [
-    "text_zipf_fit",
-    "sim_rank_fusion",
-    "events_gini_concentration",
-]
+        def build(spark, sf_dir):
+            # the clock starts after isolation: it covers build + collect
+            start.append(time.perf_counter())
+            return fn(spark, sf_dir)
 
-# Added round 13 (curation cohort): passage-level exact-substring dedup,
-# URL canonicalization + per-domain caps, quality-threshold calibration.
-ADDED_R13 = [
-    "dedup_exact_substr",
-    "prep_domain_caps",
-    "text_quality_calibration",
-    "text_hashed_classifier",
-    "prep_doremi_step",
-    # 13b cohort: boilerplate frequency removal, privacy audit,
-    # Adamic-Adar, data-constrained epochs, spatial radius join
-    "text_boilerplate_passages",
-    "dq_k_anonymity",
-    "graph_adamic_adar",
-    "prep_epoch_allocator",
-    "geo_radius_join",
-]
+        rows = len(fresh_build(spark, build, sf_dir).toPandas())
+        return time.perf_counter() - start[0], rows
 
-# Added round 14 (ablation cohort): CCNet-style LM tercile bucketing,
-# the eval-contamination (benchmark x source) matrix, and the tokenizer
-# vocab-size-transfer fertility/OOV table.
-ADDED_R14 = [
-    "text_ccnet_buckets",
-    "prep_contamination_matrix",
-    "text_vocab_transfer",
-    "text_repetition_filters",
-    "sim_bitext_margin",
-]
+    warm, rows = rep()
+    samples = [rep()[0] for _ in range(3 if warm >= 1.0 else 5)]
+    value = min(samples) if len(samples) == 3 else median(samples)
+    return round(value, 3), [round(s, 3) for s in samples], rows
+
+
+def make_record(
+    timings: dict[str, float],
+    samples: dict[str, list[float]],
+    sf: float,
+    load_1m_at_start: float,
+    complete: bool,
+) -> dict:
+    return {
+        "metric": "headline_queries_total_runtime",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "samples": samples,
+        "queries_added": [n for n in timings if n not in HEADLINE],
+        "comparable_value": round(sum(timings.get(n, 0.0) for n in HEADLINE), 3),
+        "sf": sf,
+        "timing": "warm_b3_m5",
+        "load_1m_at_start": load_1m_at_start,
+        "load_1m_at_end": round(os.getloadavg()[0], 2),
+        "complete": complete,
+    }
+
+
+def write_record(path: Path, record: dict) -> None:
+    # write-then-rename: a run killed mid-write never leaves torn JSON
+    tmp = path.with_name(path.name + ".tmp")
+    tmp.write_text(json.dumps(record) + "\n")
+    os.replace(tmp, path)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
-    # Bench-integrity marker (VERDICT r7 #7): two rounds in a row the
-    # committed bench was contaminated by co-running load on this shared
-    # 32-way box (r6: pytest overlap; r7: unknown co-load, 14.0 s recorded
-    # vs 12.1 s solo). Record the 1-minute load average BEFORE Spark starts
-    # so a contaminated run is visible in-band; >4.0 on an otherwise-idle
-    # 32-cpu box means something substantial is already running.
-    load_1m_at_start = round(os.getloadavg()[0], 2)
-    if load_1m_at_start > 4.0:
-        print(
-            f"# WARNING: load_1m={load_1m_at_start} at start — timings below "
-            "are contention-contaminated; re-run on a quiet box",
-            file=sys.stderr,
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    out_path = Path(
+        os.environ.get(
+            "SPARK_GRAFT_BENCH_OUT",
+            Path(__file__).resolve().parent / "BENCH_LAST_FULL.json",
         )
+    )
+    load_1m_at_start = round(os.getloadavg()[0], 2)
 
-    from data_ingestion_api_system_spark.session import get_spark
     import __spark_entry__ as entrymod
-
-    spark = get_spark("bench")
-    qs = entrymod.queries()
-
-    # warmup: touch every table once so JVM/codegen/file-index startup cost
-    # doesn't land on whichever query happens to run first
+    from data_ingestion_api_system_spark.session import get_spark
     from data_ingestion_api_system_spark.tables import load_tables
 
+    spark = get_spark("bench")
+    # touch every table once so JVM/codegen/file-index startup cost doesn't
+    # land on whichever entry happens to run first
     for df in load_tables(spark, sf_dir).values():
         df.count()
 
-    # Each query runs once untimed (warmup), then is timed. The warmup
-    # absorbs one-time codegen compile / broadcast build; queries whose
-    # warmup ran >= 1 s report the BEST of three timed runs (absorbs C2 JIT
-    # promotion and transient CPU-contention spikes — this box is a shared
-    # VM, identical queries were observed to swing 2-4x run-to-run), while
-    # sub-second queries report the MEDIAN of five timed runs: at that
-    # absolute scale scheduler jitter is a large fraction of the number and
-    # best-of-3 drifted ±38% round-over-round on unchanged plans (VERDICT
-    # r6 #6) — the median of five is stable to <10%. The dedicated warmup
-    # rep exists because 3 total runs proved insufficient for the two
-    # largest codegen plans (measured: status-rollup runs 1-4 =
-    # 10.3/8.4/3.4/1.8 s — best-of-3-including-cold reported 3.4 s for a
-    # 1.8 s steady state). Caches/pins created inside a query are dropped
-    # between runs so every timed run re-executes the full plan.
-    from statistics import median
-
-    from data_ingestion_api_system_spark.operators import release_pins
-
-    # Per-query checkpoint (VERDICT r9 #3/#6): the full set is now the whole
-    # 206-entry registry, so a driver-side timeout mid-run must leave a
-    # usable prefix record instead of nothing. Untracked sibling; the final
-    # authoritative record is still written once at the end.
-    partial_path = str(
-        Path(
-            os.environ.get(
-                "SPARK_GRAFT_BENCH_OUT",
-                str(Path(__file__).resolve().parent / "BENCH_LOCAL.json"),
-            )
-        ).with_suffix(".partial.json")
-    )
-
     timings: dict[str, float] = {}
-    for name in HEADLINE + ADDED_R7 + ADDED_R8 + ADDED_R9 + ADDED_R10 + ADDED_R11 + ADDED_R12 + ADDED_R13 + ADDED_R14:
-        fn = qs[name]
-
-        def run_once():
-            release_pins()  # after the previous materialization, never mid-run
-            spark.catalog.clearCache()
-            start = time.perf_counter()
-            n = len(fn(spark, sf_dir).toPandas())  # Arrow-batched materialization
-            return time.perf_counter() - start, n
-
-        warm_sec, rows = run_once()
-        reps = 3 if warm_sec >= 1.0 else 5
-        samples = [run_once()[0] for _ in range(reps)]
-        timings[name] = round(min(samples) if reps == 3 else median(samples), 3)
+    samples: dict[str, list[float]] = {}
+    for name, fn in entrymod.queries().items():
+        timings[name], samples[name], rows = time_entry(spark, fn, sf_dir)
         print(
             f"# {name}: {timings[name]:.3f}s ({rows} rows, "
-            f"{'best of 3' if reps == 3 else 'median of 5'})",
+            f"{'best of 3' if len(samples[name]) == 3 else 'median of 5'})",
             file=sys.stderr,
         )
-        with open(partial_path, "w") as fh:
-            # carry the run-identity fields the final record has, so a
-            # recovered prefix can't be mistaken for a different run's
-            # sf / methodology (e.g. a stale sf0.1 partial read as the
-            # truncated record of a later sf0.01 run)
-            json.dump(
-                {
-                    "queries": timings,
-                    "sf": float(sf),
-                    "timing": "warm_b3_m5",
-                    "partial": True,
-                    "load_1m_at_start": load_1m_at_start,
-                },
-                fh,
-            )
+        write_record(
+            out_path, make_record(timings, samples, sf, load_1m_at_start, False)
+        )
 
-    total = round(sum(timings.values()), 3)
-    record = {
-        "metric": "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "queries_added": ADDED_R7 + ADDED_R8 + ADDED_R9 + ADDED_R10 + ADDED_R11 + ADDED_R12 + ADDED_R13 + ADDED_R14,
-        "comparable_value": round(sum(timings[n] for n in HEADLINE), 3),
-        "sf": float(sf),
-        # methodology marker so cross-round numbers are
-        # self-describing: r1 was single-run ("single"), r2-r5
-        # best-of-three including the cold run ("best_of_3"), r6
-        # one untimed warmup then best-of-three ("warm_best_of_3"),
-        # r7+ warm best-of-3 for >=1 s queries and warm
-        # median-of-5 for sub-second ones ("warm_b3_m5") — compare
-        # "comparable_value" (the r6 query set) across rounds.
-        "timing": "warm_b3_m5",
-        "load_1m_at_start": load_1m_at_start,
-        # Start-AND-end load (SCALE.md r14 drift finding): co-tenant
-        # bursts on this shared VM arrive on a ~minutes cadence, so a
-        # ~4-min run can start at load 0.0 and still absorb one — the
-        # r14 streaming-tail contamination. End-of-run load bounds that
-        # blind spot: a run is burst-clean only if BOTH are low.
-        "load_1m_at_end": round(os.getloadavg()[0], 2),
-    }
-    result = json.dumps(record)
-    print(result)
-    # Unconditional full-record artifact (VERDICT r14 #2): the driver's
-    # stdout scrape keeps only the last ~2000 chars, which for two rounds
-    # running destroyed per-query comparability (PERF per_query = {}), and
-    # the quiet-guard divert below means BENCH_LOCAL.json may deliberately
-    # NOT hold the latest run. This file always holds the full record of
-    # the MOST RECENT completed run — no quiet guard, no divert — so a
-    # driver/judge can diff per-query timings without stdout capture. It
-    # never feeds the committed quiet series (that is BENCH_LOCAL.json,
-    # still guard-protected below).
-    with open(Path(__file__).resolve().parent / "BENCH_LAST_FULL.json", "w") as fh:
-        fh.write(result + "\n")
-    # Also persist to a file (VERDICT r7 #2): the committed BENCH_r07.json
-    # was a truncated stderr/stdout scrape that lost 12 of 16 headline
-    # timings — a file write survives any pipe-tail truncation. Path is
-    # overridable so the driver and local runs don't fight over it.
-    out_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT",
-        str(Path(__file__).resolve().parent / "BENCH_LOCAL.json"),
-    )
-    # Overwrite guard (VERDICT r8 #2): in rounds 7 AND 8 a loaded driver run
-    # overwrote the committed solo record at this path, and r8's round-end
-    # commit destroyed the round's only clean perf series. A noisier run
-    # must never replace a quieter record: if the existing record started
-    # at materially lower load than this run (>0.5 on the 1-min average —
-    # in round 9 a load-3.51 run slipped under the old fixed 4.0 gate and
-    # overwrote a load-0.4 record, inflating the series 15%), divert this
-    # run to an untracked sibling (*.live.json, gitignored) and leave the
-    # quieter file alone. Quieter-or-equal runs still refresh the record.
-    # Start loads compare across all records. End loads include the
-    # bench's OWN 32-thread contribution (roughly constant run-to-run),
-    # so they are only comparable to EACH OTHER — when both records
-    # carry one, a materially higher end flags a mid-run co-tenant
-    # burst the start reading missed (r14 finding) and diverts too.
-    existing_load = existing_end = None
-    try:
-        with open(out_path) as fh:
-            _prev = json.load(fh)
-            existing_load = _prev.get("load_1m_at_start")
-            existing_end = _prev.get("load_1m_at_end")
-    except (OSError, ValueError):
-        pass
-    this_load = load_1m_at_start
-    noisier_start = (
-        existing_load is not None and this_load > existing_load + 0.5
-    )
-    noisier_end = (
-        existing_end is not None
-        and record["load_1m_at_end"] > existing_end + 2.0
-    )
-    if noisier_start or noisier_end:
-        diverted = str(Path(out_path).with_suffix(".live.json"))
-        print(
-            f"# NOTE: existing record at {out_path} saw a quieter run "
-            f"(worst load {existing_load} vs {this_load}); writing this "
-            f"run to {diverted} instead",
-            file=sys.stderr,
-        )
-        out_path = diverted
-    with open(out_path, "w") as fh:
-        fh.write(result + "\n")
-    # the run completed and the authoritative record exists — remove the
-    # checkpoint so a stale full partial can't shadow a later aborted run
-    Path(partial_path).unlink(missing_ok=True)
+    record = make_record(timings, samples, sf, load_1m_at_start, True)
+    write_record(out_path, record)
+    print(json.dumps(record))
     spark.stop()
-    # Tail-safe summary (VERDICT r10 #1): the driver's BENCH_rN.json scrape
-    # keeps only the LAST ~2000 chars of stdout, which for four rounds
-    # running truncated the full record above into an unparseable head-cut
-    # tail (parsed: null). The truncation demonstrably preserves the end of
-    # the stream (the r10 tail still carried comparable_value), so emit a
-    # compact per-round summary — no per-query dict, well under any tail
-    # window — as the FINAL stdout line. The full record (with per-query
-    # timings) stays in the line above and in BENCH_LOCAL.json.
-    # derived from `record` by key subset — never a second hand-built dict,
-    # so the summary cannot drift from the full record
-    summary_keys = (
-        "metric",
-        "value",
-        "unit",
-        "comparable_value",
-        "sf",
-        "timing",
-        "load_1m_at_start",
-        "load_1m_at_end",
-    )
     print(
         json.dumps(
             {
-                **{k: record[k] for k in summary_keys},
+                **{k: record[k] for k in SUMMARY_KEYS},
                 "n_queries": len(timings),
-                "summary_of": "full record on preceding line + BENCH_LOCAL.json",
+                "summary_of": f"full record on preceding line + {out_path.name}",
             }
         )
     )

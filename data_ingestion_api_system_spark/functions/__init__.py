@@ -165,28 +165,6 @@ def charge_dec() -> Column:
 SQL_CHARGE_DEC = f"{SQL_REVENUE_DEC} * (1 + CAST(l_tax AS DECIMAL(4,2)))"
 
 
-def cosine_similarity(a: Column | str, b: Column | str, round_to: int = 6) -> Column:
-    """Cosine similarity between two array<float|double> columns, entirely in
-    JVM array expressions (zip_with product + sequential aggregate fold) —
-    no Python UDF in the hot path. Both engines fold left-to-right over the
-    same element order, and the result is rounded so last-ulp divergence
-    cannot reorder ties downstream.
-
-    DuckDB twin: list_cosine_similarity(a, b) rounded identically (or the
-    explicit list_sum/list_transform form).
-    """
-    ca, cb = _col(a).cast("array<double>"), _col(b).cast("array<double>")
-    dot = F.aggregate(F.zip_with(ca, cb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform(ca, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.transform(cb, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    return F.round(dot / (na * nb), round_to)
-
-
-def dot_product(a: Column | str, b: Column | str) -> Column:
-    ca, cb = _col(a).cast("array<double>"), _col(b).cast("array<double>")
-    return F.aggregate(F.zip_with(ca, cb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization of a text column → array<string>, dropping
     empty tokens (JVM-side split; matches DuckDB

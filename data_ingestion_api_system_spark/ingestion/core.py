@@ -258,13 +258,6 @@ def status_response(ingestions: DataFrame, batches: DataFrame) -> DataFrame:
     )
 
 
-def point_lookup(df: DataFrame, ingestion_id: str) -> DataFrame:
-    """A14: GET /status/:id key lookup (src/app.js:158-163); empty result is
-    the 404 path. At scale this predicate prunes to one bucket/partition of
-    an ingestion_id-partitioned table."""
-    return df.filter(F.col("ingestion_id") == F.lit(ingestion_id))
-
-
 def requests_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive a deterministic ``ingest_requests`` workload from the driver's
     seeded tables (FIXTURES.md §2 mapping): one request per order, ids =

@@ -151,6 +151,15 @@ def release_pins() -> None:
             pass  # session already stopped / relation already evicted
 
 
+def fresh_build(spark: SparkSession, fn: QueryFn, sf_dir: str) -> DataFrame:
+    """Build one registry entry against a virgin cache: release every pin
+    and clear the session cache first, so no earlier entry's persisted
+    subtree is substituted into this entry's plan or timing."""
+    release_pins()
+    spark.catalog.clearCache()
+    return fn(spark, sf_dir)
+
+
 _MID_BITS = 33  # monotonically_increasing_id: partition id << 33 | row number
 
 

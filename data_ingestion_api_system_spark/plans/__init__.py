@@ -50,13 +50,3 @@ def unpartitioned_windows(df: DataFrame) -> list[str]:
     count, e.g. sketch_histogram_quantiles' 64-bin cumulative pass)."""
     plan = formatted_plan(df)
     return [m.group(0) for m in _UNPART_WSPEC.finditer(plan)]
-
-
-def assert_plan(df: DataFrame, must: list[str], must_not: list[str]) -> None:
-    """Raise AssertionError (with the offending patterns) unless the plan
-    matches every ``must`` regex and no ``must_not`` regex."""
-    missing, present = check_plan(df, must, must_not)
-    if missing or present:
-        raise AssertionError(
-            f"plan check failed: missing={missing} forbidden-present={present}"
-        )

@@ -10,9 +10,9 @@ Scale notes:
 - JSON/CSV are row formats — no column pruning, no predicate pushdown, no
   statistics. The helpers exist for ingest/export edges; anything queried
   repeatedly should be converted to parquet (``convert_to_parquet``).
-- JDBC/Kafka connectors: the builder methods are provided but require
-  their driver jars on the classpath, which this container lacks — they
-  raise a clear error rather than failing deep inside Spark.
+- Kafka connector: the builder method is provided but requires the
+  connector jars on the classpath; without them it raises a clear error
+  rather than failing deep inside Spark.
 """
 
 from __future__ import annotations
@@ -184,17 +184,3 @@ def parse_kafka_ingest(records: DataFrame) -> DataFrame:
         F.col("req.priority").alias("priority"),
         "arrival_ts",
     )
-
-
-def jdbc_table(
-    spark: SparkSession, url: str, table: str, properties: dict[str, str] | None = None
-) -> DataFrame:
-    """JDBC reader — requires the database's JDBC driver jar (absent in
-    this container); partition options (partitionColumn/numPartitions)
-    should always be set for large tables so the read parallelizes."""
-    try:
-        return spark.read.jdbc(url, table, properties=properties or {})
-    except Exception as e:  # noqa: BLE001
-        raise RuntimeError(
-            "JDBC source requires the database driver jar on the classpath"
-        ) from e

@@ -36,13 +36,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
 # Tables carrying a timestamp-typed column, i.e. the surface exposed to the
 # encoding-drift failure class that cost round 4 nineteen queries when the
 # regenerated events.ts footer switched to TIMESTAMP(NANOS). Every such

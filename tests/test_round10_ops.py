@@ -235,8 +235,6 @@ def test_partition_invariance_sample(spark):
     import importlib.util
     from pathlib import Path
 
-    from data_ingestion_api_system_spark.operators import release_pins
-
     root = Path(__file__).resolve().parent.parent
 
     def load_tool(modname, path):
@@ -245,9 +243,9 @@ def test_partition_invariance_sample(spark):
         spec.loader.exec_module(mod)
         return mod
 
-    check_oracle = load_tool("check_oracle", root / "tools" / "check_oracle.py")
-    # reuse the certification tool's OWN config pairs so this suite-resident
-    # twin cannot drift from what tools/invariance_check.py certifies
+    # reuse the certification tool's OWN config pairs and run_once so this
+    # suite-resident twin cannot drift from what tools/invariance_check.py
+    # certifies
     invariance = load_tool(
         "invariance_check", root / "tools" / "invariance_check.py"
     )
@@ -258,14 +256,10 @@ def test_partition_invariance_sample(spark):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for name in _INVARIANCE_SAMPLE:
-            results = []
-            for shuffle, split in invariance.CONFIGS:
-                release_pins()
-                spark.catalog.clearCache()
-                spark.conf.set("spark.sql.shuffle.partitions", shuffle)
-                spark.conf.set("spark.sql.files.maxPartitionBytes", split)
-                results.append(check_oracle.normalize(qs[name](spark, sf_dir).toPandas()))
-            (cols_a, rows_a), (cols_b, rows_b) = results
+            (cols_a, rows_a), (cols_b, rows_b) = (
+                invariance.run_once(spark, qs[name], sf_dir, shuffle, split)
+                for shuffle, split in invariance.CONFIGS
+            )
             assert cols_a == cols_b, name
             assert rows_a == rows_b, (name, len(rows_a), len(rows_b))
     finally:

@@ -167,43 +167,6 @@ def test_documents_text_is_ascii_all_sfs():
         )
 
 
-def test_bench_overwrite_guard_rule(tmp_path):
-    """The bench divert rule (tightened in round 9 after a load-3.51 run
-    slipped under the old fixed load>4.0 gate and replaced a load-0.4
-    record): a run noisier than the existing record by more than 0.5 on
-    the 1-min load average must divert; quieter-or-equal runs refresh
-    the main path. Exercised on the same predicate bench.py uses
-    (replicated here because bench.main() needs a full Spark run)."""
-    import json
-
-    def out_path_for(load_now, existing):
-        path = tmp_path / "BENCH_LOCAL.json"
-        if existing is not None:
-            path.write_text(json.dumps({"load_1m_at_start": existing}))
-        elif path.exists():
-            path.unlink()
-        out = str(path)
-        try:
-            existing_load = json.loads(path.read_text()).get(
-                "load_1m_at_start"
-            )
-        except (OSError, ValueError):
-            existing_load = None
-        if existing_load is not None and load_now > existing_load + 0.5:
-            out = str(path.with_suffix(".live.json"))
-        return out
-
-    clean = str(tmp_path / "BENCH_LOCAL.json")
-    diverted = str(tmp_path / "BENCH_LOCAL.live.json")
-    assert out_path_for(0.4, None) == clean          # clean, first run
-    assert out_path_for(0.4, 0.3) == clean           # comparable refresh
-    assert out_path_for(5.7, 0.4) == diverted        # contaminated over clean
-    assert out_path_for(3.5, 0.4) == diverted        # the round-9 miss
-    assert out_path_for(5.7, None) == clean          # nothing to protect
-    assert out_path_for(5.7, 6.0) == clean           # quieter than existing
-    assert out_path_for(0.3, 3.5) == clean           # quieter always wins
-
-
 # ---------------------------------------------------------------------------
 # Round-9 newborn re-derivations: every operator gets a third, independent
 # pure-Python implementation (first-principles, not a transcription of the

@@ -4,9 +4,9 @@ the per-round plan evidence under plans/r<N>/ (judge deliverable: the
 before/after physical plans for every query an optimization round
 touched).
 
-Each entry gets a fresh pin/cache state (release_pins + clearCache before
-building its plan) so the captured plan matches what a fresh session would
-show — the same isolation plan_budget.py uses.
+Each entry is built with ``operators.fresh_build`` (pins released, cache
+cleared) so the captured plan matches what a fresh session would show —
+the same isolation plan_budget.py uses.
 
 Usage:
     python tools/dump_plans.py OUT_DIR SUFFIX [sf_dir] name [name ...]
@@ -38,7 +38,7 @@ def main() -> int:
     out_dir.mkdir(parents=True, exist_ok=True)
 
     import __spark_entry__ as entrymod
-    from data_ingestion_api_system_spark.operators import release_pins
+    from data_ingestion_api_system_spark.operators import fresh_build, release_pins
     from data_ingestion_api_system_spark.session import get_spark
 
     qs = entrymod.queries()
@@ -51,9 +51,7 @@ def main() -> int:
 
     spark = get_spark("dump-plans")
     for name in names:
-        release_pins()
-        spark.catalog.clearCache()
-        plan = formatted_plan(qs[name](spark, sf_dir))
+        plan = formatted_plan(fresh_build(spark, qs[name], sf_dir))
         path = out_dir / f"{name}_{suffix}.txt"
         path.write_text(plan)
         print(f"wrote {path} ({len(plan)} bytes)")

@@ -42,13 +42,11 @@ CONFIGS = (
 
 
 def run_once(spark, fn, sf_dir, shuffle, split):
-    from data_ingestion_api_system_spark.operators import release_pins
+    from data_ingestion_api_system_spark.operators import fresh_build
 
-    release_pins()
-    spark.catalog.clearCache()
     spark.conf.set("spark.sql.shuffle.partitions", shuffle)
     spark.conf.set("spark.sql.files.maxPartitionBytes", split)
-    return normalize(fn(spark, sf_dir).toPandas())
+    return normalize(fresh_build(spark, fn, sf_dir).toPandas())
 
 
 def main() -> int:

@@ -34,7 +34,7 @@ Counts come from the *detail section* of ``explain("formatted")`` (one
 they are exact node counts, not substring frequencies. Exchange kind is
 classified from the node's ``Arguments:`` line. Plans are built at a pinned
 sf_dir (default sf0.01) with the standard session factory, and each entry
-is ISOLATED: after an entry's plan is counted, its pins are released and
+is ISOLATED: before an entry's plan is built, all pins are released and
 the session cache is cleared (``count_entry``). Without that, the cache
 manager substitutes EARLIER entries' persisted subtrees into later plans,
 so a later entry's count includes InMemoryRelation build-plan sections it
@@ -140,18 +140,13 @@ def count_plan(plan: str) -> dict[str, int]:
 
 
 def count_entry(spark, fn, sf_dir: str) -> dict[str, int]:
-    """Build ONE entry's plan, count it, then release the entry's pins and
-    clear the session cache so the next entry plans against a virgin cache
-    — the isolation that makes counts equal fresh-session counts (see
-    module docstring)."""
-    from data_ingestion_api_system_spark.operators import release_pins
+    """Count ONE entry's plan, built with ``operators.fresh_build`` so it
+    plans against a virgin cache — the isolation that makes counts equal
+    fresh-session counts (see module docstring)."""
+    from data_ingestion_api_system_spark.operators import fresh_build
     from data_ingestion_api_system_spark.plans import formatted_plan
 
-    try:
-        return count_plan(formatted_plan(fn(spark, sf_dir)))
-    finally:
-        release_pins()
-        spark.catalog.clearCache()
+    return count_plan(formatted_plan(fresh_build(spark, fn, sf_dir)))
 
 
 def collect(sf_dir: str) -> dict[str, dict[str, int]]:

@@ -1,16 +1,10 @@
 #!/usr/bin/env python3
-"""Per-entry timing probe — bench.py's warm_b3_m5 protocol for NAMED
-entries, for drift-protocol re-measures (VERDICT r11/r13: same-plan >2x
-round-over-round swings must be re-measured on a certified-quiet box
-before being treated as regressions) and for profiling one entry while
-optimizing it.
-
-Replicates the bench contract exactly: one untimed warmup rep, then
-best-of-3 for >=1 s queries / median-of-5 for sub-second ones; pins and
-cache dropped between reps so every timed rep executes the full plan;
-tables pre-counted once so file-index/codegen startup doesn't land on the
-first query. Records 1-min AND 5-min load at start — the drift protocol's
-quietness certificate (both must be < 1.5 for a run to count as quiet).
+"""Per-entry timing probe: bench.py's warm_b3_m5 protocol
+(``bench.time_entry``) for NAMED entries, for re-measuring a suspected
+regression or profiling one entry while optimizing it. Tables are
+pre-counted once so file-index/codegen startup doesn't land on the first
+entry. Records 1-min and 5-min load at start; ``quiet`` is true when both
+are below 1.5.
 
 Usage:
     python tools/time_queries.py [sf_dir] name [name ...]
@@ -21,9 +15,7 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
-from statistics import median
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -43,7 +35,7 @@ def main() -> int:
     quiet = load1 < 1.5 and load5 < 1.5
 
     import __spark_entry__ as entrymod
-    from data_ingestion_api_system_spark.operators import release_pins
+    from bench import time_entry
     from data_ingestion_api_system_spark.session import get_spark
     from data_ingestion_api_system_spark.tables import load_tables
 
@@ -59,23 +51,8 @@ def main() -> int:
 
     timings: dict[str, float] = {}
     for name in names:
-        fn = qs[name]
-
-        def run_once():
-            release_pins()
-            spark.catalog.clearCache()
-            start = time.perf_counter()
-            n = len(fn(spark, sf_dir).toPandas())
-            return time.perf_counter() - start, n
-
-        warm_sec, rows = run_once()
-        reps = 3 if warm_sec >= 1.0 else 5
-        samples = [run_once()[0] for _ in range(reps)]
-        timings[name] = round(min(samples) if reps == 3 else median(samples), 3)
-        print(
-            f"# {name}: warm={warm_sec:.3f}s reps={samples} rows={rows}",
-            file=sys.stderr,
-        )
+        timings[name], samples, rows = time_entry(spark, qs[name], sf_dir)
+        print(f"# {name}: reps={samples} rows={rows}", file=sys.stderr)
     spark.stop()
 
     print(
