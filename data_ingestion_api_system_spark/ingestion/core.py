@@ -153,8 +153,8 @@ def priority_order(batches: DataFrame) -> DataFrame:
 
     Scale note: a full global sort is only needed when *displaying* the
     queue. The drain loop (streaming/drain.py) never sorts the whole set —
-    it takes top-1 per trigger, which Spark executes as TakeOrderedAndProject
-    (per-partition heap + driver merge), O(n) not O(n log n), no shuffle.
+    it keeps pending batches in an in-memory heap in this order and pops
+    one per step, O(log n).
     """
     return batches.withColumn("priority_level", priority_level("priority")).orderBy(
         F.desc("priority_level"),

@@ -181,8 +181,8 @@ def q_pipeline_queue_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rank-over-everything is a single-partition window; for the
     top-100 report Spark runs TakeOrderedAndProject (per-partition heaps,
     driver merge) because the window is applied after orderBy().limit() —
-    the full sort never materializes. The drain loop itself only ever takes
-    top-1 per trigger (streaming/drain.py).
+    the full sort never materializes. The drain loop itself pops one batch
+    per step from an in-memory heap in this order (streaming/drain.py).
     """
     tune(spark)
     valid, _ = validate(requests_from_orders(spark, sf_dir))

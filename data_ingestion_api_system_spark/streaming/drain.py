@@ -5,31 +5,41 @@ gap-after-work pacing), A13 (serialization).
 
 Design (SURVEY §3.4, §4.3):
 
-- **State = tables, not mutable maps.** ``ingestions`` and ``batches`` are
+- **Durable state = append-only tables.** ``ingestions`` and ``batches`` are
   append-only parquet; status transitions append to a ``batch_log``
   (batch_id, status, log_seq) and current status is the latest log entry —
   the recompute-from-log design that makes every transition idempotent
   under retries (the exactly-once concern Delta MERGE would otherwise
   cover; the reference gets this for free by being single-threaded).
-- **Appends are driver-side file commits, reads are Spark queries.** Each
-  append of a few rows is one Arrow-built parquet file written by the
-  driver under a hidden ``.part-<uuid>.parquet`` name and renamed into
-  place — the write-temp-then-rename commit Structured Streaming uses for
-  its offset and commit logs, and no Spark job. Spark's file index skips
-  names starting with ``.`` or ``_``, so a reader sees a whole file or
-  none of it. Every read, join, rollup and top-1 runs as a Spark query
-  over the table directories.
-- **The queue is a query.** There is no queue data structure: pending =
-  ``batches ⟕ latest-log WHERE status='yet_to_start' ORDER BY
-  priority_level DESC, created_at ASC, request_seq ASC, batch_seq ASC
-  LIMIT 1`` evaluated per trigger — identical preemption semantics to the
+- **Appends are driver-side file commits.** Each append of a few rows is
+  one Arrow-built parquet file written by the driver under a hidden
+  ``.part-<uuid>.parquet`` name and renamed into place — the
+  write-temp-then-rename commit Structured Streaming uses for its offset
+  and commit logs, and no Spark job. Spark's file index skips names
+  starting with ``.`` or ``_``, so a reader sees a whole file or none of
+  it. The rename is the commit point.
+- **Status and dequeue read an in-memory index of the durable log.** Like
+  Structured Streaming's state store (a live in-memory map, each change
+  written to a durable delta file, the map rebuilt from those files on
+  restart), the pipeline keeps ``ingestion_id → batch_ids``,
+  ``batch_id → (ids, status)`` and a pending heap in memory. Every change
+  reaches the index only after its append has committed, so a failed
+  write never shows; opening a pipeline rebuilds the index with one Spark
+  read of ``ingestions`` and one of batches ⟕ latest log. ``status`` and
+  the dequeue run no Spark job; ``queue_snapshot``, ``processed_results``
+  and ``compact_log`` stay Spark queries over the table directories.
+- **The queue is a heap, ``queue_snapshot`` is its Spark view.** Pending
+  batches sit in a min-heap keyed ``(-priority_level, created_at,
+  request_seq, batch_seq)`` — identical preemption semantics to the
   reference's sort-on-insert queue (test/test_api.js:216-267: HIGH
-  submitted later overtakes queued LOW), and on Spark it executes as
-  TakeOrderedAndProject (per-partition heap + driver merge, no global
-  sort), which is why the same plan is fine with 10^9 pending batches.
-- **Mutual exclusion (A13) is structural**: one drain loop per pipeline
-  object; in the Structured Streaming deployment one query = one active
-  trigger at a time.
+  submitted later overtakes queued LOW). ``queue_snapshot`` is the same
+  order as a query, ``batches ⟕ latest-log WHERE status='yet_to_start'
+  ORDER BY ...``, which on Spark executes as TakeOrderedAndProject for its
+  top rows.
+- **Mutual exclusion (A13) is structural**: one drain step at a time per
+  pipeline object; in the Structured Streaming deployment one query = one
+  active trigger at a time. Status and ingest do not wait on a running
+  step's external calls or pacing sleeps.
 - **Pacing (A12) is injectable**: ``DrainConfig(per_id_delay=0.5,
   batch_gap=5.0)`` reproduces the reference's wall-clock arithmetic
   (full-batch cycle 6.5 s — BASELINE.md); tests run with zeros and step
@@ -40,6 +50,7 @@ Design (SURVEY §3.4, §4.3):
 from __future__ import annotations
 
 import glob
+import heapq
 import os
 import shutil
 import threading
@@ -61,6 +72,7 @@ from ..schemas import (
     BATCH_SIZE,
     MAX_ID,
     MIN_ID,
+    PRIORITY_LEVELS,
     STATUS_COMPLETED,
     STATUS_TRIGGERED,
     STATUS_YET_TO_START,
@@ -136,6 +148,16 @@ class IngestionPipeline:
     - ``status(ingestion_id)``   → GET /status/:id (src/app.js:158-187)
     plus ``drain_step()`` / ``drain_all()`` = one / all cycles of
     processBatches (src/app.js:61-103).
+
+    Single writer: one pipeline object per ``state_dir``. The in-memory
+    index is rebuilt from the state tables only when a pipeline is opened,
+    so rows another process appends afterwards are not seen, and
+    ``_op_lock`` orders this object's operations only.
+
+    Delivery is at-least-once: a batch whose drain step died between its
+    ``triggered`` and ``completed`` transitions is queued again when the
+    pipeline is next opened, so ``processed`` may then hold that batch's
+    rows twice (once from the crashed attempt, if its append committed).
     """
 
     def __init__(
@@ -148,28 +170,32 @@ class IngestionPipeline:
         """State tables are parquet directories under ``state_dir`` and
         survive restarts: opening a pipeline over an existing directory
         finishes or rolls back an interrupted compaction, deletes files an
-        interrupted append left under their hidden temporary name, and
-        resumes the request and log sequence counters after the highest
-        values already stored."""
+        interrupted append left under their hidden temporary name, resumes
+        the request and log sequence counters after the highest values
+        already stored, and rebuilds the in-memory index (re-queuing any
+        batch left ``triggered``)."""
         self.spark = spark
         self.state_dir = state_dir
         self.config = config or DrainConfig()
         self.clock = clock or (lambda: datetime.now(timezone.utc))
-        # Run-to-completion lock: the reference executes every route handler
-        # and drain cycle on one Node event loop, so no two operations ever
-        # interleave mid-state-mutation. The HTTP shim + fire-and-forget
-        # drain thread would otherwise issue concurrent Spark jobs against
-        # shared state (observed transient 'Python worker exited
-        # unexpectedly' under that race); one RLock per pipeline restores
-        # the reference's serial semantics. drain_all acquires per STEP, so
-        # status/ingest interleave between cycles exactly as Node timers do.
+        # Run-to-completion lock over state and index: the reference runs
+        # every route handler and drain cycle on one Node event loop, so no
+        # two operations ever interleave mid-state-mutation. A drain step
+        # holds it only around its dequeue + TRIGGERED log and around its
+        # processed append + COMPLETED log, so status/ingest answer while
+        # a batch is in flight, as the Node service does between awaits.
         self._op_lock = threading.RLock()
+        # Serializes whole drain steps (A13: one batch at a time, gap
+        # included); taken before _op_lock, never while holding it.
+        self._drain_lock = threading.Lock()
         os.makedirs(state_dir, exist_ok=True)
         self._recover_compaction()
         for tmp in glob.glob(os.path.join(state_dir, "*", ".part-*.parquet")):
             os.remove(tmp)  # an append that died before its rename
         self._request_seq = self._next_seq("ingestions", _INGESTIONS_SCHEMA, "request_seq")
         self._log_seq = self._next_seq("batch_log", _BATCH_LOG_SCHEMA, "log_seq")
+        self._clear_index()
+        self._load_index()
 
     # -- state table helpers -------------------------------------------------
 
@@ -203,6 +229,44 @@ class IngestionPipeline:
         tmp = os.path.join(path, "." + part)
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(path, part))
+
+    # -- in-memory state index ------------------------------------------------
+
+    def _clear_index(self) -> None:
+        self._ingestions: dict[str, list[str]] = {}  # ingestion_id → batch_ids
+        self._batches: dict[str, tuple[tuple[int, ...], str]] = {}  # → (ids, status)
+        # (-priority_level, created_at_us, request_seq, batch_seq, batch_id);
+        # entries no longer yet_to_start are dropped when they reach the top
+        self._pending: list[tuple] = []
+
+    def _index_batch(
+        self, row: Row, created_at_us: int, status: str = STATUS_YET_TO_START
+    ) -> None:
+        if row.ingestion_id in self._ingestions:
+            self._ingestions[row.ingestion_id].append(row.batch_id)
+        self._batches[row.batch_id] = (tuple(row.ids), status)
+        if status == STATUS_YET_TO_START:
+            level = PRIORITY_LEVELS[row.priority]
+            entry = (-level, created_at_us, row.request_seq, row.batch_seq, row.batch_id)
+            heapq.heappush(self._pending, entry)
+
+    def _load_index(self) -> None:
+        """Rebuild the index from the state tables, and queue again every
+        batch whose latest status is ``triggered``: its drain step died
+        before COMPLETED (at-least-once, see the class docstring)."""
+        if not os.path.isdir(self._path("ingestions")):  # fresh state_dir
+            return
+        for r in self._read("ingestions", _INGESTIONS_SCHEMA).select("ingestion_id").collect():
+            self._ingestions[r.ingestion_id] = []
+        batches = self._batches_with_status().withColumn(
+            "created_at_us", F.unix_micros("created_at")
+        )
+        for r in sorted(batches.collect(), key=lambda r: (r.request_seq, r.batch_seq)):
+            status = r.status
+            if status == STATUS_TRIGGERED:
+                self._log(r.batch_id, STATUS_YET_TO_START)
+                status = STATUS_YET_TO_START
+            self._index_batch(r, r.created_at_us, status)
 
     # -- A2-A5: ingest -------------------------------------------------------
 
@@ -252,6 +316,10 @@ class IngestionPipeline:
         )
         if batch_rows:
             self._append("batches", batch_rows, _BATCHES_SCHEMA)
+        self._ingestions[ingestion_id] = []
+        created_at_us = T.TimestampType().toInternal(created_at)  # as stored
+        for r in batch_rows:
+            self._index_batch(r, created_at_us)
         return ingestion_id
 
     # -- status overlay ------------------------------------------------------
@@ -277,82 +345,73 @@ class IngestionPipeline:
 
     def status(self, ingestion_id: str) -> dict:
         """GET /status/:id — point lookup (A14), child join (A15), rollup
-        (A16), nested response projection (A17)."""
+        (A16), nested response projection (A17), served from the index."""
         with self._op_lock:
-            return self._status_locked(ingestion_id)
-
-    def _status_locked(self, ingestion_id: str) -> dict:
-        ing = (
-            self._read("ingestions", _INGESTIONS_SCHEMA)
-            .filter(F.col("ingestion_id") == ingestion_id)
-            .head(1)
-        )
-        if not ing:
-            raise NotFound(ingestion_id)
-        rows = (
-            self._batches_with_status()
-            .filter(F.col("ingestion_id") == ingestion_id)
-            .orderBy("batch_seq")
-            .select("batch_id", "ids", "status")
-            .collect()
-        )
-        statuses = [r.status for r in rows]
+            batch_ids = self._ingestions.get(ingestion_id)
+            if batch_ids is None:
+                raise NotFound(ingestion_id)
+            batches = [
+                {"batch_id": b, "ids": list(self._batches[b][0]), "status": self._batches[b][1]}
+                for b in batch_ids
+            ]
+        statuses = [b["status"] for b in batches]
         if all(s == STATUS_COMPLETED for s in statuses):  # vacuously true if empty
             overall = STATUS_COMPLETED
         elif any(s == STATUS_TRIGGERED for s in statuses):
             overall = STATUS_TRIGGERED
         else:
             overall = STATUS_YET_TO_START
-        return {
-            "ingestion_id": ingestion_id,
-            "status": overall,
-            "batches": [
-                {"batch_id": r.batch_id, "ids": list(r.ids), "status": r.status}
-                for r in rows
-            ],
-        }
+        return {"ingestion_id": ingestion_id, "status": overall, "batches": batches}
 
     # -- A6-A13: drain -------------------------------------------------------
 
-    def _next_pending(self) -> Row | None:
-        """A6+A7: top-1 of :meth:`queue_snapshot` — TakeOrderedAndProject,
-        not a global sort."""
-        rows = self.queue_snapshot().head(1)
-        return rows[0] if rows else None
+    def _next_pending(self) -> str | None:
+        """A6+A7: the batch_id at the top of the pending heap, the first in
+        :meth:`queue_snapshot` order. Entries whose batch has left
+        ``yet_to_start`` are popped on the way; the top entry itself stays
+        until its TRIGGERED transition commits. Caller holds ``_op_lock``."""
+        while self._pending:
+            batch_id = self._pending[0][-1]
+            if self._batches[batch_id][1] == STATUS_YET_TO_START:
+                return batch_id
+            heapq.heappop(self._pending)
+        return None
 
     def _log(self, batch_id: str, status: str) -> None:
+        """Append one status transition, then apply it to the index."""
         self._append(
             "batch_log",
             [Row(batch_id=batch_id, status=status, log_seq=self._log_seq)],
             _BATCH_LOG_SCHEMA,
         )
         self._log_seq += 1
+        if batch_id in self._batches:
+            self._batches[batch_id] = (self._batches[batch_id][0], status)
 
     def drain_step(self) -> str | None:
         """One drain cycle (one loop body of src/app.js:65-96). Returns the
-        processed batch_id, or None if the queue was empty."""
-        with self._op_lock:
-            return self._drain_step_locked()
-
-    def _drain_step_locked(self) -> str | None:
-        batch = self._next_pending()
-        if batch is None:
-            return None
-        self._log(batch.batch_id, STATUS_TRIGGERED)  # A9
-        results = []
-        for id_ in batch.ids:  # A10: strictly sequential per-ID calls
-            if self.config.per_id_delay:
-                time.sleep(self.config.per_id_delay)
-            out = self.config.external_call(int(id_))
-            results.append(
-                Row(batch_id=batch.batch_id, id=int(out["id"]), data=str(out["data"]))
-            )
-        if results:
-            self._append("processed", results, _PROCESSED_SCHEMA)
-        self._log(batch.batch_id, STATUS_COMPLETED)  # A11
-        if self.config.batch_gap:
-            time.sleep(self.config.batch_gap)  # A12: gap AFTER work
-        return batch.batch_id
+        processed batch_id, or None if the queue was empty. ``_op_lock`` is
+        released during the external calls and the pacing sleeps."""
+        with self._drain_lock:
+            with self._op_lock:
+                batch_id = self._next_pending()
+                if batch_id is None:
+                    return None
+                self._log(batch_id, STATUS_TRIGGERED)  # A9
+                ids = self._batches[batch_id][0]
+            results = []
+            for id_ in ids:  # A10: strictly sequential per-ID calls
+                if self.config.per_id_delay:
+                    time.sleep(self.config.per_id_delay)
+                out = self.config.external_call(id_)
+                results.append(Row(batch_id=batch_id, id=int(out["id"]), data=str(out["data"])))
+            with self._op_lock:
+                if results:
+                    self._append("processed", results, _PROCESSED_SCHEMA)
+                self._log(batch_id, STATUS_COMPLETED)  # A11
+            if self.config.batch_gap:
+                time.sleep(self.config.batch_gap)  # A12: gap AFTER work
+            return batch_id
 
     def drain_all(self, max_steps: int = 10_000) -> int:
         """Drain until empty (the full processBatches loop). Returns the
@@ -438,8 +497,8 @@ class IngestionPipeline:
         """resetState() (src/app.js:225-235): truncate every state table
         and restart sequence counters — the test-harness hook. On a Delta
         deployment this is TRUNCATE TABLE; on raw parquet state it drops
-        the directories."""
-        with self._op_lock:
+        the directories. Waits for a running drain step to finish."""
+        with self._drain_lock, self._op_lock:
             for name in (
                 "ingestions",
                 "batches",
@@ -451,6 +510,7 @@ class IngestionPipeline:
                 shutil.rmtree(self._path(name), ignore_errors=True)
             self._request_seq = 0
             self._log_seq = 0
+            self._clear_index()
 
     # -- always-on streaming drain (SURVEY §3.4) -----------------------------
 

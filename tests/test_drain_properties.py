@@ -41,16 +41,20 @@ BATCH = 3  # src/app.js:123-124
 # One schedule = interleaved events:
 #   ("ingest", n_ids, priority, clock_advance_s) — clock_advance 0 keeps
 #     created_at EQUAL to the previous request, exercising the stable
-#     arrival-order tiebreak the JS sort preserves implicitly
+#     arrival-order tiebreak the JS sort preserves implicitly; -1 steps the
+#     clock back, so created_at and arrival order disagree
 #   ("drain",) — one cycle of processBatches
+#   ("reopen",) — a fresh pipeline over the same state dir, which rebuilds
+#     its in-memory queue from the durable tables
 event = st.one_of(
     st.tuples(
         st.just("ingest"),
         st.integers(min_value=0, max_value=7),
         st.sampled_from(["HIGH", "MEDIUM", "LOW"]),
-        st.sampled_from([0, 1]),
+        st.sampled_from([0, 1, -1]),
     ),
     st.tuples(st.just("drain")),
+    st.tuples(st.just("reopen")),
 )
 schedule_strategy = st.lists(event, min_size=1, max_size=10).filter(
     lambda evs: any(e[0] == "ingest" for e in evs)
@@ -100,12 +104,17 @@ class ReferenceModel:
 @given(schedule=schedule_strategy)
 def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
     clock = {"t": 0.0}
-    pipe = IngestionPipeline(
-        spark,
-        str(tmp_path_factory.mktemp("drain_prop")),
-        DrainConfig(),
-        clock=lambda: _EPOCH + timedelta(seconds=clock["t"]),
-    )
+    state_dir = str(tmp_path_factory.mktemp("drain_prop"))
+
+    def open_pipeline() -> IngestionPipeline:
+        return IngestionPipeline(
+            spark,
+            state_dir,
+            DrainConfig(),
+            clock=lambda: _EPOCH + timedelta(seconds=clock["t"]),
+        )
+
+    pipe = open_pipeline()
     model = ReferenceModel()
     requests: list[tuple[int, int, str]] = []  # (model_seq, n_ids, ing_id)
 
@@ -116,6 +125,8 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
             ing_id = pipe.ingest(list(range(1, n_ids + 1)), priority)
             seq = model.ingest(n_ids, priority, clock["t"])
             requests.append((seq, n_ids, ing_id))
+        elif ev[0] == "reopen":
+            pipe = open_pipeline()
         else:
             got = pipe.drain_step()
             want = model.drain()
@@ -123,13 +134,18 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
             if want is not None:
                 assert _batch_key(pipe, got) == want
 
-    # drain the tail: order must keep matching to the very end
+    # drain the tail: order must keep matching to the very end, and the
+    # Spark view of the durable queue must list the same batches in order
+    snapshot = [r.batch_id for r in pipe.queue_snapshot().select("batch_id").collect()]
+    tail = []
     while True:
         got, want = pipe.drain_step(), model.drain()
         assert (got is None) == (want is None)
         if got is None:
             break
         assert _batch_key(pipe, got) == want
+        tail.append(got)
+    assert snapshot == tail
 
     # terminal rollups: everything completed, incl. vacuous zero-batch
     for seq, n_ids, ing_id in requests:

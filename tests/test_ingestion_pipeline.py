@@ -7,7 +7,7 @@ between steps instead of at timed checkpoints."""
 from __future__ import annotations
 
 import time
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -434,16 +434,200 @@ def test_reopen_resumes_sequence_counters(spark, tmp_path):
     assert min(new_seqs) > max(old_seqs)
 
 
-def test_state_read_error_is_not_a_404(pipeline, monkeypatch):
+def test_state_read_error_is_not_a_404(spark, tmp_path, monkeypatch):
     """Only a missing table directory reads as empty; any other failure to
-    read state surfaces instead of turning into 'not found'."""
+    read state surfaces instead of turning into 'not found'. Status is
+    served from the index, so the state tables are read when a pipeline is
+    opened: a read failure there must raise, not open an empty queue."""
     from pyspark.sql.readwriter import DataFrameReader
 
-    ing = pipeline.ingest([1], "LOW")
+    state = str(tmp_path / "state")
+    IngestionPipeline(spark, state).ingest([1], "LOW")
 
     def unreadable(self, *paths, **options):
         raise RuntimeError("unreadable state table")
 
     monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
     with pytest.raises(RuntimeError, match="unreadable state table"):
-        pipeline.status(ing)
+        IngestionPipeline(spark, state)
+
+
+# -- in-memory state index ----------------------------------------------------
+
+def test_status_and_drain_step_start_no_spark_job(spark, pipeline):
+    """Status and the dequeue are served from the in-memory index."""
+    ing = pipeline.ingest([1, 2, 3, 4], "HIGH")
+    sc = spark.sparkContext
+    sc.setJobGroup("index-probe", "index-probe")
+    try:
+        first = pipeline.status(ing)
+        drained = pipeline.drain_step()
+        after = pipeline.status(ing)
+        jobs = sc.statusTracker().getJobIdsForGroup("index-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert drained == first["batches"][0]["batch_id"]
+    assert [b["status"] for b in after["batches"]] == ["completed", "yet_to_start"]
+
+
+def test_status_returns_copies(pipeline):
+    ing = pipeline.ingest([1, 2, 3, 4], "LOW")
+    st = pipeline.status(ing)
+    st["batches"][0]["ids"].append(99)
+    st["batches"][0]["status"] = "completed"
+    st["batches"].clear()
+    st = pipeline.status(ing)
+    assert [b["ids"] for b in st["batches"]] == [[1, 2, 3], [4]]
+    assert st["status"] == "yet_to_start"
+
+
+def test_failed_transition_append_changes_nothing(pipeline, monkeypatch):
+    """The durable append is the commit point: a TRIGGERED transition whose
+    append fails leaves the batch queued and reported ``yet_to_start``."""
+    ing = pipeline.ingest([1, 2, 3], "LOW")
+    append = pipeline._append
+
+    def failing(name, rows, schema):
+        if name == "batch_log":
+            raise OSError("disk full")
+        return append(name, rows, schema)
+
+    monkeypatch.setattr(pipeline, "_append", failing)
+    with pytest.raises(OSError, match="disk full"):
+        pipeline.drain_step()
+    assert pipeline.status(ing)["status"] == "yet_to_start"
+    monkeypatch.setattr(pipeline, "_append", append)
+    assert pipeline.drain_step() == pipeline.status(ing)["batches"][0]["batch_id"]
+    assert pipeline.status(ing)["status"] == "completed"
+
+
+def test_status_answers_while_batch_in_flight(pipeline):
+    """Status does not wait for a drain step's external calls: while a
+    call is blocked, another thread sees the batch ``triggered``."""
+    import threading
+
+    in_call, release = threading.Event(), threading.Event()
+
+    def blocking_call(id_: int) -> dict:
+        in_call.set()
+        release.wait(timeout=60)
+        return {"id": id_, "data": "processed"}
+
+    pipeline.config = DrainConfig(external_call=blocking_call)
+    ing = pipeline.ingest([1], "LOW")
+    drain = threading.Thread(target=pipeline.drain_step, daemon=True)
+    seen: list[str] = []
+    reader = threading.Thread(
+        target=lambda: seen.append(pipeline.status(ing)["status"]), daemon=True
+    )
+    drain.start()
+    try:
+        assert in_call.wait(timeout=30)
+        reader.start()
+        reader.join(timeout=1)
+        assert seen == ["triggered"]
+    finally:
+        release.set()
+        drain.join(timeout=30)
+    reader.join(timeout=30)
+    assert not drain.is_alive() and not reader.is_alive()
+    assert pipeline.status(ing)["status"] == "completed"
+
+
+def test_concurrent_ingest_status_and_drain(pipeline):
+    """Eight ingest, status and drain threads share the index under a
+    short switch interval: external calls never overlap
+    (one batch in flight, A13), every ID is processed exactly once and
+    every ingestion ends ``completed``."""
+    import sys
+    import threading
+
+    guard, active, overlap = threading.Lock(), [0], []
+
+    def call(id_: int) -> dict:
+        with guard:
+            active[0] += 1
+            overlap.append(active[0] > 1)
+        time.sleep(0.001)  # a window in which a second drain step could enter
+        with guard:
+            active[0] -= 1
+        return {"id": id_, "data": "processed"}
+
+    pipeline.config = DrainConfig(external_call=call)
+    requests: list[tuple[str, list[int]]] = []
+    errors: list[BaseException] = []
+
+    def ingester(k: int) -> None:
+        for j in range(5):
+            ids = [k * 100 + j * 10 + i for i in range(1, j % 4 + 2)]
+            requests.append((pipeline.ingest(ids, ("HIGH", "MEDIUM", "LOW")[j % 3]), ids))
+
+    def drainer() -> None:
+        for _ in range(10):
+            pipeline.drain_all()
+
+    def poller() -> None:
+        for _ in range(20):
+            for ing, _ in list(requests):
+                pipeline.status(ing)
+
+    def run(target, *args):
+        def body():
+            try:
+                target(*args)
+            except Exception as e:  # reported by the assertion below
+                errors.append(e)
+        return threading.Thread(target=body, daemon=True)
+
+    threads = [run(ingester, k) for k in range(4)] + [run(drainer) for _ in range(2)]
+    threads += [run(poller) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    pipeline.drain_all()
+    assert not any(overlap)
+    ids = sorted(r.id for r in pipeline.processed_results().collect())
+    assert ids == sorted(i for _, req_ids in requests for i in req_ids)
+    assert all(pipeline.status(ing)["status"] == "completed" for ing, _ in requests)
+
+
+@pytest.mark.parametrize("tz", [timezone.utc, None], ids=["aware", "naive"])
+def test_reopen_keeps_exact_created_at_order(spark, tmp_path, pacific_time, tz):
+    """Queue keys rebuilt at open and keys of a fresh ingest compare
+    exactly: a request stamped one microsecond earlier drains first though
+    it arrived later, across a reopen, for tz-aware and naive clocks."""
+    t0 = datetime(2024, 1, 15, 8, 5, 9, 654321, tzinfo=tz)
+    stamps = iter([t0 + timedelta(microseconds=1), t0])
+    state = str(tmp_path / "state")
+    late = IngestionPipeline(spark, state, clock=lambda: next(stamps)).ingest([1], "LOW")
+    p = IngestionPipeline(spark, state, clock=lambda: next(stamps))
+    early = p.ingest([2], "LOW")
+    assert p.drain_step() == p.status(early)["batches"][0]["batch_id"]
+    assert p.drain_step() == p.status(late)["batches"][0]["batch_id"]
+
+
+def test_reopen_requeues_orphaned_triggered_batch(spark, tmp_path):
+    """A batch left ``triggered`` by a drain step that died before
+    COMPLETED is queued again when the pipeline is reopened."""
+    state = str(tmp_path / "state")
+    p1 = IngestionPipeline(spark, state)
+    ing = p1.ingest([1, 2], "LOW")
+    (batch,) = p1.status(ing)["batches"]
+    p1._log(batch["batch_id"], "triggered")  # the crash: no COMPLETED follows
+
+    p2 = IngestionPipeline(spark, state)
+    assert p2.status(ing)["status"] == "yet_to_start"
+    assert [r.batch_id for r in p2.queue_snapshot().collect()] == [batch["batch_id"]]
+    assert p2.drain_all() == 1
+    assert p2.status(ing)["status"] == "completed"
+    assert sorted(r.id for r in p2.processed_results().collect()) == [1, 2]
