@@ -2,8 +2,9 @@
 streaming formalisms, evaluated batch-mode here; the same logic runs as a
 real Structured Streaming query in ``..streaming`` with watermarks).
 
-Timestamps: events.ts arrives as parquet TIMESTAMP(NANOS); the loader
-truncates to microseconds identically to DuckDB (see tables._load_ts_normalized).
+Timestamps: events.ts has shipped as parquet TIMESTAMP(NANOS) and as
+timestamp[us]; the loader truncates NANOS to microseconds identically to
+DuckDB (see tables.footer_schema).
 All second-granularity outputs use floor semantics on both engines.
 
 Scale: time-bucketed aggregations shuffle on (bucket, key) — uniform by

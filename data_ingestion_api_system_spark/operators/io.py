@@ -98,7 +98,7 @@ def q_io_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately: parquet TIMESTAMP(NANOS) round-trips through the
     rewrite as TIMESTAMP(MICROS), which would change the on-disk type —
     a real schema-evolution concern the loader handles for the SOURCE
-    tables (tables._load_ts_normalized), out of scope for the sink
+    tables (tables.footer_schema), out of scope for the sink
     certification."""
     tune(spark)
     ev = load_table(spark, sf_dir, "events").select(

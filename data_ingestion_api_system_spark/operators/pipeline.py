@@ -28,6 +28,7 @@ from ..ingestion.core import (
     validate,
 )
 from ..schemas import MAX_ID
+from ..tables import load_table
 from . import tune
 
 # ---------------------------------------------------------------------------
@@ -85,9 +86,7 @@ def q_pipeline_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune(spark)
     base = requests_from_orders(spark, sf_dir)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderpriority"
-    )
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     raw = (
         base.join(orders, base.request_id == orders.o_orderkey)
         .select(

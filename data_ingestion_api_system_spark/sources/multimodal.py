@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import load_table
+
 FEATURE_SCHEMA = (
     "doc_id bigint, mime string, byte_len bigint, payload_md5 string, "
     "fake_width int, fake_height int, decode_status string"
@@ -232,7 +234,7 @@ def binary_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # spread: one parquet file = one partition = ONE Arrow batch stream;
     # mapInPandas would run the whole extractor serially in a single task
-    docs = spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         F.encode("text", "UTF-8").alias("payload"),

@@ -391,7 +391,10 @@ class IngestionPipeline:
     def drain_step(self) -> str | None:
         """One drain cycle (one loop body of src/app.js:65-96). Returns the
         processed batch_id, or None if the queue was empty. ``_op_lock`` is
-        released during the external calls and the pacing sleeps."""
+        released during the external calls and the pacing sleeps. If an
+        external call raises, the batch goes back to ``yet_to_start`` at its
+        old queue position and the error propagates; a later step retries
+        the whole batch."""
         with self._drain_lock:
             with self._op_lock:
                 batch_id = self._next_pending()
@@ -400,11 +403,18 @@ class IngestionPipeline:
                 self._log(batch_id, STATUS_TRIGGERED)  # A9
                 ids = self._batches[batch_id][0]
             results = []
-            for id_ in ids:  # A10: strictly sequential per-ID calls
-                if self.config.per_id_delay:
-                    time.sleep(self.config.per_id_delay)
-                out = self.config.external_call(id_)
-                results.append(Row(batch_id=batch_id, id=int(out["id"]), data=str(out["data"])))
+            try:
+                for id_ in ids:  # A10: strictly sequential per-ID calls
+                    if self.config.per_id_delay:
+                        time.sleep(self.config.per_id_delay)
+                    out = self.config.external_call(id_)
+                    results.append(Row(batch_id=batch_id, id=int(out["id"]), data=str(out["data"])))
+            except Exception:
+                # Queue the batch again. Its heap entry is still in place:
+                # only _next_pending pops, and drain steps are serialized.
+                with self._op_lock:
+                    self._log(batch_id, STATUS_YET_TO_START)
+                raise
             with self._op_lock:
                 if results:
                     self._append("processed", results, _PROCESSED_SCHEMA)

@@ -15,7 +15,10 @@ before starting its thread, and whichever thread holds the lock clears
 the flag before it drains and checks it again after releasing the lock.
 An ingest that lands while an earlier drain is exiting (its queue already
 seen empty, the lock still held) therefore gets drained by that thread's
-next loop instead of waiting for the next POST.
+next loop instead of waiting for the next POST. A drain that fails (an
+external call raised) is reported through ``logging`` and the server keeps
+serving; the pipeline has queued the failed batch again, and the next
+ingest's drain retries it.
 The library API (drain.IngestionPipeline) stays the primary surface; this
 shim exists for black-box route-level parity testing.
 """
@@ -23,10 +26,13 @@ shim exists for black-box route-level parity testing.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .drain import IngestionPipeline, InvalidRequest, NotFound
+
+logger = logging.getLogger(__name__)
 
 
 def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServer:
@@ -38,6 +44,8 @@ def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServ
             try:
                 wake.clear()
                 pipeline.drain_all()
+            except Exception:
+                logger.exception("drain failed; the batch stays queued")
             finally:
                 drain_lock.release()
 

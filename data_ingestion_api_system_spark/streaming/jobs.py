@@ -23,10 +23,10 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import exact_sum, sql_exact_sum
 from ..operators import tune
+from ..tables import footer_schema, load_table, normalize, table_path
 
 
 def _stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
@@ -66,55 +66,20 @@ def _stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     target = max(1, target_mb) * 1024 * 1024
     return max(1, min(cap, (nbytes + target - 1) // target))
 
-def _events_schema(ts_is_raw_nanos: bool) -> T.StructType:
-    ts_type = T.LongType() if ts_is_raw_nanos else T.TimestampType()
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("ts", ts_type, True),
-            T.StructField("user_id", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-            T.StructField("props", T.StringType(), True),
-        ]
-    )
-
-
-def _ts_is_raw_nanos(spark: SparkSession, sf_dir: str) -> bool:
-    """Probe the events table's ts encoding via a batch read, the exact
-    strategy tables._load_ts_normalized uses (ADVICE r5): a TIMESTAMP(NANOS)
-    footer either fails the read outright (legacy conf unset) or resolves
-    to LongType (conf already set by the batch loader); timestamp[us]
-    resolves to TimestampType. Unlike a pyarrow footer probe this needs no
-    extra dependency and handles directory-of-parts layouts for free."""
-    import os
-
-    path = os.path.join(sf_dir, "events.parquet")
-    try:
-        ts_type = spark.read.parquet(path).schema["ts"].dataType
-    except Exception:
-        return True  # NANOS footer rejected without the legacy conf
-    return isinstance(ts_type, T.LongType)
-
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming source over the events parquet, normalized to a
-    TimestampType ``ts`` exactly matching tables._load_ts_normalized, as an
-    unbounded readStream."""
-    raw_nanos = _ts_is_raw_nanos(spark, sf_dir)
-    if raw_nanos:
-        # must stay set for the lifetime of the streaming scan
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Unbounded readStream over the events table, declared with the
+    table's footer schema and normalized exactly as ``load_table`` does
+    (``tables.footer_schema``/``tables.normalize``): a file-stream source
+    needs a declared schema, and reading the footer starts no Spark job."""
     # the file-stream source requires a directory: stream the sf dir with a
     # glob filter selecting only the events table
     raw = (
-        spark.readStream.schema(_events_schema(raw_nanos))
+        spark.readStream.schema(footer_schema(table_path(sf_dir, "events")))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if raw_nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    return normalize(raw, "events")
 
 
 def _run_to_memory(
@@ -437,8 +402,6 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     a key-value lookup in ``foreachBatch``. On this bounded source the
     result must equal the batch join+rollup, which is the oracle."""
     tune(spark)
-    from ..tables import load_table
-
     ev = _events_stream(spark, sf_dir).select("user_id", "value")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"

@@ -4,13 +4,15 @@
 from __future__ import annotations
 
 import json
+import logging
 import threading
+import time
 import urllib.error
 import urllib.request
 
 import pytest
 
-from data_ingestion_api_system_spark.streaming.drain import IngestionPipeline
+from data_ingestion_api_system_spark.streaming.drain import DrainConfig, IngestionPipeline
 from data_ingestion_api_system_spark.streaming.http_api import make_server
 
 
@@ -134,5 +136,56 @@ def test_ingest_during_drain_exit_is_drained(monkeypatch):
         assert pipeline.drained == [[1], [2]] and pipeline.queue == []
     finally:
         pipeline.resume.set()
+        srv.shutdown()
+        srv.server_close()
+
+
+def _wait_for(predicate, timeout: float = 30.0) -> bool:
+    deadline = time.monotonic() + timeout
+    while not predicate():
+        if time.monotonic() > deadline:
+            return False
+        time.sleep(0.05)
+    return True
+
+
+def test_failed_drain_is_logged_and_retried(spark, tmp_path, caplog):
+    """A drain whose external call fails is reported through ``logging``;
+    the server keeps answering, the batch is queued again, and the next
+    ingest's drain processes it."""
+    from data_ingestion_api_system_spark.streaming import http_api
+
+    failures = [ConnectionError("service down")]
+
+    def call(id_: int) -> dict:
+        if failures:
+            raise failures.pop()
+        return {"id": id_, "data": "processed"}
+
+    pipeline = IngestionPipeline(
+        spark, str(tmp_path / "state"), DrainConfig(external_call=call)
+    )
+    srv = make_server(pipeline)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+
+    def status(ing):
+        code, body = _get(base, f"/status/{ing}")
+        assert code == 200
+        return body["status"]
+
+    try:
+        with caplog.at_level(logging.ERROR, logger=http_api.__name__):
+            first = _post(base, {"ids": [1], "priority": "LOW"})[1]["ingestion_id"]
+            assert _wait_for(
+                lambda: any(
+                    r.exc_info and isinstance(r.exc_info[1], ConnectionError)
+                    for r in caplog.records
+                )
+            )
+            assert status(first) == "yet_to_start"
+            second = _post(base, {"ids": [2], "priority": "LOW"})[1]["ingestion_id"]
+            assert _wait_for(lambda: status(first) == status(second) == "completed")
+    finally:
         srv.shutdown()
         srv.server_close()

@@ -503,6 +503,31 @@ def test_failed_transition_append_changes_nothing(pipeline, monkeypatch):
     assert pipeline.status(ing)["status"] == "completed"
 
 
+def test_failed_external_call_requeues_batch(pipeline):
+    """An external call that raises sends its batch back to
+    ``yet_to_start`` at its queue position, the error propagates, and the
+    next drain retries the whole batch in the same process."""
+    calls: list[int] = []
+
+    def flaky_call(id_: int) -> dict:
+        calls.append(id_)
+        if len(calls) == 2:
+            raise ConnectionError("service down")
+        return {"id": id_, "data": "processed"}
+
+    pipeline.config = DrainConfig(external_call=flaky_call)
+    ing = pipeline.ingest([1, 2, 3], "LOW")
+    (batch,) = pipeline.status(ing)["batches"]
+    with pytest.raises(ConnectionError, match="service down"):
+        pipeline.drain_step()
+    assert pipeline.status(ing)["status"] == "yet_to_start"
+    assert [r.batch_id for r in pipeline.queue_snapshot().collect()] == [batch["batch_id"]]
+    assert pipeline.drain_all() == 1
+    assert calls == [1, 2, 1, 2, 3]
+    assert pipeline.status(ing)["status"] == "completed"
+    assert sorted(r.id for r in pipeline.processed_results().collect()) == [1, 2, 3]
+
+
 def test_status_answers_while_batch_in_flight(pipeline):
     """Status does not wait for a drain step's external calls: while a
     call is blocked, another thread sees the batch ``triggered``."""

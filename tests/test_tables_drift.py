@@ -9,6 +9,8 @@ same files."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -146,7 +148,7 @@ def test_current_testdata_shapes(spark):
 N_ORDERS = 14
 
 
-def _write_orders(path, ts_type):
+def _write_orders(path, ts_type, parts=False):
     import datetime as dt
 
     base = dt.datetime(1995, 3, 1)
@@ -169,34 +171,50 @@ def _write_orders(path, ts_type):
             ),
         }
     )
-    pq.write_table(tbl, path)
+    if parts:
+        # a directory of part files, as a Spark or Hive writer lays it out
+        path.mkdir()
+        half = N_ORDERS // 2
+        pq.write_table(tbl.slice(0, half), path / "part-00000.parquet")
+        pq.write_table(tbl.slice(half), path / "part-00001.parquet")
+    else:
+        pq.write_table(tbl, path)
 
 
 @pytest.fixture(scope="module")
 def orders_dirs(tmp_path_factory):
     out = {}
     cases = (
-        ("us", pa.timestamp("us")),
-        ("ns", pa.timestamp("ns")),
-        ("date32", "date32"),
+        ("us", pa.timestamp("us"), False),
+        ("us_utc", pa.timestamp("us", tz="UTC"), False),
+        ("ms", pa.timestamp("ms"), False),
+        ("ns", pa.timestamp("ns"), False),
+        ("date32", "date32", False),
+        ("parts", pa.timestamp("us"), True),
     )
-    for label, t in cases:
+    for label, t, parts in cases:
         d = tmp_path_factory.mktemp(f"orders_{label}")
-        _write_orders(d / "orders.parquet", t)
+        _write_orders(d / "orders.parquet", t, parts)
         out[label] = str(d)
     return out
 
 
+def _duckdb_source(sf_dir, table):
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    return os.path.join(path, "*.parquet") if os.path.isdir(path) else path
+
+
 def test_orders_date_encodings_normalize_to_timestamp(spark, orders_dirs):
-    """Every plausible o_orderdate re-encoding (micros, NANOS, date32) must
-    load as the same TimestampType instants — the exact drift that broke
-    events.ts in round 4, pinned for the other date-carrying tables."""
+    """Every plausible o_orderdate re-encoding (naive or UTC micros, millis,
+    NANOS, date32, a directory of parts) must load as the same
+    TimestampType instants — the exact drift that broke events.ts in
+    round 4, pinned for the other date-carrying tables."""
     got = {}
     for label, d in orders_dirs.items():
         df = load_table(spark, d, "orders")
         assert df.schema["o_orderdate"].dataType.typeName() == "timestamp", label
         got[label] = sorted(map(tuple, df.select("o_orderkey", "o_orderdate").collect()))
-    assert got["us"] == got["ns"] == got["date32"]
+    assert all(v == got["us"] for v in got.values()), got
 
 
 def test_orders_query_matches_oracle_on_all_encodings(spark, orders_dirs):
@@ -210,11 +228,12 @@ def test_orders_query_matches_oracle_on_all_encodings(spark, orders_dirs):
     for label, d in orders_dirs.items():
         spark_rows = sorted(map(tuple, qfn(spark, d).collect()))
         con = duckdb.connect()
+        con.execute("SET TimeZone = 'UTC'")  # the UTC-adjusted encoding
         con.execute(
-            f"CREATE VIEW orders AS SELECT * FROM read_parquet('{d}/orders.parquet')"
+            f"CREATE VIEW orders AS SELECT * FROM read_parquet('{_duckdb_source(d, 'orders')}')"
         )
         want = sorted(map(tuple, con.execute(sql).fetchall()))
         con.close()
         assert spark_rows == want, f"{label}: Spark != DuckDB"
         results[label] = spark_rows
-    assert results["us"] == results["ns"] == results["date32"]
+    assert all(v == results["us"] for v in results.values())

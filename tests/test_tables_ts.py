@@ -1,7 +1,9 @@
 """Loader-drift regression: the driver's events.parquet has shipped ``ts``
 as TIMESTAMP(NANOS) (round 1-3 testdata) and as plain timestamp[us]
-(round 4+). ``load_table`` must yield identical instants for both — the
-environment changed once; it can change again."""
+(round 4+). ``load_table`` and the events stream source must yield
+identical instants for both — the environment changed once; it can change
+again. Both resolve the read schema from the parquet footer, so neither
+starts a Spark job."""
 
 from __future__ import annotations
 
@@ -10,9 +12,16 @@ import datetime as dt
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import types as T
 
-from data_ingestion_api_system_spark.tables import load_table
-from data_ingestion_api_system_spark.streaming.jobs import _ts_is_raw_nanos
+from data_ingestion_api_system_spark.streaming.jobs import _events_stream, _run_to_memory
+from data_ingestion_api_system_spark.tables import (
+    TABLE_NAMES,
+    footer_schema,
+    load_table,
+    load_tables,
+    table_path,
+)
 
 _INSTANTS_US = [
     1704067200_000000,  # 2024-01-01T00:00:00
@@ -51,12 +60,60 @@ def encodings(tmp_path_factory):
     return str(us_dir), str(ns_dir)
 
 
-def test_footer_probe(spark, encodings):
+def test_footer_probe(encodings):
     us_dir, ns_dir = encodings
-    assert _ts_is_raw_nanos(spark, us_dir) is False
-    # NANOS: either the read fails (legacy conf unset) or, if a previous
-    # loader already set nanosAsLong, resolves to LongType — True both ways
-    assert _ts_is_raw_nanos(spark, ns_dir) is True
+    us_ts = footer_schema(table_path(us_dir, "events"))["ts"]
+    assert us_ts.dataType == T.TimestampType()
+    # NANOS: declared as raw int64, marked for the timestamp_micros rewrite
+    ns_ts = footer_schema(table_path(ns_dir, "events"))["ts"]
+    assert ns_ts.dataType == T.LongType() and ns_ts.metadata
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_matches_inferred(spark, sf):
+    """The footer schema is the one Spark infers, apart from the one
+    documented timestamp rule: a naive timestamp column, inferred as
+    TimestampNTZType, is declared TimestampType."""
+    for name in TABLE_NAMES:
+        path = table_path(f"/root/testdata/{sf}", name)
+        inferred = T.StructType(
+            [
+                T.StructField(f.name, T.TimestampType(), f.nullable)
+                if isinstance(f.dataType, T.TimestampNTZType)
+                else f
+                for f in spark.read.parquet(path).schema.fields
+            ]
+        )
+        assert footer_schema(path) == inferred, name
+
+
+def _job_ids(spark, group, build):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_table_resolution_starts_no_spark_job(spark):
+    """Loading every table and building the events stream source read
+    parquet footers on the driver: no Spark job runs."""
+    sf_dir = "/root/testdata/sf0.01"
+    assert _job_ids(spark, "load-probe", lambda: load_tables(spark, sf_dir)) == []
+    assert _job_ids(spark, "stream-probe", lambda: _events_stream(spark, sf_dir)) == []
+
+
+def test_stream_source_same_instants(spark, encodings):
+    """The events stream source reads both ts encodings as the instants
+    ``load_table`` reads."""
+    for d in encodings:
+        streamed = _run_to_memory(_events_stream(spark, d), mode="append")
+        batch = load_table(spark, d, "events")
+        assert streamed.schema == batch.schema
+        assert sorted(streamed.collect()) == sorted(batch.collect())
 
 
 def test_both_encodings_same_instants(spark, encodings):
