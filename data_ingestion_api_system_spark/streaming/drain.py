@@ -24,10 +24,16 @@ Design (SURVEY §3.4, §4.3):
   restart), the pipeline keeps ``ingestion_id → batch_ids``,
   ``batch_id → (ids, status)`` and a pending heap in memory. Every change
   reaches the index only after its append has committed, so a failed
-  write never shows; opening a pipeline rebuilds the index with one Spark
-  read of ``ingestions`` and one of batches ⟕ latest log. ``status`` and
-  the dequeue run no Spark job; ``queue_snapshot``, ``processed_results``
-  and ``compact_log`` stay Spark queries over the table directories.
+  write never shows. Opening a pipeline rebuilds the index, and the two
+  sequence counters, from one pyarrow read of each state table, with the
+  latest status per batch folded in Python; no Spark job runs at open.
+  ``status`` and the dequeue run no Spark job either; ``queue_snapshot``
+  and ``processed_results`` stay Spark queries over the table directories.
+- **Compaction is one more append.** ``compact_log`` folds the visible
+  ``batch_log`` parts into one latest row per batch, commits that as a new
+  part, then deletes the parts it folded. Until the deletes finish the log
+  holds each folded row twice, which the latest-status fold ignores, so a
+  crash at any point leaves a valid log and ``batch_log`` always exists.
 - **The queue is a heap, ``queue_snapshot`` is its Spark view.** Pending
   batches sit in a min-heap keyed ``(-priority_level, created_at,
   request_seq, batch_seq)`` — identical preemption semantics to the
@@ -61,6 +67,7 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -140,6 +147,32 @@ _INGESTIONS_SCHEMA = T.StructType(
 )
 
 
+def _read_state(source: str | list[str], schema: T.StructType) -> pa.Table:
+    """A state table (a directory, or a list of its part files) as Arrow,
+    read on the driver. A missing directory reads as empty; any other
+    failure propagates. INT96 timestamps, which Spark's own parquet writer
+    produces, read as the same µs instants as the Arrow-written parts."""
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(source, str) and not os.path.isdir(source):  # nothing appended yet
+        return arrow_schema.empty_table()
+    return pq.read_table(source, schema=arrow_schema, coerce_int96_timestamp_unit="us")
+
+
+def _latest_status(log: pa.Table) -> dict[str, tuple[int, str]]:
+    """batch_id → its latest ``(log_seq, status)``: the per-key
+    ``max(struct(log_seq, status))`` fold, so duplicate rows change
+    nothing."""
+    latest: dict[str, tuple[int, str]] = {}
+    for batch_id, status, seq in zip(*(log[c].to_pylist() for c in _BATCH_LOG_SCHEMA.names)):
+        latest[batch_id] = max(latest.get(batch_id, (seq, status)), (seq, status))
+    return latest
+
+
+def _after_max(column: pa.ChunkedArray) -> int:
+    top = pc.max(column).as_py()
+    return 0 if top is None else top + 1
+
+
 class IngestionPipeline:
     """Library-first ingest/status API (SURVEY §7.2 M3) + drain loop (M2).
 
@@ -151,8 +184,11 @@ class IngestionPipeline:
 
     Single writer: one pipeline object per ``state_dir``. The in-memory
     index is rebuilt from the state tables only when a pipeline is opened,
-    so rows another process appends afterwards are not seen, and
-    ``_op_lock`` orders this object's operations only.
+    by a pyarrow read on the driver, so rows another process appends
+    afterwards are not seen, and ``_op_lock`` orders this object's
+    operations only. Every state file, compaction's included, is committed
+    by :meth:`_append`; compaction deletes the parts it folded but never
+    moves the ``batch_log`` directory.
 
     Delivery is at-least-once: a batch whose drain step died between its
     ``triggered`` and ``completed`` transitions is queued again when the
@@ -169,11 +205,11 @@ class IngestionPipeline:
     ):
         """State tables are parquet directories under ``state_dir`` and
         survive restarts: opening a pipeline over an existing directory
-        finishes or rolls back an interrupted compaction, deletes files an
-        interrupted append left under their hidden temporary name, resumes
-        the request and log sequence counters after the highest values
-        already stored, and rebuilds the in-memory index (re-queuing any
-        batch left ``triggered``)."""
+        deletes files an interrupted append left under their hidden
+        temporary name, then reads the state tables with pyarrow (no Spark
+        job) to resume the request and log sequence counters after the
+        highest values stored and rebuild the in-memory index (re-queuing
+        any batch left ``triggered``)."""
         self.spark = spark
         self.state_dir = state_dir
         self.config = config or DrainConfig()
@@ -189,11 +225,8 @@ class IngestionPipeline:
         # included); taken before _op_lock, never while holding it.
         self._drain_lock = threading.Lock()
         os.makedirs(state_dir, exist_ok=True)
-        self._recover_compaction()
         for tmp in glob.glob(os.path.join(state_dir, "*", ".part-*.parquet")):
             os.remove(tmp)  # an append that died before its rename
-        self._request_seq = self._next_seq("ingestions", _INGESTIONS_SCHEMA, "request_seq")
-        self._log_seq = self._next_seq("batch_log", _BATCH_LOG_SCHEMA, "log_seq")
         self._clear_index()
         self._load_index()
 
@@ -207,12 +240,6 @@ class IngestionPipeline:
         if not os.path.isdir(path):  # nothing appended yet
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(path)
-
-    def _next_seq(self, name: str, schema: T.StructType, column: str) -> int:
-        if not os.path.isdir(self._path(name)):  # skip the query on a fresh state_dir
-            return 0
-        top = self._read(name, schema).agg(F.max(column)).head()[0]
-        return 0 if top is None else top + 1
 
     def _append(self, name: str, rows: list, schema: T.StructType) -> None:
         """Append ``rows`` as one new parquet file, written on the driver.
@@ -251,22 +278,27 @@ class IngestionPipeline:
             heapq.heappush(self._pending, entry)
 
     def _load_index(self) -> None:
-        """Rebuild the index from the state tables, and queue again every
-        batch whose latest status is ``triggered``: its drain step died
-        before COMPLETED (at-least-once, see the class docstring)."""
-        if not os.path.isdir(self._path("ingestions")):  # fresh state_dir
-            return
-        for r in self._read("ingestions", _INGESTIONS_SCHEMA).select("ingestion_id").collect():
-            self._ingestions[r.ingestion_id] = []
-        batches = self._batches_with_status().withColumn(
-            "created_at_us", F.unix_micros("created_at")
+        """Rebuild the sequence counters and the index from the state
+        tables, and queue again every batch whose latest status is
+        ``triggered``: its drain step died before COMPLETED (at-least-once,
+        see the class docstring)."""
+        ingestions = _read_state(self._path("ingestions"), _INGESTIONS_SCHEMA)
+        batches = _read_state(self._path("batches"), _BATCHES_SCHEMA)
+        log = _read_state(self._path("batch_log"), _BATCH_LOG_SCHEMA)
+        self._request_seq = _after_max(ingestions["request_seq"])
+        self._log_seq = _after_max(log["log_seq"])
+        for ingestion_id in ingestions["ingestion_id"].to_pylist():
+            self._ingestions[ingestion_id] = []
+        latest = _latest_status(log)
+        batches = batches.append_column(
+            "created_at_us", batches["created_at"].cast(pa.int64())
         )
-        for r in sorted(batches.collect(), key=lambda r: (r.request_seq, r.batch_seq)):
-            status = r.status
+        for r in sorted(batches.to_pylist(), key=lambda r: (r["request_seq"], r["batch_seq"])):
+            status = latest.get(r["batch_id"], (0, STATUS_YET_TO_START))[1]
             if status == STATUS_TRIGGERED:
-                self._log(r.batch_id, STATUS_YET_TO_START)
+                self._log(r["batch_id"], STATUS_YET_TO_START)
                 status = STATUS_YET_TO_START
-            self._index_batch(r, r.created_at_us, status)
+            self._index_batch(Row(**r), r["created_at_us"], status)
 
     # -- A2-A5: ingest -------------------------------------------------------
 
@@ -321,25 +353,6 @@ class IngestionPipeline:
         for r in batch_rows:
             self._index_batch(r, created_at_us)
         return ingestion_id
-
-    # -- status overlay ------------------------------------------------------
-
-    def _batches_with_status(self) -> DataFrame:
-        """batches ⟕ latest batch_log entry, default yet_to_start (the A15
-        coalesce). The log dedup is a per-key max — at scale a compacted
-        state table; here a window-free groupBy."""
-        batches = self._read("batches", _BATCHES_SCHEMA)
-        log = self._read("batch_log", _BATCH_LOG_SCHEMA)
-        latest = (
-            log.groupBy("batch_id")
-            .agg(F.max(F.struct("log_seq", "status")).alias("m"))
-            .select("batch_id", F.col("m.status").alias("log_status"))
-        )
-        return (
-            batches.join(latest, "batch_id", "left")
-            .withColumn("status", F.coalesce("log_status", F.lit(STATUS_YET_TO_START)))
-            .drop("log_status")
-        )
 
     # -- A14-A17: status -----------------------------------------------------
 
@@ -433,73 +446,37 @@ class IngestionPipeline:
 
     # -- log compaction (the Delta-MERGE production form) --------------------
 
-    def _recover_compaction(self) -> None:
-        """Crash recovery for :meth:`compact_log`'s two-rename swap (run at
-        pipeline open, the moment a Delta log would replay its last
-        commit). The swap can die in two states:
-
-        - old log already retired, promoted log not yet in place → the
-          staged directory carries Spark's ``_SUCCESS`` marker, so promote
-          it; if the marker is missing the stage itself was incomplete and
-          the retired original is restored instead.
-        - stage written (or half-written) but the old log never moved →
-          the live log is intact; the stage is discarded.
-
-        Either way the surviving ``batch_log`` is a complete, consistent
-        log and the leftover staging directories are cleared.
-        """
-        log_p = self._path("batch_log")
-        staged = self._path("batch_log__compacted")
-        retired = self._path("batch_log__retired")
-        if not os.path.exists(log_p):
-            if os.path.exists(os.path.join(staged, "_SUCCESS")):
-                os.rename(staged, log_p)
-            elif os.path.exists(retired):
-                os.rename(retired, log_p)
-        shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(retired, ignore_errors=True)
-
     def compact_log(self) -> int:
         """Fold the append-only ``batch_log`` into one current-status row
         per batch — the periodic compaction a Delta deployment would run as
         ``MERGE INTO batch_status USING log ON batch_id WHEN MATCHED AND
         log.log_seq > target.log_seq THEN UPDATE ...`` (last write wins).
 
-        The fold is the same per-key ``max(struct(log_seq, status))`` the
-        read path computes on the fly, so compaction is a pure no-op for
-        query results — and it is idempotent under replayed/duplicate
-        transitions because struct-max is insensitive to duplicates.
-        In-process readers keep working mid-compaction because every
-        pipeline operation serializes on ``_op_lock`` — between the two
-        directory renames below, ``batch_log`` briefly does not exist, so
-        any OUT-of-process reader of the state directory must tolerate that
-        rename window (or retry on missing-path). The staged-then-swapped
-        file set is the parquet-state analogue of Delta's atomic log
-        commit, minus multi-process isolation.
+        The visible parts are folded with :func:`_latest_status`, the rule
+        the index rebuild and ``queue_snapshot`` use, and the folded rows
+        are committed by :meth:`_append` before the folded parts are
+        deleted. A crash between the two leaves each latest row twice, and
+        the fold ignores duplicates, so every crash point leaves a valid
+        log and nothing needs recovering at open. A reader that listed the
+        parts before the deletes (a Spark DataFrame over ``batch_log``
+        built earlier, or another process) may find a listed part gone and
+        must list again.
 
         Returns the number of rows in the compacted log.
         """
         with self._op_lock:
-            log = self._read("batch_log", _BATCH_LOG_SCHEMA)
-            compacted = (
-                log.groupBy("batch_id")
-                .agg(F.max(F.struct("log_seq", "status")).alias("m"))
-                .select(
-                    "batch_id",
-                    F.col("m.status").alias("status"),
-                    F.col("m.log_seq").alias("log_seq"),
-                )
+            parts = glob.glob(os.path.join(self._path("batch_log"), "part-*.parquet"))
+            if not parts:
+                return 0
+            latest = _latest_status(_read_state(parts, _BATCH_LOG_SCHEMA))
+            self._append(
+                "batch_log",
+                [Row(batch_id=b, status=s, log_seq=q) for b, (q, s) in latest.items()],
+                _BATCH_LOG_SCHEMA,
             )
-            staged = self._path("batch_log__compacted")
-            retired = self._path("batch_log__retired")
-            compacted.write.mode("overwrite").parquet(staged)
-            n = self.spark.read.parquet(staged).count()
-            shutil.rmtree(retired, ignore_errors=True)
-            if os.path.exists(self._path("batch_log")):
-                os.rename(self._path("batch_log"), retired)
-            os.rename(staged, self._path("batch_log"))
-            shutil.rmtree(retired, ignore_errors=True)
-            return n
+            for part in parts:
+                os.remove(part)
+            return len(latest)
 
     # -- A18: state truncation ----------------------------------------------
 
@@ -509,14 +486,7 @@ class IngestionPipeline:
         deployment this is TRUNCATE TABLE; on raw parquet state it drops
         the directories. Waits for a running drain step to finish."""
         with self._drain_lock, self._op_lock:
-            for name in (
-                "ingestions",
-                "batches",
-                "batch_log",
-                "batch_log__compacted",
-                "batch_log__retired",
-                "processed",
-            ):
+            for name in ("ingestions", "batches", "batch_log", "processed"):
                 shutil.rmtree(self._path(name), ignore_errors=True)
             self._request_seq = 0
             self._log_seq = 0
@@ -553,9 +523,21 @@ class IngestionPipeline:
     def queue_snapshot(self) -> DataFrame:
         """The pending set in dequeue order (A6): priority DESC, created_at
         ASC, request_seq ASC, batch_seq ASC — what the reference's
-        batchQueue array would contain."""
+        batchQueue array would contain. Status is batches ⟕ latest
+        batch_log entry, default yet_to_start (the A15 coalesce), folded by
+        the same per-key max as :func:`_latest_status` but as a Spark query,
+        so the view is an independent check on the in-memory heap."""
+        latest = (
+            self._read("batch_log", _BATCH_LOG_SCHEMA)
+            .groupBy("batch_id")
+            .agg(F.max(F.struct("log_seq", "status")).alias("m"))
+            .select("batch_id", F.col("m.status").alias("log_status"))
+        )
         return (
-            self._batches_with_status()
+            self._read("batches", _BATCHES_SCHEMA)
+            .join(latest, "batch_id", "left")
+            .withColumn("status", F.coalesce("log_status", F.lit(STATUS_YET_TO_START)))
+            .drop("log_status")
             .filter(F.col("status") == STATUS_YET_TO_START)
             .withColumn("priority_level", priority_level("priority"))
             .orderBy(

@@ -7,18 +7,18 @@ over the library pipeline, using only the stdlib.
 - ``GET /status/<id>`` → {ingestion_id, status, batches:[...]};
   unknown id → 404 {"error":"Ingestion ID not found"} (src/app.js:162).
 
-Ingest triggers the drain loop fire-and-forget on a worker thread —
-the async boundary the reference creates with an un-awaited
-``processBatches()`` (src/app.js:152). A lock serializes drains (A13),
-and a wake flag keeps a wakeup from being lost: every ingest sets the flag
-before starting its thread, and whichever thread holds the lock clears
-the flag before it drains and checks it again after releasing the lock.
-An ingest that lands while an earlier drain is exiting (its queue already
-seen empty, the lock still held) therefore gets drained by that thread's
-next loop instead of waiting for the next POST. A drain that fails (an
-external call raised) is reported through ``logging`` and the server keeps
-serving; the pipeline has queued the failed batch again, and the next
-ingest's drain retries it.
+Ingest wakes the drain loop fire-and-forget — the async boundary the
+reference creates with an un-awaited ``processBatches()``
+(src/app.js:152). One daemon worker per server runs the loop: it waits on
+a wake event, clears it, then drains until the queue is empty. Every
+ingest sets the event after its state has committed, so an ingest that
+lands while a drain is exiting (its queue already seen empty) leaves the
+event set and the worker drains again instead of waiting for the next
+POST. The pipeline serializes drain steps itself (A13), and
+``server_close`` stops the worker. A drain that fails (an external call
+raised) is reported through ``logging`` and the server keeps serving; the
+pipeline has queued the failed batch again, and the drain after the next
+ingest retries it.
 The library API (drain.IngestionPipeline) stays the primary surface; this
 shim exists for black-box route-level parity testing.
 """
@@ -36,22 +36,21 @@ logger = logging.getLogger(__name__)
 
 
 def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServer:
-    drain_lock = threading.Lock()
     wake = threading.Event()
+    closed = threading.Event()
 
-    def run() -> None:
-        while wake.is_set() and drain_lock.acquire(blocking=False):  # A13
+    def drain_worker() -> None:
+        while True:
+            wake.wait()
+            wake.clear()
+            if closed.is_set():
+                return
             try:
-                wake.clear()
                 pipeline.drain_all()
             except Exception:
                 logger.exception("drain failed; the batch stays queued")
-            finally:
-                drain_lock.release()
 
-    def drain_async() -> None:
-        wake.set()
-        threading.Thread(target=run, daemon=True).start()
+    threading.Thread(target=drain_worker, daemon=True).start()
 
     class Handler(BaseHTTPRequestHandler):
         def _reply(self, code: int, payload: dict) -> None:
@@ -73,7 +72,7 @@ def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServ
                 )
             except (InvalidRequest, TypeError, ValueError, json.JSONDecodeError):
                 return self._reply(400, {"error": "Invalid input"})
-            drain_async()
+            wake.set()
             # Reference parity: app.js:154 replies via res.json() → 200
             # (its test_api.js asserts statusCode 200, not 201).
             self._reply(200, {"ingestion_id": ingestion_id})
@@ -90,4 +89,10 @@ def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServ
         def log_message(self, *args) -> None:  # silence request logging
             pass
 
-    return ThreadingHTTPServer(("127.0.0.1", port), Handler)
+    class Server(ThreadingHTTPServer):
+        def server_close(self) -> None:
+            super().server_close()
+            closed.set()
+            wake.set()  # the worker exits once a running drain returns
+
+    return Server(("127.0.0.1", port), Handler)

@@ -29,6 +29,10 @@ from ..operators import tune
 from ..tables import footer_schema, load_table, normalize, table_path
 
 
+# input bytes per streaming state partition
+_STREAM_TARGET_BYTES = 32 * 1024 * 1024
+
+
 def _stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Input-size-derived shuffle/state partition count for the bounded
     streaming runs (guide §2.2: size partitions to the data, never a
@@ -44,27 +48,19 @@ def _stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     the state is ~9 MB total, so one partition per ~32 MB of input is
     already generous. The derivation is scale-adaptive, not a local
     constant: partitions grow linearly with input bytes (a 100 TB/day
-    source gets the cap), the per-partition target is env-tunable
-    (SPARK_GRAFT_STREAM_TARGET_MB, default 32), and the cap follows the
-    session's core count (4x defaultParallelism) so a bigger cluster
-    gets more state partitions with no code change. Results are
+    source gets the cap) at one per ``_STREAM_TARGET_BYTES``, and the cap
+    follows the session's core count (4x defaultParallelism) so a bigger
+    cluster gets more state partitions with no code change. Results are
     partition-count-invariant (hash aggregation / dropDuplicates /
     symmetric hash join all are); only the state-store commit fan-out
     changes."""
-    try:
-        target_mb = int(os.environ.get("SPARK_GRAFT_STREAM_TARGET_MB", "32"))
-    except ValueError:
-        # a malformed env value must degrade to the default, not fail
-        # every streaming entry (ADVICE r14)
-        target_mb = 32
     p = Path(sf_dir) / "events.parquet"
     if p.is_file():
         nbytes = p.stat().st_size
     else:
         nbytes = sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
     cap = spark.sparkContext.defaultParallelism * 4
-    target = max(1, target_mb) * 1024 * 1024
-    return max(1, min(cap, (nbytes + target - 1) // target))
+    return max(1, min(cap, -(-nbytes // _STREAM_TARGET_BYTES)))
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,13 +68,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     table's footer schema and normalized exactly as ``load_table`` does
     (``tables.footer_schema``/``tables.normalize``): a file-stream source
     needs a declared schema, and reading the footer starts no Spark job."""
-    # the file-stream source requires a directory: stream the sf dir with a
-    # glob filter selecting only the events table
-    raw = (
-        spark.readStream.schema(footer_schema(table_path(sf_dir, "events")))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    path = table_path(sf_dir, "events")
+    reader = spark.readStream.schema(footer_schema(path))
+    if os.path.isdir(path):  # a directory of part files streams as itself
+        raw = reader.parquet(path)
+    else:
+        # the file-stream source requires a directory: stream the sf dir
+        # with a glob filter selecting only the events file
+        raw = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     return normalize(raw, "events")
 
 

@@ -46,6 +46,8 @@ BATCH = 3  # src/app.js:123-124
 #   ("drain",) — one cycle of processBatches
 #   ("reopen",) — a fresh pipeline over the same state dir, which rebuilds
 #     its in-memory queue from the durable tables
+#   ("compact",) — fold batch_log into one latest row per batch; the queue
+#     and every status must be unchanged by it
 event = st.one_of(
     st.tuples(
         st.just("ingest"),
@@ -55,6 +57,7 @@ event = st.one_of(
     ),
     st.tuples(st.just("drain")),
     st.tuples(st.just("reopen")),
+    st.tuples(st.just("compact")),
 )
 schedule_strategy = st.lists(event, min_size=1, max_size=10).filter(
     lambda evs: any(e[0] == "ingest" for e in evs)
@@ -127,6 +130,8 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
             requests.append((seq, n_ids, ing_id))
         elif ev[0] == "reopen":
             pipe = open_pipeline()
+        elif ev[0] == "compact":
+            pipe.compact_log()
         else:
             got = pipe.drain_step()
             want = model.drain()

@@ -75,8 +75,8 @@ def test_empty_ids_completed_immediately(server):
 
 class _ExitingDrain:
     """Pipeline stand-in whose first ``drain_all`` finds the queue empty
-    and then pauses, still inside the server's drain lock, until the test
-    resumes it: the window in which a drain thread is about to exit."""
+    and then pauses until the test resumes it: the window in which a drain
+    is about to return."""
 
     def __init__(self):
         self.queue: list[list[int]] = []
@@ -101,9 +101,10 @@ class _ExitingDrain:
 
 
 def test_ingest_during_drain_exit_is_drained(monkeypatch):
-    """An ingest that lands while the previous drain thread has seen an
-    empty queue but still holds the drain lock must still be drained,
-    without waiting for another POST."""
+    """An ingest that lands while the drain worker has seen an empty queue
+    but not yet returned must still be drained, without waiting for
+    another POST; the server starts one drain worker, not one per POST,
+    and stops it when closed."""
     from data_ingestion_api_system_spark.streaming import http_api
 
     started: list[threading.Thread] = []
@@ -127,17 +128,17 @@ def test_ingest_during_drain_exit_is_drained(monkeypatch):
         assert _post(base, {"ids": [1], "priority": "LOW"})[0] == 200
         assert pipeline.exiting.wait(timeout=30)
         assert _post(base, {"ids": [2], "priority": "LOW"})[0] == 200
-        first, second = started
-        second.join(timeout=30)  # its drain attempt found the lock held
-        assert not second.is_alive()
+        assert pipeline.drained == [[1]]
         pipeline.resume.set()
-        first.join(timeout=30)
-        assert not first.is_alive()
-        assert pipeline.drained == [[1], [2]] and pipeline.queue == []
+        assert _wait_for(lambda: pipeline.drained == [[1], [2]])
+        assert pipeline.queue == [] and pipeline.calls == 2
+        assert len(started) == 1
     finally:
         pipeline.resume.set()
         srv.shutdown()
         srv.server_close()
+    started[0].join(timeout=30)  # closing the server stops its worker
+    assert not started[0].is_alive()
 
 
 def _wait_for(predicate, timeout: float = 30.0) -> bool:

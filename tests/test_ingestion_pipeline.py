@@ -235,9 +235,9 @@ def test_compaction_idempotent_under_replayed_transitions(pipeline):
 
 
 def test_compaction_durable_swap_and_continue(spark, tmp_path):
-    """Durable mode: compaction rewrites the parquet log via the staged
-    directory swap; status() reads the compacted table and the drain loop
-    keeps appending to it afterwards."""
+    """Durable mode: compaction commits the folded log as one more part and
+    deletes the parts it folded; status() reads the compacted table and
+    the drain loop keeps appending to it afterwards."""
     p = IngestionPipeline(spark, str(tmp_path / "state"))
     ing = p.ingest([1, 2, 3, 4, 5, 6, 7], "MEDIUM")  # 3 batches
     p.drain_step()
@@ -266,36 +266,40 @@ def test_reset_truncates_all_state(pipeline):
     assert pipeline.status(ing2)["status"] == "yet_to_start"
 
 
-def test_compaction_crash_recovery(spark, tmp_path):
-    """Kill the compaction swap in both possible crash states and prove a
-    fresh pipeline over the same state dir recovers a complete log."""
+def test_compaction_crash_before_deletes_leaves_valid_log(spark, tmp_path, monkeypatch):
+    """A compaction that dies after its folded part commits, before the
+    folded parts are deleted, leaves each latest row twice. A pipeline
+    opened over that log serves the same statuses, drain order and
+    sequence counters, and compacting again returns the same count."""
     import os
-    import shutil
+
+    from data_ingestion_api_system_spark.streaming.drain import _BATCH_LOG_SCHEMA
 
     state = str(tmp_path / "state")
-    p = IngestionPipeline(spark, state)
-    ing = p.ingest([1, 2, 3, 4], "HIGH")
-    p.drain_all()
-    before = p.status(ing)
-    log_p = os.path.join(state, "batch_log")
-    staged = os.path.join(state, "batch_log__compacted")
-    retired = os.path.join(state, "batch_log__retired")
+    p = IngestionPipeline(spark, state, clock=lambda: _T0)
+    done = p.ingest([1, 2, 3, 4], "HIGH")  # 2 batches
+    queued = p.ingest([5, 6, 7, 8, 9, 10, 11], "LOW")  # 3 batches
+    p.drain_all(max_steps=3)  # 3 batches log triggered + completed
+    before = {i: p.status(i) for i in (done, queued)}
+    counters = (p._request_seq, p._log_seq)
 
-    # crash state A: old log retired, promoted log never landed (the
-    # staged dir is a complete Spark write, so it carries _SUCCESS)
-    shutil.copytree(log_p, staged)
-    os.rename(log_p, retired)
-    p2 = IngestionPipeline(spark, state)  # recovery runs at open
-    assert os.path.exists(log_p) and not os.path.exists(staged)
-    assert not os.path.exists(retired)
-    assert p2.status(ing) == before
+    def crash(path):
+        raise OSError("crashed before deleting folded parts")
 
-    # crash state B: stage half-written (no _SUCCESS), live log intact
-    os.makedirs(staged)
-    open(os.path.join(staged, "part-00000.parquet"), "wb").close()
-    p3 = IngestionPipeline(spark, state)
-    assert os.path.exists(log_p) and not os.path.exists(staged)
-    assert p3.status(ing) == before
+    monkeypatch.setattr(os, "remove", crash)
+    with pytest.raises(OSError, match="crashed before deleting"):
+        p.compact_log()
+    monkeypatch.undo()
+    assert p._read("batch_log", _BATCH_LOG_SCHEMA).count() == 6 + 3
+
+    p2 = IngestionPipeline(spark, state, clock=lambda: _T0)
+    assert {i: p2.status(i) for i in (done, queued)} == before
+    assert (p2._request_seq, p2._log_seq) == counters
+    assert p2.compact_log() == 3
+    assert p2._read("batch_log", _BATCH_LOG_SCHEMA).count() == 3
+    rest = [b["batch_id"] for b in before[queued]["batches"][1:]]
+    assert [r.batch_id for r in p2.queue_snapshot().collect()] == rest
+    assert [p2.drain_step(), p2.drain_step(), p2.drain_step()] == rest + [None]
 
 
 # -- durable state: driver-side appends, reopen, read errors ------------------
@@ -439,17 +443,36 @@ def test_state_read_error_is_not_a_404(spark, tmp_path, monkeypatch):
     read state surfaces instead of turning into 'not found'. Status is
     served from the index, so the state tables are read when a pipeline is
     opened: a read failure there must raise, not open an empty queue."""
-    from pyspark.sql.readwriter import DataFrameReader
+    import pyarrow.parquet as pq
 
     state = str(tmp_path / "state")
     IngestionPipeline(spark, state).ingest([1], "LOW")
 
-    def unreadable(self, *paths, **options):
+    def unreadable(*args, **kwargs):
         raise RuntimeError("unreadable state table")
 
-    monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
+    monkeypatch.setattr(pq, "read_table", unreadable)
     with pytest.raises(RuntimeError, match="unreadable state table"):
         IngestionPipeline(spark, state)
+
+
+def test_open_over_existing_state_starts_no_spark_job(spark, tmp_path):
+    """Opening a pipeline reads the state tables on the driver: the index
+    and the sequence counters are rebuilt without a Spark job."""
+    state = str(tmp_path / "state")
+    p1 = IngestionPipeline(spark, state)
+    ing = p1.ingest([1, 2, 3, 4], "HIGH")
+    p1.drain_step()
+    sc = spark.sparkContext
+    sc.setJobGroup("open-probe", "open-probe")
+    try:
+        p2 = IngestionPipeline(spark, state)
+        jobs = sc.statusTracker().getJobIdsForGroup("open-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert [b["status"] for b in p2.status(ing)["batches"]] == ["completed", "yet_to_start"]
 
 
 # -- in-memory state index ----------------------------------------------------

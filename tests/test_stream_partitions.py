@@ -10,6 +10,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from data_ingestion_api_system_spark.streaming import jobs
 from data_ingestion_api_system_spark.streaming.jobs import (
     _run_to_memory,
     _stream_shuffle_partitions,
@@ -32,7 +33,7 @@ def test_derivation_scales_with_bytes(spark, monkeypatch, tmp_path):
     src.write_bytes(b"\0" * (3 * 1024 * 1024 + 512 * 1024))
     nbytes = src.stat().st_size
     target_mb = 1
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_MB", str(target_mb))
+    monkeypatch.setattr(jobs, "_STREAM_TARGET_BYTES", target_mb * 1024 * 1024)
     expect = -(-nbytes // (target_mb * 1024 * 1024))  # ceil -> 4
     cap = spark.sparkContext.defaultParallelism * 4
     got = _stream_shuffle_partitions(spark, str(tmp_path))
@@ -40,16 +41,9 @@ def test_derivation_scales_with_bytes(spark, monkeypatch, tmp_path):
     assert got > 1
 
 
-def test_derivation_tolerates_malformed_env_target(spark, monkeypatch):
-    # a malformed env value falls back to the 32 MB default instead of
-    # raising and failing every streaming entry (ADVICE r14)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_MB", "not-a-number")
-    assert _stream_shuffle_partitions(spark, SF_DIR) == 1
-
-
 def test_derivation_caps_at_4x_parallelism(spark, monkeypatch):
-    # a 0-MB target is clamped to 1 MB; cap must still bound the result
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_MB", "0")
+    # a one-byte target asks for a partition per byte; the cap bounds it
+    monkeypatch.setattr(jobs, "_STREAM_TARGET_BYTES", 1)
     cap = spark.sparkContext.defaultParallelism * 4
     assert 1 <= _stream_shuffle_partitions(spark, SF_DIR) <= cap
 

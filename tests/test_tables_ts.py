@@ -116,6 +116,19 @@ def test_stream_source_same_instants(spark, encodings):
         assert sorted(streamed.collect()) == sorted(batch.collect())
 
 
+def test_stream_source_reads_directory_of_parts(spark, tmp_path):
+    """An events table stored as a directory of part files streams every
+    row ``load_table`` reads."""
+    (tmp_path / "events.parquet").mkdir()
+    _write_events(
+        tmp_path / "events.parquet" / "part-00000.parquet",
+        pa.array(_INSTANTS_US, pa.timestamp("us")),
+    )
+    streamed = _run_to_memory(_events_stream(spark, str(tmp_path)), mode="append")
+    batch = load_table(spark, str(tmp_path), "events")
+    assert streamed.count() == batch.count() == len(_INSTANTS_US)
+
+
 def test_both_encodings_same_instants(spark, encodings):
     us_dir, ns_dir = encodings
     got = {}
