@@ -7,8 +7,9 @@ Layout
 - ``session``    : SparkSession factory tuned for local[N] and cluster scale.
 - ``tables``     : loaders for the driver's parquet tables (TPC-H-ish star
                    schema + events/documents/embeddings).
-- ``schemas``    : explicit StructTypes for the ingestion-pipeline data model
-                   (reference src/app.js:17-25 Maps → normalized tables).
+- ``schemas``    : the ingestion request schema and the constants of the
+                   reference's data model (priorities, ID range, batch size,
+                   statuses).
 - ``ingestion``  : the reference's core dataflow (validate → chunk → order →
                    rollup) as pure DataFrame transforms (SURVEY §2 A2-A6,
                    A14-A17).

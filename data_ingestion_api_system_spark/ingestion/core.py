@@ -74,28 +74,23 @@ def validate(requests: DataFrame) -> tuple[DataFrame, DataFrame]:
     return requests.filter(pred), requests.filter(~pred)
 
 
-def ingestions_from_requests(
-    valid: DataFrame, deterministic_ids: bool = True
-) -> DataFrame:
+def ingestions_from_requests(valid: DataFrame) -> DataFrame:
     """A3+A4: parent records (src/app.js:141-146), children normalized out.
 
-    ``deterministic_ids=True`` derives ``ingestion_id`` from ``request_id``
-    (oracle-checkable); ``False`` uses ``uuid()`` for reference parity.
+    ``ingestion_id`` is derived from ``request_id`` (oracle-checkable), the
+    same way :func:`chunk_batches` derives it for every batch row.
     """
-    ing_id = (
-        F.concat(F.lit("ing-"), F.col("request_id").cast("string"))
-        if deterministic_ids
-        else F.expr("uuid()")
-    )
     return valid.select(
-        ing_id.alias("ingestion_id"),
+        F.concat(F.lit("ing-"), F.col("request_id").cast("string")).alias(
+            "ingestion_id"
+        ),
         F.col("request_id"),
         F.col("priority"),
         F.col("arrival_ts").alias("created_at"),
     )
 
 
-def chunk_batches(valid: DataFrame, deterministic_ids: bool = True) -> DataFrame:
+def chunk_batches(valid: DataFrame) -> DataFrame:
     """A5: split ``ids`` into consecutive chunks of ≤3, one child row each
     (src/app.js:122-138), carrying ``batch_seq`` (intra-request order — the
     stable-sort tiebreak the JS Array sort preserves implicitly).
@@ -112,27 +107,20 @@ def chunk_batches(valid: DataFrame, deterministic_ids: bool = True) -> DataFrame
             lambda i: F.slice(F.col("ids"), i * BATCH_SIZE + 1, BATCH_SIZE),
         )
     )
-    ing_id = (
-        F.concat(F.lit("ing-"), F.col("request_id").cast("string"))
-        if deterministic_ids
-        else F.col("ingestion_id")
-    )
     exploded = valid.select(
-        ing_id.alias("ingestion_id"),
+        F.concat(F.lit("ing-"), F.col("request_id").cast("string")).alias(
+            "ingestion_id"
+        ),
         F.col("request_id"),
         F.col("priority"),
         F.col("arrival_ts").alias("created_at"),
         F.posexplode(chunks).alias("batch_seq", "batch_ids"),
     )
-    batch_id = (
-        F.concat(
-            F.lit("b-"),
-            F.col("request_id").cast("string"),
-            F.lit("-"),
-            F.col("batch_seq").cast("string"),
-        )
-        if deterministic_ids
-        else F.expr("uuid()")
+    batch_id = F.concat(
+        F.lit("b-"),
+        F.col("request_id").cast("string"),
+        F.lit("-"),
+        F.col("batch_seq").cast("string"),
     )
     return exploded.select(
         batch_id.alias("batch_id"),

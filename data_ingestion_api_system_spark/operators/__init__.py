@@ -386,99 +386,29 @@ def grouped_global_cumsum(
 
 
 # The driver's CORRECTNESS gate evaluates the registry in iteration order and
-# only certifies a bounded prefix (observed: first 50 entries in every round
-# so far). Registry order is therefore a per-round certification budget. The
-# window composition is structural:
-#   positions 1..5   : pipeline (the reference's soul; driver-green every round)
-#   remaining slots  : every other registry entry, ordered by STALENESS —
-#                      ascending last-driver-green round computed from the
-#                      committed CORRECTNESS_r*.json files, registry natural
-#                      order as tiebreak. Never-certified entries sort first;
-#                      newborns (``_BORN_ROUND``) wait exactly one round.
-# Deriving the fill from the driver's own records (VERDICT r5 #2) makes the
-# rotation self-maintaining: each round the driver commits a new
-# CORRECTNESS_r{N}.json, which reorders the next round's tail to the
-# argmax-stale set with zero hand-editing. The former "ALL of prep" fixed
-# block was dropped in round 8 (VERDICT r7 #1): once additions stopped
-# landing in prep it re-certified 16 never-stale entries every round. With
-# ~153 tail entries and ~45 fill slots the full cycle is 3-4 rounds.
+# certifies only a bounded prefix (the first 50 entries in every round so
+# far), so registry order decides which entries get re-certified. The rule:
+# the pipeline entries first, then the rest by ascending last driver-green
+# round from the committed CORRECTNESS_r*.json files (never-certified first,
+# ties in registry order), so each round's prefix takes the stalest entries.
 _WINDOW_SIZE = 50
 
-# Fallback fill order if no CORRECTNESS_r*.json history is readable (e.g.
-# the package imported outside the repo checkout): the staleness order as of
-# round 6 — never-certified first, then the round-1 tail, then round-2.
-_FALLBACK_FILL = (
-    "dedup_containment",
-    "dedup_semantic",
-    "sim_quantize_int8",
-    "sim_pq_codes",
-    "sim_recall_eval",
-    "text_chunk_windows",
-    "text_tfidf_topk",
-    "text_cross_doc_spans",
-    "text_perplexity_ngram",
-    "text_weighted_sample",
-    "text_inverted_index",
-    "multimodal_resize",
-    "streaming_stateful_totals",
-    "events_markov_transitions",
-    "events_rfm_segmentation",
-    "window_time_range_frame",
-    "sketch_histogram_quantiles",
-    "sketch_bloom_membership",
-    "basket_brand_pairs",
-    "graph_triangle_count",
-    "tpch_q6_forecast_revenue",
-    "tpch_q10_returned_items",
-    "join_semi_anti",
-    "set_ops",
-    "agg_rollup",
-    "agg_cube",
-    "distinct_agg",
-    "tpch_q4_order_priority",
-    "tpch_q14_promo_effect",
-    "tpch_q19_discounted_revenue",
-    "pivot_priority_by_year",
-    "sql_scalar_subquery",
-    "date_functions",
-    "tpch_q22_sales_opportunity",
-    "unpivot_measures",
-    "map_columns_roundtrip",
-    "dedup_embedding_cosine",
-    "dedup_ngram_jaccard",
-    "sim_knn_join",
-    "sim_intra_label_stats",
-    "sim_lsh_bucket_stats",
-    "text_bpe_tokens",
-    "text_word_freq",
-    "text_fingerprint",
-    "text_ngram_profile",
-    "text_sequence_pack",
-    "text_stratified_sample",
-    "multimodal_size_rollup",
-    "tpch_q1_pricing_summary",
-    "tpch_q18_large_orders",
-    "sql_grouping_sets",
-)
 
-
-def correctness_history(root=None) -> dict[str, int]:
+def correctness_history() -> dict[str, int]:
     """entry name → latest round with a driver pass, read from the committed
     ``CORRECTNESS_r*.json`` files at the repo root. Only EXACT rows count
     (rows/schema/hash all matched, no err): a rows-only ``no_oracle`` row
-    certifies nothing once the entry gains an oracle, and as of round 7 the
-    registry's last oracle-less entry (approx_distinct_sketch) has one — so
-    any entry whose only history is rows-only sorts as never-certified and
-    re-enters the window for a real hash-matched driver row."""
+    certifies nothing once the entry gains an oracle, so an entry whose only
+    history is rows-only sorts as never-certified. Unreadable or missing
+    files read as no history."""
     import json
     import re
     from pathlib import Path
 
-    if root is None:
-        root = Path(__file__).resolve().parents[2]
+    root = Path(__file__).resolve().parents[2]
     last: dict[str, int] = {}
     try:
-        files = sorted(Path(root).glob("CORRECTNESS_r*.json"))
+        files = sorted(root.glob("CORRECTNESS_r*.json"))
     except OSError:
         return last
     for f in files:
@@ -498,165 +428,15 @@ def correctness_history(root=None) -> dict[str, int]:
     return last
 
 
-# Entries registered AFTER this round's 50-entry driver window was derived.
-# The round-7 window is exactly consumed by the overdue r1/r2 re-certification
-# cohorts plus the three first-certifications VERDICT r6 ordered (#2/#4) —
-# 29 fill slots, 29 must-certify names. A newborn entry is locally exact
-# (tools/check_oracle.py gates the full registry every run) but has no driver
-# history, so raw never-certified-first ordering would let it displace an
-# overdue entry. Instead a newborn enters the rotation with effective
-# staleness ``born − _ROTATION_CYCLE``: behind everything already overdue a
-# full cycle, ahead of everything certified within the cycle — i.e. it waits
-# exactly one round, then claims first priority. Delete an entry from this
-# map once it holds a driver row (history wins over birth anyway).
-_BORN_ROUND = {
-    "cdc_apply_log": 7,
-    "attribution_multi_touch": 7,
-    "events_decay_value": 7,
-    "dq_skew_report": 7,
-    "revenue_share_hier": 7,
-    "prep_source_kl_drift": 7,
-    "multimodal_phash_dedup": 7,
-    "layout_zorder_skipping": 7,
-    "sketch_hll_union_rollup": 7,
-    "sim_ndcg_eval": 7,
-    "events_ts_features": 7,
-    "orders_backlog_sweep": 7,
-    "join_incremental_delta": 7,
-    "events_path_mining": 7,
-    "sim_centroid_drift": 7,
-    "text_ngram_novelty": 7,
-    "events_ab_test": 7,
-    "events_linreg_trend": 7,
-    "layout_compaction_bins": 7,
-    "sketch_join_size_estimate": 7,
-    "events_cusum_changepoint": 7,
-    "dq_mad_outliers": 7,
-    "events_seasonal_backtest": 7,
-    "text_entropy_score": 7,
-    "streaming_static_enrich": 7,
-    "sim_pq_adc_search": 7,
-    "io_partitioned_roundtrip": 7,
-    "arrow_cents_ledger": 7,
-    "events_streaks": 7,
-    "events_dau_wau": 7,
-    # round-8 additions (all exact in the local full gate on landing;
-    # they wait one round, then claim first window priority in round 9)
-    "events_interval_merge": 8,
-    "orders_pareto_frontier": 8,
-    "graph_label_prop": 8,
-    "text_length_buckets": 8,
-    "sim_hard_negatives": 8,
-    "sketch_heavy_hitters": 8,
-    "dq_benford_check": 8,
-    "streaming_windowed_topk": 8,
-    "io_csv_roundtrip": 8,
-    "multimodal_audio_windows": 8,
-    "orders_abc_classification": 8,
-    "graph_common_neighbors": 8,
-    "io_json_roundtrip": 8,
-    "sql_lateral_topk": 8,
-    "orders_cohort_ltv": 8,
-    "text_rake_keyphrases": 8,
-    "dedup_lsh_tuning_sweep": 8,
-    "sim_ivf_nprobe_sweep": 8,
-    "join_salted_skew": 8,
-    "text_tokenizer_fertility": 8,
-    # round-9 additions
-    "io_orc_roundtrip": 9,
-    "sketch_kmv_distinct": 9,
-    "text_pmi_collocations": 9,
-    "graph_katz_centrality": 9,
-    "sim_mmr_diversify": 9,
-    "text_filter_funnel": 9,
-    "text_bpe_merge_step": 9,
-    "dedup_incremental_bloom": 9,
-    "sketch_theta_intersection": 9,
-    "dq_referential_orphans": 9,
-    "events_survival_hazard": 9,
-    "graph_kcore_peel": 9,
-    "text_heaps_vocab_growth": 9,
-    "io_schema_evolution": 9,
-    "layout_column_stats": 9,
-    "prep_curriculum_order": 9,
-    "text_kneser_ney_score": 9,
-    "events_bot_score": 9,
-    "events_cumulative_reach": 9,
-    "sim_cluster_purity": 9,
-    "events_wow_growth": 9,
-    "orders_class_migration": 9,
-    "events_markov_stationary": 9,
-    "orders_repeat_purchase": 9,
-    "sim_dim_variance_topk": 9,
-    "events_error_budget_burn": 9,
-    "orders_ship_latency": 9,
-    "text_vocab_coverage": 9,
-    # round-11 additions: the four partsupp-only TPC-H queries over the
-    # deterministic derived partsupp (operators/tpch_ps.py) — growth held
-    # to 4 ≤ 5 per VERDICT r10 #7; they wait one round, then claim window
-    # priority in round 12
-    "tpch_q2_min_cost_supplier": 11,
-    "tpch_q11_important_stock": 11,
-    "tpch_q16_supplier_variety": 11,
-    "tpch_q20_promotion_stock": 11,
-    # round-12 additions: growth held to 3 ≤ 5 per VERDICT r11 #5 — a
-    # statistical-law fit (Zipf OLS), a hybrid-retrieval merge (RRF), and
-    # an inequality measure (per-type Gini via the group-generalized
-    # TeraSort rank); they wait one round, then claim window priority
-    "text_zipf_fit": 12,
-    "sim_rank_fusion": 12,
-    "events_gini_concentration": 12,
-    "dedup_exact_substr": 13,
-    "prep_domain_caps": 13,
-    "text_quality_calibration": 13,
-    "text_hashed_classifier": 13,
-    "prep_doremi_step": 13,
-    "text_boilerplate_passages": 13,
-    "dq_k_anonymity": 13,
-    "graph_adamic_adar": 13,
-    "prep_epoch_allocator": 13,
-    "geo_radius_join": 13,
-    # round-14 ablation cohort: CCNet LM tercile bucketing, the
-    # eval-contamination (benchmark x source) matrix, the tokenizer
-    # vocab-size-transfer fertility/OOV table
-    "text_ccnet_buckets": 14,
-    "prep_contamination_matrix": 14,
-    "text_vocab_transfer": 14,
-    "text_repetition_filters": 14,
-    # round-14b: CCMatrix-style margin-based bitext mining
-    "sim_bitext_margin": 14,
-}
-_ROTATION_CYCLE = 4  # observed full-rotation length (COVERAGE.md): 3-4 rounds
-
-
-def effective_staleness(name: str, history: dict[str, int]) -> float:
-    """Sort key for the driver window: the round of the entry's last driver
-    pass; never-certified entries count as ``born − _ROTATION_CYCLE + 0.5``
-    when their birth round is known (newborns — see ``_BORN_ROUND``) and as
-    −1 (maximally stale) otherwise. The half-step makes a newborn lose a
-    TIE against real history from a full cycle ago (e.g. round-8 newborns
-    at 8−4+0.5=4.5 sort after the r4-certified cohort at 4.0, not
-    interleaved with it by registry order) while still beating everything
-    certified within the cycle."""
-    if name in history:
-        return float(history[name])
-    born = _BORN_ROUND.get(name)
-    return -1.0 if born is None else born - _ROTATION_CYCLE + 0.5
-
-
 def staleness_fill(tail_names, history=None) -> list[str]:
-    """Order the non-pipeline registry tail by ascending
-    effective staleness (never-certified first, except newborns — see
-    ``effective_staleness``); ties keep registry natural order (Python sort
-    stability). Falls back to the frozen ``_FALLBACK_FILL`` prefix when no
-    history is available."""
-    tail = list(tail_names)
+    """Order the non-pipeline registry tail by ascending last driver-green
+    round; an entry with no record counts as −1 (first) and ties keep
+    registry order (sort stability). ``history`` defaults to
+    ``correctness_history()``; outside a checkout none can be read, so the
+    tail keeps plain registry order."""
     if history is None:
         history = correctness_history()
-    if not history:
-        rank = {n: i for i, n in enumerate(_FALLBACK_FILL)}
-        return sorted(tail, key=lambda n: rank.get(n, len(rank)))
-    return sorted(tail, key=lambda n: effective_staleness(n, history))
+    return sorted(tail_names, key=lambda n: history.get(n, -1))
 
 
 # Single source of truth for the registry merge list: module names relative
@@ -697,17 +477,11 @@ def all_query_modules() -> tuple:
 
 
 def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    """Aggregate QUERIES/ORACLE across all operator modules, ordered so the
-    driver's 50-entry verified prefix covers (a) the 5 pipeline entries
-    (reference soul — driver-green every round by design), and (b) the rest
-    of the registry by ascending staleness (``staleness_fill``), so each
-    round the driver re-certifies the longest-unverified tail automatically.
-    New operators enter via ``_BORN_ROUND`` (one-round wait, then first in
-    line) — the former "ALL of prep always in-window" clause is gone
-    (VERDICT r7 #1): it burned 16 slots/round re-certifying never-stale
-    entries once additions stopped landing in prep.
-    tests/test_registry_window.py pins this invariant; run it after touching
-    any QUERIES dict."""
+    """Aggregate QUERIES/ORACLE across all operator modules: the pipeline
+    entries first, then the rest of the registry in ``staleness_fill``
+    order, so the driver's verified prefix re-certifies the
+    longest-unverified entries. tests/test_registry_window.py pins this
+    order; run it after touching any QUERIES dict."""
     mods = all_query_modules()
     pipeline = next(m for m in mods if m.__name__.endswith(".pipeline"))
 

@@ -1,17 +1,14 @@
-"""Explicit schemas for the ingestion-pipeline data model.
+"""Constants and the request schema of the ingestion data model.
 
-Mirrors the reference's three in-memory stores (reference src/app.js:17-25)
-as normalized tables (SURVEY.md §1.4):
+- ``INGEST_REQUEST_SCHEMA``: raw API inputs, pre-validation
+  (reference src/app.js:106-116).
+- Priority levels, the valid ID range, the batch size and the batch
+  status values the whole package shares (src/app.js:10-14,51,76,88,112,
+  123-124).
 
-- ``ingest_requests``: raw API inputs, pre-validation (src/app.js:106-116).
-- ``ingestions``: parent records (src/app.js:141-146), children normalized
-  out.
-- ``batches``: child/work records (src/app.js:131-137) + the queue-entry
-  fields (src/app.js:47-54); the "queue" is just the subset with
-  ``status = 'yet_to_start'`` ordered at read time (SURVEY §1.4).
-- ``processed_results``: per-ID simulated-call outputs (src/app.js:31) —
-  the reference discards them; we persist them so processing is observable
-  without wall-clock assertions.
+The durable state tables (``ingestions``, ``batches``, ``batch_log``,
+``processed``) and their schemas live in ``streaming/drain.py``, which
+writes them.
 
 IDs are LongType because the valid range is [1, 1_000_000_007]
 (src/app.js:112) which exceeds Int32.
@@ -43,32 +40,5 @@ INGEST_REQUEST_SCHEMA = T.StructType(
         T.StructField("ids", T.ArrayType(T.LongType()), True),
         T.StructField("priority", T.StringType(), True),
         T.StructField("arrival_ts", T.TimestampType(), True),
-    ]
-)
-
-INGESTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("ingestion_id", T.StringType(), False),
-        T.StructField("priority", T.StringType(), False),
-        T.StructField("created_at", T.TimestampType(), False),
-    ]
-)
-
-BATCHES_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.StringType(), False),
-        T.StructField("ingestion_id", T.StringType(), False),
-        T.StructField("batch_seq", T.IntegerType(), False),
-        T.StructField("ids", T.ArrayType(T.LongType()), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("priority", T.StringType(), False),
-        T.StructField("created_at", T.TimestampType(), False),
-    ]
-)
-
-PROCESSED_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("data", T.StringType(), False),
     ]
 )

@@ -14,7 +14,6 @@ drop idle users) — here NoTimeout since the driver data is bounded.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -89,69 +88,3 @@ def running_user_totals(events_stream: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# --- Spark 4 transformWithStateInPandas form --------------------------------
-# The successor API (SPARK-49395 "state v2"): typed per-key state handles
-# (value/list/map state, TTL, timers) instead of one opaque state tuple.
-# Same semantics as running_user_totals above; both forms are kept because
-# applyInPandasWithState remains the widely-deployed API while
-# transformWithState is where new capabilities (per-state TTL, multiple
-# state variables, timers in processing/event time) land.
-#
-# ENVIRONMENT GATE: executing this path needs `google.protobuf` (the
-# state-server wire protocol, pyspark/sql/streaming/proto/StateMessage_pb2)
-# which is absent in this container — the driver worker crashes with
-# ImportError at query start. The operator itself is complete; the parity
-# test (tests/test_stateful_and_formats.py) skips unless protobuf imports,
-# mirroring the Kafka-jar and image-codec gates. Re-probed each round
-# (last: round 7) — still absent; the test unskips itself the round the
-# environment gains the module.
-
-try:  # the API exists in Spark >= 4.0; guard so the module imports anywhere
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningUserTotalsProcessor(StatefulProcessor):
-        """Per-user cumulative counters as a typed ValueState."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            n, total_scaled = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            batch_n = 0
-            for pdf in rows:
-                batch_n += len(pdf)
-                n += len(pdf)
-                total_scaled += _scaled_sum(pdf["value"])
-            self._totals.update((n, total_scaled))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [round(total_scaled / 10000.0, 6)],
-                    "batch_events": [batch_n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def running_user_totals_tws(events_stream: DataFrame) -> DataFrame:
-        """``running_user_totals`` on the transformWithStateInPandas API —
-        must produce identical emissions (pinned by
-        tests/test_stateful_and_formats.py)."""
-        return events_stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningUserTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - older Spark
-    running_user_totals_tws = None  # type: ignore[assignment]

@@ -12,14 +12,10 @@ from __future__ import annotations
 import pytest
 
 from data_ingestion_api_system_spark.operators import (
-    _BORN_ROUND,
-    _FALLBACK_FILL,
     _WINDOW_SIZE,
     all_query_modules,
     collect_queries,
     correctness_history,
-    effective_staleness,
-    staleness_fill,
 )
 
 
@@ -60,8 +56,8 @@ def test_fill_is_argmax_stale(registry):
     in_window = [n for n in names[:_WINDOW_SIZE] if n not in fixed]
     out_window = tail[len(in_window):]
     if in_window and out_window:
-        max_in = max(effective_staleness(n, history) for n in in_window)
-        min_out = min(effective_staleness(n, history) for n in out_window)
+        max_in = max(history.get(n, -1) for n in in_window)
+        min_out = min(history.get(n, -1) for n in out_window)
         assert max_in <= min_out, (
             f"window not argmax-stale: in-window freshness {max_in} > "
             f"out-of-window staleness {min_out}"
@@ -69,52 +65,17 @@ def test_fill_is_argmax_stale(registry):
 
 
 def test_window_holds_never_certified_except_newborns(registry):
-    """Never-certified entries must be in-window (first driver certification
-    ASAP) — EXCEPT newborns registered after the current round's window was
-    derived (``_BORN_ROUND``), which wait exactly until the next round so
-    they cannot displace an overdue re-certification (VERDICT r6 #2 froze
-    the round-7 window as the r1/r2 cohorts + the three round-7a
-    first-certifications)."""
+    """Every never-certified entry must be in-window, so it gets its first
+    driver certification in the next round. No entry is exempt: an entry
+    without a driver record sorts first whenever it was registered."""
     names, _, _ = registry
     history = correctness_history()
     if not history:
         pytest.skip("no CORRECTNESS_r*.json history in this checkout")
     window = set(names[:_WINDOW_SIZE])
     never = {n for n in names if n not in history}
-    missing = never - window - set(_BORN_ROUND)
+    missing = never - window
     assert not missing, f"never-certified entries out of window: {missing}"
-
-
-def test_newborns_lead_next_rounds_rotation(registry):
-    """A newborn (born round R, no driver row) must sort ahead of every
-    entry whose last driver pass is round R-3 or later — i.e. once the
-    current round's overdue cohort is certified, newborns are first in
-    line. Guards against a birth-staleness constant that silently parks
-    new operators at the back of the rotation for multiple rounds."""
-    names, _, _ = registry
-    history = correctness_history()
-    if not history:
-        pytest.skip("no CORRECTNESS_r*.json history in this checkout")
-    for n, born in _BORN_ROUND.items():
-        if n in history:
-            continue  # first driver row landed; birth no longer applies
-        eff = effective_staleness(n, history)
-        assert eff < born - 2, (n, eff, born)
-
-
-def test_staleness_fill_fallback_is_deterministic(registry):
-    """With no history, staleness_fill must follow the frozen fallback
-    prefix and keep registry natural order for names beyond it."""
-    names, queries, _ = registry
-
-    from data_ingestion_api_system_spark.operators import pipeline
-
-    fixed = set(pipeline.QUERIES)
-    tail = [n for n in queries if n not in fixed]
-    got = staleness_fill(tail, history={})
-    rank = {n: i for i, n in enumerate(_FALLBACK_FILL)}
-    expected = sorted(tail, key=lambda n: rank.get(n, len(rank)))
-    assert got == expected
 
 
 def test_fixed_head_cannot_overflow_window():
@@ -131,8 +92,8 @@ def test_window_composition_any_round(registry):
     history, i.e. exactly when the next round's window needed certifying).
     For WHATEVER round the committed CORRECTNESS history ends at, the
     window must be: the 5 pipeline entries + the argmax-stale 45, which
-    implies (a) every never-certified entry whose one-round newborn wait
-    has elapsed is in-window, and (b) the in-window fill's staleness
+    implies (a) every never-certified entry is in-window, and (b) the
+    in-window fill's staleness
     multiset equals the first 45 of the whole tail's sorted staleness
     (set-equality up to ties, strictly stronger than the max<=min check in
     test_fill_is_argmax_stale)."""
@@ -140,16 +101,12 @@ def test_window_composition_any_round(registry):
     history = correctness_history()
     if not history:
         pytest.skip("no CORRECTNESS_r*.json history in this checkout")
-    current = max(history.values())
     window = names[:_WINDOW_SIZE]
 
-    # (a) first-certification urgency: anything never driver-certified and
-    # born at or before the last certified round must hold a window slot now
-    never_due = {
-        n for n in names
-        if n not in history and _BORN_ROUND.get(n, 0) <= current
-    }
-    missing = never_due - set(window)
+    # (a) first-certification urgency: anything never driver-certified must
+    # hold a window slot now
+    never = {n for n in names if n not in history}
+    missing = never - set(window)
     assert not missing, f"never-certified entries out of window: {missing}"
 
     # (b) the fill is exactly the stalest 45 (multiset of staleness keys)
@@ -159,8 +116,8 @@ def test_window_composition_any_round(registry):
     assert fixed <= set(window)
     fill = [n for n in window if n not in fixed]
     tail = [n for n in names if n not in fixed]
-    got = sorted(effective_staleness(n, history) for n in fill)
-    want = sorted(effective_staleness(n, history) for n in tail)[: len(fill)]
+    got = sorted(history.get(n, -1) for n in fill)
+    want = sorted(history.get(n, -1) for n in tail)[: len(fill)]
     assert got == want, f"window fill is not the argmax-stale set: {got} != {want}"
 
 
@@ -201,11 +158,3 @@ def test_all_query_modules_have_dicts():
     for mod in all_query_modules():
         assert isinstance(getattr(mod, "QUERIES", None), dict), mod.__name__
         assert isinstance(getattr(mod, "ORACLE", None), dict), mod.__name__
-
-
-def test_fallback_fill_names_exist(registry):
-    """A typo in _FALLBACK_FILL silently demotes the name to the tail of the
-    no-history ordering; catch it here instead."""
-    _, queries, _ = registry
-    unknown = [n for n in _FALLBACK_FILL if n not in queries]
-    assert not unknown, f"_FALLBACK_FILL names not in registry: {unknown}"

@@ -146,72 +146,3 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert set(back.columns) == {"k", "v", "tag"}
     rows = {r.k: r.tag for r in back.collect()}
     assert rows == {1: None, 2: "new"}
-
-
-def test_transform_with_state_matches_apply_in_pandas(spark, tmp_path):
-    """The Spark-4 transformWithStateInPandas form of the running-totals
-    operator must emit the same cumulative rows as the
-    applyInPandasWithState form across micro-batches."""
-    from data_ingestion_api_system_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    if running_user_totals_tws is None:
-        pytest.skip("transformWithStateInPandas not available")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "transformWithState state-server protocol needs google.protobuf "
-            "(absent in this container; see streaming/stateful.py gate note)"
-        )
-
-    stream_dir = tmp_path / "stream_tws"
-    stream_dir.mkdir()
-
-    def write_batch(name, rows):
-        staging = f"{tmp_path}/tws_{name}"
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        shutil.copy(
-            glob.glob(f"{staging}/part-*.parquet")[0], f"{stream_dir}/{name}.parquet"
-        )
-
-    write_batch(
-        "b0",
-        [Row(event_id=1, user_id=1, value=10.0), Row(event_id=2, user_id=2, value=5.0)],
-    )
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(stream_dir))
-    captured: list[dict] = []
-
-    def capture(batch_df, _epoch):
-        captured.extend(r.asDict() for r in batch_df.collect())
-
-    q = (
-        running_user_totals_tws(stream)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .foreachBatch(capture)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_batch(
-            "b1",
-            [Row(event_id=3, user_id=1, value=2.5), Row(event_id=4, user_id=3, value=1.0)],
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    by_user_latest = {}
-    for row in captured:
-        by_user_latest[row["user_id"]] = row
-    # identical assertions to the applyInPandasWithState test
-    assert by_user_latest[1]["n_events"] == 2
-    assert by_user_latest[1]["total_value"] == pytest.approx(12.5)
-    assert by_user_latest[1]["batch_events"] == 1
-    assert by_user_latest[2]["n_events"] == 1
-    assert by_user_latest[3]["n_events"] == 1

@@ -20,9 +20,7 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from data_ingestion_api_system_spark.tables import TABLE_NAMES as TABLES  # noqa: E402
 
 
 def normalize(df):

@@ -58,9 +58,7 @@ import duckdb
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from data_ingestion_api_system_spark.tables import TABLE_NAMES as TABLES  # noqa: E402
 
 DEFAULT_SFS = [
     "/root/testdata/sf0.001",
