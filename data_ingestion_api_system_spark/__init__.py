@@ -12,7 +12,7 @@ Layout
                    statuses).
 - ``ingestion``  : the reference's core dataflow (validate → chunk → order →
                    rollup) as pure DataFrame transforms (SURVEY §2 A2-A6,
-                   A14-A17).
+                   A15-A16).
 - ``streaming``  : the stateful drain loop (SURVEY §2 A7-A13) as a
                    Structured Streaming query with deterministic stepping.
 - ``operators``  : the query capability layer (SURVEY §2 Part C): relational,

@@ -1,9 +1,9 @@
 """The reference's core ingestion dataflow as pure DataFrame transforms.
 
 Covers SURVEY.md §2 operators A2-A6 (validate, key-gen, timestamp, chunk,
-priority-order) and A14-A17 (point lookup, child join, status rollup,
-response projection). The stateful drain loop (A7-A13) lives in
-``..streaming``.
+priority-order) and A15-A16 (child join, status rollup). The stateful
+drain loop (A7-A13) and the per-request status lookup and response
+(A14, A17) live in ``..streaming``.
 """
 
 from .core import (
@@ -12,7 +12,6 @@ from .core import (
     priority_order,
     requests_from_orders,
     simulate_progress,
-    status_response,
     status_rollup,
     validate,
 )
@@ -25,5 +24,4 @@ __all__ = [
     "requests_from_orders",
     "simulate_progress",
     "status_rollup",
-    "status_response",
 ]

@@ -16,11 +16,12 @@ Operator map (SURVEY.md §2):
 - A4  timestamping     (src/app.js:119)
 - A5  batch chunking   (src/app.js:122-138)
 - A6  priority order   (src/app.js:10-14,36-42,57)
-- A14 point lookup     (src/app.js:158-163)
 - A15 child join       (src/app.js:166,176-180)
 - A16 status rollup    (src/app.js:168-173) incl. the vacuous-completed
       edge for zero-batch ingestions (test/test_api.js:47-57)
-- A17 response shape   (src/app.js:176-186)
+
+The A14 point lookup and the A17 response shape (src/app.js:158-186) are
+served per request by ``streaming/drain.py::IngestionPipeline.status``.
 """
 
 from __future__ import annotations
@@ -211,38 +212,6 @@ def status_rollup(
         .alias("status"),
         F.coalesce("n_batches", F.lit(0)).cast("bigint").alias("n_batches"),
         F.coalesce("n_ids", F.lit(0)).cast("bigint").alias("n_ids"),
-    )
-
-
-def status_response(ingestions: DataFrame, batches: DataFrame) -> DataFrame:
-    """A17: the GET /status response shape (src/app.js:176-186) —
-    {ingestion_id, status, batches:[{batch_id, ids, status}]} with priority
-    and created_at projected away. ``sort_array`` on a (batch_seq,…) struct
-    restores intra-request order (collect_list alone is partition-order
-    dependent).
-    """
-    nested = batches.groupBy("ingestion_id").agg(
-        F.transform(
-            F.sort_array(
-                F.collect_list(F.struct("batch_seq", "batch_id", "ids", "status"))
-            ),
-            lambda s: F.struct(
-                s["batch_id"].alias("batch_id"),
-                s["ids"].alias("ids"),
-                s["status"].alias("status"),
-            ),
-        ).alias("batches")
-    )
-    rolled = status_rollup(ingestions, batches)
-    return (
-        rolled.join(nested, "ingestion_id", "left")
-        .select(
-            "ingestion_id",
-            "status",
-            F.coalesce("batches", F.expr("array()").cast(
-                "array<struct<batch_id:string,ids:array<bigint>,status:string>>"
-            )).alias("batches"),
-        )
     )
 
 

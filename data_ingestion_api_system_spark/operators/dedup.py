@@ -18,8 +18,6 @@ Engineering choices that make these oracle-checkable AND scale-correct:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -199,57 +197,6 @@ def _sql_minhash(idx: int) -> str:
     )
 
 
-# (app_id, sf_dir, file_fingerprint) → (sh, banded, cand): three registry queries
-# (minhash_lsh, lsh_verified, cluster_cc) share the same
-# shingle→signature→band→candidate front half; memoizing it means one cached
-# shingle table and one candidate computation per session instead of three.
-# Entries are lazy DataFrames — an external clearCache() just makes them
-# recompute, never stale. The fingerprint keys out rewritten input files
-# (mtime+size of every part under documents.parquet), so a regenerated
-# sf_dir within one Spark application gets a fresh entry instead of the
-# stale persisted shingles; clear_lsh_front_cache() evicts + unpersists
-# explicitly (test teardown / memory pressure).
-_LSH_FRONT_CACHE: dict[
-    tuple[str, str, str], tuple[DataFrame, DataFrame, DataFrame]
-] = {}
-
-
-def _docs_fingerprint(sf_dir: str) -> str:
-    """mtime_ns:size fingerprint of the documents table's file set (single
-    file or directory of parts) — cheap stat-only identity for cache keys."""
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(p):
-            parts = []
-            for root, dirs, files in os.walk(p):
-                dirs.sort()  # deterministic traversal across filesystems
-                for f in sorted(files):
-                    full = os.path.join(root, f)
-                    st = os.stat(full)
-                    rel = os.path.relpath(full, p)
-                    parts.append(f"{rel}:{st.st_mtime_ns}:{st.st_size}")
-            return "|".join(parts)
-        st = os.stat(p)
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return "absent"
-
-
-def clear_lsh_front_cache() -> None:
-    """Unpersist and drop every memoized LSH front half. Call from test
-    teardown or after rewriting input files to release executor storage
-    immediately (entries are otherwise evicted only by fingerprint change,
-    which leaves the old persisted RDD to LRU eviction)."""
-    for sh, banded, _cand in _LSH_FRONT_CACHE.values():
-        # one try per handle: a failure on sh must not leak banded (ADVICE r5)
-        for df in (sh, banded):
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session may already be stopped
-    _LSH_FRONT_CACHE.clear()
-
-
 def lsh_band_table(sh: DataFrame) -> DataFrame:
     """Banded signature table (doc_id, band_idx, band_key) from a shingle
     table (doc_id, shingles).
@@ -325,9 +272,16 @@ def lsh_candidates(banded: DataFrame) -> DataFrame:
 
 
 def lsh_front(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Un-memoized MinHash-LSH front half over any (doc_id, text) frame:
-    returns (shingle table, banded signatures, candidate pairs). Pure
-    function of its input — tests drive it with adversarial corpora."""
+    """MinHash-LSH front half over any (doc_id, text) frame: (cached
+    shingle table, cached banded signatures, candidate pairs). The LSH
+    entries call it directly.
+
+    Reuse: a second build over the same input plans identically, and
+    Spark's cache manager serves an identical plan from the first build's
+    cached data, so the dedup family costs one signature pass per session.
+    A caller that rewrites ``documents.parquet`` under the same path must
+    call ``spark.catalog.clearCache()`` first, as for every persisted
+    intermediate in this package (``fresh_build`` does)."""
     # Filter on text length, not on size(shingles): the two are equivalent
     # (shingles is empty iff length(text) < SHINGLE_LEN, and null text is
     # dropped by both), but a size(shingles) predicate gets pushed below
@@ -336,58 +290,18 @@ def lsh_front(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     # the single scan task as a filter condition before running AGAIN in
     # parallel above the exchange (measured: 1.9 s of the 2.2 s shingle
     # stage at sf0.1). The length predicate pushes to the scan for free.
-    sh = (
-        docs.filter(F.length("text") >= SHINGLE_LEN)
-        .select("doc_id", F.expr(_SPARK_SHINGLES).alias("shingles"))
-    )
-    banded = lsh_band_table(sh)
-    return sh, banded, lsh_candidates(banded)
-
-
-def _lsh_shingles_and_candidates(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared MinHash-LSH front half: cached shingle table + candidate
-    pairs from band-bucket collisions. Used by the standalone LSH query,
-    the LSH→verify composition, and the cluster-assignment query —
-    memoized per (session, sf_dir, input-file fingerprint)."""
-    key = (spark.sparkContext.applicationId, sf_dir, _docs_fingerprint(sf_dir))
-    if key in _LSH_FRONT_CACHE:
-        sh, banded, cand = _LSH_FRONT_CACHE[key]
-        # re-assert persistence: an external clearCache() (bench does this
-        # between timed runs) unpersists BOTH cached tables, and without
-        # them the candidate self-join computes the shingle+minhash pass on
-        # BOTH sides — measured 2x on the LSH front half. The banded table
-        # matters most: it sits downstream of the 8-way md5 signature agg,
-        # so an uncached banded re-runs the whole minhash pipeline twice.
-        sh.cache()
-        banded.cache()
-        return sh, cand
-    docs = load_table(spark, sf_dir, "documents")
-    # cached: the shingle table feeds signature computation + both sides of
-    # the verify join — cache materializes the shingle arrays once
-    # length pre-filter, not size(shingles) post-filter — see lsh_front for
-    # why (a size predicate pushes below the spread() exchange and runs the
-    # whole interpreted shingle transform serially in the scan task)
+    # Both tables are cached: the shingle table feeds the signature pass
+    # and both sides of the verify join, the banded table both sides of the
+    # candidate self-join. cache() (MEMORY_AND_DISK_DESER), not pin()
+    # (serialized MEMORY_AND_DISK), which would change the plan text and
+    # the storage cost.
     sh = (
         spread(docs.filter(F.length("text") >= SHINGLE_LEN))
         .select("doc_id", F.expr(_SPARK_SHINGLES).alias("shingles"))
         .cache()
     )
     banded = lsh_band_table(sh).cache()
-    cand = lsh_candidates(banded)
-    # evict superseded entries for the same (app, sf_dir): a rewritten
-    # input dir changes the fingerprint, and without this the old persisted
-    # shingle table lingers in executor storage until LRU eviction
-    for old_key in [k for k in _LSH_FRONT_CACHE if k[:2] == key[:2]]:
-        old_sh, old_banded, _old_cand = _LSH_FRONT_CACHE.pop(old_key)
-        for df in (old_sh, old_banded):
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session may already be stopped
-    _LSH_FRONT_CACHE[key] = (sh, banded, cand)
-    return sh, cand
+    return sh, banded, lsh_candidates(banded)
 
 
 def _verify_pairs(sh: DataFrame, cand: DataFrame) -> DataFrame:
@@ -422,7 +336,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification — never carried through the wide shuffle.
     """
     tune(spark)
-    sh, cand = _lsh_shingles_and_candidates(spark, sf_dir)
+    sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     return _verify_pairs(sh, cand)
 
 
@@ -439,7 +353,7 @@ def q_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast-able metadata join). At sf0.1 it runs in seconds where
     the blocked-pairwise baseline takes ~59 s."""
     tune(spark)
-    sh, cand = _lsh_shingles_and_candidates(spark, sf_dir)
+    sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     pairs = _verify_pairs(sh, cand)
     docs = load_table(spark, sf_dir, "documents")
     meta_a = docs.select(
@@ -681,7 +595,7 @@ def q_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely different algorithm arriving at the identical fixpoint,
     which is the strongest kind of cross-check."""
     tune(spark)
-    sh, cand = _lsh_shingles_and_candidates(spark, sf_dir)
+    sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     pairs = _verify_pairs(sh, cand).select("doc_a", "doc_b")
     labels = connected_components(pairs)
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
@@ -863,10 +777,12 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: identical to the verified-LSH pipeline — band-bucket
     equi-join candidates, then shingle arrays joined back to the bare
-    pairs only for the final per-pair fold. Reuses the memoized front
-    half, so running the whole dedup family costs ONE signature pass."""
+    pairs only for the final per-pair fold. Its front half plans the same
+    as the other LSH entries', so Spark's cache manager serves it from
+    their cached tables and the whole dedup family costs ONE signature
+    pass per session (see lsh_front)."""
     tune(spark)
-    sh, cand = _lsh_shingles_and_candidates(spark, sf_dir)
+    sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     sha = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     shb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     joined = cand.join(sha, "doc_a").join(shb, "doc_b")
@@ -1072,7 +988,7 @@ def q_dedup_lsh_tuning_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     superset), then attributes per config by an equi-join. Counts and
     ratios are exact integer ppm."""
     tune(spark)
-    sh_full, _ = _lsh_shingles_and_candidates(spark, sf_dir)
+    sh_full, _banded, _cand = lsh_front(load_table(spark, sf_dir, "documents"))
     sh = sh_full.filter(F.col("doc_id") % SWEEP_SAMPLE_MOD == 0)
     n_hashes = 8
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))

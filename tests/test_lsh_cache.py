@@ -1,63 +1,35 @@
-"""LSH front-half cache hygiene: deterministic fingerprints for multi-level
-part directories, and eviction of superseded entries when the input files
-are rewritten (ADVICE r4: dedup.py fingerprint + eviction)."""
+"""LSH front-half reuse: a second ``lsh_front`` build over the same input
+plans identically to the first, so Spark's cache manager serves it from
+the first build's cached shingle and band tables — no memo needed."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
-from data_ingestion_api_system_spark.operators import dedup
+from data_ingestion_api_system_spark.operators.dedup import lsh_front
+from data_ingestion_api_system_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_fingerprint_disambiguates_same_basename(tmp_path):
-    """Same-named part files in different subdirectories must contribute
-    distinct fingerprint components (relative path, not basename)."""
-    d = tmp_path / "documents.parquet"
-    (d / "a").mkdir(parents=True)
-    (d / "b").mkdir(parents=True)
-    (d / "a" / "part-0").write_bytes(b"xx")
-    (d / "b" / "part-0").write_bytes(b"yy")
-    fp = dedup._docs_fingerprint(str(tmp_path))
-    comps = fp.split("|")
-    assert len(comps) == 2
-    names = sorted(c.split(":")[0] for c in comps)
-    assert names == [os.path.join("a", "part-0"), os.path.join("b", "part-0")]
+def test_second_build_reuses_cached_front_half(spark, tmp_path):
+    # a private copy of the table: no earlier test can have cached this
+    # plan, so the first build's count is exact
+    shutil.copy(os.path.join(SF_DIR, "documents.parquet"), tmp_path / "documents.parquet")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
 
-
-def test_fingerprint_stable_and_content_sensitive(tmp_path):
-    d = tmp_path / "documents.parquet"
-    (d / "sub").mkdir(parents=True)
-    (d / "sub" / "part-0").write_bytes(b"xx")
-    fp1 = dedup._docs_fingerprint(str(tmp_path))
-    fp2 = dedup._docs_fingerprint(str(tmp_path))
-    assert fp1 == fp2
-    (d / "sub" / "part-0").write_bytes(b"xxx")  # size change
-    assert dedup._docs_fingerprint(str(tmp_path)) != fp1
-
-
-def test_rewritten_input_evicts_stale_entry(spark, tmp_path):
-    """Rewriting documents.parquet under the same sf_dir must replace the
-    cache entry (old persisted shingles unpersisted), not accumulate."""
-    sf = str(tmp_path)
-    shutil.copy(os.path.join(SF_DIR, "documents.parquet"),
-                os.path.join(sf, "documents.parquet"))
-    dedup.clear_lsh_front_cache()
-    dedup._lsh_shingles_and_candidates(spark, sf)
-    key1 = [k for k in dedup._LSH_FRONT_CACHE if k[1] == sf]
-    assert len(key1) == 1
-    old_sh = dedup._LSH_FRONT_CACHE[key1[0]][0]
-    old_sh.count()  # materialize the persisted shingle table
-
-    # rewrite with a different mtime → new fingerprint
-    p = os.path.join(sf, "documents.parquet")
-    st = os.stat(p)
-    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    dedup._lsh_shingles_and_candidates(spark, sf)
-    key2 = [k for k in dedup._LSH_FRONT_CACHE if k[1] == sf]
-    assert len(key2) == 1
-    assert key2[0] != key1[0]
-    assert old_sh.storageLevel.useMemory is False  # unpersisted
-    dedup.clear_lsh_front_cache()
+    before = persisted().size()
+    sh, banded, cand = lsh_front(load_table(spark, str(tmp_path), "documents"))
+    try:
+        n_cand = cand.count()
+        after_first = persisted().size()
+        _sh2, _banded2, cand2 = lsh_front(load_table(spark, str(tmp_path), "documents"))
+        assert cand2.count() == n_cand
+        after_second = persisted().size()
+        assert after_first - before == 2  # shingle table + band table
+        assert after_second - after_first == 0  # served from the first build
+    finally:
+        sh.unpersist(blocking=True)
+        banded.unpersist(blocking=True)
+    assert persisted().size() == before

@@ -101,8 +101,7 @@ def _adversarial_docs(spark):
 
 def test_bucket_bounded_to_adjacent_length_bands(spark):
     docs = _adversarial_docs(spark)
-    _sh, banded, _cand = lsh_front(docs)
-    banded = banded.cache()
+    sh, banded, _cand = lsh_front(docs)
     try:
         # un-banded key (length suffix stripped): the mined signatures make
         # ALL 36 docs collide — the hot bucket the length band exists to split
@@ -145,14 +144,13 @@ def test_bucket_bounded_to_adjacent_length_bands(spark):
         )
         assert worst <= 18, f"bucket of {worst} docs exceeds two length bands"
     finally:
+        sh.unpersist()
         banded.unpersist()
 
 
 def test_length_band_is_lossless_for_verified_pairs(spark):
     docs = _adversarial_docs(spark)
     sh, banded, cand = lsh_front(docs)
-    sh = sh.cache()
-    banded = banded.cache()
     try:
         with_band = {
             (r.doc_a, r.doc_b, r.jaccard)

@@ -64,20 +64,6 @@ def test_fill_is_argmax_stale(registry):
         )
 
 
-def test_window_holds_never_certified_except_newborns(registry):
-    """Every never-certified entry must be in-window, so it gets its first
-    driver certification in the next round. No entry is exempt: an entry
-    without a driver record sorts first whenever it was registered."""
-    names, _, _ = registry
-    history = correctness_history()
-    if not history:
-        pytest.skip("no CORRECTNESS_r*.json history in this checkout")
-    window = set(names[:_WINDOW_SIZE])
-    never = {n for n in names if n not in history}
-    missing = never - window
-    assert not missing, f"never-certified entries out of window: {missing}"
-
-
 def test_fixed_head_cannot_overflow_window():
     """The fixed head (pipeline only, post-r8) must leave the vast majority
     of the window for staleness fills."""

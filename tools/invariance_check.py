@@ -93,7 +93,7 @@ def main() -> int:
                 print(f"FAIL {name}: {failures[name]}", flush=True)
             else:
                 print(f"OK   {name}: {len(rows_a)} rows invariant", flush=True)
-        # same rationale as bench.py / scaling_probe.py: a truncated
+        # same rationale as bench.py: a truncated
         # multi-hour sweep keeps a usable prefix, in the SAME shape as
         # the final record so downstream readers need no special case.
         # Written AFTER classification (ADVICE r10): the old finally-block
