@@ -42,15 +42,15 @@ Design (SURVEY §3.4, §4.3):
   order as a query, ``batches ⟕ latest-log WHERE status='yet_to_start'
   ORDER BY ...``, which on Spark executes as TakeOrderedAndProject for its
   top rows.
-- **Mutual exclusion (A13) is structural**: one drain step at a time per
-  pipeline object; in the Structured Streaming deployment one query = one
-  active trigger at a time. Status and ingest do not wait on a running
-  step's external calls or pacing sleeps.
-- **Pacing (A12) is injectable**: ``DrainConfig(per_id_delay=0.5,
-  batch_gap=5.0)`` reproduces the reference's wall-clock arithmetic
-  (full-batch cycle 6.5 s — BASELINE.md); tests run with zeros and step
-  the loop deterministically (SURVEY §5.2.1), so correctness never depends
-  on sleeps.
+- **One drain loop (A13)**: ``drain_all`` runs ``drain_step`` until the
+  queue is empty, and ``_drain_lock`` runs one step at a time per
+  pipeline object. Status and ingest do not wait on a running step's
+  external calls or pacing sleeps.
+- **Pacing (A12) is injectable**: ``DrainConfig.batch_gap``, a sleep after
+  each batch, is the only pacing; ``per_id_delay=0.5, batch_gap=5.0``
+  reproduce the reference's wall-clock arithmetic (full-batch cycle 6.5 s
+  — BASELINE.md). Tests run with zeros and step the loop deterministically
+  (SURVEY §5.2.1), so correctness never depends on sleeps.
 """
 
 from __future__ import annotations
@@ -436,11 +436,11 @@ class IngestionPipeline:
                 time.sleep(self.config.batch_gap)  # A12: gap AFTER work
             return batch_id
 
-    def drain_all(self, max_steps: int = 10_000) -> int:
+    def drain_all(self) -> int:
         """Drain until empty (the full processBatches loop). Returns the
         number of batches processed."""
         n = 0
-        while n < max_steps and self.drain_step() is not None:
+        while self.drain_step() is not None:
             n += 1
         return n
 
@@ -491,32 +491,6 @@ class IngestionPipeline:
             self._request_seq = 0
             self._log_seq = 0
             self._clear_index()
-
-    # -- always-on streaming drain (SURVEY §3.4) -----------------------------
-
-    def start_streaming_drain(self, trigger_seconds: float = 5.0):
-        """The deployment form of the drain loop: an always-on Structured
-        Streaming query whose triggers clock ``drain_step`` — a rate source
-        provides the heartbeat, ``foreachBatch`` performs the top-1 dequeue
-        + process + status transitions. One query = one active trigger at a
-        time (A13 for free); ``trigger_seconds`` plays the reference's 5 s
-        pacing (A12 — fixed-period flavor; gap-after-work fidelity uses the
-        manual ``drain_step`` loop with ``DrainConfig.batch_gap``).
-
-        Returns the StreamingQuery; caller stops it.
-        """
-        heartbeat = (
-            self.spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        )
-
-        def tick(_batch_df, _epoch) -> None:
-            self.drain_step()
-
-        return (
-            heartbeat.writeStream.foreachBatch(tick)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
-        )
 
     # -- observability -------------------------------------------------------
 

@@ -2,8 +2,9 @@
 over the library pipeline, using only the stdlib.
 
 - ``POST /ingest``   {ids:[...], priority:"HIGH|MEDIUM|LOW"} →
-  202-style {"ingestion_id": ...}; invalid body → 400 {"error":"Invalid
-  input"} (src/app.js:115).
+  202-style {"ingestion_id": ...}; invalid body, or JSON that is not an
+  object → 400 {"error":"Invalid input"} (src/app.js:115). Integral JSON
+  numbers such as ``1.0`` count as integers, as in JavaScript.
 - ``GET /status/<id>`` → {ingestion_id, status, batches:[...]};
   unknown id → 404 {"error":"Ingestion ID not found"} (src/app.js:162).
 
@@ -33,6 +34,14 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from .drain import IngestionPipeline, InvalidRequest, NotFound
 
 logger = logging.getLogger(__name__)
+
+
+def _json_float(literal: str) -> float | int:
+    """A JSON number with a fraction or exponent, read the way the
+    reference's ``JSON.parse`` + ``Number.isInteger`` see it: an integral
+    value (``1.0``, ``2e0``) is an int, anything else stays a float."""
+    value = float(literal)
+    return int(value) if value.is_integer() else value
 
 
 def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServer:
@@ -66,7 +75,9 @@ def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServ
                 return self._reply(404, {"error": "Not found"})
             try:
                 length = int(self.headers.get("Content-Length", 0))
-                req = json.loads(self.rfile.read(length) or b"{}")
+                req = json.loads(self.rfile.read(length) or b"{}", parse_float=_json_float)
+                if not isinstance(req, dict):
+                    raise InvalidRequest("Invalid input")
                 ingestion_id = pipeline.ingest(
                     req.get("ids"), req.get("priority")
                 )

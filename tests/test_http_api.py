@@ -24,12 +24,17 @@ def server(spark, tmp_path):
     thread.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
     srv.shutdown()
+    srv.server_close()
 
 
-def _post(base: str, payload: dict) -> tuple[int, dict]:
+def _post(base: str, payload: object) -> tuple[int, dict]:
+    return _post_raw(base, json.dumps(payload).encode())
+
+
+def _post_raw(base: str, body: bytes) -> tuple[int, dict]:
     req = urllib.request.Request(
         f"{base}/ingest",
-        data=json.dumps(payload).encode(),
+        data=body,
         headers={"Content-Type": "application/json"},
         method="POST",
     )
@@ -60,6 +65,26 @@ def test_invalid_body_400(server):
     assert _post(server, {"ids": [1, "a"], "priority": "HIGH"})[0] == 400
     assert _post(server, {"ids": [1], "priority": "URGENT"})[0] == 400
     assert _post(server, {"priority": "HIGH"})[0] == 400
+
+
+@pytest.mark.parametrize("body", [[1, 2, 3], "x", 7])
+def test_non_object_body_400(server, body):
+    """Valid JSON that is not an object gets the 400 reply, not a dropped
+    connection."""
+    assert _post(server, body) == (400, {"error": "Invalid input"})
+
+
+def test_integral_json_numbers_are_integer_ids(server):
+    """``1.0`` and ``2e0`` are integers to the reference's
+    ``Number.isInteger``; ``1.5``, ``1e400`` (infinity), ``-0.0`` (out of
+    range) and ``true`` are not valid ids."""
+    code, body = _post_raw(server, b'{"ids": [1.0, 2e0], "priority": "LOW"}')
+    assert code == 200
+    _, status = _get(server, f"/status/{body['ingestion_id']}")
+    assert [b["ids"] for b in status["batches"]] == [[1, 2]]
+    for bad in (b"1.5", b"1e400", b"-0.0", b"true"):
+        body = b'{"ids": [' + bad + b'], "priority": "LOW"}'
+        assert _post_raw(server, body)[0] == 400, bad
 
 
 def test_unknown_status_404(server):

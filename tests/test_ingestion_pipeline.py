@@ -168,6 +168,15 @@ def test_completed_rollup_after_drain(pipeline):
     assert [b["status"] for b in st["batches"]] == ["completed", "completed"]
 
 
+def test_drain_all_has_no_step_cap(tmp_path):
+    """drain_all runs until drain_step finds the queue empty, however many
+    batches that takes (processBatches has no step cap)."""
+    pipeline = IngestionPipeline(None, str(tmp_path / "state"))
+    batch_ids = (f"batch-{i}" for i in range(10_001))
+    pipeline.drain_step = lambda: next(batch_ids, None)
+    assert pipeline.drain_all() == 10_001
+
+
 def test_partial_drain_mixed_rollup(pipeline):
     """Some batches completed + none triggered → overall 'yet_to_start'
     (exact reference semantics: rollup checks every-completed then
@@ -213,7 +222,8 @@ def test_compaction_idempotent_under_replayed_transitions(pipeline):
 
     ing_done = pipeline.ingest([1, 2, 3, 4], "HIGH")  # 2 batches
     ing_half = pipeline.ingest([5, 6, 7, 8], "LOW")
-    pipeline.drain_all(max_steps=3)  # completes both HIGH + first LOW batch
+    for _ in range(3):  # completes both HIGH + first LOW batch
+        assert pipeline.drain_step() is not None
     before = {i: pipeline.status(i) for i in (ing_done, ing_half)}
 
     # replay every existing transition verbatim (duplicate appends)
@@ -279,7 +289,8 @@ def test_compaction_crash_before_deletes_leaves_valid_log(spark, tmp_path, monke
     p = IngestionPipeline(spark, state, clock=lambda: _T0)
     done = p.ingest([1, 2, 3, 4], "HIGH")  # 2 batches
     queued = p.ingest([5, 6, 7, 8, 9, 10, 11], "LOW")  # 3 batches
-    p.drain_all(max_steps=3)  # 3 batches log triggered + completed
+    for _ in range(3):  # 3 batches log triggered + completed
+        assert p.drain_step() is not None
     before = {i: p.status(i) for i in (done, queued)}
     counters = (p._request_seq, p._log_seq)
 

@@ -1,11 +1,10 @@
-"""Tests for the custom stateful operator (applyInPandasWithState), the
-always-on streaming drain, and the file-format connectors."""
+"""Tests for the custom stateful operator (applyInPandasWithState) and the
+file-format connectors."""
 
 from __future__ import annotations
 
 import glob
 import shutil
-import time
 
 import pytest
 from pyspark.sql import Row
@@ -13,11 +12,9 @@ from pyspark.sql import functions as F
 
 from data_ingestion_api_system_spark.sources.formats import (
     convert_to_parquet,
-    kafka_stream_source,
     read_table,
     write_table,
 )
-from data_ingestion_api_system_spark.streaming.drain import IngestionPipeline
 from data_ingestion_api_system_spark.streaming.stateful import running_user_totals
 
 EVENT_SCHEMA = "event_id long, user_id long, value double"
@@ -74,25 +71,6 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
     assert by_user_latest[3]["n_events"] == 1
 
 
-def test_streaming_drain_processes_batches(spark, tmp_path):
-    """The always-on drain (rate-source heartbeat + foreachBatch) completes
-    queued work without manual stepping."""
-    pipeline = IngestionPipeline(spark, str(tmp_path / "state"))
-    ing = pipeline.ingest([1, 2, 3, 4], "HIGH")
-    q = pipeline.start_streaming_drain(trigger_seconds=0.5)
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if pipeline.status(ing)["status"] == "completed":
-                break
-            time.sleep(1)
-        st = pipeline.status(ing)
-        assert st["status"] == "completed"
-        assert [b["status"] for b in st["batches"]] == ["completed", "completed"]
-    finally:
-        q.stop()
-
-
 @pytest.mark.parametrize("fmt", ["csv", "json", "orc", "xml"])
 def test_format_roundtrip(spark, tmp_path, fmt):
     df = spark.createDataFrame(
@@ -124,11 +102,6 @@ def test_convert_to_parquet_partitioned(spark, tmp_path):
     ]
     back = read_table(spark, dest, "parquet")
     assert back.count() == 2
-
-
-def test_kafka_source_fails_fast_without_jars(spark):
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        kafka_stream_source(spark, "localhost:9092", "topic")
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

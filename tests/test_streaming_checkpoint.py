@@ -3,8 +3,8 @@ makes a Structured Streaming deployment operable — a query stopped and
 restarted over the same checkpoint must process each input file exactly
 once, never replaying old data into the sink.
 
-This is the property the always-on drain loop and the streaming_* queries
-rely on in production (SURVEY §3.4): offsets live in the checkpoint WAL,
+This is the property the streaming_* queries rely on in production
+(SURVEY §3.4): offsets live in the checkpoint WAL,
 the file sink commits atomically per epoch, and a restart picks up from
 the last committed epoch.
 """
