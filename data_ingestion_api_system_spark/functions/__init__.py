@@ -27,6 +27,19 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def round_half(c: Column | str, k: int) -> Column:
+    """A DOUBLE rounded to ``k`` decimals by DuckDB's ``round(x, k)`` rule:
+    scale by 10^k, round the product half away from zero, divide back.
+
+    Spark's ``round(x, k)`` on a double rounds the double's shortest
+    decimal string half-up instead, so where that string ends in 5 but the
+    double sits just below the half (e.g. 1.0121375 from 297·14722 /
+    (2000·2160)) the two engines differ in the last digit. Rounding to 0
+    decimals agrees on both engines, so the product form matches DuckDB.
+    """
+    return F.round(_col(c) * 10.0**k) / 10.0**k
+
+
 def exact_sum(col: Column | str, scale: int = 4, round_to: int = 2) -> Column:
     """Order-independent SUM of a double expression → DOUBLE.
 

@@ -13,6 +13,7 @@ from ..functions import (
     SQL_REVENUE_DEC,
     exact_sum_dec,
     revenue_dec,
+    round_half,
     sql_exact_sum_dec,
 )
 from ..tables import load_table
@@ -553,16 +554,16 @@ def q_basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a").alias("brand_a"),
             F.col("b").alias("brand_b"),
             F.col("n_pair").cast("bigint").alias("n_pair"),
-            F.round(F.col("n_pair").cast("double") / F.col("n_orders"), 6).alias(
+            round_half(F.col("n_pair").cast("double") / F.col("n_orders"), 6).alias(
                 "support"
             ),
-            F.round(F.col("n_pair").cast("double") / F.col("c_a"), 6).alias(
+            round_half(F.col("n_pair").cast("double") / F.col("c_a"), 6).alias(
                 "conf_a_to_b"
             ),
-            F.round(F.col("n_pair").cast("double") / F.col("c_b"), 6).alias(
+            round_half(F.col("n_pair").cast("double") / F.col("c_b"), 6).alias(
                 "conf_b_to_a"
             ),
-            F.round(
+            round_half(
                 (F.col("n_pair") * F.col("n_orders")).cast("double")
                 / (F.col("c_a") * F.col("c_b")),
                 6,

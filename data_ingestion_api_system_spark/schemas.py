@@ -6,9 +6,9 @@
   status values the whole package shares (src/app.js:10-14,51,76,88,112,
   123-124).
 
-The durable state tables (``ingestions``, ``batches``, ``batch_log``,
-``processed``) and their schemas live in ``streaming/drain.py``, which
-writes them.
+The service's two durable state tables (``ingestions``, with each
+request's batches embedded, and ``batch_log``) and their schemas live in
+``streaming/drain.py``, which writes them.
 
 IDs are LongType because the valid range is [1, 1_000_000_007]
 (src/app.js:112) which exceeds Int32.

@@ -5,43 +5,37 @@ gap-after-work pacing), A13 (serialization).
 
 Design (SURVEY §3.4, §4.3):
 
-- **Durable state = append-only tables.** ``ingestions`` and ``batches`` are
-  append-only parquet; status transitions append to a ``batch_log``
-  (batch_id, status, log_seq) and current status is the latest log entry —
-  the recompute-from-log design that makes every transition idempotent
-  under retries (the exactly-once concern Delta MERGE would otherwise
-  cover; the reference gets this for free by being single-threaded).
-- **Appends are driver-side file commits.** Each append of a few rows is
-  one Arrow-built parquet file written by the driver under a hidden
+- **Durable state = two append-only tables.** ``ingestions`` holds one row
+  per request with its batches embedded in order, as the reference keeps
+  them inside the ingestion object (src/app.js:144). Status transitions
+  append to ``batch_log`` and current status is each batch's row with the
+  highest ``log_seq``, so a replayed transition changes nothing (the
+  concern Delta MERGE would otherwise cover). Only the ``completed`` row
+  fills ``results``: a batch's results and its completion commit in one
+  rename, as Structured Streaming commits output and progress together.
+- **Appends are driver-side file commits.** Each append is one
+  Arrow-built parquet file written by the driver under a hidden
   ``.part-<uuid>.parquet`` name and renamed into place — the
-  write-temp-then-rename commit Structured Streaming uses for its offset
-  and commit logs, and no Spark job. Spark's file index skips names
-  starting with ``.`` or ``_``, so a reader sees a whole file or none of
-  it. The rename is the commit point.
-- **Status and dequeue read an in-memory index of the durable log.** Like
-  Structured Streaming's state store (a live in-memory map, each change
-  written to a durable delta file, the map rebuilt from those files on
-  restart), the pipeline keeps ``ingestion_id → batch_ids``,
-  ``batch_id → (ids, status)`` and a pending heap in memory. Every change
-  reaches the index only after its append has committed, so a failed
-  write never shows. Opening a pipeline rebuilds the index, and the two
-  sequence counters, from one pyarrow read of each state table, with the
-  latest status per batch folded in Python; no Spark job runs at open.
-  ``status`` and the dequeue run no Spark job either; ``queue_snapshot``
-  and ``processed_results`` stay Spark queries over the table directories.
-- **Compaction is one more append.** ``compact_log`` folds the visible
-  ``batch_log`` parts into one latest row per batch, commits that as a new
-  part, then deletes the parts it folded. Until the deletes finish the log
-  holds each folded row twice, which the latest-status fold ignores, so a
-  crash at any point leaves a valid log and ``batch_log`` always exists.
+  write-temp-then-rename commit of Structured Streaming's offset and
+  commit logs, and no Spark job. Spark's file index skips names starting
+  with ``.`` or ``_``, so a reader sees a whole file or none of it.
+- **Status and dequeue read an in-memory index of the durable log**, like
+  Structured Streaming's state store: ``ingestion_id → batch_ids``,
+  ``batch_id → (ids, status)`` and a pending heap. A change reaches the
+  index only after its append has committed, so a failed write never
+  shows. Opening a pipeline rebuilds the index and the two sequence
+  counters from one pyarrow read of each table; no Spark job runs at
+  open, in ``status`` or in the dequeue. ``queue_snapshot`` and
+  ``processed_results`` are Spark queries over the table directories.
+- **Compaction is one more append.** ``compact_log`` commits the latest
+  row per batch, results included, as a new part, then deletes the parts
+  it folded. Until the deletes finish each folded row is there twice,
+  which the latest-row fold ignores, so any crash leaves a valid log.
 - **The queue is a heap, ``queue_snapshot`` is its Spark view.** Pending
   batches sit in a min-heap keyed ``(-priority_level, created_at,
-  request_seq, batch_seq)`` — identical preemption semantics to the
-  reference's sort-on-insert queue (test/test_api.js:216-267: HIGH
-  submitted later overtakes queued LOW). ``queue_snapshot`` is the same
-  order as a query, ``batches ⟕ latest-log WHERE status='yet_to_start'
-  ORDER BY ...``, which on Spark executes as TakeOrderedAndProject for its
-  top rows.
+  request_seq, batch_seq)`` — the preemption semantics of the reference's
+  sort-on-insert queue (test/test_api.js:216-267: HIGH submitted later
+  overtakes queued LOW). ``queue_snapshot`` is the same order as a query.
 - **One drain loop (A13)**: ``drain_all`` runs ``drain_step`` until the
   queue is empty, and ``_drain_lock`` runs one step at a time per
   pipeline object. Status and ingest do not wait on a running step's
@@ -109,31 +103,23 @@ class DrainConfig:
     external_call: Callable[[int], dict] = default_external_call
 
 
+_RESULT = T.StructType(
+    [T.StructField("id", T.LongType(), False), T.StructField("data", T.StringType(), False)]
+)
+
 _BATCH_LOG_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.StringType(), False),
         T.StructField("status", T.StringType(), False),
         T.StructField("log_seq", T.LongType(), False),
+        T.StructField("results", T.ArrayType(_RESULT, False), True),  # on ``completed`` only
     ]
 )
 
-_PROCESSED_SCHEMA = T.StructType(
+_BATCH = T.StructType(
     [
         T.StructField("batch_id", T.StringType(), False),
-        T.StructField("id", T.LongType(), False),
-        T.StructField("data", T.StringType(), False),
-    ]
-)
-
-_BATCHES_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.StringType(), False),
-        T.StructField("ingestion_id", T.StringType(), False),
-        T.StructField("request_seq", T.LongType(), False),
-        T.StructField("batch_seq", T.IntegerType(), False),
         T.StructField("ids", T.ArrayType(T.LongType()), False),
-        T.StructField("priority", T.StringType(), False),
-        T.StructField("created_at", T.TimestampType(), False),
     ]
 )
 
@@ -143,6 +129,7 @@ _INGESTIONS_SCHEMA = T.StructType(
         T.StructField("request_seq", T.LongType(), False),
         T.StructField("priority", T.StringType(), False),
         T.StructField("created_at", T.TimestampType(), False),
+        T.StructField("batches", T.ArrayType(_BATCH, False), False),  # in batch order
     ]
 )
 
@@ -158,13 +145,15 @@ def _read_state(source: str | list[str], schema: T.StructType) -> pa.Table:
     return pq.read_table(source, schema=arrow_schema, coerce_int96_timestamp_unit="us")
 
 
-def _latest_status(log: pa.Table) -> dict[str, tuple[int, str]]:
-    """batch_id → its latest ``(log_seq, status)``: the per-key
-    ``max(struct(log_seq, status))`` fold, so duplicate rows change
+def _latest_rows(log: pa.Table) -> dict[str, dict]:
+    """batch_id → its whole log row with the highest ``log_seq``: the
+    per-key ``max(struct(log_seq, ...))`` fold, so duplicate rows change
     nothing."""
-    latest: dict[str, tuple[int, str]] = {}
-    for batch_id, status, seq in zip(*(log[c].to_pylist() for c in _BATCH_LOG_SCHEMA.names)):
-        latest[batch_id] = max(latest.get(batch_id, (seq, status)), (seq, status))
+    latest: dict[str, dict] = {}
+    for row in log.to_pylist():
+        kept = latest.get(row["batch_id"])
+        if kept is None or row["log_seq"] > kept["log_seq"]:
+            latest[row["batch_id"]] = row
     return latest
 
 
@@ -190,10 +179,13 @@ class IngestionPipeline:
     by :meth:`_append`; compaction deletes the parts it folded but never
     moves the ``batch_log`` directory.
 
-    Delivery is at-least-once: a batch whose drain step died between its
-    ``triggered`` and ``completed`` transitions is queued again when the
-    pipeline is next opened, so ``processed`` may then hold that batch's
-    rows twice (once from the crashed attempt, if its append committed).
+    External calls are at-least-once: a batch whose drain step died
+    between its ``triggered`` and ``completed`` transitions is queued again
+    when the pipeline is next opened, and its ids are called again.
+    Recorded results are exactly-once: they commit with the ``completed``
+    row, so a crashed attempt leaves none behind. The state layout is the
+    two tables ``ingestions`` and ``batch_log``; directories written in the
+    earlier four-table layout are not read.
     """
 
     def __init__(
@@ -218,8 +210,8 @@ class IngestionPipeline:
         # every route handler and drain cycle on one Node event loop, so no
         # two operations ever interleave mid-state-mutation. A drain step
         # holds it only around its dequeue + TRIGGERED log and around its
-        # processed append + COMPLETED log, so status/ingest answer while
-        # a batch is in flight, as the Node service does between awaits.
+        # COMPLETED log, so status/ingest answer while a batch is in
+        # flight, as the Node service does between awaits.
         self._op_lock = threading.RLock()
         # Serializes whole drain steps (A13: one batch at a time, gap
         # included); taken before _op_lock, never while holding it.
@@ -266,39 +258,39 @@ class IngestionPipeline:
         # entries no longer yet_to_start are dropped when they reach the top
         self._pending: list[tuple] = []
 
-    def _index_batch(
-        self, row: Row, created_at_us: int, status: str = STATUS_YET_TO_START
-    ) -> None:
-        if row.ingestion_id in self._ingestions:
-            self._ingestions[row.ingestion_id].append(row.batch_id)
-        self._batches[row.batch_id] = (tuple(row.ids), status)
-        if status == STATUS_YET_TO_START:
-            level = PRIORITY_LEVELS[row.priority]
-            entry = (-level, created_at_us, row.request_seq, row.batch_seq, row.batch_id)
-            heapq.heappush(self._pending, entry)
+    def _index(self, ingestion: Row | dict, created_at_us: int, latest: dict[str, dict]) -> None:
+        """Add one ``ingestions`` row and its batches to the index, each
+        with the status of its row in ``latest`` (default yet_to_start). A
+        batch left ``triggered`` is logged back to yet_to_start and queued
+        again: its drain step died before COMPLETED (see the class
+        docstring)."""
+        level = PRIORITY_LEVELS[ingestion["priority"]]
+        batch_ids = self._ingestions[ingestion["ingestion_id"]] = []
+        for batch_seq, batch in enumerate(ingestion["batches"]):
+            batch_id = batch["batch_id"]
+            status = latest[batch_id]["status"] if batch_id in latest else STATUS_YET_TO_START
+            if status == STATUS_TRIGGERED:
+                self._log(batch_id, STATUS_YET_TO_START)
+                status = STATUS_YET_TO_START
+            batch_ids.append(batch_id)
+            self._batches[batch_id] = (tuple(batch["ids"]), status)
+            if status == STATUS_YET_TO_START:
+                entry = (-level, created_at_us, ingestion["request_seq"], batch_seq, batch_id)
+                heapq.heappush(self._pending, entry)
 
     def _load_index(self) -> None:
         """Rebuild the sequence counters and the index from the state
-        tables, and queue again every batch whose latest status is
-        ``triggered``: its drain step died before COMPLETED (at-least-once,
-        see the class docstring)."""
+        tables."""
         ingestions = _read_state(self._path("ingestions"), _INGESTIONS_SCHEMA)
-        batches = _read_state(self._path("batches"), _BATCHES_SCHEMA)
         log = _read_state(self._path("batch_log"), _BATCH_LOG_SCHEMA)
         self._request_seq = _after_max(ingestions["request_seq"])
         self._log_seq = _after_max(log["log_seq"])
-        for ingestion_id in ingestions["ingestion_id"].to_pylist():
-            self._ingestions[ingestion_id] = []
-        latest = _latest_status(log)
-        batches = batches.append_column(
-            "created_at_us", batches["created_at"].cast(pa.int64())
+        latest = _latest_rows(log.drop_columns("results"))
+        ingestions = ingestions.append_column(
+            "created_at_us", ingestions["created_at"].cast(pa.int64())
         )
-        for r in sorted(batches.to_pylist(), key=lambda r: (r["request_seq"], r["batch_seq"])):
-            status = latest.get(r["batch_id"], (0, STATUS_YET_TO_START))[1]
-            if status == STATUS_TRIGGERED:
-                self._log(r["batch_id"], STATUS_YET_TO_START)
-                status = STATUS_YET_TO_START
-            self._index_batch(Row(**r), r["created_at_us"], status)
+        for r in sorted(ingestions.to_pylist(), key=lambda r: r["request_seq"]):
+            self._index(r, r["created_at_us"], latest)
 
     # -- A2-A5: ingest -------------------------------------------------------
 
@@ -320,38 +312,19 @@ class IngestionPipeline:
             raise InvalidRequest("Invalid input")
         ingestion_id = str(uuid.uuid4())
         created_at = self.clock()
-        seq = self._request_seq
-        self._request_seq += 1
-        batch_rows = [
-            Row(
-                batch_id=str(uuid.uuid4()),
-                ingestion_id=ingestion_id,
-                request_seq=seq,
-                batch_seq=bi,
-                ids=[int(x) for x in ids[i : i + BATCH_SIZE]],
-                priority=priority,
-                created_at=created_at,
-            )
-            for bi, i in enumerate(range(0, len(ids), BATCH_SIZE))
-        ]
-        self._append(
-            "ingestions",
-            [
-                Row(
-                    ingestion_id=ingestion_id,
-                    request_seq=seq,
-                    priority=priority,
-                    created_at=created_at,
-                )
+        row = Row(
+            ingestion_id=ingestion_id,
+            request_seq=self._request_seq,
+            priority=priority,
+            created_at=created_at,
+            batches=[
+                {"batch_id": str(uuid.uuid4()), "ids": [int(x) for x in ids[i : i + BATCH_SIZE]]}
+                for i in range(0, len(ids), BATCH_SIZE)
             ],
-            _INGESTIONS_SCHEMA,
         )
-        if batch_rows:
-            self._append("batches", batch_rows, _BATCHES_SCHEMA)
-        self._ingestions[ingestion_id] = []
-        created_at_us = T.TimestampType().toInternal(created_at)  # as stored
-        for r in batch_rows:
-            self._index_batch(r, created_at_us)
+        self._append("ingestions", [row], _INGESTIONS_SCHEMA)
+        self._request_seq += 1
+        self._index(row, T.TimestampType().toInternal(created_at), {})  # as stored
         return ingestion_id
 
     # -- A14-A17: status -----------------------------------------------------
@@ -390,11 +363,11 @@ class IngestionPipeline:
             heapq.heappop(self._pending)
         return None
 
-    def _log(self, batch_id: str, status: str) -> None:
+    def _log(self, batch_id: str, status: str, results: list[dict] | None = None) -> None:
         """Append one status transition, then apply it to the index."""
         self._append(
             "batch_log",
-            [Row(batch_id=batch_id, status=status, log_seq=self._log_seq)],
+            [Row(batch_id=batch_id, status=status, log_seq=self._log_seq, results=results)],
             _BATCH_LOG_SCHEMA,
         )
         self._log_seq += 1
@@ -421,7 +394,7 @@ class IngestionPipeline:
                     if self.config.per_id_delay:
                         time.sleep(self.config.per_id_delay)
                     out = self.config.external_call(id_)
-                    results.append(Row(batch_id=batch_id, id=int(out["id"]), data=str(out["data"])))
+                    results.append({"id": int(out["id"]), "data": str(out["data"])})
             except Exception:
                 # Queue the batch again. Its heap entry is still in place:
                 # only _next_pending pops, and drain steps are serialized.
@@ -429,9 +402,7 @@ class IngestionPipeline:
                     self._log(batch_id, STATUS_YET_TO_START)
                 raise
             with self._op_lock:
-                if results:
-                    self._append("processed", results, _PROCESSED_SCHEMA)
-                self._log(batch_id, STATUS_COMPLETED)  # A11
+                self._log(batch_id, STATUS_COMPLETED, results)  # A11
             if self.config.batch_gap:
                 time.sleep(self.config.batch_gap)  # A12: gap AFTER work
             return batch_id
@@ -452,7 +423,7 @@ class IngestionPipeline:
         ``MERGE INTO batch_status USING log ON batch_id WHEN MATCHED AND
         log.log_seq > target.log_seq THEN UPDATE ...`` (last write wins).
 
-        The visible parts are folded with :func:`_latest_status`, the rule
+        The visible parts are folded with :func:`_latest_rows`, the rule
         the index rebuild and ``queue_snapshot`` use, and the folded rows
         are committed by :meth:`_append` before the folded parts are
         deleted. A crash between the two leaves each latest row twice, and
@@ -468,12 +439,8 @@ class IngestionPipeline:
             parts = glob.glob(os.path.join(self._path("batch_log"), "part-*.parquet"))
             if not parts:
                 return 0
-            latest = _latest_status(_read_state(parts, _BATCH_LOG_SCHEMA))
-            self._append(
-                "batch_log",
-                [Row(batch_id=b, status=s, log_seq=q) for b, (q, s) in latest.items()],
-                _BATCH_LOG_SCHEMA,
-            )
+            latest = _latest_rows(_read_state(parts, _BATCH_LOG_SCHEMA))
+            self._append("batch_log", [Row(**r) for r in latest.values()], _BATCH_LOG_SCHEMA)
             for part in parts:
                 os.remove(part)
             return len(latest)
@@ -486,7 +453,7 @@ class IngestionPipeline:
         deployment this is TRUNCATE TABLE; on raw parquet state it drops
         the directories. Waits for a running drain step to finish."""
         with self._drain_lock, self._op_lock:
-            for name in ("ingestions", "batches", "batch_log", "processed"):
+            for name in ("ingestions", "batch_log"):
                 shutil.rmtree(self._path(name), ignore_errors=True)
             self._request_seq = 0
             self._log_seq = 0
@@ -497,10 +464,11 @@ class IngestionPipeline:
     def queue_snapshot(self) -> DataFrame:
         """The pending set in dequeue order (A6): priority DESC, created_at
         ASC, request_seq ASC, batch_seq ASC — what the reference's
-        batchQueue array would contain. Status is batches ⟕ latest
-        batch_log entry, default yet_to_start (the A15 coalesce), folded by
-        the same per-key max as :func:`_latest_status` but as a Spark query,
-        so the view is an independent check on the in-memory heap."""
+        batchQueue array would contain. Status is the ingestions' exploded
+        batches ⟕ latest batch_log entry, default yet_to_start (the A15
+        coalesce), folded by the same per-key max as :func:`_latest_rows`
+        but as a Spark query, so the view is an independent check on the
+        in-memory heap."""
         latest = (
             self._read("batch_log", _BATCH_LOG_SCHEMA)
             .groupBy("batch_id")
@@ -508,7 +476,11 @@ class IngestionPipeline:
             .select("batch_id", F.col("m.status").alias("log_status"))
         )
         return (
-            self._read("batches", _BATCHES_SCHEMA)
+            self._read("ingestions", _INGESTIONS_SCHEMA)
+            .select("*", F.posexplode("batches").alias("batch_seq", "batch"))
+            .select(
+                "ingestion_id", "request_seq", "priority", "created_at", "batch_seq", "batch.*"
+            )
             .join(latest, "batch_id", "left")
             .withColumn("status", F.coalesce("log_status", F.lit(STATUS_YET_TO_START)))
             .drop("log_status")
@@ -523,4 +495,12 @@ class IngestionPipeline:
         )
 
     def processed_results(self) -> DataFrame:
-        return self._read("processed", _PROCESSED_SCHEMA)
+        """(batch_id, id, data) for every completed batch, expanded from
+        the ``results`` of its ``completed`` row. A compaction that died
+        before its deletes leaves that row twice, hence the dedup."""
+        return (
+            self._read("batch_log", _BATCH_LOG_SCHEMA)
+            .filter(F.col("status") == STATUS_COMPLETED)
+            .dropDuplicates(["batch_id"])
+            .select("batch_id", F.inline("results"))
+        )

@@ -2,11 +2,13 @@
 over the library pipeline, using only the stdlib.
 
 - ``POST /ingest``   {ids:[...], priority:"HIGH|MEDIUM|LOW"} →
-  202-style {"ingestion_id": ...}; invalid body, or JSON that is not an
-  object → 400 {"error":"Invalid input"} (src/app.js:115). Integral JSON
-  numbers such as ``1.0`` count as integers, as in JavaScript.
+  202-style {"ingestion_id": ...}; invalid body, JSON that is not an
+  object, or a negative ``Content-Length`` → 400 {"error":"Invalid input"}
+  (src/app.js:115). Integral JSON numbers such as ``1.0`` count as
+  integers, as in JavaScript.
 - ``GET /status/<id>`` → {ingestion_id, status, batches:[...]};
   unknown id → 404 {"error":"Ingestion ID not found"} (src/app.js:162).
+- Routes match the path without its query string, as Express does.
 
 Ingest wakes the drain loop fire-and-forget — the async boundary the
 reference creates with an un-awaited ``processBatches()``
@@ -30,6 +32,7 @@ import json
 import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import urlsplit
 
 from .drain import IngestionPipeline, InvalidRequest, NotFound
 
@@ -71,10 +74,12 @@ def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServ
             self.wfile.write(body)
 
         def do_POST(self) -> None:  # noqa: N802
-            if self.path != "/ingest":
+            if urlsplit(self.path).path != "/ingest":
                 return self._reply(404, {"error": "Not found"})
             try:
                 length = int(self.headers.get("Content-Length", 0))
+                if length < 0:  # read(-1) would wait for the client to close
+                    raise InvalidRequest("Invalid input")
                 req = json.loads(self.rfile.read(length) or b"{}", parse_float=_json_float)
                 if not isinstance(req, dict):
                     raise InvalidRequest("Invalid input")
@@ -89,9 +94,10 @@ def make_server(pipeline: IngestionPipeline, port: int = 0) -> ThreadingHTTPServ
             self._reply(200, {"ingestion_id": ingestion_id})
 
         def do_GET(self) -> None:  # noqa: N802
-            if not self.path.startswith("/status/"):
+            path = urlsplit(self.path).path
+            if not path.startswith("/status/"):
                 return self._reply(404, {"error": "Not found"})
-            ingestion_id = self.path[len("/status/"):]
+            ingestion_id = path[len("/status/"):]
             try:
                 self._reply(200, pipeline.status(ingestion_id))
             except NotFound:

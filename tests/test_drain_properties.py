@@ -22,10 +22,8 @@ from datetime import datetime, timedelta, timezone
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from data_ingestion_api_system_spark.streaming.drain import (
-    _BATCHES_SCHEMA,
     DrainConfig,
     IngestionPipeline,
 )
@@ -48,6 +46,8 @@ BATCH = 3  # src/app.js:123-124
 #     its in-memory queue from the durable tables
 #   ("compact",) — fold batch_log into one latest row per batch; the queue
 #     and every status must be unchanged by it
+#   ("fail",) — one drain cycle whose external call raises: it must raise
+#     exactly when a batch is pending and leave the queue unchanged
 event = st.one_of(
     st.tuples(
         st.just("ingest"),
@@ -58,6 +58,7 @@ event = st.one_of(
     st.tuples(st.just("drain")),
     st.tuples(st.just("reopen")),
     st.tuples(st.just("compact")),
+    st.tuples(st.just("fail")),
 )
 schedule_strategy = st.lists(event, min_size=1, max_size=10).filter(
     lambda evs: any(e[0] == "ingest" for e in evs)
@@ -107,13 +108,19 @@ class ReferenceModel:
 @given(schedule=schedule_strategy)
 def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
     clock = {"t": 0.0}
+    failing = {"on": False}
     state_dir = str(tmp_path_factory.mktemp("drain_prop"))
+
+    def call(id_: int) -> dict:
+        if failing["on"]:
+            raise ConnectionError("service down")
+        return {"id": id_, "data": "processed"}
 
     def open_pipeline() -> IngestionPipeline:
         return IngestionPipeline(
             spark,
             state_dir,
-            DrainConfig(),
+            DrainConfig(external_call=call),
             clock=lambda: _EPOCH + timedelta(seconds=clock["t"]),
         )
 
@@ -132,12 +139,22 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
             pipe = open_pipeline()
         elif ev[0] == "compact":
             pipe.compact_log()
+        elif ev[0] == "fail":
+            failing["on"] = True
+            try:
+                if model.pending:
+                    with pytest.raises(ConnectionError, match="service down"):
+                        pipe.drain_step()
+                else:
+                    assert pipe.drain_step() is None
+            finally:
+                failing["on"] = False
         else:
             got = pipe.drain_step()
             want = model.drain()
             assert (got is None) == (want is None)
             if want is not None:
-                assert _batch_key(pipe, got) == want
+                assert _batch_key(pipe, requests, got) == want
 
     # drain the tail: order must keep matching to the very end, and the
     # Spark view of the durable queue must list the same batches in order
@@ -148,7 +165,7 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
         assert (got is None) == (want is None)
         if got is None:
             break
-        assert _batch_key(pipe, got) == want
+        assert _batch_key(pipe, requests, got) == want
         tail.append(got)
     assert snapshot == tail
 
@@ -160,18 +177,21 @@ def test_drain_matches_reference_comparator(spark, tmp_path_factory, schedule):
         assert len(st_["batches"]) == math.ceil(n_ids / BATCH)
 
 
-def _batch_key(pipe: IngestionPipeline, batch_id: str) -> tuple[int, int]:
-    """(request_seq, batch_seq) identity of a drained batch — read from the
-    ``batches`` state table; white-box but exact."""
-    rows = (
-        pipe._read("batches", _BATCHES_SCHEMA)
-        .filter(F.col("batch_id") == batch_id)
-        .select("request_seq", "batch_seq")
-        .collect()
-    )
-    if len(rows) != 1:
-        raise AssertionError(f"batch_id {batch_id} stored {len(rows)} times")
-    return (rows[0].request_seq, rows[0].batch_seq)
+def _batch_key(
+    pipe: IngestionPipeline, requests: list[tuple[int, int, str]], batch_id: str
+) -> tuple[int, int]:
+    """(request position, batch position) identity of a drained batch: its
+    request's place in ``requests`` and its place in that request's
+    ``status()`` batches. Exact, and runs no Spark job."""
+    keys = [
+        (pos, b)
+        for pos, (_, _, ing_id) in enumerate(requests)
+        for b, batch in enumerate(pipe.status(ing_id)["batches"])
+        if batch["batch_id"] == batch_id
+    ]
+    if len(keys) != 1:
+        raise AssertionError(f"batch_id {batch_id} found {len(keys)} times")
+    return keys[0]
 
 
 def test_gap_after_work_arithmetic(spark, tmp_path):

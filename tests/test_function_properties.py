@@ -95,3 +95,27 @@ def test_staleness_fill_orders_by_history(history):
     tail = ["a", "b", "c", "d", "e"]
     out = staleness_fill(tail, history=history)
     assert out == sorted(tail, key=lambda n: history.get(n, -1))
+
+
+def test_round_half_matches_duckdb_round(spark):
+    """``round_half(v, 6)`` equals DuckDB's ``round(v, 6)`` on exact decimal
+    half boundaries (2m+1)/(2·10^6) of both signs and on integer ratios
+    a/b; plain ``F.round`` differs from DuckDB on some of them."""
+    import duckdb
+    import pyarrow as pa
+
+    from data_ingestion_api_system_spark.functions import round_half
+
+    values = [s * (2 * m + 1) / 2e6 for m in range(5000) for s in (1, -1)]
+    values += [a / b for a in range(300) for b in range(1, 80)]
+    values.append(297 * 14722 / (2000 * 2160))  # a basket_brand_pairs lift
+    con = duckdb.connect()
+    vals = pa.table({"i": range(len(values)), "v": values})
+    want = [r[0] for r in con.execute("SELECT round(v, 6) FROM vals ORDER BY i").fetchall()]
+    con.close()
+    df = spark.createDataFrame(list(enumerate(values)), "i long, v double")
+    rows = df.orderBy("i").select(
+        round_half("v", 6).alias("half"), F.round("v", 6).alias("plain")
+    ).collect()
+    assert [r.half for r in rows] == want
+    assert sum(r.plain != w for r, w in zip(rows, want)) > 0

@@ -31,9 +31,9 @@ def _post(base: str, payload: object) -> tuple[int, dict]:
     return _post_raw(base, json.dumps(payload).encode())
 
 
-def _post_raw(base: str, body: bytes) -> tuple[int, dict]:
+def _post_raw(base: str, body: bytes, path: str = "/ingest") -> tuple[int, dict]:
     req = urllib.request.Request(
-        f"{base}/ingest",
+        f"{base}{path}",
         data=body,
         headers={"Content-Type": "application/json"},
         method="POST",
@@ -85,6 +85,34 @@ def test_integral_json_numbers_are_integer_ids(server):
     for bad in (b"1.5", b"1e400", b"-0.0", b"true"):
         body = b'{"ids": [' + bad + b'], "priority": "LOW"}'
         assert _post_raw(server, body)[0] == 400, bad
+
+
+def test_negative_content_length_400(server):
+    """A negative ``Content-Length`` gets the 400 reply at once instead of
+    a read that waits for the client to close the connection."""
+    import socket
+
+    host, port = server.removeprefix("http://").split(":")
+    with socket.create_connection((host, int(port)), timeout=10) as sock:
+        sock.sendall(
+            b"POST /ingest HTTP/1.1\r\nHost: x\r\nContent-Type: application/json\r\n"
+            b"Content-Length: -1\r\n\r\n{}"
+        )
+        reply = b"".join(iter(lambda: sock.recv(4096), b""))
+    assert reply.split(b"\r\n", 1)[0].split(b" ")[1] == b"400"
+    assert reply.endswith(b'{"error": "Invalid input"}')
+
+
+def test_routes_ignore_query_string(server):
+    """Routes match the path alone, as Express matches ``/ingest`` and
+    ``/status/:id`` whatever query string follows."""
+    body = json.dumps({"ids": [1, 2], "priority": "LOW"}).encode()
+    code, reply = _post_raw(server, body, path="/ingest?x=1")
+    assert code == 200
+    ingestion_id = reply["ingestion_id"]
+    code, status = _get(server, f"/status/{ingestion_id}?t=1")
+    assert code == 200 and status["ingestion_id"] == ingestion_id
+    assert [b["ids"] for b in status["batches"]] == [[1, 2]]
 
 
 def test_unknown_status_404(server):

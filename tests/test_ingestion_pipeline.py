@@ -346,27 +346,30 @@ def pacific_time(monkeypatch):
 
 
 def test_append_round_trips_every_column_type(spark, pipeline, pacific_time):
-    """string, int32, int64, array<bigint> and timestamps from tz-aware and
-    naive clocks read back exactly as ``createDataFrame`` stores them; a
-    naive datetime keeps PySpark's local-time meaning."""
+    """string, int64, array<struct<string, array<bigint>>> and timestamps
+    from tz-aware and naive clocks read back exactly as ``createDataFrame``
+    stores them; a naive datetime keeps PySpark's local-time meaning."""
     from pyspark.sql import Row
 
-    from data_ingestion_api_system_spark.streaming.drain import _BATCHES_SCHEMA
+    from data_ingestion_api_system_spark.streaming.drain import _INGESTIONS_SCHEMA
 
     aware = datetime(2024, 7, 1, 12, 30, 45, 123456, tzinfo=timezone.utc)
     naive = datetime(2024, 1, 15, 8, 5, 9, 654321)
     rows = [
-        Row(batch_id="b-aware", ingestion_id="i-ü", request_seq=2**62,
-            batch_seq=2**31 - 1, ids=[1, 2**62], priority="HIGH", created_at=aware),
-        Row(batch_id="b-naive", ingestion_id="i", request_seq=0,
-            batch_seq=-(2**31), ids=[], priority="LOW", created_at=naive),
+        Row(ingestion_id="i-aware-ü", request_seq=2**62, priority="HIGH", created_at=aware,
+            batches=[{"batch_id": "b-ü", "ids": [1, 2**62]}, {"batch_id": "b", "ids": []}]),
+        Row(ingestion_id="i-naive", request_seq=0, priority="LOW", created_at=naive,
+            batches=[]),
     ]
-    pipeline._append("batches", rows, _BATCHES_SCHEMA)
-    got = sorted(pipeline._read("batches", _BATCHES_SCHEMA).collect())
-    assert got == sorted(spark.createDataFrame(rows, _BATCHES_SCHEMA).collect())
-    by_id = {r.batch_id: r for r in got}
-    assert by_id["b-naive"].created_at == naive
-    assert by_id["b-aware"].created_at == aware.astimezone().replace(tzinfo=None)
+    pipeline._append("ingestions", rows, _INGESTIONS_SCHEMA)
+    got = sorted(pipeline._read("ingestions", _INGESTIONS_SCHEMA).collect())
+    assert got == sorted(spark.createDataFrame(rows, _INGESTIONS_SCHEMA).collect())
+    by_id = {r.ingestion_id: r for r in got}
+    assert by_id["i-naive"].created_at == naive
+    assert by_id["i-aware-ü"].created_at == aware.astimezone().replace(tzinfo=None)
+    assert [(b.batch_id, b.ids) for b in by_id["i-aware-ü"].batches] == [
+        ("b-ü", [1, 2**62]), ("b", []),
+    ]
 
 
 def test_leftover_temp_file_ignored_and_removed_at_open(spark, tmp_path):
@@ -379,13 +382,14 @@ def test_leftover_temp_file_ignored_and_removed_at_open(spark, tmp_path):
     state = str(tmp_path / "state")
     p = IngestionPipeline(spark, state)
     ing = p.ingest([1, 2, 3, 4], "HIGH")
-    (part,) = glob.glob(os.path.join(state, "batches", "part-*.parquet"))
-    leftover = os.path.join(state, "batches", ".part-interrupted.parquet")
+    (part,) = glob.glob(os.path.join(state, "ingestions", "part-*.parquet"))
+    leftover = os.path.join(state, "ingestions", ".part-interrupted.parquet")
     shutil.copy(part, leftover)  # same rows: a reader that saw it would double them
     assert len(p.status(ing)["batches"]) == 2
     p2 = IngestionPipeline(spark, state)
     assert not os.path.exists(leftover)
     assert len(p2.status(ing)["batches"]) == 2
+    assert p2.queue_snapshot().count() == 2
 
 
 def test_reads_and_extends_spark_written_state(spark, tmp_path):
@@ -397,19 +401,19 @@ def test_reads_and_extends_spark_written_state(spark, tmp_path):
 
     from data_ingestion_api_system_spark.streaming.drain import (
         _BATCH_LOG_SCHEMA,
-        _BATCHES_SCHEMA,
         _INGESTIONS_SCHEMA,
     )
 
     state = str(tmp_path / "state")
+    done = [Row(id=i, data="processed") for i in (1, 2, 3)]
     old = {
         "ingestions": ([Row(ingestion_id="old", request_seq=0, priority="LOW",
-                            created_at=_T0)], _INGESTIONS_SCHEMA),
-        "batches": ([Row(batch_id=f"old-{i}", ingestion_id="old", request_seq=0,
-                         batch_seq=i, ids=ids, priority="LOW", created_at=_T0)
-                     for i, ids in enumerate([[1, 2, 3], [4]])], _BATCHES_SCHEMA),
-        "batch_log": ([Row(batch_id="old-0", status="triggered", log_seq=0),
-                       Row(batch_id="old-0", status="completed", log_seq=1)],
+                            created_at=_T0,
+                            batches=[Row(batch_id=f"old-{i}", ids=ids)
+                                     for i, ids in enumerate([[1, 2, 3], [4]])])],
+                       _INGESTIONS_SCHEMA),
+        "batch_log": ([Row(batch_id="old-0", status="triggered", log_seq=0, results=None),
+                       Row(batch_id="old-0", status="completed", log_seq=1, results=done)],
                       _BATCH_LOG_SCHEMA),
     }
     for name, (rows, schema) in old.items():
@@ -417,14 +421,14 @@ def test_reads_and_extends_spark_written_state(spark, tmp_path):
             os.path.join(state, name)
         )
     p = IngestionPipeline(spark, state, clock=lambda: _T0)
-    assert sorted(p._read("batches", _BATCHES_SCHEMA).collect()) == sorted(
-        spark.createDataFrame(old["batches"][0], _BATCHES_SCHEMA).collect()
+    assert sorted(p._read("ingestions", _INGESTIONS_SCHEMA).collect()) == sorted(
+        spark.createDataFrame(old["ingestions"][0], _INGESTIONS_SCHEMA).collect()
     )
     assert [b["status"] for b in p.status("old")["batches"]] == ["completed", "yet_to_start"]
     new = p.ingest([5, 6], "LOW")
     assert p.drain_all() == 2
     assert p.status("old")["status"] == p.status(new)["status"] == "completed"
-    assert sorted(r.id for r in p.processed_results().collect()) == [4, 5, 6]
+    assert sorted(r.id for r in p.processed_results().collect()) == [1, 2, 3, 4, 5, 6]
 
 
 def test_reopen_resumes_sequence_counters(spark, tmp_path):
@@ -690,3 +694,39 @@ def test_reopen_requeues_orphaned_triggered_batch(spark, tmp_path):
     assert p2.drain_all() == 1
     assert p2.status(ing)["status"] == "completed"
     assert sorted(r.id for r in p2.processed_results().collect()) == [1, 2]
+
+
+def test_crash_before_completed_leaves_no_duplicate_results(spark, tmp_path, monkeypatch):
+    """A drain step that dies before its COMPLETED transition commits
+    records no results: after a reopen the batch is drained again and its
+    results appear once."""
+    state = str(tmp_path / "state")
+    p1 = IngestionPipeline(spark, state)
+    p1.ingest([1, 2], "LOW")
+    log = p1._log
+
+    def crash_at_completed(batch_id, status, *args):
+        if status == "completed":
+            raise OSError("crashed before COMPLETED")
+        return log(batch_id, status, *args)
+
+    monkeypatch.setattr(p1, "_log", crash_at_completed)
+    with pytest.raises(OSError, match="crashed before COMPLETED"):
+        p1.drain_step()
+
+    p2 = IngestionPipeline(spark, state)
+    assert p2.drain_all() == 1
+    assert sorted(r.id for r in p2.processed_results().collect()) == [1, 2]
+
+
+def test_drained_request_leaves_one_file_per_commit(tmp_path):
+    """A drained two-batch request leaves five state files: its ingestions
+    row and each batch's TRIGGERED and COMPLETED log rows."""
+    import os
+
+    state = str(tmp_path / "state")
+    p = IngestionPipeline(None, state)
+    p.ingest([1, 2, 3, 4, 5, 6], "LOW")
+    assert p.drain_all() == 2
+    tables = [os.path.relpath(d, state) for d, _, files in os.walk(state) for _ in files]
+    assert sorted(tables) == ["batch_log"] * 4 + ["ingestions"]
