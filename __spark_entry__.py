@@ -3,7 +3,10 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash → CORRECTNESS_r{N}.json). The session passed in need not be
+``get_spark()``'s, so every entry point goes through the registry
+(``collect_queries()``), which applies ``operators.tune()`` before each
+entry.
 
 Implementation lives in ``data_ingestion_api_system_spark``; this module is
 a thin aggregator so the package stays importable on its own.
@@ -26,10 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the reference's defining
     computation — the per-ingestion status rollup (SURVEY §2 A15-A17) over
     the deterministic workload derived from orders/lineitem."""
-    from data_ingestion_api_system_spark.operators.pipeline import (
-        q_pipeline_status_rollup,
-    )
-
+    q_pipeline_status_rollup = queries()["pipeline_status_rollup"]
     return q_pipeline_status_rollup(spark, "/root/testdata/sf0.001")
 
 

@@ -5,11 +5,13 @@ Each module exposes two dicts:
 - ``ORACLE``:  name → equivalent DuckDB SQL (omitted for ops that are not
   SQL-expressible; the driver then records a rows-only check)
 
-``__spark_entry__.py`` aggregates them all.
+``__spark_entry__.py`` aggregates them all through ``collect_queries()``,
+which applies ``tune`` before every entry.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,7 +107,11 @@ def spread_by(df: DataFrame, *cols: str) -> DataFrame:
 def tune(spark: SparkSession) -> SparkSession:
     """Runtime confs every query needs regardless of who built the session:
     UTC so timestamp semantics match the DuckDB oracle; AQE on so small-SF
-    runs coalesce their shuffles and large-SF runs split skew."""
+    runs coalesce their shuffles and large-SF runs split skew.
+
+    ``collect_queries`` applies it before every registry entry, so no
+    entry calls it. Calling a ``q_*`` function directly leaves these confs
+    to the caller's session, as ``session.get_spark`` sets them."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -481,7 +487,11 @@ def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
     entries first, then the rest of the registry in ``staleness_fill``
     order, so the driver's verified prefix re-certifies the
     longest-unverified entries. tests/test_registry_window.py pins this
-    order; run it after touching any QUERIES dict."""
+    order; run it after touching any QUERIES dict.
+
+    Each returned callable runs :func:`tune` on its session and then the
+    entry, so the registry is the one place the session contract is
+    applied, whatever session the caller built."""
     mods = all_query_modules()
     pipeline = next(m for m in mods if m.__name__.endswith(".pipeline"))
 
@@ -491,10 +501,19 @@ def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
         queries.update(mod.QUERIES)
         oracle.update(mod.ORACLE)
 
-    ordered: dict[str, QueryFn] = {}
-    ordered.update(pipeline.QUERIES)
-    tail = [n for n in queries if n not in ordered]
-    for name in staleness_fill(tail):
-        ordered[name] = queries[name]
-    ordered_oracle = {k: oracle[k] for k in ordered if k in oracle}
-    return ordered, ordered_oracle
+    tail = [n for n in queries if n not in pipeline.QUERIES]
+    names = [*pipeline.QUERIES, *staleness_fill(tail)]
+    return (
+        {n: _tuned(queries[n]) for n in names},
+        {n: oracle[n] for n in names if n in oracle},
+    )
+
+
+def _tuned(fn: QueryFn) -> QueryFn:
+    """``fn`` with :func:`tune` applied to its session first."""
+
+    @functools.wraps(fn)
+    def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(tune(spark), sf_dir)
+
+    return entry

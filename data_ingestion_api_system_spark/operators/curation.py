@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens
 from ..tables import load_table
-from . import pin, spread, tune
+from . import pin, spread
 from .text import STOPWORDS as _STOPWORDS
 from .text import _SQL_STOPLIST, _SQL_TOKS
 
@@ -50,7 +50,6 @@ def q_dedup_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse), and the final per-doc rollup partials again. Owner key packs
     (doc_id, position) into one BIGINT (positions are < 2^20: docs are
     size-bounded) so min() stays a primitive aggregate on both engines."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     base = docs.select("doc_id", "lang", tokens("text").alias("t")).filter(
         F.size("t") >= PASSAGE_W
@@ -193,7 +192,6 @@ def q_prep_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy, and the two per-domain tables join broadcast-small."""
     from pyspark.sql import Window
 
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     url = _noisy_url()
     canon = F.regexp_replace(
@@ -360,7 +358,6 @@ def q_text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny histogram (BroadcastNestedLoopJoin over bounded metadata —
     the range-join-on-metadata posture, never a corpus operation), and
     the confusion-matrix arithmetic is exact integer sums per threshold."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = tokens("text")
     n_tokens = F.size(toks)
@@ -496,7 +493,6 @@ def q_text_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     {B}-row weight table broadcasts back onto the token stream, and the
     per-doc fold is one doc_id-keyed shuffle of (doc_id, weight) partial
     sums. Two corpus passes, both narrow until their final keyed agg."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     inst = docs.select(
         "doc_id",
@@ -648,7 +644,6 @@ def q_prep_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, word) aggregation (map-side partials), everything after is
     vocabulary- then |sources|-sized with broadcast totals; the
     multiplicative-weights arithmetic runs on a ≤|sources|-row table."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     tok = docs.select("source", F.explode(tokens("text")).alias("w0")).select(
         "source", F.lower("w0").alias("w")
@@ -801,7 +796,6 @@ def q_text_boilerplate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exchange reuse), and the per-doc rollup partials map-side. No
     all-pairs stage anywhere — frequency thresholding is embarrassingly
     group-parallel."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     base = docs.select(
         "doc_id", "lang", "source", tokens("text").alias("t")
@@ -901,7 +895,6 @@ def q_dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per map partition. The histogram re-group and the one-row total
     (broadcast back for the share) are control-plane-sized. Nothing here
     grows with the corpus except the first map pass."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     classes = cust.groupBy(
         "c_nationkey",
@@ -975,7 +968,6 @@ def q_prep_epoch_allocator(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch math) is arithmetic on that slice table with two broadcast
     one-row scalars. No second corpus pass, no window, no join keyed on
     data."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     slices = pin(
         docs.groupBy("lang", "source").agg(
@@ -1110,7 +1102,6 @@ def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized input anywhere."""
     from . import grouped_global_rank
 
-    tune(spark)
     docs = spread(
         load_table(spark, sf_dir, "documents").filter(
             # >= 2 nonempty tokens, as a codegen rlike so nothing expensive
@@ -1272,7 +1263,6 @@ def q_text_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_cnt via a second pass over the SAME keyed table — exchange
     reuse); everything downstream is doc-keyed. Embarrassingly
     group-parallel, no windows, no cross-doc state."""
-    tune(spark)
     docs = spread(
         load_table(spark, sf_dir, "documents").filter(
             F.col("text").rlike(r"\S\s+\S")  # >= 2 tokens, codegen predicate

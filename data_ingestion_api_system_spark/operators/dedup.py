@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from . import pin, spread, tune
+from . import pin, spread
 
 SHINGLE_LEN = 4
 N_BANDS = 2
@@ -62,7 +62,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace-collapsed text): each doc maps to its group's canonical
     (min) doc_id and a duplicate flag. One hash-groupBy shuffle on the
     fingerprint — the exact-dedup plan at any scale."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     fp = spread(docs).select("doc_id", F.md5(norm).alias("fingerprint"))
@@ -121,7 +120,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct arrays) so only ONE array op (the intersection) runs per
     pair, not two — ~20% faster at sf0.1, value-identical output.
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     # pin: both self-join sides consume the shingle arrays — materialized
     # once, so the char-4-gram construction doesn't run twice (and the
@@ -335,7 +333,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_a, doc_b) pairs; shingle arrays are re-joined only for the final
     verification — never carried through the wide shuffle.
     """
-    tune(spark)
     sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     return _verify_pairs(sh, cand)
 
@@ -352,7 +349,6 @@ def q_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band-bucket equi-join → bare-pair shuffle → candidates-only verify →
     one broadcast-able metadata join). At sf0.1 it runs in seconds where
     the blocked-pairwise baseline takes ~59 s."""
-    tune(spark)
     sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     pairs = _verify_pairs(sh, cand)
     docs = load_table(spark, sf_dir, "documents")
@@ -594,7 +590,6 @@ def q_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle computes reachability with a recursive CTE — a
     genuinely different algorithm arriving at the identical fixpoint,
     which is the strongest kind of cross-check."""
-    tune(spark)
     sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     pairs = _verify_pairs(sh, cand).select("doc_a", "doc_b")
     labels = connected_components(pairs)
@@ -679,7 +674,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature is groupable/bucketable at scale. Emitted as a bitstring plus
     the size of its signature bucket.
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     sig = spread(docs).select(
         "doc_id", "lang", F.expr(_spark_simhash_expr()).alias("simhash")
@@ -721,7 +715,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine is ~0.45) — semantic dedup, the complement of the lexical methods.
     Blocked by label here; at 100 TB the block key becomes an LSH bucket or
     IVF cell (see operators.similarity) so candidates stay bounded."""
-    tune(spark)
     e = spread(
         load_table(spark, sf_dir, "embeddings").selectExpr(
             "vec_id", "label", "cast(embedding as array<double>) as v"
@@ -781,7 +774,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the other LSH entries', so Spark's cache manager serves it from
     their cached tables and the whole dedup family costs ONE signature
     pass per session (see lsh_front)."""
-    tune(spark)
     sh, _banded, cand = lsh_front(load_table(spark, sf_dir, "documents"))
     sha = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     shb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
@@ -857,7 +849,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Here k={SEMDEDUP_K} seeds from the first vectors keep both engines'
     codebooks identical; a production build iterates sim_kmeans_step
     first."""
-    tune(spark)
     e = spread(
         load_table(spark, sf_dir, "embeddings").selectExpr(
             "vec_id", "label", "cast(embedding as array<double>) as v"
@@ -987,7 +978,6 @@ def q_dedup_lsh_tuning_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact verification runs ONCE over the union of candidates (the 4x2
     superset), then attributes per config by an equi-join. Counts and
     ratios are exact integer ppm."""
-    tune(spark)
     sh_full, _banded, _cand = lsh_front(load_table(spark, sf_dir, "documents"))
     sh = sh_full.filter(F.col("doc_id") % SWEEP_SAMPLE_MOD == 0)
     n_hashes = 8
@@ -1176,7 +1166,6 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compute identical bits."""
     from .relational2 import BLOOM_K, _bloom_positions
 
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     fps = docs.select(

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions import exact_avg, exact_avg_halfup, exact_sum, sql_exact_avg, sql_exact_avg_halfup, sql_exact_sum
 from ..tables import load_table
-from . import _join_null_safe, global_ntile, grouped_global_rank, pin, spread_by, tune
+from . import _join_null_safe, global_ntile, grouped_global_rank, pin, spread_by
 
 SESSION_GAP_SECONDS = 1800  # 30 min
 
@@ -29,7 +29,6 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 5-minute windows per event_type via ``F.window`` — the
     batch twin of the streaming tumbling aggregation. Window start is
     emitted as epoch seconds (timezone-proof across engines)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -64,7 +63,6 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exactly two windows. Spark's ``window(ts, len, slide)`` expands
     in-place (a generator, not a join) — the oracle reproduces it with an
     explicit two-offset unnest."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
@@ -98,7 +96,6 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sum, the classic two-window composition. Gap math runs in
     integer MICROSECONDS (exact on both engines). The streaming twin is
     ``session_window(ts, '30 minutes')`` (see streaming module)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")
@@ -163,7 +160,6 @@ def q_events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     column (``get_json_object`` — JVM-side JSON path, no UDF), bucket it,
     aggregate. The 100 TB version would parse once with ``from_json`` into
     a struct column at ingest, not per-query."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
@@ -193,7 +189,6 @@ GROUP BY 1, 2
 def q_events_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type daily profile: counts, exact value stats, distinct users,
     first/last event epoch — the monitoring rollup a pipeline dashboards."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -237,7 +232,6 @@ def q_events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|² rows — the matrix is tiny no matter the corpus, so the
     row-normalization window runs on |types|² rows. The (ts, event_id)
     tiebreak makes simultaneous events deterministic on both engines."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -308,7 +302,6 @@ def q_events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count, both identical on the projection; the join-back is 1:1 on
     a key that is unique by groupBy construction, null-safe so a NULL
     user group survives exactly as it did in the chained form."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(F.col("ts").cast("date")).alias("last_date"),
@@ -422,7 +415,6 @@ def q_events_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     products are integer×2dp-decimal, order-independent), cast to DOUBLE
     only inside the final single-row-per-type expression; the oracle stays
     the plain windowed SQL."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("event_type", "user_id").agg(
         exact_sum("value", scale=4, round_to=2).alias("total_value")
@@ -502,7 +494,6 @@ def q_events_ts_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum runs in DECIMAL(25,4) with a final round — the module's standard
     order-independent exact-sum discipline — and the (ts, event_id)
     tiebreak makes every lag/row_number deterministic."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "value"
     )
@@ -558,7 +549,6 @@ def q_events_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume and partials combine map-side. No self-joins: the sequence is
     linearized by the window, not by joining the log to itself (which
     would shuffle the fact table twice more)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     triples = ev.select(
@@ -612,7 +602,6 @@ def q_events_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the day index and the per-island rollup) partition by user_id and
     reuse that exchange; output is |users| rows. Integer-exact
     everywhere."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -681,7 +670,6 @@ def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset-exploded WAU branch both aggregate map-side; final keyed join
     on day. At 100 TB this is the standard pre-aggregated engagement
     pipeline (the (user, day) table IS the reusable intermediate)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -775,7 +763,6 @@ def q_events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct, one on user_id for exposure; arm totals are a 2-row
     broadcast. Output is |event_types| rows — constant in event volume,
     partials combine map-side. No windows, no self-joins."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
     users = (
         ev.select("user_id")
@@ -867,7 +854,6 @@ def q_events_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (output bounded by |types|×|days|), then a |types|-row rollup; the
     global min day is a 1-row broadcast. The regression itself reads the
     pre-aggregated daily series — never the raw events twice."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day")
     )
@@ -950,7 +936,6 @@ def q_events_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic here despite ts ties. All arithmetic is BIGINT epoch
     seconds. Output is |users| rows; at 100 TB the same plan holds —
     per-user data is window-local and never leaves its partition."""
-    tune(spark)
     iv = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.floor(F.unix_timestamp("ts")).cast("bigint").alias("s"),
@@ -1062,7 +1047,6 @@ def q_events_survival_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever), so the reverse-cumulative risk set and the cumulative hazard
     are non-equi self-joins of a broadcast metadata-scale table — no
     un-partitioned window over data-sized input."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day"), "ts"
     )
@@ -1186,7 +1170,6 @@ def q_events_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the standard sessionless rate-limit audit, and the flag
     thresholds live in named constants the way an abuse team would tune
     them."""
-    tune(spark)
     ev = spread_by(
         load_table(spark, sf_dir, "events"), "user_id"
     ).select("user_id", F.date_trunc("minute", "ts").alias("minute"))
@@ -1248,7 +1231,6 @@ def q_events_cumulative_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-equi self-join, the day grid) is calendar-bounded metadata. The
     day grid comes from the observed event days so gaps report their
     carried cumulative total."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -1317,7 +1299,6 @@ def q_events_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded rows; the lag window partitions by event_type over
     that bounded table — never an un-partitioned window over data. First
     week per type reports NULL growth (nothing to compare against)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     weekly = ev.groupBy(
         "event_type", F.date_trunc("week", "ts").cast("date").alias("week")
@@ -1399,7 +1380,6 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     a sink-only state (no outgoing transitions) or source-only state (no
     incoming) appears with explicit zero mass instead of vanishing from
     an inner-join chain."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -1531,7 +1511,6 @@ def q_events_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins of that bounded table (the same shape as the survival
     risk set) — no un-partitioned window over data. Everything after the
     first aggregate is metadata."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = pin(
         ev.groupBy(F.to_date("ts").alias("day")).agg(

@@ -34,7 +34,7 @@ from ..functions import (
     sql_exact_sum_dec,
 )
 from ..tables import load_table
-from . import pin, tune
+from . import pin
 
 
 # ---------------------------------------------------------------------------
@@ -56,7 +56,6 @@ def q_cdc_apply_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is exactly log compaction: top-1-per-key after map-side
     pre-aggregation, written back partitioned for the next MERGE cycle.
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     ops = ev.select(
         "event_id",
@@ -146,7 +145,6 @@ def q_attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny, bounded-domain) channel column. At 100 TB nothing changes: the
     per-user touch sequence is the unit of work and channels stay ≤ dozens.
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     first_purchase = (
         ev.filter(F.col("event_type") == "purchase")
@@ -256,7 +254,6 @@ def q_events_decay_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash exchange with map-side partials. Nothing about this changes at
     100 TB — the anchor stays one row and user_id hashes uniformly.
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     anchor = F.broadcast(ev.agg(F.max(F.to_date("ts")).alias("anchor_day")))
     weights = F.array(*[F.lit(w).cast("decimal(5,4)") for w in _DECAY_WEIGHTS])
@@ -325,7 +322,6 @@ def q_dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     NEVER joins back to the fact. At 100 TB this is the cheapest possible
     full-data diagnostic: parquet column pruning reads one column per
     pass (grouping sets would fuse the scans if it dominated)."""
-    tune(spark)
     out = None
     for table, key in _SKEW_KEYS:
         df = load_table(spark, sf_dir, table)
@@ -384,7 +380,6 @@ def q_revenue_share_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, so the share window partitions by region over a trivially small
     input. Same plan at 100 TB: dims stay broadcastable by definition and
     the rollup output is bounded by the dimension domain, not the fact."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -452,7 +447,6 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|-row totals joined back by broadcast, and a per-type max-rank
     window on the same partitioning — the two windows and the final filter
     reuse one event_type exchange. Output: |types| rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day")
     )
@@ -546,7 +540,6 @@ def q_dq_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. At 100 TB the exact in-group percentile would swap for
     the mergeable histogram sketch (`sketch_histogram_quantiles`) — the
     flag rule is unchanged."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
@@ -607,7 +600,6 @@ def q_events_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (type, day) map-side-combined aggregation, then two
     self-equi-joins of that |types|×|days| daily table on the shifted
     date key — metadata-scale inputs, keyed joins, |types| output rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day")
     )
@@ -696,7 +688,6 @@ def q_dq_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     math which diverges on power-of-ten boundaries. Expectation is a
     broadcast 9-row literal table. Plan: one narrow map + a 9-group
     partial agg; at 100 TB this is a single map-side-combined pass."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     int_amount = (F.col("o_totalprice").cast("decimal(18,4)") * 10000).cast(
         "bigint"
@@ -764,7 +755,6 @@ def q_orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both engines agree), so every cumulative sum and the ×5/×20 class
     boundary comparisons downstream are exact integer-decimal arithmetic —
     no float accumulation order anywhere."""
-    tune(spark)
     pr = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
@@ -889,7 +879,6 @@ def q_dq_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     part) broadcast. Child totals are read off the same collapsed
     aggregate — one scan per child table even though two metrics come out
     of it. Output is exactly |edges| rows."""
-    tune(spark)
     parts = []
     grouped_cache: dict[str, DataFrame] = {}
     for name, child, fk, parent, pk in _FK_EDGES:
@@ -961,7 +950,6 @@ def q_orders_class_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     range exchange over its half; the matrix join keys on custkey and the
     output is exactly ≤ 9 rows. Class-1→3 cells are the churn-risk /
     growth cells a retention team reads."""
-    tune(spark)
     from . import global_ntile
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1066,7 +1054,6 @@ def q_orders_repeat_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder partial-aggregates map-side to exactly 5 rows; the ppm share
     reads a broadcast 1-row total. The (o_orderdate, o_orderkey) tiebreak
     makes same-day orders deterministic on both engines."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = orders.select(
@@ -1146,7 +1133,6 @@ def q_orders_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     this exact pair). The lag arithmetic is an integer datediff and the
     rollup keys on the ≤5-value priority column — partial aggregation
     collapses everything map-side before the tiny final exchange."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"

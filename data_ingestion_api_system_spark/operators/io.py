@@ -14,7 +14,10 @@ query's predicate a DIRECTORY prune rather than a scan.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
+import shutil
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,37 +25,28 @@ from pyspark.sql import functions as F
 from ..functions import exact_sum, sql_exact_sum
 from ..sources.formats import read_table, write_table
 from ..tables import load_table
-from . import tune
-
-# inside the repo per the sandbox contract; sf-suffixed AND pid-suffixed so
-# concurrent runs — different scale factors, or two gates at the SAME sf
-# (driver gate + a local check_oracle.py, ADVICE r7) — never write/read the
-# same directory. The pid dir is removed atexit: without that, every gate /
-# bench / pytest process would orphan its own full events copies under
-# spark-warehouse (unbounded accumulation across runs).
-_ROUNDTRIP_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "spark-warehouse",
-    "io_roundtrip",
-    f"pid{os.getpid()}",
-)
 
 
-def _cleanup_roundtrip_root() -> None:
-    import shutil
+@functools.cache
+def _roundtrip_root(warehouse: str) -> str:
+    """This process's round-trip directory under the session's warehouse
+    (``spark.sql.warehouse.dir``, a ``file:`` URI): ``io_roundtrip/pid<N>``.
+    Pid-suffixed so concurrent runs (two oracle checks at the same sf)
+    never share a directory; each entry adds its own sf-suffixed
+    subdirectory. At first use the directory is registered for removal at
+    exit, and sibling pid dirs whose process died without that
+    (SIGKILL/OOM) are swept."""
+    parent = os.path.join(urlparse(warehouse).path, "io_roundtrip")
+    root = os.path.join(parent, f"pid{os.getpid()}")
+    _sweep_orphaned_pid_dirs(parent)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
-    shutil.rmtree(_ROUNDTRIP_ROOT, ignore_errors=True)
 
-
-def _sweep_orphaned_pid_dirs() -> None:
-    """Best-effort removal of sibling pid* dirs whose owner died without
-    running atexit (SIGKILL/OOM — ADVICE r8: those orphans accumulated
-    with nothing sweeping them). A pid is 'dead' when os.kill(pid, 0)
-    raises ProcessLookupError; pids we can't signal (EPERM) or can't
-    parse are left alone."""
-    import shutil
-
-    parent = os.path.dirname(_ROUNDTRIP_ROOT)
+def _sweep_orphaned_pid_dirs(parent: str) -> None:
+    """Best-effort removal of pid* dirs under ``parent`` whose process is
+    dead: os.kill(pid, 0) raises ProcessLookupError. Pids we can't signal
+    (EPERM) or can't parse are left alone."""
     try:
         siblings = os.listdir(parent)
     except OSError:
@@ -74,8 +68,11 @@ def _sweep_orphaned_pid_dirs() -> None:
             pass
 
 
-_sweep_orphaned_pid_dirs()
-atexit.register(_cleanup_roundtrip_root)
+def _dest(spark: SparkSession, sf_dir: str, prefix: str = "") -> str:
+    """Where an entry writes its round trip of ``sf_dir``'s tables."""
+    root = _roundtrip_root(spark.conf.get("spark.sql.warehouse.dir"))
+    return os.path.join(root, prefix + os.path.basename(os.path.normpath(sf_dir)))
+
 
 IO_KEEP_TYPES = ("click", "purchase")
 
@@ -100,11 +97,10 @@ def q_io_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real schema-evolution concern the loader handles for the SOURCE
     tables (tables.footer_schema), out of scope for the sink
     certification."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    dest = os.path.join(_ROUNDTRIP_ROOT, os.path.basename(os.path.normpath(sf_dir)))
+    dest = _dest(spark, sf_dir)
     write_table(ev, dest, "parquet", partition_by=["event_type"])
     back = read_table(spark, dest, "parquet").filter(
         F.col("event_type").isin(*IO_KEEP_TYPES)
@@ -148,7 +144,6 @@ def q_io_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read side splits on newlines so parallelism survives, but no column
     pruning/predicate pushdown exists — the plan audit asserts pushdown
     on the PARQUET entry and this entry documents the contrast."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -157,9 +152,7 @@ def q_io_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("value_micros"),
     )
-    dest = os.path.join(
-        _ROUNDTRIP_ROOT, "csv_" + os.path.basename(os.path.normpath(sf_dir))
-    )
+    dest = _dest(spark, sf_dir, "csv_")
     write_table(ev, dest, "csv")
     back = read_table(
         spark,
@@ -199,7 +192,6 @@ def q_io_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-schema again avoids the 2-pass inference scan (and silent type
     widening) at 100 TB. Same integer-micros discipline as the CSV entry —
     floats never transit a text format."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -210,9 +202,7 @@ def q_io_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_micros"),
         ).alias("payload"),
     )
-    dest = os.path.join(
-        _ROUNDTRIP_ROOT, "json_" + os.path.basename(os.path.normpath(sf_dir))
-    )
+    dest = _dest(spark, sf_dir, "json_")
     write_table(ev, dest, "json")
     back = read_table(
         spark,
@@ -262,7 +252,6 @@ def q_io_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips identically across parquet/ORC epochs (raw TIMESTAMP
     precision is a parquet-NANOS-vs-ORC-nanos evolution concern the
     partitioned entry already documents)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -270,9 +259,7 @@ def q_io_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("decimal(18,4)").alias("value_dec"),
         F.to_date("ts").alias("day"),
     )
-    dest = os.path.join(
-        _ROUNDTRIP_ROOT, "orc_" + os.path.basename(os.path.normpath(sf_dir))
-    )
+    dest = _dest(spark, sf_dir, "orc_")
     write_table(ev, dest, "orc")
     back = read_table(
         spark,
@@ -320,7 +307,6 @@ def q_io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     should pin the union schema instead of re-merging footers every query.
     Writes stay append-parallel; the batch directory IS the partition
     pruning boundary for backfills."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     legacy = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey"
@@ -330,9 +316,7 @@ def q_io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.length("o_orderpriority").cast("int").alias("priority_code"),
     )
-    dest = os.path.join(
-        _ROUNDTRIP_ROOT, "evo_" + os.path.basename(os.path.normpath(sf_dir))
-    )
+    dest = _dest(spark, sf_dir, "evo_")
     write_table(legacy, os.path.join(dest, "batch=legacy"), "parquet")
     write_table(evolved, os.path.join(dest, "batch=evolved"), "parquet")
     back = read_table(spark, dest, "parquet", options={"mergeSchema": "true"})

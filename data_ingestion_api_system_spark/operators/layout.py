@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from . import pin, tune
+from . import pin
 
 # 8 bits per dimension → 256×256 grid → 16-bit Z-value; 64 buckets ("files")
 # taken from the TOP 6 bits of the interleave, i.e. each bucket is a
@@ -75,7 +75,6 @@ def q_layout_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is exactly the metadata pass an OPTIMIZE job runs before
     rewriting files; the zone-map report is the skipping story itself.
     """
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     bounds = li.agg(
         F.min("l_partkey").alias("minp"),
@@ -197,7 +196,6 @@ def q_sketch_hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, every wider window is metadata-only). The exact side re-scans
     raw events; at scale it runs as a sampled audit, exactly like
     ``sim_recall_eval``'s ground-truth join."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
@@ -272,7 +270,6 @@ def q_layout_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata, not the data (documented un-partitioned-window exception,
     like ``orders_backlog_sweep``'s month carry-ins); the actual rewrite
     this plan drives is embarrassingly parallel per bin."""
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -371,7 +368,6 @@ def q_sketch_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: two scans → inline depth×(j,bucket) fan-out → two bounded hash
     aggs → a 256-row sketch-sketch equi-join → 1-row answer joined to
     the exact count's 1-row aggregate (broadcast)."""
-    tune(spark)
 
     okeys = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k")
@@ -488,7 +484,6 @@ def q_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. The direct path and `exact_users` re-scan raw events as the
     audit twin (the sampled-audit role `sim_recall_eval` documents). All
     windows partition by (type[, day]) — no global sort anywhere."""
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -625,7 +620,6 @@ def q_sketch_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (per-pair distinct-user intersection via self-join on user_id)
     rescans the fact as the audit, the same sampled-audit role the KMV
     entry documents; production use stops at `est_both`."""
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -788,7 +782,6 @@ def q_layout_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so their stages schedule concurrently. At 100 TB the remaining knob
     is swapping exact NDV for approx_count_distinct (HLL) — everything
     else is already map-side-combinable min/max/count."""
-    tune(spark)
     parts = []
     for tname, cols in STATS_COLUMNS.items():
         df = load_table(spark, sf_dir, tname)

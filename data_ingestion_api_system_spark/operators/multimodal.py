@@ -13,12 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.multimodal import binary_documents, extract_features
-from . import tune
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload → mapInPandas feature extraction → typed columns."""
-    tune(spark)
     feats = extract_features(binary_documents(spark, sf_dir))
     return feats.select(
         "doc_id", "mime", "byte_len", "payload_md5", "fake_width", "fake_height",
@@ -43,7 +41,6 @@ FROM documents
 def q_multimodal_size_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over extracted features (UDF output feeding a relational
     agg — the full modality pipeline shape): payload-size histogram."""
-    tune(spark)
     feats = extract_features(binary_documents(spark, sf_dir))
     return feats.groupBy(
         (F.col("byte_len") - (F.col("byte_len") % 100)).alias("size_bucket")
@@ -75,7 +72,6 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the video frame-sampler shape). The oracle recomputes the segments
     relationally (ASCII text ⇒ byte slices == char slices), certifying
     the expansion preserves both row structure and content."""
-    tune(spark)
     from ..sources.multimodal import binary_documents, sample_frames
 
     return sample_frames(binary_documents(spark, sf_dir))
@@ -99,7 +95,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes dims and the strided subsample relationally — ASCII text
     makes byte stride == char stride — so the Arrow round-trip is
     certified value-exact end-to-end."""
-    tune(spark)
     from ..sources.multimodal import resize_images
 
     return resize_images(binary_documents(spark, sf_dir))
@@ -156,7 +151,6 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at this corpus the largest bucket is far below the cap, asserted in
     tests, so the guard is lossless). The frames table is pinned so the
     Python extractor runs ONCE, not once per self-join side."""
-    tune(spark)
     from ..sources.multimodal import phash_frames
     from . import pin
 
@@ -245,7 +239,6 @@ def q_multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup keys on doc_id. Real audio swaps the byte slice for PCM
     decode behind the same schema (sources/multimodal.py::decode_image
     documents the codec gate)."""
-    tune(spark)
     from ..sources.multimodal import audio_windows
 
     wins = audio_windows(

@@ -29,7 +29,6 @@ from ..ingestion.core import (
 )
 from ..schemas import MAX_ID
 from ..tables import load_table
-from . import tune
 
 # ---------------------------------------------------------------------------
 # Shared DuckDB CTEs mirroring the deterministic workload derivation.
@@ -84,7 +83,6 @@ def q_pipeline_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a pure narrow filter — no shuffle until the final tiny count
     aggregate; the predicate evaluates inside whole-stage codegen.
     """
-    tune(spark)
     base = requests_from_orders(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     raw = (
@@ -149,7 +147,6 @@ def q_pipeline_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 (src/app.js:122-138): ids → consecutive ≤3-element batches via
     transform(sequence)+slice+posexplode — all JVM array expressions, no
     UDF, no shuffle beyond the workload derivation itself."""
-    tune(spark)
     valid, _ = validate(requests_from_orders(spark, sf_dir))
     b = chunk_batches(valid.filter(F.size("ids") > 0))
     return b.select(
@@ -183,7 +180,6 @@ def q_pipeline_queue_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full sort never materializes. The drain loop itself pops one batch
     per step from an in-memory heap in this order (streaming/drain.py).
     """
-    tune(spark)
     valid, _ = validate(requests_from_orders(spark, sf_dir))
     b = simulate_progress(chunk_batches(valid.filter(F.size("ids") > 0)))
     pending = b.filter(F.col("status") == "yet_to_start").withColumn(
@@ -266,7 +262,6 @@ def q_pipeline_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation.) On a bucketed production layout the plan is shuffle-free
     either way.
     """
-    tune(spark)
     valid, _ = validate(requests_from_orders(spark, sf_dir))
     ing = ingestions_from_requests(valid)
     b = simulate_progress(chunk_batches(valid))
@@ -299,7 +294,6 @@ LEFT JOIN rolled b USING (ingestion_id)
 def q_pipeline_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16 aggregated: ingestion counts by (overall status, priority) — the
     monitoring view of the pipeline."""
-    tune(spark)
     return (
         q_pipeline_status_rollup(spark, sf_dir)
         .groupBy("status", "priority")

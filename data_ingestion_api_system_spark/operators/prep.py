@@ -37,7 +37,7 @@ from ..functions import exact_avg, exact_sum, sql_exact_sum, tokens
 from ..functions import sql_word_ngrams as _sql_word_ngrams
 from ..functions import word_ngrams as _word_ngrams
 from ..tables import load_table, register_views
-from . import pin, spread, tune
+from . import pin, spread
 from .text import _SQL_TOKS
 
 def q_text_bigram_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,7 +54,6 @@ def q_text_bigram_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences), then hash joins back on (w1, w2)/(w1) — the same
     key-skew profile as word count, handled by AQE skew splitting. No
     driver-side state: the "model" lives in the two count tables."""
-    tune(spark)
     # >=2-tokens guard as a codegen rlike on raw text before the projection
     # (equivalent to size(lt) >= 2; see q_text pmi sibling) — a size(lt)
     # filter above the select alias-substitutes and pushes below the
@@ -129,7 +128,6 @@ def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by user_id — the same key the rollup already shuffled on,
     so AQE reuses the partitioning. Grid rows ≈ users × span-hours, which
     is the OUTPUT size of any dense rollup — not an intermediate blowup."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     bucket = F.expr("(unix_timestamp(ts) div 3600) * 3600")
     hourly = ev.groupBy(F.col("user_id"), bucket.alias("bucket_start")).agg(
@@ -239,7 +237,6 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange + sort PER ROUND that the docstring's own scale claim said
     shouldn't exist. Cosines are the identical sequential double folds
     (zip_with/aggregate), so assignments are bit-identical."""
-    tune(spark)
     from .similarity import _emb
     from ..functions import exact_avg
 
@@ -406,7 +403,6 @@ def q_sql_recursive_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion round is one distributed job over the previous round's
     (tiny, per-priority) frontier — the corpus is scanned once in the
     anchor."""
-    tune(spark)
     register_views(spark, sf_dir)
     return spark.sql(_recursive_backoff_sql("div"))
 
@@ -422,7 +418,6 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; once the first shuffle lands everything is partition-local
     (AQE reuses the user_id partitioning for the subsequent joins), and the
     stage joins are per-user 1-row lookups, never row-multiplying."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.expr("unix_timestamp(ts)").alias("es")
     )
@@ -506,7 +501,6 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     per user, not the series — then a broadcast-size join back and a
     TakeOrdered top-k. The moment trick (var = S2/N - (S1/N)^2) is what
     keeps this two cheap aggregations instead of a window over history."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "user_id", F.expr("(unix_timestamp(ts) div 3600) * 3600").alias("bucket_start")
@@ -569,7 +563,6 @@ def q_orders_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sums are partial-aggregated within the frame. Incremental
     maintenance = the foreachBatch merge sink (tests/test_streaming_extras)
     applied to the newest slice; this query is its from-scratch rebuild."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -615,7 +608,6 @@ def q_events_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output compares the two extraction paths field-for-field: per
     event_type, count plus exact min/max/sum of ``k`` pulled via VARIANT —
     certified against DuckDB's native JSON extraction."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     k = F.expr("variant_get(parse_json(props), '$.k', 'int')")
     return (
@@ -660,7 +652,6 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     + the (tiny) aggregate table — never re-scans history. Mergeability is
     guaranteed by keeping SUM/COUNT partials (never averages) in the
     materialized state; the decimal sums make the merge order-independent."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -706,7 +697,6 @@ def q_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact complement to the approx sketch (`approx_distinct_sketch`):
     right when groups fit a sort, wrong at 100 TB hot groups (use the
     sketch there)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -763,7 +753,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise references the lineitem⋈orders derivation once per join
     per round (~7 rescans at 2 rounds), exactly the re-read a production
     PageRank avoids by materializing adjacency before iterating."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # Node ids are packed BIGINTs internally (supplier k → 2k, customer k
@@ -886,7 +875,6 @@ def q_dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join; checks over the same table share the scan via the single
     union plan, and nothing ever materializes violating ROWS — only
     counts."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     li = load_table(spark, sf_dir, "lineitem")
@@ -964,7 +952,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; the cohort join is user-keyed (AQE reuses the partitioning);
     the cell rollup is a partial count-distinct on (cohort, offset). No
     window over history, no self-join of the raw stream."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -1019,7 +1006,6 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the property a 100 TB corpus split must have (no RNG state, no
     sampling seed drift between engines). Reports per (lang, split) doc
     and token totals plus the realized split fraction."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     split = F.when(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
@@ -1081,7 +1067,6 @@ def q_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance computation + per-probe TakeOrdered. For probe sets too big
     to broadcast, the blocking key (name prefix/phonetic bucket) turns
     this into the same banded equi-join shape as the LSH dedup family."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     probes = F.broadcast(
         c.filter(F.col("c_custkey") < N_FUZZY_PROBES).select(
@@ -1152,7 +1137,6 @@ def q_text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate inputs (10^5+ tokens) the explode→count→max twin trades the
     quadratic scan for two keyed shuffles — same results, chosen by doc
     length at the planner level in a production deployment."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     t = tokens(F.col("text"))
     base = docs.select(

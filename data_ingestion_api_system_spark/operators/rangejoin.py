@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from ..functions import exact_sum, sql_exact_sum
 from ..tables import load_table
-from . import tune
 
 BIN_WIDTH = 10_000.0
 
@@ -41,7 +40,6 @@ PRICE_TIERS = (
 def q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tier each lineitem by `lo <= l_extendedprice < hi` using the
     bin+residual equi-join rewrite; emit per-tier revenue accounting."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_extendedprice", F.floor(F.col("l_extendedprice") / BIN_WIDTH).alias("bin")
     )
@@ -111,7 +109,6 @@ def q_orders_backlog_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle computes the same backlog with ONE flat global
     running sum — a different plan arriving at the same numbers, which is
     exactly what certifies the two-level decomposition lossless."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.to_date("l_shipdate").alias("ship_d")
     )
@@ -242,7 +239,6 @@ def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin/count partials map-side. With a skewed city-density layout
     the hot cells split by the same salting recipe as join_salted_skew;
     no cross product at any scale."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         _grid_point("c_custkey", "cx").alias("x"),

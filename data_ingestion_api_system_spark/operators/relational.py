@@ -36,7 +36,7 @@ from ..functions import (
     sql_exact_sum_dec,
 )
 from ..tables import load_table
-from . import spread_by, tune
+from . import spread_by
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,7 +56,6 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row-group parquet file, so without it the whole decimal partial
     aggregation runs in one task (measured 1.48s vs 1.14s at sf0.1); on a
     real multi-split layout spread() no-ops and the plan is unchanged."""
-    tune(spark)
     from . import spread
 
     li = spread(
@@ -112,7 +111,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-probe it parallelizes (1.12 s vs 1.04 s) — hash-lookup
     probes are cheap per row, unlike the decimal-partial aggregation that
     makes spread_by pay in q18."""
-    tune(spark)
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-01-01")
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1996-06-30")
@@ -161,7 +159,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the c_nationkey = s_nationkey local-supplier constraint. region and
     nation broadcast (5 and 25 rows at any SF — dimension tables stay small
     while facts grow); the fact-fact join shuffles on orderkey."""
-    tune(spark)
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation")
     cust = _t(spark, sf_dir, "customer")
@@ -210,7 +207,6 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pushdown showcase: all three predicates reach the parquet reader
     (PushedFilters), only 3 columns are read (ReadSchema), and the agg is a
     single scalar — at 100 TB this is I/O-bound and nothing else."""
-    tune(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1997-01-01")
@@ -241,7 +237,6 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-0
 # ---------------------------------------------------------------------------
 
 def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune(spark)
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     orders = _t(spark, sf_dir, "orders").filter(
@@ -299,7 +294,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike q3/q5's cheap broadcast probes, this map side is real compute).
     On a real multi-split (or orderkey-bucketed) layout it no-ops and the
     classic partial→final plan resumes."""
-    tune(spark)
     li = spread_by(_t(spark, sf_dir, "lineitem"), "l_orderkey")
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
@@ -351,7 +345,6 @@ def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     one union so one query certifies both. Semi/anti never duplicate or
     widen rows — at scale they shuffle only the key column (Catalyst prunes
     the probe side to the join key)."""
-    tune(spark)
     cust = _t(spark, sf_dir, "customer")
     orders_f = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     with_f = cust.join(orders_f, cust.c_custkey == orders_f.o_custkey, "left_semi")
@@ -389,7 +382,6 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plans SortMergeJoin FullOuter); the aggregates below it are
     map-side-combinable. Skewed keys split under AQE like any other
     shuffle join."""
-    tune(spark)
     rich = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000).select(
         "c_custkey", "c_name", "c_acctbal"
     )
@@ -446,7 +438,6 @@ FROM rich r FULL OUTER JOIN active a ON r.c_custkey = a.o_custkey
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT / UNION over customer key sets from different
     order-status slices, tagged and unioned into one result."""
-    tune(spark)
     orders = _t(spark, sf_dir, "orders")
     f_cust = orders.filter(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("custkey")
@@ -487,7 +478,6 @@ def q_set_ops_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     matter — a custkey with 3 'F' orders and 1 'O' order keeps 1 copy under
     INTERSECT ALL and 2 under EXCEPT ALL. Aggregated to per-key copy counts
     so the result is deterministic."""
-    tune(spark)
     orders = _t(spark, sf_dir, "orders")
     f_cust = orders.filter(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("custkey")
@@ -529,7 +519,6 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (returnflag, linestatus) with grouping_id — subtotal and
     grand-total rows. Spark expands rollup into a union of grouping sets
     before aggregation; partial aggregation still applies per set."""
-    tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
@@ -561,7 +550,6 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (orderstatus, orderpriority): all 4 grouping sets."""
-    tune(spark)
     orders = _t(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
@@ -599,7 +587,6 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative aggregates (count) — never co-locate distinct aggregates
     with imperative buffers (HLL/percentile) in one agg (measured 130×
     cliff, SCALE.md round-10 findings)."""
-    tune(spark)
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -633,7 +620,6 @@ def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String (upper/substr/concat/length/replace), date (year/month/day/
     dayofweek/datediff), math (abs/mod/sqrt/ln/power, rounded) — all
     JVM-side whole-stage-codegen expressions, zero UDFs."""
-    tune(spark)
     part = _t(spark, sf_dir, "part")
     return part.select(
         "p_partkey",

@@ -23,7 +23,7 @@ from ..functions import (
     sql_exact_sum_dec,
 )
 from ..tables import load_table, register_views
-from . import pin, spread, tune
+from . import pin, spread
 
 
 # ---------------------------------------------------------------------------
@@ -34,7 +34,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders with at least one late-shipped line (EXISTS) counted by
     priority. Catalyst turns the EXISTS into a left-semi hash join that
     shuffles only the keys."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01")
     )
@@ -68,7 +67,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue flows between (supplier nation, customer nation) pairs per
     year. Two broadcast dimension joins resolve the nation names; the
     orders⋈lineitem⋈customer/supplier chain shuffles on its keys."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation")
     supp = load_table(spark, sf_dir, "supplier")
     cust = load_table(spark, sf_dir, "customer")
@@ -114,7 +112,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profit (revenue − retail cost × qty) for 'widget' parts by supplier
     nation and order year — the classic multi-fact star aggregation. All
     factors decimal-cast before arithmetic (exact cross-engine sums)."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
@@ -154,7 +151,6 @@ GROUP BY 1, 2
 def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share of revenue from PROMO parts: sum(CASE WHEN)/sum — two exact
     decimal sums and one engine-identical double division."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part")
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
@@ -201,7 +197,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disjunctive multi-branch predicate across join columns — exercises
     Catalyst's predicate normalization/partial pushdown (the common-factor
     l_quantity bounds push to the scan even though branches differ)."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part")
     li = load_table(spark, sf_dir, "lineitem")
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -236,7 +231,6 @@ _PRIORITY_COLS = ["urgent", "high", "medium", "not_specified", "low"]
 def q_pivot_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``pivot`` with an explicit value list (explicit values keep the plan
     single-pass — without them Spark first runs a distinct scan)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     piv = (
         orders.groupBy(F.year("o_orderdate").alias("o_year"))
@@ -271,7 +265,6 @@ def q_sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spark.sql(): customers above the global average balance, with the
     average as an uncorrelated scalar subquery (planned as a broadcast of a
     1-row aggregate)."""
-    tune(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -293,7 +286,6 @@ WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
 
 def q_sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS through the SQL surface."""
-    tune(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -327,7 +319,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     click forward with last(ignoreNulls) — one shuffle on user_id, no
     pairwise join at all. DuckDB's native ASOF JOIN is the oracle.
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id",
@@ -391,7 +382,6 @@ def q_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs its DDL parse at import time, which crashes Python workers that
     re-import this module to deserialize any other UDF (no session there).
     """
-    tune(spark)
 
     @F.pandas_udf("int")
     def _pandas_token_count(texts: pd.Series) -> pd.Series:
@@ -437,7 +427,6 @@ def q_apply_in_pandas_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Arrow both ways). The group key (lang) bounds memory per task; at
     100 TB the key must be chosen so no group exceeds executor memory
     (salt or pre-split giant groups)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents")).select("lang", "doc_id", "n_chars")
     return docs.groupBy("lang").applyInPandas(
         _rank_within_lang, schema="lang string, doc_id long, n_chars long, length_rank long"
@@ -471,7 +460,6 @@ def q_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas UDAF. UDFs defined inside the function for the same
     worker-reimport reason as ``q_pandas_udf_tokens`` above.
     """
-    tune(spark)
 
     @F.pandas_udf("double")
     def _median(v: pd.Series) -> float:
@@ -520,7 +508,6 @@ def q_udtf_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``posexplode`` — the honest use case is expansion logic too imperative
     for array expressions. Defined inside the function for the same
     worker-reimport reason as the pandas UDFs above."""
-    tune(spark)
     import hashlib
 
     from pyspark.sql.functions import udtf
@@ -617,7 +604,6 @@ def q_arrow_cents_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the |types|-bounded final aggregation with map-side
     combine. This is the template the multimodal decode path follows for
     binary payloads."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     cents = ev.mapInArrow(_cents_batches, schema="event_type string, cents long")
     return cents.groupBy("event_type").agg(
@@ -675,7 +661,6 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     exponent back in the flat band. Same discipline as the
     layout_column_stats replan (SCALE.md): never co-locate distinct
     aggregates with imperative-buffer aggregates in one Expand plan."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
 
     def distinct_counts(col: str, out: str) -> DataFrame:
@@ -760,7 +745,6 @@ def q_sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one map-side-combinable aggregate keyed by bin (64 keys),
     then windows over the 64-row sketch — the single-partition window is
     on the REDUCED sketch, the pattern the module's scale notes bless."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     bin_col = F.least(
         F.greatest(
@@ -885,7 +869,6 @@ def q_sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ground-truth join exists only for FP accounting; production use
     stops at `positive`. Bloom guarantee pinned by tests: no false
     negatives."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     mem = orders.select(F.col("o_custkey").alias("k")).distinct()
@@ -1008,7 +991,6 @@ def q_sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness- and scale-safe. DuckDB runs the IDENTICAL text (both
     engines speak this SQL:1999 construct), so the oracle is the same
     string. Spend is an exact DECIMAL sum rounded once."""
-    tune(spark)
     register_views(spark, sf_dir)
     return spark.sql(_SQL_LATERAL)
 
@@ -1026,7 +1008,6 @@ def q_orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells per cohort = months observed), so nothing global exists. Month
     arithmetic is integer (year*12+month), immune to calendar/tz
     libraries disagreeing."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_totalprice",
@@ -1123,7 +1104,6 @@ def q_sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH-candidates-then-verify shape applied to frequency. Output =
     the exact phi-heavy set with exact counts and integer-ppm shares,
     independent of partitioning."""
-    tune(spark)
     import numpy as _np
     import pandas as _pd
 

@@ -17,7 +17,7 @@ from ..functions import (
     sql_exact_sum_dec,
 )
 from ..tables import load_table
-from . import pin, tune
+from . import pin
 
 
 # ---------------------------------------------------------------------------
@@ -35,7 +35,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuously zero in BOTH engines (hash-matching but exercising
     nothing), and the first fix (NATION_7) was still vacuous at
     sf0.001."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     supp = load_table(spark, sf_dir, "supplier")
@@ -101,7 +100,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of customers by order count — the double aggregation
     (outer-join count per customer, then histogram). Customers with no
     orders land in the 0 bucket via the left join."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
@@ -138,7 +136,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers achieving the maximum quarterly revenue: aggregate, then
     filter against the max of the aggregate (a 1-row broadcast, not a
     rank-the-world sort)."""
-    tune(spark)
     supp = load_table(spark, sf_dir, "supplier")
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
@@ -174,7 +171,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lines with quantity below 50% of their part's average quantity —
     the correlated aggregate decorrelated into a join against a per-part
     aggregate (exactly what Catalyst does to the SQL form)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     per_part = li.groupBy(F.col("l_partkey").alias("pk")).agg(
@@ -225,7 +221,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived key bucket: scalar-subquery threshold + anti join. (Restricted
     to 'P' orders because in this dataset every customer has *some* order —
     an unrestricted anti join would be vacuous.)"""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "P"
@@ -283,7 +278,6 @@ def q_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the direct form); only the shuffle layout differs. AQE's
     skew handling does this adaptively for joins; for aggregations with a
     known-hot key this is the manual pattern."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     salted = ev.withColumn("salt", F.col("event_id") % N_SALTS)
     phase1 = salted.groupBy("event_type", "salt").agg(
@@ -316,7 +310,6 @@ ORDER BY event_type
 def q_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot lineitem's measure columns into (measure, value) rows via
     ``stack`` — the wide→long reshape; the inverse of pivot."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     long = li.selectExpr(
         "l_returnflag",
@@ -356,7 +349,6 @@ def q_map_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed column lifecycle: build a map per order from its lines
     (linenumber → partkey via map_from_entries), explode it back, and
     aggregate — certifies the map container round-trips losslessly."""
-    tune(spark)
     # duplicate map keys resolve to the LAST entry of the sorted struct
     # array = the max partkey for that key (oracle mirrors with max())
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
@@ -409,7 +401,6 @@ def q_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-of-week over the order→ship timeline, aggregated into a shipping
     delay profile. Day-of-week is normalized to Spark's 1=Sunday
     convention (DuckDB's dayofweek is 0-based — the oracle adds 1)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     # The three order-date-only expressions (dow, the two date_format
@@ -521,7 +512,6 @@ def q_basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is itself infrequent, so the prune is lossless for the final cut);
     baskets are bounded (items per order), so pair expansion is
     O(basket²) per row, never corpus×corpus."""
-    tune(spark)
     # pin: three branches (pair expansion, item counts, n_orders) read
     # the basket table — without it each branch re-runs the lineitem⋈part
     # join + orderkey aggregate (verified: 4 orderkey exchanges, 8 scans).
@@ -671,7 +661,6 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering vertices by (degree, id) instead of id so every wedge pivot
     has low degree, bounding the join fan-out; same plan, different sort
     key. Per-node counts then come from one explode over the 3 corners."""
-    tune(spark)
     # pin: the edge table feeds five branches (both wedge sides, the
     # closing join, and degree twice) — uncached, each re-runs the whole
     # mining pipeline (verified before the fix: 5× basket aggregation);
@@ -776,7 +765,6 @@ def q_join_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     which exercises the general shape; every join stays keyed, never
     all-pairs, and the decimal revenue discipline keeps the partial-merge
     bit-exact in any merge order."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
     )
@@ -834,7 +822,6 @@ def q_orders_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominance check exists only in tests. Prices pass through untouched
     (comparison only, no float arithmetic), so cross-engine equality is
     byte-exact."""
-    tune(spark)
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -895,7 +882,6 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rounds driven by a bounded unrolled loop exactly as the
     PageRank entry argues (relational3 docstring there). Output: node,
     final community, community size."""
-    tune(spark)
     edges = _brand_edges(spark, sf_dir)
     adj = _brand_adj(edges)
     labels = adj.select(F.col("src").alias("node")).distinct().select(
@@ -995,7 +981,6 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     A peel over a DATA-sized adjacency must keep the aggregate +
     semi-join rounds (see the CC entry) — this fold is valid only
     because TOP_EDGES bounds the domain."""
-    tune(spark)
     adj = _brand_adj(_brand_edges(spark, sf_dir))
     one = adj.agg(F.collect_list(F.struct("src", "dst")).alias("a0"))
 
@@ -1189,7 +1174,6 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number sort is skipped entirely. Degrees stay exact (cheap
     uncapped groupBy); with the cap above this graph's max degree the
     whole output is exact."""
-    tune(spark)
     edges = _brand_edges(spark, sf_dir)
     adj = _brand_adj(edges)
     deg = pin(
@@ -1281,7 +1265,6 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     list. Hub mitigation mirrors ``graph_common_neighbors``: over-cap
     centers read the capped adjacency, and TOP_EDGES bounds the whole
     graph regardless of corpus size."""
-    tune(spark)
     edges = _brand_edges(spark, sf_dir)
     adj = _brand_adj(edges)
     deg = pin(
@@ -1357,7 +1340,6 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats; this is the manual pattern for a KNOWN hot key — and the
     replicated-dim trick is also exactly how broadcast-unfriendly
     medium dims join skewed facts at 100 TB."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "salt", F.col("event_id") % N_SALTS
     )
@@ -1423,7 +1405,6 @@ def q_graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Skew note: a hub's walk count grows multiplicatively, but the JOIN
     fan-out per step is |edges|, not degree² — Katz is hub-safe where
     naive CN is not."""
-    tune(spark)
     edges = _brand_edges(spark, sf_dir)
     adj = _brand_adj(edges)
     w1 = adj.groupBy("src").agg(F.count("*").alias("w")).select(

@@ -23,7 +23,7 @@ from ..functions import sql_word_ngrams as _sql_word_ngrams
 from ..functions import tokens
 from ..functions import word_ngrams as _word_ngrams
 from ..tables import load_table
-from . import global_ntile, pin, spread, tune
+from . import global_ntile, pin, spread
 from .dedup import _spark_simhash_expr, _sql_simhash_bits
 from .text import _SQL_STOPLIST, _SQL_TOKS, STOPWORDS
 
@@ -52,7 +52,6 @@ def q_prep_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     spreads over many partitions; the admission order itself stays the
     sequential prefix by construction (same property the reference's
     priority queue A6 ordering relies on, src/app.js:36-42)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = tokens("text")
     n_tokens = F.size(toks)
@@ -164,7 +163,6 @@ def q_prep_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join on the gram — never all-pairs. Production uses n=8..13
     (DECON_NGRAM=3 here because the synthetic corpus draws from a ~40-word
     vocabulary; 8-grams would never collide)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     # pin: the distinct-gram arrays feed two exploding branches (benchmark
     # set + corpus) — and Generate evaluates an expensive generator child
@@ -250,7 +248,6 @@ def q_prep_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant in corpus size; the single-partition window over language
     rows is deliberate (same containment argument as the queue-order
     top-100)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     stats = (
         docs.select("lang", tokens("text").alias("t"))
@@ -350,7 +347,6 @@ def q_prep_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, not five times (measured 4× on the benchmark; at scale this is
     a persist of the reduced (doc, bucket) pairs, far smaller than the
     text)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     is_probe = F.col("doc_id") % DECON_PROBE_MOD == 0
     # explode over the cheap INDEX sequence, not the built n-gram array:
@@ -491,7 +487,6 @@ def q_prep_source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus total broadcast. At 100 TB the only big exchange is the first
     (source, word) aggregation, which partial-aggregates to ~|vocab|·|sources|.
     """
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
         "source",
@@ -579,7 +574,6 @@ def q_prep_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     column is a narrow per-doc expression; swapping in a richer score
     (quality, rare-word ratio, perplexity — all available as registry
     siblings) changes one line, not the plan."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     scored = docs.select(
         "doc_id", F.size(tokens("text")).cast("bigint").alias("n_tokens")
@@ -626,7 +620,6 @@ def q_prep_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     over it plan one Expand of the already-reduced hit rows). The dense
     scaffold is |benchmarks|×|sources| metadata rows via a broadcast
     nested-loop cross of two sub-kilobyte aggregates."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     # pinned reduced projection, same rationale as prep_decontaminate
     ngr = pin(

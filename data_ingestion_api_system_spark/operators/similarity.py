@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import exact_avg, sql_exact_avg
 from ..tables import load_table
-from . import pin, spread, tune
+from . import pin, spread
 
 N_LSH_BITS = 8
 DIMS = 64
@@ -63,7 +63,6 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 for the query vector (vec_id=0) — the
     exact baseline every ANN variant is measured against. The query vector
     broadcasts (1 row); the corpus never shuffles."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("v").alias("bv")))
     cand = e.filter(F.col("vec_id") != 0).select(
@@ -100,7 +99,6 @@ def q_sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query with a window. This is the shape of a real retrieval batch:
     queries broadcast, corpus stays put, shuffle only (query, candidate)
     scores for the per-query top-k."""
-    tune(spark)
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)
@@ -152,7 +150,6 @@ def q_sim_intra_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The all-pairs join is blocked by label — the 100 TB version replaces it
     with centroid-based or sampled estimation; this is the exact verifier.
     """
-    tune(spark)
     e = _emb(spark, sf_dir)
     a = e.select(F.col("vec_id").alias("ida"), F.col("label"), F.col("v").alias("av"))
     b = e.select(F.col("vec_id").alias("idb"), F.col("label").alias("lb"), F.col("v").alias("bv"))
@@ -224,7 +221,6 @@ def q_sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     search the query's bucket only — top-5 by exact cosine within it. The
     bucket equi-join replaces the corpus scan; at 100 TB add more tables
     (independent hyperplane sets) for recall."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     sig = e.select(
         "vec_id", "label", "v", F.expr(_spark_lsh_bucket("v")).alias("bucket")
@@ -267,7 +263,6 @@ LIMIT 5
 def q_sim_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH bucket size distribution — the health check for the ANN index
     (skewed buckets = bad hyperplanes or correlated data)."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     sig = e.select("vec_id", F.expr(_spark_lsh_bucket("v")).alias("bucket"))
     return sig.groupBy("bucket").agg(
@@ -296,7 +291,6 @@ def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches ~1/10 of the corpus. At 100 TB: centroids broadcast, the
     corpus is partitioned BY cell on disk, and cell pruning becomes
     partition pruning."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     ex = e.select("label", F.posexplode("v").alias("idx", "val"))
     cent = ex.groupBy("label", "idx").agg(
@@ -398,7 +392,6 @@ def q_sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cosine DESC, centroid_id ASC) == array_max over
     (cosine, −centroid_id) structs — field-order struct comparison with
     the unique −centroid_id tie-break."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     carr = F.broadcast(
         e.filter(F.col("vec_id") < N_CENTROIDS)
@@ -496,7 +489,6 @@ def q_sim_dim_variance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — and the top-k is TakeOrderedAndProject. This is the single-pass
     parallel variance (sum/sumsq moments), the textbook distributed
     formulation."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     comps = e.select(
         F.posexplode("v").alias("dim", "x")
@@ -560,7 +552,6 @@ def q_sim_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-partitioned window over that bounded table. The eval stage
     costs nothing at any scale; the assignment is the same narrow pass an
     IVF build already pays."""
-    tune(spark)
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)
@@ -659,7 +650,6 @@ def q_sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at 100 TB: zero shuffles — a narrow per-row array fold over
     the scan (like the repetition scorer), embarrassingly parallel."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     maxabs = "aggregate(transform(v, x -> abs(x)), 0D, (a, x) -> greatest(a, x))"
     qv = (
@@ -737,7 +727,6 @@ def q_sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id, subspace) — re-grouping rows that never left their
     partition... the one keyed exchange), and re-aggregates by vec_id.
     Compression output is ~{PQ_SUBSPACES} bytes/vector vs {DIMS}x4 raw."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     slices = F.array(
         *[
@@ -851,7 +840,6 @@ def q_sim_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes table is ~{PQ_SUBSPACES} bytes/vector — the POINT of PQ: the
     search scans 1-2% of raw bytes, and an IVF cell filter (as
     sim_ivf_ann) composes in front as partition pruning."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     slices = F.array(
         *[
@@ -993,7 +981,6 @@ def q_sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth); run it on a fixed evaluation sample and reuse this plan
     unchanged — the per-query partitions are 8, so the window shuffle is
     trivially small after the WindowGroupLimit partial."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     sig = e.select("vec_id", "v", F.expr(_spark_lsh_bucket("v")).alias("bucket"))
     q = F.broadcast(
@@ -1105,7 +1092,6 @@ def q_sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are sequential left-to-right folds rounded to 6 decimals with the
     vec_id tiebreak (module determinism discipline), so both engines rank
     identically."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     q = F.broadcast(
         e.filter(F.col("vec_id") < RECALL_QUERIES).select(
@@ -1253,7 +1239,6 @@ def q_sim_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides are ≤ pool×queries rows by construction, so the sort-merge
     join is metadata-scale — and the fused ranking is a third
     WindowGroupLimit window over ≤2·pool rows per query."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     q = F.broadcast(
         e.filter(F.col("vec_id") < RECALL_QUERIES).select(
@@ -1389,7 +1374,6 @@ def q_sim_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     |labels|×dims), then a second trivially-small rollup per label. No
     pairwise work anywhere: drift reads 2·|labels| centroids, not
     |corpus|² distances."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     ex = e.select(
         "label",
@@ -1509,7 +1493,6 @@ def q_sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit-capped windows, and ONE aggregation emits the
     metrics. At 100 TB the eval runs over a fixed probe sample; the
     per-query window partitions stay 8 regardless of corpus size."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     sig = e.select("vec_id", "v", F.expr(_spark_lsh_bucket("v")).alias("bucket"))
     q = F.broadcast(
@@ -1608,7 +1591,6 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter BEFORE scoring output — at 100 TB the same LSH/IVF candidate
     pruning as the ANN entries bolts on in front, and the label filter
     pushes into the candidate scan."""
-    tune(spark)
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)
@@ -1677,7 +1659,6 @@ def q_sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partitioned by nprobe). Cell ranking is a ≤|cells|² broadcast
     join-count, not a global window. Centroids are exact decimal means;
     all ratios integer ppm."""
-    tune(spark)
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)
@@ -1888,7 +1869,6 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array_max`` over (mmr_score, −vec_id) structs. No driver-side
     collect either way. Ties break on vec_id everywhere, so the pick
     sequence is unique."""
-    tune(spark)
     e = _emb(spark, sf_dir)
     q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("v").alias("bv")))
     pool = pin(
@@ -2121,7 +2101,6 @@ def q_sim_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates-only, and the margin/mutual reduction below is unchanged
     — which is exactly the published pipeline (FAISS candidates, then
     margin rescoring)."""
-    tune(spark)
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)

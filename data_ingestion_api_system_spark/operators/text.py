@@ -24,7 +24,7 @@ from ..functions import (
     word_ngrams as _word_ngrams,
 )
 from ..tables import load_table
-from . import grouped_global_rank, pin, spread, tune
+from . import grouped_global_rank, pin, spread
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
 
@@ -41,7 +41,6 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counting: whitespace tokens, non-space char count,
     average token length, stopword ratio. The per-doc row is the unit of
     downstream quality filtering."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = tokens("text")
     n_tokens = F.size(toks)
@@ -85,7 +84,6 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     and tok_len_ok was frozen at 1 at every SF — the rule never filtered.
     At 4.0 the band splits the corpus at all three SFs (the rule's point
     is the band arithmetic, not the production constant)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = tokens("text")
     n_tokens = F.size(toks)
@@ -144,7 +142,6 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled ``lang``. Ties resolve in fixed precedence (en>es>de>fr) and
     zero evidence maps to 'und'; both engines apply the identical CASE
     chain so the prediction is deterministic."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = F.transform(tokens("text"), lambda t: F.lower(t))
     scores = {
@@ -202,7 +199,6 @@ def q_text_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode multiplies rows ~#tokens-per-doc; partial aggregation collapses
     them map-side before the shuffle, so shuffled bytes ≈ vocabulary size,
     not corpus size — the property that keeps this viable at 100 TB."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     return (
         docs.select(F.explode(tokens("text")).alias("word"))
@@ -251,7 +247,6 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency via a negated column, same pattern as
     ``events_gini_concentration``), and the OLS fold is a map-side
     combinable aggregate — no window in the plan."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     freqs = (
         docs.select("lang", F.explode(tokens("text")).alias("word"))
@@ -337,7 +332,6 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace collapsed) plus a sorted-token 'bag fingerprint' that is
     invariant to word order — the exact-dedup keys. md5 is identical across
     engines, making this fully oracle-checkable."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     bag = F.array_join(F.array_sort(F.transform(tokens("text"), lambda t: F.lower(t))), " ")
@@ -362,7 +356,6 @@ def q_text_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character 3-gram profile per language: total and distinct shingle
     counts plus per-doc averages — the feature base for n-gram similarity
     and lang-ID at scale."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     # substr with a dynamic start position needs the SQL expr form
     shingles = F.expr(
@@ -439,7 +432,6 @@ def q_text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-pre-token piece estimate mirrors real BPE (pre-tokenize, then
     merge within a pre-token; long words cost multiple subwords), making
     fertility respond to the corpus's word-length mix."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     bpe = _bpe_piece_count_spark()
     words = F.size(tokens("text"))
@@ -481,7 +473,6 @@ def q_text_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-exchange + broadcast-prefix-offset recipe, property-pinned
     against the window form in tests/test_round12b_ops.py), which spreads
     a hot source over many partitions. Emits per-bin packing stats."""
-    tune(spark)
     from . import grouped_global_cumsum
 
     docs = spread(load_table(spark, sf_dir, "documents"))
@@ -544,7 +535,6 @@ def q_text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the gate is a narrow filter (no shuffle, no state); rates
     re-mix a 100 TB corpus in one pass. sampleBy() gives the same shape
     but seeds differently per engine, hence the hash gate."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     expr = None
     for lang, t in SAMPLE_THRESHOLDS.items():
@@ -604,7 +594,6 @@ def q_text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure narrow regexp_replace/regexp_count inside codegen — the
     same single pass a 100 TB scrub runs; no shuffle until the tiny
     accounting agg."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     spiked = F.concat(
         F.col("text"),
@@ -698,7 +687,6 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     hence exact-oracle-checkable — unlike approx_count_distinct, whose
     engine-specific HLL registers force a rows-only check.
     """
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     words = docs.select(
         F.explode(tokens("text")).alias("w")
@@ -786,7 +774,6 @@ def q_text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions and the explode is a Generate — a pure narrow map that
     widens with the scan, zero shuffles. Integer arithmetic only (div,
     not float ceil) so both engines count windows identically."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     base = docs.select("doc_id", "lang", tokens("text").alias("t")).filter(
         F.size("t") > 0
@@ -857,7 +844,6 @@ def q_text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by doc_id (high-cardinality, even) and Spark 4 plans it as
     WindowGroupLimit: each group keeps a {TFIDF_TOPK}-element heap, no full
     per-doc sort."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     n_docs = F.broadcast(docs.agg(F.count("*").alias("n_docs")))
     tf = (
@@ -956,7 +942,6 @@ def q_text_cross_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-global question. Hashing spans to md5 before the shuffle would
     cut key bytes ~2x at scale; kept as raw text here so the oracle can
     share the key."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     # pin the built span ARRAYS before exploding: the exploded table feeds
     # two consumers (span counts + per-doc rollup), and Generate evaluates
@@ -1062,7 +1047,6 @@ def q_text_perplexity_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     count tables, no driver state. At scale the count tables would be
     min-count pruned (unseen bigrams already cost (0+1)/(c1+V) under
     add-one, so pruning singletons changes scores bounded by 1/(c1+V))."""
-    tune(spark)
     # The >=2-tokens guard runs as a codegen rlike on raw text (two
     # non-space chars separated by whitespace ⇔ at least 2 nonempty
     # tokens, nulls dropped by both) BEFORE the projection: a
@@ -1164,7 +1148,6 @@ def q_text_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     double on both engines; ln carries the measured 1-ulp JVM/libm
     divergence, so the key rounds to 8 decimals with a doc_id tiebreak
     before the top-k (same convention as text_perplexity_ngram)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     w = F.size(tokens("text"))
     m = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
@@ -1211,7 +1194,6 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a naive capped ``collect_set`` slice would still buffer every
     distinct doc_id of a stopword before slicing). Low-df terms drop
     below INDEX_MIN_DF (index pruning)."""
-    tune(spark)
     from pyspark.sql import Window
 
     docs = spread(load_table(spark, sf_dir, "documents"))
@@ -1280,7 +1262,6 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf-skewed but the per-shingle state is one BIGINT min — no
     collect_list, so a hot shingle costs one register, not a buffer;
     novelty_ppm is exact integer arithmetic."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     grams = docs.select(
         "doc_id", F.explode(_word_ngrams(tokens("text"), NOVELTY_NGRAM)).alias("g")
@@ -1344,7 +1325,6 @@ def q_text_entropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: explode → one (doc_id, word) map-side-combined count, an
     N-per-doc window on the doc_id exchange, and a final doc_id rollup
     reusing it. Embarrassingly parallel per doc at any scale."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.explode(tokens("text")).alias("w")
@@ -1418,7 +1398,6 @@ def q_text_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the global-max baseline joins as a broadcast scalar. Waste
     ratios are exact integer ppm. At 100 TB: map-side combine reduces each
     partition to the ladder's 11 rows before the one tiny shuffle."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     n_tok = F.size(tokens("text"))
     # docs longer than the top rung (2 * LENGTH_BUCKETS[-1]) have NO ladder
@@ -1505,7 +1484,6 @@ def q_text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined), one join scores phrase words, and the per-doc top-3 is a
     WindowGroupLimit. At 100 TB each stage shuffles bounded keys (words /
     doc ids), never raw text twice."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     words = docs.select(
         "doc_id",
@@ -1646,7 +1624,6 @@ def q_text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-tokenizer match count equals the whitespace word count on this
     space-separated ASCII corpus, which froze tokens_per_word_ppm at
     exactly 1000000 at every SF."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     bpe = _bpe_piece_count_spark()
     words = F.size(tokens("text"))
@@ -1729,7 +1706,6 @@ def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket miner), then two broadcast-friendly joins of the surviving
     pairs against the unigram counts and one 1-row total. The final
     ordering is a top-k (TakeOrderedAndProject), never a full sort."""
-    tune(spark)
     lt = F.transform(tokens("text"), lambda t: F.lower(t))
     d = pin(
         spread(load_table(spark, sf_dir, "documents")).select(lt.alias("lt"))
@@ -1839,7 +1815,6 @@ def q_text_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ≤ |stages|×|langs| groups and a broadcast 1-row total for the
     ppm share. No joins, no windows; documents never shuffle (only the
     tiny per-group partials move)."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = tokens("text")
     n_tokens = F.size(toks)
@@ -1969,7 +1944,6 @@ def q_text_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable; the final selection is TakeOrderedAndProject with a total
     tie-break order (count desc, pair asc) so rank-boundary ties are
     deterministic."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     vocab = (
         docs.select(F.explode(tokens("text")).alias("word"))
@@ -2037,7 +2011,6 @@ def q_text_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     against those bounded bucket tables. The corpus is never rescanned
     per prefix and nothing data-sized crosses a non-equi join. Bucket
     arithmetic is integer ceil-division, identical in both engines."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     maxid = F.broadcast(docs.agg(F.max("doc_id").alias("maxid")))
     bucket = (
@@ -2140,7 +2113,6 @@ def q_text_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     table once and the two unigram-keyed tables once each — the same
     count-table join family as `text_perplexity_ngram`, with the per-doc
     rollup an exact_avg over integer ppm."""
-    tune(spark)
     lt = F.transform(tokens("text"), lambda t: F.lower(t))
     d = pin(
         spread(load_table(spark, sf_dir, "documents")).select(
@@ -2243,7 +2215,6 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup keys on the tiny (lang, source) domain. At 100 TB the
     vocab broadcast is a few MB (any real tokenizer vocabulary) and the
     whole audit is one scan + one bounded aggregate."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     lowered = F.transform(tokens("text"), lambda t: F.lower(t))
     vocab = (
@@ -2343,7 +2314,6 @@ def q_text_vocab_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
     |KS|-row broadcast nested-loop cross over the vocabulary table, NOT
     the corpus — token counts ride as weights, so the corpus never
     re-scans per K. Final rollup keys on the tiny (k, lang) domain."""
-    tune(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     lowered = F.transform(tokens("text"), lambda t: F.lower(t))
     lw = docs.select("lang", F.explode(lowered).alias("w")).groupBy(

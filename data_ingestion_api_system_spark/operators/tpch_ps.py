@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from . import tune
 
 PS_PER_PART = 4
 
@@ -136,7 +135,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts onto the derived partsupp (narrow); the per-part min is one
     partial-agg shuffle on ps_partkey, reused by the equality join (same
     key). No sort-the-world: ties produce multiple rows by design."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == Q2_REGION
@@ -226,7 +224,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-part values are one partial-agg shuffle; the total and
     count re-use those per-part rows (no second scan) and broadcast back
     as one row. Output is the filtered part list — bounded by |part|."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == Q11_REGION
@@ -308,7 +305,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the supplier exclusion list is a broadcast anti-join;
     COUNT(DISTINCT ps_suppkey) per group is Spark's two-phase distinct
     aggregate (partial distinct before the shuffle)."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != Q16_EXCL_BRAND)
         & F.col("p_size").isin(*Q16_SIZES)
@@ -367,7 +363,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     partsupp — the shuffle carries one row per shipped pair, not per
     lineitem. Part-name filter broadcasts; output is a distinct supplier
     list, bounded by |supplier|."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").filter(
         F.col("p_name").startswith(Q20_NAME_PREFIX)
     ).select("p_partkey")

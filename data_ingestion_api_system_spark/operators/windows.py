@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from ..functions import revenue_dec
 from ..tables import load_table
-from . import tune
 
 
 def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,7 +27,6 @@ def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number-over-partition filter. Catalyst pushes the rank filter into
     the window's sort (WindowGroupLimit in Spark 3.5+/4.x) so each group
     keeps a 3-element heap instead of sorting everything."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
@@ -65,7 +63,6 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unbounded preceding → current row). The sum runs in DECIMAL so every
     prefix is exact and engine-identical; the unique tiebreak chain
     (shipdate, orderkey, linenumber, partkey) pins the accumulation order."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= "2001-01-01"
     )
@@ -110,7 +107,6 @@ def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead over each user's event stream: inter-event gap seconds and
     next event type — the building block of sessionization (see
     events.q_events_sessionize)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
@@ -138,7 +134,6 @@ def q_window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / ntile over customers by account balance within
     nation, plus a percent-of-nation-total computed from a full-partition
     frame — two frames over one window spec share a single sort."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     order = [F.desc("c_acctbal"), F.asc("c_custkey")]
     w = Window.partitionBy("c_nationkey").orderBy(*order)
@@ -174,7 +169,6 @@ def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (6 preceding → current) over a pre-aggregated daily series. Aggregate
     first, window second: the window then runs over #days rows, not #orders
     rows — the ordering that matters at 100 TB."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_day")
@@ -216,7 +210,6 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_value / nth_value over an explicit full-partition frame (the
     default frame stops at CURRENT ROW, which makes last_value a footgun —
     spelled out here)."""
-    tune(spark)
     supp = load_table(spark, sf_dir, "supplier")
     order = [F.desc("s_acctbal"), F.asc("s_suppkey")]
     w = Window.partitionBy("s_nationkey").orderBy(*order)
@@ -266,7 +259,6 @@ def q_window_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: shuffles once on user_id (high-cardinality, even), then each
     partition is one sort + a sliding two-pointer frame — the standard
     distributed window; no global sort, no driver state."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     w = (

@@ -1,8 +1,7 @@
 """SparkSession factory.
 
-Tuned for the harness (local[32], single JVM, 128 GiB) but every setting is
-chosen to also be the right default on a real multi-executor cluster at
-~100 TB scale:
+Every setting is chosen to be the right default both on a local[N] box
+and on a real multi-executor cluster at ~100 TB scale:
 
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting, and
   dynamic broadcast conversion replace hand-tuned partition counts when data

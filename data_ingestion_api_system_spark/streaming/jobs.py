@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import exact_sum, sql_exact_sum
-from ..operators import tune
 from ..tables import footer_schema, load_table, normalize, table_path
 
 
@@ -114,7 +113,6 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 5-minute windows per event_type, executed as a genuine
     streaming query (readStream → window agg → memory sink). Must equal
     the batch tumbling answer — shared oracle."""
-    tune(spark)
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -151,7 +149,6 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; state is two window rows per key, evicted by the watermark in a
     production unbounded run). On this bounded source the result equals the
     batch two-offset expansion, which is the oracle."""
-    tune(spark)
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.groupBy(
@@ -188,7 +185,6 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming sessionization operator, run to completion and rolled up per
     user. Equals the batch lag/cumsum sessionization (events.py), so the
     per-user session counts share that oracle."""
-    tune(spark)
     ev = _events_stream(spark, sf_dir)
     sess = (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -238,7 +234,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production the watermark bounds the dedup state store (keys older than
     the watermark are evicted); on this bounded source the result equals
     the batch DISTINCT, which is the oracle."""
-    tune(spark)
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
     deduped = ev.select(
         "user_id",
@@ -282,7 +277,6 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     On this bounded source the result must equal the batch interval join,
     which is the oracle."""
-    tune(spark)
     views = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -359,7 +353,6 @@ def q_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch per-user aggregate — which is exactly the oracle. State is
     a scale-4 integer pair per user (see streaming/stateful.py), so the
     totals are bit-exact regardless of batch boundaries or row order."""
-    tune(spark)
     from ..streaming.stateful import running_user_totals
 
     ev = _events_stream(spark, sf_dir).select("user_id", "value")
@@ -398,7 +391,6 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned with the stream's shuffle, or the enrichment flips to
     a key-value lookup in ``foreachBatch``. On this bounded source the
     result must equal the batch join+rollup, which is the oracle."""
-    tune(spark)
     ev = _events_stream(spark, sf_dir).select("user_id", "value")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -448,7 +440,6 @@ def q_streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the streamed state never exceeds windows×types rows; the rank
     is over that metadata-scale table, partitioned by window."""
-    tune(spark)
     from pyspark.sql import Window as W
 
     ev = _events_stream(spark, sf_dir)

@@ -240,8 +240,8 @@ def test_io_roundtrip_preserves_rows_and_prunes(spark):
     import os
 
     from data_ingestion_api_system_spark.operators.io import (
-        _ROUNDTRIP_ROOT,
         IO_KEEP_TYPES,
+        _dest,
         q_io_partitioned_roundtrip,
     )
 
@@ -256,7 +256,7 @@ def test_io_roundtrip_preserves_rows_and_prunes(spark):
         r = out[et]
         assert (r.n_events, r.n_distinct_ids, r.n_users) == (n, nid, nu)
     # the write really produced one directory per type (Hive layout)
-    dest = os.path.join(_ROUNDTRIP_ROOT, os.path.basename(SF_DIR))
+    dest = _dest(spark, SF_DIR)
     parts = {d for d in os.listdir(dest) if d.startswith("event_type=")}
     assert len(parts) == 5
     # and the read-back plan prunes to the two requested directories
@@ -271,6 +271,24 @@ def test_io_roundtrip_preserves_rows_and_prunes(spark):
         .toString()
     )
     assert "PartitionFilters" in plan
+
+
+def test_roundtrip_root_follows_session_warehouse(tmp_path):
+    """Round trips write under the session's warehouse (a ``file:`` URI),
+    not a fixed path in the checkout, and the first use sweeps the pid dir
+    of a process that died without its atexit removal."""
+    import os
+    import subprocess
+
+    from data_ingestion_api_system_spark.operators.io import _roundtrip_root
+
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    orphan = tmp_path / "wh" / "io_roundtrip" / f"pid{dead.pid}"
+    orphan.mkdir(parents=True)
+    root = _roundtrip_root(f"file:{tmp_path}/wh")
+    assert root == f"{tmp_path}/wh/io_roundtrip/pid{os.getpid()}"
+    assert not orphan.exists()
 
 
 # ---------------------------------------------------------------------------

@@ -326,16 +326,14 @@ def test_orc_roundtrip_preserves_types(spark):
     import pandas as pd
 
     from data_ingestion_api_system_spark.operators.io import (
-        _ROUNDTRIP_ROOT,
+        _dest,
         q_io_orc_roundtrip,
     )
     from tests.conftest import SF_DIR
 
     out = {r.event_type: r for r in q_io_orc_roundtrip(spark, SF_DIR).collect()}
 
-    import os
-
-    dest = os.path.join(_ROUNDTRIP_ROOT, "orc_sf0.001")
+    dest = _dest(spark, SF_DIR, "orc_")
     inferred = dict(spark.read.orc(dest).dtypes)
     assert inferred["value_dec"] == "decimal(18,4)"
     assert inferred["day"] == "date"

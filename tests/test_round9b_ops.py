@@ -416,15 +416,12 @@ def test_schema_evolution_legacy_rows_surface_null_new_column(spark):
     every evolved row (count equality is the certified proxy above; this
     asserts the row-level invariant directly)."""
     from data_ingestion_api_system_spark.operators.io import (
-        _ROUNDTRIP_ROOT,
+        _dest,
         q_io_schema_evolution,
     )
-    import os
 
     q_io_schema_evolution(spark, SF_DIR).collect()  # materialize the write
-    dest = os.path.join(
-        _ROUNDTRIP_ROOT, "evo_" + os.path.basename(os.path.normpath(SF_DIR))
-    )
+    dest = _dest(spark, SF_DIR, "evo_")
     back = spark.read.option("mergeSchema", "true").parquet(dest)
     bad = back.filter(
         ((back.batch == "legacy") & back.priority_code.isNotNull())

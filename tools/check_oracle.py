@@ -49,7 +49,7 @@ def main() -> int:
     # --vanilla: build a PLAIN SparkSession (no UTC pin, no AQE confs, no
     # Arrow settings) the way the DRIVER does, instead of the repo's
     # session factory — a driver-sim mode that catches any query depending
-    # on get_spark()'s conf instead of calling operators.tune() itself.
+    # on get_spark()'s conf that the registry's operators.tune does not set.
     # Round-9 pre-certification ran the full window AND all newborns this
     # way (0 failures); keep running it on new cohorts before they meet
     # the driver.
