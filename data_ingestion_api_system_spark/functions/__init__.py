@@ -11,6 +11,21 @@ every partitioning/ordering yields the same result — then round and cast
 back to DOUBLE. The DuckDB oracle does the exact same cast dance, and both
 engines produce identical doubles.
 
+Means of exact sums follow one rule on both engines
+(:func:`exact_avg_halfup` / :func:`sql_exact_avg_halfup`): the mean of N
+values whose DECIMAL sum S has ``scale`` fractional digits (0–8), rounded
+half away from zero to ``d`` digits, is
+
+    sign(S) · ((2·|S·10^m| + N·10^(m−d)) div (2·N·10^(m−d))) / 10^d,
+    m = max(scale, d)
+
+— integer arithmetic throughout, so no double is ever rounded and a mean
+exactly on a …5 boundary rounds the same way on both engines. The integer
+type is DECIMAL(38,0) with ``div`` in Spark and HUGEINT with ``//`` in
+DuckDB (whose ``//`` on DECIMAL operands divides exactly instead). The
+abs() is load-bearing: Spark's ``div`` truncates toward zero while
+DuckDB's ``//`` floors, and on nonnegative operands the two agree.
+
 This also matters at scale: decimal aggregation is still JVM-side,
 codegen-friendly, and map-side-combinable; it costs a few cycles per row
 but keeps results stable under AQE re-partitioning — a real reproducibility
@@ -40,94 +55,52 @@ def round_half(c: Column | str, k: int) -> Column:
     return F.round(_col(c) * 10.0**k) / 10.0**k
 
 
-def exact_sum(col: Column | str, scale: int = 4, round_to: int = 2) -> Column:
+def exact_sum(col: Column | str) -> Column:
     """Order-independent SUM of a double expression → DOUBLE.
 
-    Spark:  round(sum(cast(x as decimal(25,scale))), round_to)::double
-    DuckDB: CAST(ROUND(SUM(CAST(x AS DECIMAL(25,scale))), round_to) AS DOUBLE)
+    Spark:  round(sum(cast(x as decimal(25,4))), 2)::double
+    DuckDB: CAST(ROUND(SUM(CAST(x AS DECIMAL(25,4))), 2) AS DOUBLE)
     """
-    return F.round(F.sum(_col(col).cast(f"decimal(25,{scale})")), round_to).cast("double")
+    return F.round(F.sum(_col(col).cast("decimal(25,4)")), 2).cast("double")
 
 
-def exact_avg(col: Column | str, scale: int = 4, round_to: int = 6) -> Column:
-    """Order-independent AVG of a double expression → DOUBLE.
-
-    Computed as exact decimal SUM cast to double, divided by COUNT (both
-    engine-identical), then rounded. Matching DuckDB SQL::
-
-        ROUND(CAST(SUM(CAST(x AS DECIMAL(25,4))) AS DOUBLE) / COUNT(x), 6)
-
-    Caveat (measured, round-10 sf0.1 gate): when the exact quotient lands
-    ON a .5e-6 half boundary the two engines' round-of-double can diverge
-    by one last-digit unit — prefer :func:`exact_avg_halfup` for scale ≤ 6
-    inputs (it rounds in exact integer arithmetic and has no boundary);
-    this double-division form remains for scale-8 inputs (k-means
-    centroids) where sum·10^6 is not integral.
-    """
-    c = _col(col)
-    return F.round(
-        F.sum(c.cast(f"decimal(25,{scale})")).cast("double") / F.count(c), round_to
+def _halfup_mean(s: str, n: str, scale: int, digits: int, div: str, int_t: str) -> str:
+    """The one rounded-mean rule, as SQL text for either engine (see the
+    module docstring): ``s`` is an exact DECIMAL sum with ``scale``
+    fractional digits, ``n`` its count, ``div``/``int_t`` the engine's
+    integer division and integer type."""
+    if not 0 <= scale <= 8:
+        # the range the boundary tests pin on both engines; past it the
+        # ×10^m product meets Spark's decimal precision-loss rule unchecked
+        raise ValueError(f"exact mean requires 0 <= scale <= 8, got {scale}")
+    m = max(scale, digits)
+    a = f"CAST(abs({s}) * {10**m} AS {int_t})"
+    nn = f"CAST({n} * {10 ** (m - digits)} AS {int_t})"
+    return (
+        f"(sign({s}) * CAST((2 * {a} + {nn}) {div} (2 * {nn}) AS DOUBLE)"
+        f" / {10**digits}.0)"
     )
 
 
-def exact_avg_halfup(col_name: str, scale: int = 4) -> Column:
-    """AVG rounded to 6 decimals with the rounding performed in EXACT
-    integer arithmetic — immune to the double round-boundary divergence
-    :func:`exact_avg` can hit when the true quotient lands on a
-    ``...xxx5`` boundary (Spark's round sees the shortest decimal repr of
-    the double, DuckDB rounds its full binary expansion; at a half
-    boundary they disagree by 1 ulp of the rounded digit).
-
-    Construction (sign-safe): with A = sum·10^6 exact (the decimal sum has
-    ``scale`` ≤ 6 fractional digits, so A is integral) and N = count,
-    ``half_away_from_zero(A/N) = sign(A) · ((2|A| + N) div (2N))`` — the
-    abs() is load-bearing because Spark's ``div`` truncates toward zero
-    while DuckDB's ``//`` floors, so NEGATIVE operands would diverge by one
-    unit; on nonnegative operands the two agree and the identical integer
-    then divides by 10^6 in both engines (same construction as prep's
-    ``_halfup_mean_div``). Takes a column NAME (the expression is assembled
-    in SQL text). DuckDB twin: :func:`sql_exact_avg_halfup`.
-    """
-    if scale > 6:
-        # the ×10^6 multiplier only yields an integral A when the decimal
-        # sum carries ≤ 6 fractional digits; beyond that the DECIMAL(38,0)
-        # cast would silently round and the "exact" guarantee is gone
-        raise ValueError(f"exact_avg_halfup requires scale <= 6, got {scale}")
+def exact_avg_halfup(col_name: str, scale: int = 4, digits: int = 6) -> Column:
+    """Order-independent AVG of ``col_name`` (SQL text) cast to
+    DECIMAL(25,scale), rounded half away from zero to ``digits`` decimals
+    in exact integer arithmetic. DuckDB twin: :func:`sql_exact_avg_halfup`."""
     s = f"sum(CAST({col_name} AS DECIMAL(25,{scale})))"
-    a = f"CAST(abs({s}) * 1000000 AS DECIMAL(38,0))"
-    n = f"CAST(count({col_name}) AS DECIMAL(38,0))"
     return F.expr(
-        f"(CASE WHEN {s} < 0 THEN -1 ELSE 1 END"
-        f" * CAST((2 * {a} + {n}) div (2 * {n}) AS DOUBLE) / 1000000.0)"
+        _halfup_mean(s, f"count({col_name})", scale, digits, "div", "DECIMAL(38,0)")
     )
 
 
-def sql_exact_avg_halfup(expr: str, scale: int = 4) -> str:
-    """DuckDB twin of :func:`exact_avg_halfup` (same sign-safe abs()+sign
-    construction; HUGEINT because DuckDB's ``//`` on DECIMAL operands is
-    plain division, not integer division)."""
-    if scale > 6:
-        raise ValueError(f"sql_exact_avg_halfup requires scale <= 6, got {scale}")
+def sql_exact_avg_halfup(expr: str, scale: int = 4, digits: int = 6) -> str:
+    """DuckDB twin of :func:`exact_avg_halfup`."""
     s = f"SUM(CAST(({expr}) AS DECIMAL(25,{scale})))"
-    a = f"CAST(ABS({s}) * 1000000 AS HUGEINT)"
-    return (
-        f"((CASE WHEN {s} < 0 THEN -1 ELSE 1 END)"
-        f" * CAST((2 * {a} + COUNT({expr})) // (2 * COUNT({expr})) AS DOUBLE)"
-        f" / 1000000.0)"
-    )
+    return _halfup_mean(s, f"COUNT({expr})", scale, digits, "//", "HUGEINT")
 
 
-def sql_exact_sum(expr: str, scale: int = 4, round_to: int = 2) -> str:
+def sql_exact_sum(expr: str) -> str:
     """DuckDB-side twin of :func:`exact_sum`."""
-    return f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(25,{scale}))), {round_to}) AS DOUBLE)"
-
-
-def sql_exact_avg(expr: str, scale: int = 4, round_to: int = 6) -> str:
-    """DuckDB-side twin of :func:`exact_avg`."""
-    return (
-        f"ROUND(CAST(SUM(CAST(({expr}) AS DECIMAL(25,{scale}))) AS DOUBLE)"
-        f" / COUNT({expr}), {round_to})"
-    )
+    return f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(25,4))), 2) AS DOUBLE)"
 
 
 def decimal_col(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
@@ -138,8 +111,9 @@ def decimal_col(col: Column | str, precision: int = 12, scale: int = 2) -> Colum
     return _col(col).cast(f"decimal({precision},{scale})")
 
 
-def exact_sum_dec(expr: Column, round_to: int = 2) -> Column:
-    """SUM of an already-exact DECIMAL expression → rounded DOUBLE.
+def exact_sum_dec(expr: Column) -> Column:
+    """SUM of an already-exact DECIMAL expression → DOUBLE rounded to 2
+    decimals.
 
     Use for PRODUCTS of columns: ``price*(1-disc)`` computed in doubles has
     a long binary expansion whose double→decimal cast can round differently
@@ -149,12 +123,12 @@ def exact_sum_dec(expr: Column, round_to: int = 2) -> Column:
     precisions small enough that Spark never hits the 38-digit cap (which
     would trigger silent scale reduction: decimalOperations.allowPrecisionLoss).
     """
-    return F.round(F.sum(expr), round_to).cast("double")
+    return F.round(F.sum(expr), 2).cast("double")
 
 
-def sql_exact_sum_dec(expr: str, round_to: int = 2) -> str:
+def sql_exact_sum_dec(expr: str) -> str:
     """DuckDB twin of :func:`exact_sum_dec`."""
-    return f"CAST(ROUND(SUM({expr}), {round_to}) AS DOUBLE)"
+    return f"CAST(ROUND(SUM({expr}), 2) AS DOUBLE)"
 
 
 # The canonical TPC-H revenue/charge expressions as exact decimals, Spark and

@@ -153,13 +153,13 @@ def priority_order(batches: DataFrame) -> DataFrame:
     )
 
 
-def simulate_progress(batches: DataFrame, modulus: int = 5) -> DataFrame:
+def simulate_progress(batches: DataFrame) -> DataFrame:
     """Deterministically assign statuses as if the drain loop had partially
     run — lets the rollup (A16) be exercised and oracle-checked without
-    wall-clock: (request_id + batch_seq) % modulus → <2 completed,
+    wall-clock: (request_id + batch_seq) % 5 → <2 completed,
     ==2 triggered, else yet_to_start.
     """
-    k = (F.col("request_id") + F.col("batch_seq")) % modulus
+    k = (F.col("request_id") + F.col("batch_seq")) % 5
     return batches.withColumn(
         "status",
         F.when(k < 2, STATUS_COMPLETED)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import tokens
+from ..functions import exact_avg_halfup, sql_exact_avg_halfup, tokens
 from ..tables import load_table
 from . import pin, spread
 from .text import STOPWORDS as _STOPWORDS
@@ -538,28 +538,17 @@ def q_text_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "label")
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
-            F.sum("w_b").alias("__score_sum"),
+            exact_avg_halfup("w_b", 6).alias("mean_log_odds"),
         )
     )
-    # half-away-from-zero mean in EXACT integer arithmetic (the
-    # exact_avg_halfup construction — the double-round form diverged by
-    # one 6th-decimal ulp on one sf0.01 row at a ...5 boundary): the
-    # decimal sum has scale 6, so sum·10^6 is integral and
-    # sign·((2|A|+N) div 2N)/10^6 is engine-identical
-    score = F.expr(
-        "(CASE WHEN __score_sum < 0 THEN -1 ELSE 1 END"
-        " * CAST((2 * CAST(abs(__score_sum) * 1000000 AS DECIMAL(38,0))"
-        "         + CAST(n_tokens AS DECIMAL(38,0)))"
-        "        div (2 * CAST(n_tokens AS DECIMAL(38,0))) AS DOUBLE)"
-        " / 1000000.0)"
-    )
+    predicted = (F.col("mean_log_odds") > 0).cast("int")
     return scored.select(
         "doc_id",
         "label",
         "n_tokens",
-        score.alias("mean_log_odds"),
-        (score > 0).cast("int").alias("predicted"),
-        ((score > 0).cast("int") == F.col("label")).cast("int").alias("correct"),
+        "mean_log_odds",
+        predicted.alias("predicted"),
+        (predicted == F.col("label")).cast("int").alias("correct"),
     )
 
 
@@ -592,22 +581,13 @@ weights AS (
 scored AS (
   SELECT i.doc_id, i.label,
          CAST(count(*) AS BIGINT) AS n_tokens,
-         sum(w.w_b) AS score_sum
+         {sql_exact_avg_halfup('w.w_b', 6)} AS mean_log_odds
   FROM inst i JOIN weights w USING (bucket)
   GROUP BY i.doc_id, i.label
 )
-SELECT doc_id, label, n_tokens,
-       ((CASE WHEN score_sum < 0 THEN -1 ELSE 1 END)
-        * CAST((2 * CAST(ABS(score_sum) * 1000000 AS HUGEINT) + n_tokens)
-               // (2 * n_tokens) AS DOUBLE) / 1000000.0) AS mean_log_odds,
-       CASE WHEN ((CASE WHEN score_sum < 0 THEN -1 ELSE 1 END)
-                  * CAST((2 * CAST(ABS(score_sum) * 1000000 AS HUGEINT) + n_tokens)
-                         // (2 * n_tokens) AS DOUBLE) / 1000000.0) > 0
-            THEN 1 ELSE 0 END AS predicted,
-       CASE WHEN (CASE WHEN ((CASE WHEN score_sum < 0 THEN -1 ELSE 1 END)
-                             * CAST((2 * CAST(ABS(score_sum) * 1000000 AS HUGEINT) + n_tokens)
-                                    // (2 * n_tokens) AS DOUBLE) / 1000000.0) > 0
-                       THEN 1 ELSE 0 END) = label
+SELECT doc_id, label, n_tokens, mean_log_odds,
+       CASE WHEN mean_log_odds > 0 THEN 1 ELSE 0 END AS predicted,
+       CASE WHEN (CASE WHEN mean_log_odds > 0 THEN 1 ELSE 0 END) = label
             THEN 1 ELSE 0 END AS correct
 FROM scored
 """

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import exact_avg, exact_avg_halfup, exact_sum, sql_exact_avg, sql_exact_avg_halfup, sql_exact_sum
+from ..functions import exact_avg_halfup, exact_sum, sql_exact_avg_halfup, sql_exact_sum
 from ..tables import load_table
 from . import _join_null_safe, global_ntile, grouped_global_rank, pin, spread_by
 
@@ -68,9 +68,6 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
-            # halfup variant: at sf0.1 this aggregate lands exactly on a
-            # .xxx5 rounding boundary where double round() diverges
-            # across engines; integer-exact rounding is immune
             exact_avg_halfup("value").alias("avg_value"),
         )
         .select(
@@ -198,7 +195,7 @@ def q_events_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
             exact_sum("value").alias("sum_value"),
-            exact_avg("value").alias("avg_value"),
+            exact_avg_halfup("value").alias("avg_value"),
             F.min(F.unix_micros("ts")).alias("first_us"),
             F.max(F.unix_micros("ts")).alias("last_us"),
         )
@@ -211,7 +208,7 @@ SELECT event_type,
        count(*) AS n_events,
        count(DISTINCT user_id) AS n_users,
        {sql_exact_sum('value')} AS sum_value,
-       {sql_exact_avg('value')} AS avg_value,
+       {sql_exact_avg_halfup('value')} AS avg_value,
        min(epoch_us(ts)) AS first_us,
        max(epoch_us(ts)) AS last_us
 FROM events
@@ -306,7 +303,7 @@ def q_events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ev.groupBy("user_id").agg(
         F.max(F.col("ts").cast("date")).alias("last_date"),
         F.count("*").alias("n_events"),
-        exact_sum("value", scale=4, round_to=2).alias("total_value"),
+        exact_sum("value").alias("total_value"),
     )
     corpus_max = F.broadcast(
         ev.agg(F.max(F.col("ts").cast("date")).alias("corpus_max_date"))
@@ -368,7 +365,7 @@ WITH per_user AS (
   SELECT user_id,
          max(CAST(ts AS DATE)) AS last_date,
          count(*) AS n_events,
-         {sql_exact_sum('value', scale=4, round_to=2)} AS total_value
+         {sql_exact_sum('value')} AS total_value
   FROM events GROUP BY user_id
 ),
 corpus AS (SELECT max(CAST(ts AS DATE)) AS corpus_max_date FROM events),
@@ -417,7 +414,7 @@ def q_events_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain windowed SQL."""
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("event_type", "user_id").agg(
-        exact_sum("value", scale=4, round_to=2).alias("total_value")
+        exact_sum("value").alias("total_value")
     )
     ranked = grouped_global_rank(
         per_user, "event_type", ["total_value", "user_id"], "__g_rnk"
@@ -452,7 +449,7 @@ def q_events_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ORACLE_GINI = f"""
 WITH per_user AS (
   SELECT event_type, user_id,
-         {sql_exact_sum('value', scale=4, round_to=2)} AS total_value
+         {sql_exact_sum('value')} AS total_value
   FROM events GROUP BY event_type, user_id
 ),
 ranked AS (

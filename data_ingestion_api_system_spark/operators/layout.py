@@ -338,10 +338,11 @@ JS_B = (12345, 362437, 1013904223, 1)
 JS_WIDTH = 64
 
 
-def _js_bucket(j: int, k: str = "k") -> str:
-    """Engine-neutral bucket expression (same %, *, + semantics in Spark
-    SQL and DuckDB; the +P makes it sign-safe for negative keys)."""
-    return f"(((({k} % {JS_P}) + {JS_P}) % {JS_P} * {JS_A[j]} + {JS_B[j]}) % {JS_P}) % {JS_WIDTH}"
+def _js_bucket(j: int) -> str:
+    """Engine-neutral bucket expression of column ``k`` (same %, *, +
+    semantics in Spark SQL and DuckDB; the +P makes it sign-safe for
+    negative keys)."""
+    return f"((((k % {JS_P}) + {JS_P}) % {JS_P} * {JS_A[j]} + {JS_B[j]}) % {JS_P}) % {JS_WIDTH}"
 
 
 def q_sketch_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import exact_avg, exact_sum, sql_exact_sum, tokens
+from ..functions import exact_avg_halfup, exact_sum, sql_exact_avg_halfup, sql_exact_sum, tokens
 from ..functions import sql_word_ngrams as _sql_word_ngrams
 from ..functions import word_ngrams as _word_ngrams
 from ..tables import load_table, register_views
@@ -193,23 +193,6 @@ K_TRAIN = 4  # centroids
 TRAIN_ROUNDS = 2  # assign→update rounds (unrolled identically in the oracle)
 
 
-def _halfup_mean_div(a_expr: str, n_expr: str, div: str, int_t: str) -> str:
-    """Exact half-away-from-zero mean at scale 8, as pure integer
-    arithmetic: sign(A) * ((2|A| + N) intdiv (2N)) / 10^8 with A = sum·10^8
-    integral. Two portability traps are load-bearing here: abs() first,
-    because Spark's ``div`` truncates toward zero while DuckDB's ``//``
-    floors (negative operands would diverge; nonnegative ones agree); and
-    ``int_t`` must be a true integer type per engine — DECIMAL(38,0) for
-    Spark but HUGEINT for DuckDB, whose ``//`` on DECIMAL operands
-    performs plain decimal division, not integer division (measured)."""
-    a_abs = f"CAST(abs({a_expr}) * 100000000 AS {int_t})"
-    return (
-        f"(CASE WHEN {a_expr} < 0 THEN -1 ELSE 1 END"
-        f" * CAST((2 * {a_abs} + {n_expr}) {div} (2 * {n_expr}) AS DOUBLE)"
-        f" / 100000000.0)"
-    )
-
-
 def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full Lloyd training loop for IVF cell building: {TRAIN_ROUNDS}
     unrolled assign→update rounds of cosine k-means (k={K_TRAIN}, seeds =
@@ -218,8 +201,8 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Extends ``sim_kmeans_step`` (one round) to the iterative algorithm.
 
     Cross-engine exactness through BOTH rounds: every intermediate centroid
-    dimension is an exact decimal half-away-from-zero mean (integer
-    arithmetic — see :func:`_halfup_mean_div`), so round-2 assignments are
+    dimension is the exact mean of its DECIMAL(25,8) values rounded to 8
+    digits (:func:`exact_avg_halfup`), so round-2 assignments are
     computed against bit-identical centroids in Spark and DuckDB; cosines
     are sequential folds (bit-identical across engines) rounded to 6.
 
@@ -238,7 +221,6 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     shouldn't exist. Cosines are the identical sequential double folds
     (zip_with/aggregate), so assignments are bit-identical."""
     from .similarity import _emb
-    from ..functions import exact_avg
 
     e = spread(_emb(spark, sf_dir))
     cent = e.filter(F.col("vec_id") < K_TRAIN).select(
@@ -293,15 +275,7 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_dim = (
             assigned.select("centroid_id", F.posexplode("v").alias("idx", "val"))
             .groupBy("centroid_id", "idx")
-            .agg(
-                F.sum(F.col("val").cast("decimal(20,8)")).alias("s"),
-                F.count("*").alias("n"),
-            )
-            .select(
-                "centroid_id",
-                "idx",
-                F.expr(_halfup_mean_div("s", "n", "div", "DECIMAL(38,0)")).alias("c"),
-            )
+            .agg(exact_avg_halfup("val", 8, digits=8).alias("c"))
         )
         cent = F.broadcast(
             per_dim.groupBy("centroid_id").agg(
@@ -313,7 +287,7 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     stats = assigned.groupBy("centroid_id").agg(
         F.count("*").alias("n_assigned"),
-        exact_avg("cosine", scale=6).alias("avg_cosine"),
+        exact_avg_halfup("cosine", 6).alias("avg_cosine"),
     )
     return stats.join(cent, "centroid_id").select(
         "centroid_id",
@@ -327,7 +301,6 @@ def _sql_kmeans_train() -> str:
     """Programmatically unrolled DuckDB twin of :func:`q_sim_kmeans_train` —
     same rounds, same integer-exact centroid arithmetic."""
     from .similarity import _SQL_EMB, _sql_cv_dot, _sql_norm
-    from ..functions import sql_exact_avg
 
     dims = 64
     parts = [
@@ -353,7 +326,7 @@ def _sql_kmeans_train() -> str:
         parts.append(
             f"""upd{r} AS (
   SELECT centroid_id, i,
-         {_halfup_mean_div("SUM(CAST(v[CAST(i AS INT)] AS DECIMAL(20,8)))", "COUNT(*)", "//", "HUGEINT")} AS c
+         {sql_exact_avg_halfup("v[CAST(i AS INT)]", 8, digits=8)} AS c
   FROM asg{r}, (SELECT unnest(range(1, {dims + 1})) AS i) idxs
   GROUP BY centroid_id, i
 )"""
@@ -371,7 +344,7 @@ WITH {ctes}
 SELECT s.centroid_id, s.n_assigned, s.avg_cosine, {final_cols}
 FROM (
   SELECT centroid_id, count(*) AS n_assigned,
-         {sql_exact_avg('cosine', scale=6)} AS avg_cosine
+         {sql_exact_avg_halfup('cosine', 6)} AS avg_cosine
   FROM asg{TRAIN_ROUNDS} GROUP BY centroid_id
 ) s JOIN cent{TRAIN_ROUNDS + 1} USING (centroid_id)
 """
@@ -444,17 +417,17 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(name).alias("stage"),
         F.count("*").alias("n_users"),
         (
-            exact_avg(delta, scale=0) if delta is not None else F.lit(None).cast("double")
+            exact_avg_halfup(delta, 0) if delta else F.lit(None).cast("double")
         ).alias("avg_secs_from_prev"),
     )
     return (
         stage("view", v, None)
-        .unionByName(stage("click", c, F.col("t_click") - F.col("t_view")))
-        .unionByName(stage("purchase", p, F.col("t_purchase") - F.col("t_click")))
+        .unionByName(stage("click", c, "t_click - t_view"))
+        .unionByName(stage("purchase", p, "t_purchase - t_click"))
     )
 
 
-_ORACLE_FUNNEL = """
+_ORACLE_FUNNEL = f"""
 WITH ev AS (
   SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS es FROM events
 ),
@@ -476,13 +449,9 @@ p AS (
 SELECT 'view' AS stage, count(*) AS n_users,
        CAST(NULL AS DOUBLE) AS avg_secs_from_prev FROM v
 UNION ALL
-SELECT 'click', count(*),
-       ROUND(CAST(SUM(CAST(t_click - t_view AS DECIMAL(25,0))) AS DOUBLE)
-             / COUNT(t_click - t_view), 6) FROM c
+SELECT 'click', count(*), {sql_exact_avg_halfup('t_click - t_view', 0)} FROM c
 UNION ALL
-SELECT 'purchase', count(*),
-       ROUND(CAST(SUM(CAST(t_purchase - t_click AS DECIMAL(25,0))) AS DOUBLE)
-             / COUNT(t_purchase - t_click), 6) FROM p
+SELECT 'purchase', count(*), {sql_exact_avg_halfup('t_purchase - t_click', 0)} FROM p
 """
 
 

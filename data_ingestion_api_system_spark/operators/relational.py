@@ -27,11 +27,11 @@ from ..functions import (
     SQL_CHARGE_DEC,
     SQL_REVENUE_DEC,
     charge_dec,
-    exact_avg,
+    exact_avg_halfup,
     exact_sum,
     exact_sum_dec,
     revenue_dec,
-    sql_exact_avg,
+    sql_exact_avg_halfup,
     sql_exact_sum,
     sql_exact_sum_dec,
 )
@@ -70,9 +70,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_sum("l_extendedprice").alias("sum_base_price"),
             exact_sum_dec(disc_price).alias("sum_disc_price"),
             exact_sum_dec(charge).alias("sum_charge"),
-            exact_avg("l_quantity").alias("avg_qty"),
-            exact_avg("l_extendedprice").alias("avg_price"),
-            exact_avg("l_discount").alias("avg_disc"),
+            exact_avg_halfup("l_quantity").alias("avg_qty"),
+            exact_avg_halfup("l_extendedprice").alias("avg_price"),
+            exact_avg_halfup("l_discount").alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -85,9 +85,9 @@ SELECT l_returnflag, l_linestatus,
        {sql_exact_sum('l_extendedprice')} AS sum_base_price,
        {sql_exact_sum_dec(SQL_REVENUE_DEC)} AS sum_disc_price,
        {sql_exact_sum_dec(SQL_CHARGE_DEC)} AS sum_charge,
-       {sql_exact_avg('l_quantity')} AS avg_qty,
-       {sql_exact_avg('l_extendedprice')} AS avg_price,
-       {sql_exact_avg('l_discount')} AS avg_disc,
+       {sql_exact_avg_halfup('l_quantity')} AS avg_qty,
+       {sql_exact_avg_halfup('l_extendedprice')} AS avg_price,
+       {sql_exact_avg_halfup('l_discount')} AS avg_disc,
        count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -299,7 +299,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
-        .agg(exact_sum("l_quantity", round_to=2).alias("total_qty"))
+        .agg(exact_sum("l_quantity").alias("total_qty"))
         .filter(F.col("total_qty") > 150)
     )
     return (

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import exact_avg, sql_exact_avg
+from ..functions import exact_avg_halfup, sql_exact_avg_halfup
 from ..tables import load_table
 from . import pin, spread
 
@@ -146,7 +146,7 @@ WHERE rk <= 3
 
 def q_sim_intra_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise intra-label cosine statistics: per label, the pair count and
-    mean cosine (rounded cosines summed in DECIMAL → order-independent).
+    exact mean cosine (rounded cosines summed in DECIMAL → order-independent).
     The all-pairs join is blocked by label — the 100 TB version replaces it
     with centroid-based or sampled estimation; this is the exact verifier.
     """
@@ -164,10 +164,7 @@ def q_sim_intra_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.groupBy("label").agg(
         F.count("*").alias("n_pairs"),
-        F.round(
-            F.sum(F.col("cosine").cast("decimal(20,6)")).cast("double") / F.count("*"),
-            6,
-        ).alias("avg_cosine"),
+        exact_avg_halfup("cosine", 6).alias("avg_cosine"),
         F.max("cosine").alias("max_cosine"),
         F.min("cosine").alias("min_cosine"),
     )
@@ -183,7 +180,7 @@ pairs AS (
     ON a.label = b.lb AND a.ida < b.idb
 )
 SELECT label, count(*) AS n_pairs,
-       ROUND(CAST(SUM(CAST(cosine AS DECIMAL(20,6))) AS DOUBLE) / count(*), 6) AS avg_cosine,
+       {sql_exact_avg_halfup('cosine', 6)} AS avg_cosine,
        max(cosine) AS max_cosine,
        min(cosine) AS min_cosine
 FROM pairs
@@ -436,11 +433,8 @@ def q_sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return assigned.groupBy("centroid_id").agg(
         F.count("*").alias("n_assigned"),
-        exact_avg("cosine", scale=6).alias("avg_cosine"),
-        *[
-            exact_avg(F.expr(f"v[{d}]"), scale=8).alias(f"new_c{d}")
-            for d in range(4)
-        ],
+        exact_avg_halfup("cosine", 6).alias("avg_cosine"),
+        *[exact_avg_halfup(f"v[{d}]", 8).alias(f"new_c{d}") for d in range(4)],
     )
 
 
@@ -459,8 +453,8 @@ assigned AS (
     FROM scored) WHERE rk = 1
 )
 SELECT centroid_id, count(*) AS n_assigned,
-       {sql_exact_avg('cosine', scale=6)} AS avg_cosine,
-       {", ".join(f"{sql_exact_avg(f'v[{d + 1}]', scale=8)} AS new_c{d}" for d in range(4))}
+       {sql_exact_avg_halfup('cosine', 6)} AS avg_cosine,
+       {", ".join(f"{sql_exact_avg_halfup(f'v[{d + 1}]', 8)} AS new_c{d}" for d in range(4))}
 FROM assigned
 GROUP BY centroid_id
 """

@@ -15,9 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import (
-    exact_avg,
     exact_avg_halfup,
-    sql_exact_avg,
     sql_exact_avg_halfup,
     sql_word_ngrams as _sql_word_ngrams,
     tokens,
@@ -1031,14 +1029,11 @@ def q_text_perplexity_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     and DuckDB (libm). Each log-prob is therefore rounded to 6 decimals
     before the exact-decimal average; a 1-ulp input difference then flips
     the comparison only when ln lands within an ulp of a 0.5e-6 boundary
-    (~2e-10/value). The AVERAGE itself uses `exact_avg_halfup` (integer
-    half-away-from-zero rounding of sum·10^6 div n) — the round-10 sf0.1
-    full gate caught plain `exact_avg`'s round-of-double on a doc whose
-    exact mean of 361 six-decimal values lands on a .5e-6 boundary, which
-    the two engines' double rounding resolves differently; the integer
-    construction is boundary-exact by definition. Residual risk is the
-    per-ln rounding above plus exp(-avg)'s 1-ulp at the ppl 4th decimal
-    (~7e-11/row) — the repo-wide documented class.
+    (~2e-10/value). The average itself is the exact mean
+    (`exact_avg_halfup`: integer half-away-from-zero rounding, no double
+    rounded). Residual risk is the per-ln rounding above plus exp(-avg)'s
+    1-ulp at the ppl 4th decimal (~7e-11/row) — the repo-wide documented
+    class.
 
     Plan shape at 100 TB: identical to q_text_bigram_coherence (one explode
     pass, two map-side-partial count aggregations, hash joins back on
@@ -2112,7 +2107,7 @@ def q_text_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row distinct-bigram total; doc bigrams then hash-join the pair
     table once and the two unigram-keyed tables once each — the same
     count-table join family as `text_perplexity_ngram`, with the per-doc
-    rollup an exact_avg over integer ppm."""
+    rollup an exact mean over integer ppm."""
     lt = F.transform(tokens("text"), lambda t: F.lower(t))
     d = pin(
         spread(load_table(spark, sf_dir, "documents")).select(
@@ -2154,7 +2149,7 @@ def q_text_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_bigrams"),
-        exact_avg("p_ppm", 2).alias("mean_p_ppm"),
+        exact_avg_halfup("p_ppm", 2).alias("mean_p_ppm"),
         F.min("p_ppm").cast("bigint").alias("min_p_ppm"),
     )
 
@@ -2186,7 +2181,7 @@ scored AS (
 )
 SELECT doc_id,
        CAST(count(*) AS BIGINT) AS n_bigrams,
-       {sql_exact_avg('p_ppm', 2)} AS mean_p_ppm,
+       {sql_exact_avg_halfup('p_ppm', 2)} AS mean_p_ppm,
        CAST(min(p_ppm) AS BIGINT) AS min_p_ppm
 FROM scored GROUP BY doc_id
 """

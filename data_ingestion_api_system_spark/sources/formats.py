@@ -25,10 +25,9 @@ def write_table(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
 ) -> None:
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if fmt == "csv":
@@ -106,17 +105,14 @@ def stream_source(
     spark: SparkSession,
     fmt: str,
     options: dict[str, str] | None = None,
-    schema: T.StructType | str | None = None,
 ) -> DataFrame:
     """Generic streaming-source builder: one place where readStream
-    format/schema/options plumbing lives. The Kafka path composes this with
+    format/options plumbing lives. The Kafka path composes this with
     its connector options; tests exercise the very same plumbing with the
     built-in ``rate-micro-batch`` source (no external jars), so a typo in
     the option loop can't hide behind the missing Kafka classpath
     (tests/test_stream_sources.py)."""
     reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     return reader.format(fmt).load()

@@ -119,3 +119,36 @@ def test_round_half_matches_duckdb_round(spark):
     ).collect()
     assert [r.half for r in rows] == want
     assert sum(r.plain != w for r, w in zip(rows, want)) > 0
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    mags=st.lists(
+        st.floats(min_value=1e-9, max_value=1e12), min_size=1, max_size=60
+    ),
+    signs=st.lists(st.sampled_from([1.0, -1.0]), min_size=60, max_size=60),
+    k=st.integers(min_value=0, max_value=8),
+)
+def test_round_half_matches_duckdb_round_property(spark, mags, signs, k):
+    """``round_half(v, k)`` equals DuckDB's ``round(v, k)`` for finite
+    doubles of both signs from 1e-9 to 1e12 and every k in 0…8."""
+    import duckdb
+    import pyarrow as pa
+
+    from data_ingestion_api_system_spark.functions import round_half
+
+    values = [s * m for s, m in zip(signs, mags)]
+    con = duckdb.connect()
+    vals = pa.table({"i": range(len(values)), "v": values})
+    want = [
+        r[0]
+        for r in con.execute(f"SELECT round(v, {k}) FROM vals ORDER BY i").fetchall()
+    ]
+    con.close()
+    df = spark.createDataFrame(list(enumerate(values)), "i long, v double")
+    got = [r.h for r in df.orderBy("i").select(round_half("v", k).alias("h")).collect()]
+    assert got == want, [(v, g, w) for v, g, w in zip(values, got, want) if g != w]

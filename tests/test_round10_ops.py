@@ -7,14 +7,16 @@
    source-only / sink-only states appear with explicit zero mass instead
    of silently vanishing from the inner-join chain.
 3. exact_avg_halfup boundary laws (the sf0.1 gate catch): Spark ==
-   DuckDB == integer half-away model, including constructed exact
-   .5e-6-boundary means.
+   DuckDB == exact half-away model at every (scale, digits) pair in use,
+   including constructed exact half-boundary means.
 4. Partition-invariance sample: a cross-family entry sample must produce
    identical output under 2-vs-64 shuffle partitions and 128MB-vs-4MB
    scan splits (the suite-resident twin of tools/invariance_check.py).
 """
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,22 +117,29 @@ def test_adj_gate_empty_graph(spark):
 # ---------------------------------------------------------------------------
 # 3. exact_avg_halfup boundary law (the round-10 sf0.1 gate catch): the
 #    Spark expression, its DuckDB twin, and a Fraction-exact
-#    half-away-from-zero model agree on arbitrary 6-decimal inputs —
-#    INCLUDING means that land exactly on a .5e-6 rounding boundary, where
-#    plain exact_avg's round-of-double diverged between the engines
+#    half-away-from-zero model agree for every (scale, digits) pair the
+#    registry uses — INCLUDING means that land exactly on a …5 rounding
+#    boundary, where a round-of-double diverged between the engines
 #    (text_perplexity_ngram, 2 rows at sf0.1).
 # ---------------------------------------------------------------------------
 
-
-def _halfaway_mean_micros(micros: list[int]) -> float:
-    """Fraction-free exact model: half-away-from-zero(Σ/n) at 1e-6 scale,
-    as pure integers — the same construction both engines implement."""
-    a, n = sum(micros), len(micros)
-    sign = -1 if a < 0 else 1
-    return sign * ((2 * abs(a) + n) // (2 * n)) / 1e6
+# (input scale, rounded digits) of every exact mean in the registry
+_MEAN_PAIRS = [(0, 6), (2, 6), (4, 6), (6, 6), (8, 6), (8, 8)]
 
 
-def _engines_halfup_mean(spark, micros: list[int]) -> tuple[float, float]:
+def _halfaway_mean(units: list[int], scale: int, digits: int) -> float:
+    """Exact model: the mean of ``units``·10^-scale rounded half away from
+    zero to ``digits`` decimals, by Fraction arithmetic."""
+    from fractions import Fraction
+
+    q = Fraction(sum(units), len(units) * 10**scale) * 10**digits
+    r = math.floor(abs(q) + Fraction(1, 2))
+    return (-r if q < 0 else r) / 10**digits
+
+
+def _engines_halfup_mean(
+    spark, units: list[int], scale: int, digits: int
+) -> tuple[float, float]:
     import duckdb
     import pandas as pd
 
@@ -139,45 +148,89 @@ def _engines_halfup_mean(spark, micros: list[int]) -> tuple[float, float]:
         sql_exact_avg_halfup,
     )
 
-    pdf = pd.DataFrame({"v": [m / 1e6 for m in micros]})
+    pdf = pd.DataFrame({"v": [u / 10**scale for u in units]})
     sdf = spark.createDataFrame(pdf)
-    [srow] = sdf.agg(exact_avg_halfup("v", scale=6).alias("m")).collect()
+    [srow] = sdf.agg(exact_avg_halfup("v", scale, digits).alias("m")).collect()
     con = duckdb.connect()
     con.register("t", pdf)
     [drow] = con.sql(
-        f"SELECT {sql_exact_avg_halfup('v', scale=6)} AS m FROM t"
+        f"SELECT {sql_exact_avg_halfup('v', scale, digits)} AS m FROM t"
     ).fetchall()
     con.close()
     return srow.m, drow[0]
 
 
+def _boundary_units(odd: int, scale: int, digits: int) -> list[int]:
+    """Units whose mean sits EXACTLY on a half boundary of the ``digits``-th
+    decimal: odd·5·10^-(digits+1). With scale ≤ digits the count supplies
+    the missing factors of two (n = 2^(digits−scale+1)); above it, two
+    values carrying odd·10^(scale−digits) units do."""
+    if scale <= digits:
+        return [odd] + [0] * (2 ** (digits - scale + 1) - 1)
+    return [odd * 10 ** (scale - digits), 0]
+
+
 def test_exact_avg_halfup_exact_boundary_cases(spark):
-    """Constructed exact .5e-6-boundary means: n=2 with odd micro sums sit
-    EXACTLY on the half boundary (the case round-of-double cannot decide
-    portably); both engines must round away from zero, both signs, plus
-    the n=361 shape the sf0.1 gate actually caught."""
-    cases = [
-        [1, 0],            # mean = +0.5e-6 -> +1e-6
-        [-1, 0],           # mean = -0.5e-6 -> -1e-6
-        [3, 0],            # mean = +1.5e-6 -> +2e-6
-        [-3, 0],           # mean = -1.5e-6 -> -2e-6
-        [25, 25, 26],      # non-boundary control
-        # magnitude of the observed sf0.1 flip (avg_logprob ~ -3.39) on a
-        # GENUINE half boundary (even n): mean = -3388329.5e-6 exactly.
-        # NB with odd n (the real doc had 361 bigrams) an integral micro
-        # sum can never land exactly on .5 — the production failure was
-        # plain exact_avg's round-of-double diverging NEAR the boundary
-        # (Spark rounds the shortest decimal repr, DuckDB the full binary
-        # expansion); the integer construction under test here has no
-        # double round at all, which is the point.
-        [-3388329, -3388330],
-        # odd-n control at the same magnitude (exact thirds, no boundary)
-        [-3388329, -3388330, -3388331],
-    ]
-    for micros in cases:
-        s, d = _engines_halfup_mean(spark, micros)
-        m = _halfaway_mean_micros(micros)
-        assert s == d == m, (micros[:3], len(micros), s, d, m)
+    """Constructed exact half-boundary means for every (scale, digits)
+    pair in use, both signs: both engines must round away from zero; plus
+    a non-boundary control, and the n=2 shape at the magnitude of the
+    sf0.1 catch (avg_logprob ~ -3.39) at scale 6."""
+    for scale, digits in _MEAN_PAIRS:
+        cases = [_boundary_units(o, scale, digits) for o in (1, -1, 3, -3)]
+        cases.append([25, 25, 26])  # non-boundary control
+        if scale == 6:
+            cases += [
+                [-3388329, -3388330],  # mean = -3388329.5e-6 exactly
+                [-3388329, -3388330, -3388331],  # exact thirds, no boundary
+            ]
+        for units in cases:
+            s, d = _engines_halfup_mean(spark, units, scale, digits)
+            m = _halfaway_mean(units, scale, digits)
+            assert s == d == m, (scale, digits, units[:3], len(units), s, d, m)
+
+
+def test_events_type_stats_mean_rounds_half_away(spark, tmp_path):
+    """One (type, day) group of 24 events whose values sum to 0.0003: the
+    mean is exactly 1.25e-5, so q_events_type_stats and its oracle must
+    both report 1.3e-5 (half away from zero). Rounding the double quotient
+    0.0003/24 instead gives 1.2e-5 on both engines."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_ingestion_api_system_spark.operators.events import (
+        _ORACLE_TYPE_STATS,
+        q_events_type_stats,
+    )
+
+    n = 24
+    t0 = dt.datetime(2024, 1, 1, 12)
+    path = tmp_path / "events.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(seconds=i) for i in range(n)],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
+                "event_type": ["click"] * n,
+                "value": [0.0001] * 3 + [0.0] * (n - 3),
+                "props": ["{}"] * n,
+            }
+        ),
+        path,
+    )
+    [srow] = q_events_type_stats(spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    [orow] = con.execute(_ORACLE_TYPE_STATS).fetchall()
+    con.close()
+    assert (srow.n_events, srow.sum_value) == (n, 0.0)
+    assert srow.avg_value == orow[5] == 1.3e-5
 
 
 try:
@@ -185,21 +238,23 @@ try:
     from hypothesis import strategies as st
 
     @settings(
-        max_examples=20,
+        max_examples=30,
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
     @given(
-        micros=st.lists(
+        pair=st.sampled_from(_MEAN_PAIRS),
+        units=st.lists(
             st.integers(min_value=-10_000_000, max_value=10_000_000),
             min_size=1,
             max_size=40,
-        )
+        ),
     )
-    def test_exact_avg_halfup_matches_model(spark, micros):
-        """Random 6-decimal inputs: Spark == DuckDB == integer model."""
-        s, d = _engines_halfup_mean(spark, micros)
-        m = _halfaway_mean_micros(micros)
+    def test_exact_avg_halfup_matches_model(spark, pair, units):
+        """Random inputs at every (scale, digits) pair in use: Spark ==
+        DuckDB == exact model."""
+        s, d = _engines_halfup_mean(spark, units, *pair)
+        m = _halfaway_mean(units, *pair)
         assert s == d == m
 except ImportError:  # pragma: no cover - hypothesis is baked in
     # an explicitly-skipped placeholder (ADVICE r10): if hypothesis ever

@@ -7,9 +7,8 @@ verifier (one array op per pair instead of two). The identity
 |A∪B| = |A| + |B| − |A∩B| is exact ONLY for duplicate-free arrays — the
 shingle builders guarantee that via array_distinct — so this suite pins
 (a) the rewritten queries still hash-match their DuckDB oracles on a
-corpus slice, and (b) the guard that keeps exact_avg_halfup's ×10^6
-multiplier honest (ADVICE r10: scale > 6 made A non-integral and the
-DECIMAL(38,0) cast silently rounded).
+corpus slice, and (b) the guard that limits exact_avg_halfup to the input
+scales 0–8 its boundary tests pin on both engines.
 """
 
 from __future__ import annotations
@@ -31,11 +30,12 @@ from data_ingestion_api_system_spark.operators.dedup import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_exact_avg_halfup_rejects_scale_over_6():
-    with pytest.raises(ValueError, match="scale <= 6"):
-        exact_avg_halfup("x", scale=7)
-    with pytest.raises(ValueError, match="scale <= 6"):
-        sql_exact_avg_halfup("x", scale=7)
+def test_exact_avg_halfup_rejects_scale_over_8():
+    for scale in (9, -1):
+        with pytest.raises(ValueError, match="scale <= 8"):
+            exact_avg_halfup("x", scale=scale)
+        with pytest.raises(ValueError, match="scale <= 8"):
+            sql_exact_avg_halfup("x", scale=scale)
 
 
 def test_exact_avg_halfup_scale_6_still_integral(spark):
