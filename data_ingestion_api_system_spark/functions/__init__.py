@@ -26,6 +26,16 @@ DuckDB (whose ``//`` on DECIMAL operands divides exactly instead). The
 abs() is load-bearing: Spark's ``div`` truncates toward zero while
 DuckDB's ``//`` floors, and on nonnegative operands the two agree.
 
+Vector cosines follow one rule on both engines (:func:`vec_norm`,
+:func:`cosine` / :func:`sql_norm`, :func:`sql_dot`): dot products and
+norms are sequential left-to-right folds over the same element order
+(``aggregate`` over ``zip_with``/``transform`` in Spark,
+``list_sum(list_transform(range(...)))`` in DuckDB), so the unrounded
+cosine is bit-identical across engines and each site rounds it its own
+way. Each vector's norm is computed once, in the projection that owns the
+vector (or the centroid struct that carries it), and pair projections
+only fold the dot product.
+
 This also matters at scale: decimal aggregation is still JVM-side,
 codegen-friendly, and map-side-combinable; it costs a few cycles per row
 but keeps results stable under AQE re-partitioning — a real reproducibility
@@ -150,6 +160,43 @@ def charge_dec() -> Column:
 
 
 SQL_CHARGE_DEC = f"{SQL_REVENUE_DEC} * (1 + CAST(l_tax AS DECIMAL(4,2)))"
+
+
+DIMS = 64  # embedding width (TESTDATA.md)
+
+
+def _fold_sum(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def vec_norm(v: Column | str) -> Column:
+    """L2 norm of a double array, the squares folded left to right.
+    A Column, so it also works on a lambda variable. DuckDB twin:
+    :func:`sql_norm`."""
+    return F.sqrt(_fold_sum(F.transform(_col(v), lambda x: x * x)))
+
+
+def cosine(a: Column | str, b: Column | str, na: Column | str, nb: Column | str) -> Column:
+    """Unrounded cosine of double arrays ``a`` and ``b`` whose norms
+    (:func:`vec_norm`) are ``na`` and ``nb``: the products folded left to
+    right, divided by ``na * nb``. DuckDB twin: ``sql_dot(a, b) /
+    (sql_norm(a) * sql_norm(b))``."""
+    dot = _fold_sum(F.zip_with(_col(a), _col(b), lambda x, y: x * y))
+    return dot / (_col(na) * _col(nb))
+
+
+def sql_dot(a: str, b: str, n: int = DIMS) -> str:
+    """DuckDB dot product of the first ``n`` elements of lists ``a`` and
+    ``b`` (1-based), folded in element order."""
+    return (
+        f"list_sum(list_transform(range(1, {n + 1}),"
+        f" i -> {a}[CAST(i AS INT)] * {b}[CAST(i AS INT)]))"
+    )
+
+
+def sql_norm(col: str, n: int = DIMS) -> str:
+    """DuckDB twin of :func:`vec_norm` over the first ``n`` elements."""
+    return f"sqrt({sql_dot(col, col, n)})"
 
 
 def tokens(col: Column | str) -> Column:

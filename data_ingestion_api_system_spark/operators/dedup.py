@@ -21,8 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cosine, sql_dot, sql_norm
 from ..tables import load_table
 from . import pin, spread
+from .similarity import _SQL_EMB, _emb, _side
 
 SHINGLE_LEN = 4
 N_BANDS = 2
@@ -715,17 +717,10 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine is ~0.45) — semantic dedup, the complement of the lexical methods.
     Blocked by label here; at 100 TB the block key becomes an LSH bucket or
     IVF cell (see operators.similarity) so candidates stay bounded."""
-    e = spread(
-        load_table(spark, sf_dir, "embeddings").selectExpr(
-            "vec_id", "label", "cast(embedding as array<double>) as v"
-        )
-    )
-    a = e.select(F.col("vec_id").alias("vec_a"), "label", F.col("v").alias("av"))
-    b = e.select(F.col("vec_id").alias("vec_b"), F.col("label").alias("lb"), F.col("v").alias("bv"))
-    dot = F.expr("aggregate(zip_with(av, bv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-    na = F.expr("sqrt(aggregate(transform(av, x -> x * x), 0D, (acc, x) -> acc + x))")
-    nb = F.expr("sqrt(aggregate(transform(bv, x -> x * x), 0D, (acc, x) -> acc + x))")
-    cos = F.round(dot / (na * nb), 6)
+    e = _emb(spark, sf_dir)
+    a = e.select(F.col("vec_id").alias("vec_a"), "label", *_side("a"))
+    b = e.select(F.col("vec_id").alias("vec_b"), F.col("label").alias("lb"), *_side("b"))
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     return (
         a.join(b, (F.col("label") == F.col("lb")) & (F.col("vec_a") < F.col("vec_b")))
         .select("vec_a", "vec_b", "label", cos.alias("cosine"))
@@ -733,14 +728,11 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DOT64 = "list_sum(list_transform(range(1, 65), i -> av[CAST(i AS INT)] * bv[CAST(i AS INT)]))"
-_SQL_N64 = "sqrt(list_sum(list_transform(range(1, 65), i -> {0}[CAST(i AS INT)] * {0}[CAST(i AS INT)])))"
-
 _ORACLE_EMB_COSINE = f"""
-WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+WITH e AS ({_SQL_EMB}),
 pairs AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
-         ROUND({_SQL_DOT64} / ({_SQL_N64.format('av')} * {_SQL_N64.format('bv')}), 6) AS cosine
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine
   FROM (SELECT vec_id, label, v AS av FROM e) a
   JOIN (SELECT vec_id, label AS lb, v AS bv FROM e) b
     ON a.label = b.lb AND a.vec_id < b.vec_id
@@ -843,58 +835,48 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest quadratic — bounded because SemDeDup scales k with corpus size
     (k ~ n/cell_size keeps cells constant-sized), so pairs stay
     O(n · cell_size). The cluster key is the shuffle key; skewed cells
-    split under AQE. Each vector's norm is computed ONCE at assignment and
-    carried into the pair join, so the quadratic stage evaluates a single
-    interpreted array fold (the dot product) per pair instead of three.
+    split under AQE. Each vector's norm is computed ONCE (``_emb``'s nv)
+    and carried through assignment into the pair join, so the quadratic
+    stage evaluates a single interpreted array fold (the dot product) per
+    pair instead of three.
     Here k={SEMDEDUP_K} seeds from the first vectors keep both engines'
     codebooks identical; a production build iterates sim_kmeans_step
     first."""
-    e = spread(
-        load_table(spark, sf_dir, "embeddings").selectExpr(
-            "vec_id", "label", "cast(embedding as array<double>) as v"
-        )
-    )
-    nv = F.expr("sqrt(aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x))")
+    e = _emb(spark, sf_dir)
     cent = F.broadcast(
         e.filter(F.col("vec_id") < SEMDEDUP_K).select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("v").alias("bv"),
-            nv.alias("nb"),
+            F.col("vec_id").alias("centroid_id"), *_side("b")
         )
     )
-    dot = F.expr("aggregate(zip_with(v, bv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
     # argmax with the (c_cos DESC, centroid_id ASC) tiebreak as max_by over
     # struct(c_cos, -centroid_id) — the identical winner to the former
-    # row_number window, minus its n·k-row sort shuffle; v rides along under
-    # the same ordering (every candidate row of a vector carries the same v)
+    # row_number window, minus its n·k-row sort shuffle; v and nv ride along
+    # under the same ordering (every candidate row of a vector carries the
+    # same v and nv)
     ordk = F.struct(F.col("c_cos"), (-F.col("centroid_id")).alias("neg_cid"))
     assigned = pin(
         e.crossJoin(cent)
         .select(
             "vec_id",
             "v",
+            "nv",
             "centroid_id",
-            F.round(dot / (nv * F.col("nb")), 6).alias("c_cos"),
+            F.round(cosine("v", "bv", "nv", "nb"), 6).alias("c_cos"),
         )
         .groupBy("vec_id")
         .agg(
             F.max_by("centroid_id", ordk).alias("cluster"),
             F.max_by("v", ordk).alias("v"),
+            F.max_by("nv", ordk).alias("nv"),
         )
-        .withColumn("nv", nv)
     )
-    a = assigned.select(
-        F.col("vec_id").alias("vec_a"), F.col("cluster"),
-        F.col("v").alias("av"), F.col("nv").alias("na"),
-    )
+    a = assigned.select(F.col("vec_id").alias("vec_a"), "cluster", *_side("a"))
     b = assigned.select(
-        F.col("vec_id").alias("vec_b"), F.col("cluster").alias("cl_b"),
-        F.col("v").alias("bv"), F.col("nv").alias("nb"),
+        F.col("vec_id").alias("vec_b"), F.col("cluster").alias("cl_b"), *_side("b")
     )
-    pdot = F.expr("aggregate(zip_with(av, bv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
     near = (
         a.join(b, (F.col("cluster") == F.col("cl_b")) & (F.col("vec_a") < F.col("vec_b")))
-        .select("vec_b", F.round(pdot / (F.col("na") * F.col("nb")), 6).alias("cosine"))
+        .select("vec_b", F.round(cosine("av", "bv", "na", "nb"), 6).alias("cosine"))
         .filter(F.col("cosine") >= SEMDEDUP_TAU)
         .groupBy("vec_b")
         .agg(F.count("*").alias("n_near"), F.max("cosine").alias("max_cosine"))
@@ -909,15 +891,15 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ORACLE_SEMANTIC = f"""
-WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+WITH e AS ({_SQL_EMB}),
 cent AS (SELECT vec_id AS centroid_id, v AS bv FROM e WHERE vec_id < {SEMDEDUP_K}),
 assigned AS (
   SELECT vec_id, centroid_id AS cluster, v FROM (
     SELECT e.vec_id, c.centroid_id, e.v,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY ROUND({_SQL_DOT64.replace('av', 'v')} /
-                        ({_SQL_N64.format('v')} * {_SQL_N64.format('bv')}), 6) DESC,
+             ORDER BY ROUND({sql_dot('v', 'bv')} /
+                        ({sql_norm('v')} * {sql_norm('bv')}), 6) DESC,
                       c.centroid_id ASC) AS rk
     FROM e, cent c) WHERE rk = 1
 ),
@@ -925,7 +907,7 @@ near AS (
   SELECT b.vec_id AS vec_b, count(*) AS n_near, max(cosine) AS max_cosine
   FROM (
     SELECT a.vec_id AS va, b.vec_id,
-           ROUND({_SQL_DOT64} / ({_SQL_N64.format('av')} * {_SQL_N64.format('bv')}), 6) AS cosine
+           ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine
     FROM (SELECT vec_id, cluster, v AS av FROM assigned) a
     JOIN (SELECT vec_id, cluster AS cl_b, v AS bv FROM assigned) b
       ON a.cluster = b.cl_b AND a.vec_id < b.vec_id

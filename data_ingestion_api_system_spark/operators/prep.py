@@ -33,7 +33,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import exact_avg_halfup, exact_sum, sql_exact_avg_halfup, sql_exact_sum, tokens
+from ..functions import (
+    DIMS,
+    cosine,
+    exact_avg_halfup,
+    exact_sum,
+    sql_dot,
+    sql_exact_avg_halfup,
+    sql_exact_sum,
+    sql_norm,
+    tokens,
+    vec_norm,
+)
 from ..functions import sql_word_ngrams as _sql_word_ngrams
 from ..functions import word_ngrams as _word_ngrams
 from ..tables import load_table, register_views
@@ -210,60 +221,35 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow per-row argmax — the corpus NEVER shuffles for assignment — and
     the update is one partial-agg shuffle keyed by (centroid, dim). The
     whole loop is k·dims·rounds of exchanged state against an unmoved
-    corpus, which is exactly how distributed k-means must be laid out.
-
-    r14: the per-row argmax is literally that now — the k centroids
-    collect into ONE broadcast array row and each corpus row picks its
-    centroid via an ``array_max`` over (cosine, −centroid_id) structs,
-    a pure map. The former shape expanded corpus×k rows and ran a
-    ``row_number`` window partitioned by vec_id: a full corpus×k hash
-    exchange + sort PER ROUND that the docstring's own scale claim said
-    shouldn't exist. Cosines are the identical sequential double folds
-    (zip_with/aggregate), so assignments are bit-identical."""
+    corpus, which is exactly how distributed k-means must be laid out: each
+    round's k centroids, each with its norm, collect into ONE broadcast
+    array row and each corpus row picks its centroid with ``array_max``
+    over (cosine, −centroid_id) structs, a pure map."""
     from .similarity import _emb
 
-    e = spread(_emb(spark, sf_dir))
+    e = _emb(spark, sf_dir)
     cent = e.filter(F.col("vec_id") < K_TRAIN).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
     )
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    cn = vec_norm("cv")
+    # argmax by (cosine DESC, centroid_id ASC) == array_max over
+    # (cosine, −centroid_id, …) structs; −centroid_id is unique, so
+    # the trailing payload field never decides
+    best = F.array_max(
+        F.transform(
+            F.col("carr"),
+            lambda c: F.struct(
+                F.round(cosine("v", c["cv"], "nv", c["cn"]), 6).alias("cosine"),
+                (-c["centroid_id"]).alias("nc"),
+            ),
         )
-
-    def _norm(a):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(a, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
+    )
     assigned = None
     for _ in range(TRAIN_ROUNDS):
         carr = F.broadcast(
-            cent.agg(
-                F.collect_list(F.struct("centroid_id", "cv")).alias("carr")
-            )
-        )
-        # argmax by (cosine DESC, centroid_id ASC) == array_max over
-        # (cosine, −centroid_id, …) structs; −centroid_id is unique, so
-        # the trailing payload field never decides
-        best = F.array_max(
-            F.transform(
-                F.col("carr"),
-                lambda c: F.struct(
-                    F.round(
-                        _dot(F.col("v"), c["cv"])
-                        / (_norm(F.col("v")) * _norm(c["cv"])),
-                        6,
-                    ).alias("cosine"),
-                    (-c["centroid_id"]).alias("nc"),
-                ),
+            cent.select("centroid_id", "cv", cn.alias("cn")).agg(
+                F.collect_list(F.struct("centroid_id", "cv", "cn")).alias("carr")
             )
         )
         assigned = e.crossJoin(carr).select(
@@ -300,9 +286,8 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_kmeans_train() -> str:
     """Programmatically unrolled DuckDB twin of :func:`q_sim_kmeans_train` —
     same rounds, same integer-exact centroid arithmetic."""
-    from .similarity import _SQL_EMB, _sql_cv_dot, _sql_norm
+    from .similarity import _SQL_EMB
 
-    dims = 64
     parts = [
         f"e AS ({_SQL_EMB})",
         f"cent1 AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {K_TRAIN})",
@@ -311,7 +296,7 @@ def _sql_kmeans_train() -> str:
         parts.append(
             f"""scored{r} AS (
   SELECT e.vec_id, e.v, c.centroid_id,
-         ROUND({_sql_cv_dot('v', 'cv')} / ({_sql_norm('v')} * {_sql_norm('cv')}), 6) AS cosine
+         ROUND({sql_dot('v', 'cv')} / ({sql_norm('v')} * {sql_norm('cv')}), 6) AS cosine
   FROM e, cent{r} c
 )"""
         )
@@ -327,7 +312,7 @@ def _sql_kmeans_train() -> str:
             f"""upd{r} AS (
   SELECT centroid_id, i,
          {sql_exact_avg_halfup("v[CAST(i AS INT)]", 8, digits=8)} AS c
-  FROM asg{r}, (SELECT unnest(range(1, {dims + 1})) AS i) idxs
+  FROM asg{r}, (SELECT unnest(range(1, {DIMS + 1})) AS i) idxs
   GROUP BY centroid_id, i
 )"""
         )

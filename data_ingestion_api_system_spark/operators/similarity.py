@@ -1,11 +1,13 @@
 """Similarity search over ``embeddings`` (BASELINE.json north star:
 brute-force cosine top-k baseline + LSH-bucketed ANN as the scale path).
 
-Numeric determinism: dot products and norms are computed as *sequential
-left-to-right folds* over the same element order in both engines
-(``F.aggregate`` in Spark, ``list_sum(list_transform(...))`` in DuckDB) —
-verified bit-identical — and cosines are rounded to 6 decimals with a
-vec_id tiebreak before any top-k, so ordering can never diverge on ulps.
+Numeric determinism: every cosine is ``functions.cosine`` over norms from
+``functions.vec_norm`` (DuckDB: ``sql_dot``/``sql_norm``), one left-to-right
+fold rule on both engines, so unrounded cosines are bit-identical; they are
+rounded (6 decimals, micro-units or ppm) with a vec_id tiebreak before any
+top-k, so ordering can never diverge on ulps. ``_emb`` carries each
+vector's norm as ``nv``, and centroid arrays carry theirs, so a pair
+projection folds only the dot product.
 
 Scale: brute-force top-k against one query is a narrow map + TakeOrdered —
 fine at any corpus size for one query, O(n·d) work. For query *batches* at
@@ -17,15 +19,22 @@ build the identical hyperplanes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import exact_avg_halfup, sql_exact_avg_halfup
+from ..functions import (
+    DIMS,
+    cosine,
+    exact_avg_halfup,
+    sql_dot,
+    sql_exact_avg_halfup,
+    sql_norm,
+    vec_norm,
+)
 from ..tables import load_table
 from . import pin, spread
 
 N_LSH_BITS = 8
-DIMS = 64
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,27 +42,21 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold (dot products, LSH signatures) serially in one task. Spread is
     # applied ABOVE the cast projection: pushing a filter that references
     # the cast alias below a round-robin repartition trips a Catalyst
-    # binding error (ATTRIBUTE_NOT_FOUND v#n in [embedding#m]).
+    # binding error (ATTRIBUTE_NOT_FOUND v#n in [embedding#m]). nv is the
+    # vector's norm, computed once above the spread; pruning drops it
+    # wherever it is unused.
     return spread(
         load_table(spark, sf_dir, "embeddings").selectExpr(
             "vec_id", "label", "cast(embedding as array<double>) as v"
         )
-    )
+    ).withColumn("nv", vec_norm("v"))
 
 
-# Spark arrays are 0-based in SQL exprs; DuckDB lists are 1-based.
-_SPARK_DOT = "aggregate(zip_with(av, bv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-_SPARK_NORM = "sqrt(aggregate(transform({0}, x -> x * x), 0D, (acc, x) -> acc + x))"
-_SQL_DOT = (
-    f"list_sum(list_transform(range(1, {DIMS + 1}), i -> av[CAST(i AS INT)] * bv[CAST(i AS INT)]))"
-)
-
-
-def _sql_norm(col: str) -> str:
-    return (
-        f"sqrt(list_sum(list_transform(range(1, {DIMS + 1}),"
-        f" i -> {col}[CAST(i AS INT)] * {col}[CAST(i AS INT)])))"
-    )
+def _side(x: str) -> list[Column]:
+    """``_emb``'s vector and norm renamed for side ``x`` of a pair: ``v`` and
+    ``nv`` become ``{x}v`` and ``n{x}``, the names ``cosine("av", "bv",
+    "na", "nb")`` reads."""
+    return [F.col("v").alias(f"{x}v"), F.col("nv").alias(f"n{x}")]
 
 
 _SQL_EMB = "SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings"
@@ -64,15 +67,9 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact baseline every ANN variant is measured against. The query vector
     broadcasts (1 row); the corpus never shuffles."""
     e = _emb(spark, sf_dir)
-    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("v").alias("bv")))
-    cand = e.filter(F.col("vec_id") != 0).select(
-        "vec_id", "label", F.col("v").alias("av")
-    )
-    cos = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(*_side("b")))
+    cand = e.filter(F.col("vec_id") != 0).select("vec_id", "label", *_side("a"))
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     return (
         cand.crossJoin(q)
         .select("vec_id", "label", cos.alias("cosine"))
@@ -86,7 +83,7 @@ WITH e AS ({_SQL_EMB}),
 q AS (SELECT v AS bv FROM e WHERE vec_id = 0),
 cand AS (SELECT vec_id, label, v AS av FROM e WHERE vec_id <> 0)
 SELECT vec_id, label,
-       ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine
+       ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine
 FROM cand, q
 ORDER BY cosine DESC, vec_id ASC
 LIMIT 10
@@ -104,15 +101,11 @@ def q_sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     queries = F.broadcast(
         e.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("bv")
+            F.col("vec_id").alias("query_id"), *_side("b")
         )
     )
-    cand = e.select("vec_id", F.col("v").alias("av"))
-    cos = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cand = e.select("vec_id", *_side("a"))
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     scored = (
         cand.crossJoin(queries)
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -131,7 +124,7 @@ WITH e AS ({_SQL_EMB}),
 q AS (SELECT vec_id AS query_id, v AS bv FROM e WHERE vec_id < 8),
 scored AS (
   SELECT q.query_id, c.vec_id,
-         ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine
   FROM (SELECT vec_id, v AS av FROM e) c, q
   WHERE c.vec_id <> q.query_id
 )
@@ -151,13 +144,9 @@ def q_sim_intra_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with centroid-based or sampled estimation; this is the exact verifier.
     """
     e = _emb(spark, sf_dir)
-    a = e.select(F.col("vec_id").alias("ida"), F.col("label"), F.col("v").alias("av"))
-    b = e.select(F.col("vec_id").alias("idb"), F.col("label").alias("lb"), F.col("v").alias("bv"))
-    cos = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    a = e.select(F.col("vec_id").alias("ida"), "label", *_side("a"))
+    b = e.select(F.col("vec_id").alias("idb"), F.col("label").alias("lb"), *_side("b"))
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     pairs = (
         a.join(b, (F.col("label") == F.col("lb")) & (F.col("ida") < F.col("idb")))
         .select("label", cos.alias("cosine"))
@@ -174,7 +163,7 @@ _ORACLE_INTRA_LABEL = f"""
 WITH e AS ({_SQL_EMB}),
 pairs AS (
   SELECT a.label,
-         ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine
   FROM (SELECT vec_id AS ida, label, v AS av FROM e) a
   JOIN (SELECT vec_id AS idb, label AS lb, v AS bv FROM e) b
     ON a.label = b.lb AND a.ida < b.idb
@@ -220,21 +209,17 @@ def q_sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (independent hyperplane sets) for recall."""
     e = _emb(spark, sf_dir)
     sig = e.select(
-        "vec_id", "label", "v", F.expr(_spark_lsh_bucket("v")).alias("bucket")
+        "vec_id", "label", "v", "nv", F.expr(_spark_lsh_bucket("v")).alias("bucket")
     )
     q = F.broadcast(
         sig.filter(F.col("vec_id") == 0).select(
-            F.col("bucket").alias("qbucket"), F.col("v").alias("bv")
+            F.col("bucket").alias("qbucket"), *_side("b")
         )
     )
     cand = sig.filter(F.col("vec_id") != 0).select(
-        "vec_id", "label", F.col("v").alias("av"), "bucket"
+        "vec_id", "label", *_side("a"), "bucket"
     )
-    cos = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     return (
         cand.join(q, F.col("bucket") == F.col("qbucket"))
         .select("vec_id", "label", "bucket", cos.alias("cosine"))
@@ -249,7 +234,7 @@ sig AS (SELECT vec_id, label, v, {_sql_lsh_bucket('v')} AS bucket FROM e),
 q AS (SELECT bucket AS qbucket, v AS bv FROM sig WHERE vec_id = 0),
 cand AS (SELECT vec_id, label, v AS av, bucket FROM sig WHERE vec_id <> 0)
 SELECT vec_id, label, bucket,
-       ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine
+       ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine
 FROM cand, q
 WHERE bucket = qbucket
 ORDER BY cosine DESC, vec_id ASC
@@ -297,13 +282,9 @@ def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             F.sort_array(F.collect_list(F.struct("idx", "c"))), lambda s: s["c"]
         ).alias("cv")
-    )
-    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("v").alias("bv")))
-    cell_cos = F.round(
-        F.expr(_SPARK_DOT.replace("av", "cv"))
-        / (F.expr(_SPARK_NORM.format("cv")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    ).withColumn("nc", vec_norm("cv"))
+    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(*_side("b")))
+    cell_cos = F.round(cosine("cv", "bv", "nc", "nb"), 6)
     best_cell = F.broadcast(
         cent_arr.crossJoin(q)
         .select("label", cell_cos.alias("cell_cosine"))
@@ -311,22 +292,12 @@ def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
     )
     cand = e.filter(F.col("vec_id") != 0).join(best_cell, "label")
-    cos = F.round(
-        F.expr(_SPARK_DOT.replace("av", "v"))
-        / (F.expr(_SPARK_NORM.format("v")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cos = F.round(cosine("v", "bv", "nv", "nb"), 6)
     return (
         cand.crossJoin(q)
         .select("label", "cell_cosine", "vec_id", cos.alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(5)
-    )
-
-
-def _sql_cv_dot(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {DIMS + 1}), i -> {a}[CAST(i AS INT)] * {b}[CAST(i AS INT)]))"
     )
 
 
@@ -345,13 +316,13 @@ cent_arr AS (SELECT label, list(c ORDER BY i) AS cv FROM cent GROUP BY label),
 q AS (SELECT v AS bv FROM e WHERE vec_id = 0),
 best_cell AS (
   SELECT label,
-         ROUND({_sql_cv_dot('cv', 'bv')} / ({_sql_norm('cv')} * {_sql_norm('bv')}), 6) AS cell_cosine
+         ROUND({sql_dot('cv', 'bv')} / ({sql_norm('cv')} * {sql_norm('bv')}), 6) AS cell_cosine
   FROM cent_arr, q
   ORDER BY cell_cosine DESC, label ASC
   LIMIT 1
 )
 SELECT e.label, b.cell_cosine, e.vec_id,
-       ROUND({_sql_cv_dot('v', 'bv')} / ({_sql_norm('v')} * {_sql_norm('bv')}), 6) AS cosine
+       ROUND({sql_dot('v', 'bv')} / ({sql_norm('v')} * {sql_norm('bv')}), 6) AS cosine
 FROM e JOIN best_cell b USING (label), q
 WHERE e.vec_id <> 0
 ORDER BY cosine DESC, vec_id ASC
@@ -377,50 +348,22 @@ def q_sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated centroids (a driver loop of k-row exchanges, corpus never
     moves).
 
-    r15: the per-row argmax is literally that now, the same fold
-    ``sim_kmeans_train`` got in r14 — the k centroids collect into ONE
-    broadcast array row and each corpus row picks its centroid via
-    ``array_max`` over (cosine, −centroid_id) structs, a pure map. The
-    former shape expanded corpus×k rows and ranked them with a
-    ``row_number`` window partitioned by vec_id: a full corpus×k hash
-    exchange + sort that the docstring's own scale claim said shouldn't
-    exist. Cosines are the identical sequential double folds
-    (zip_with/aggregate), so assignments are bit-identical; argmax by
-    (cosine DESC, centroid_id ASC) == array_max over
-    (cosine, −centroid_id) structs — field-order struct comparison with
-    the unique −centroid_id tie-break."""
+    The k centroids (each with its norm) collect into ONE broadcast array
+    row and each corpus row picks its centroid with ``array_max`` over
+    (cosine, −centroid_id) structs, a pure map: field-order struct
+    comparison with the unique −centroid_id tie-break is the argmax by
+    (cosine DESC, centroid_id ASC)."""
     e = _emb(spark, sf_dir)
     carr = F.broadcast(
         e.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("v").alias("bv"))
-        .agg(F.collect_list(F.struct("centroid_id", "bv")).alias("carr"))
+        .select(F.col("vec_id").alias("centroid_id"), *_side("b"))
+        .agg(F.collect_list(F.struct("centroid_id", "bv", "nb")).alias("carr"))
     )
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def _norm(a):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(a, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
     best = F.array_max(
         F.transform(
             F.col("carr"),
             lambda c: F.struct(
-                F.round(
-                    _dot(F.col("v"), c["bv"])
-                    / (_norm(F.col("v")) * _norm(c["bv"])),
-                    6,
-                ).alias("cosine"),
+                F.round(cosine("v", c["bv"], "nv", c["nb"]), 6).alias("cosine"),
                 (-c["centroid_id"]).alias("nc"),
             ),
         )
@@ -443,7 +386,7 @@ WITH e AS ({_SQL_EMB}),
 cent AS (SELECT vec_id AS centroid_id, v AS bv FROM e WHERE vec_id < {N_CENTROIDS}),
 scored AS (
   SELECT e.vec_id, e.label, e.v, c.centroid_id,
-         ROUND({_sql_cv_dot('v', 'bv')} / ({_sql_norm('v')} * {_sql_norm('bv')}), 6) AS cosine
+         ROUND({sql_dot('v', 'bv')} / ({sql_norm('v')} * {sql_norm('bv')}), 6) AS cosine
   FROM e, cent c
 ),
 assigned AS (
@@ -551,14 +494,10 @@ def q_sim_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     cent = F.broadcast(
         e.filter(F.col("vec_id") < N_CENTROIDS).select(
-            F.col("vec_id").alias("centroid_id"), F.col("v").alias("bv")
+            F.col("vec_id").alias("centroid_id"), *_side("b")
         )
     )
-    cos = F.round(
-        F.expr(_SPARK_DOT.replace("av", "v"))
-        / (F.expr(_SPARK_NORM.format("v")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cos = F.round(cosine("v", "bv", "nv", "nb"), 6)
     scored = e.crossJoin(cent).select(
         "vec_id", "label", "centroid_id", cos.alias("cosine")
     )
@@ -601,7 +540,7 @@ WITH e AS ({_SQL_EMB}),
 cent AS (SELECT vec_id AS centroid_id, v AS bv FROM e WHERE vec_id < {N_CENTROIDS}),
 scored AS (
   SELECT e.vec_id, e.label, c.centroid_id,
-         ROUND({_sql_cv_dot('v', 'bv')} / ({_sql_norm('v')} * {_sql_norm('bv')}), 6) AS cosine
+         ROUND({sql_dot('v', 'bv')} / ({sql_norm('v')} * {sql_norm('bv')}), 6) AS cosine
   FROM e, cent c
 ),
 assigned AS (
@@ -976,22 +915,20 @@ def q_sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged — the per-query partitions are 8, so the window shuffle is
     trivially small after the WindowGroupLimit partial."""
     e = _emb(spark, sf_dir)
-    sig = e.select("vec_id", "v", F.expr(_spark_lsh_bucket("v")).alias("bucket"))
+    sig = e.select(
+        "vec_id", "v", "nv", F.expr(_spark_lsh_bucket("v")).alias("bucket")
+    )
     q = F.broadcast(
         sig.filter(F.col("vec_id") < RECALL_QUERIES).select(
             F.col("vec_id").alias("query_id"),
-            F.col("v").alias("bv"),
+            *_side("b"),
             F.col("bucket").alias("qbucket"),
         )
     )
     cand = sig.filter(F.col("vec_id") >= RECALL_QUERIES).select(
-        "vec_id", F.col("v").alias("av"), "bucket"
+        "vec_id", *_side("a"), "bucket"
     )
-    cos = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     scored = cand.crossJoin(q).select(
         "query_id",
         "vec_id",
@@ -1033,7 +970,7 @@ q AS (SELECT vec_id AS query_id, v AS bv, bucket AS qbucket
 cand AS (SELECT vec_id, v AS av, bucket FROM sig WHERE vec_id >= {RECALL_QUERIES}),
 scored AS (
   SELECT query_id, vec_id,
-         ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine,
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine,
          bucket = qbucket AS in_bucket
   FROM cand, q
 ),
@@ -1068,6 +1005,26 @@ LEFT JOIN hits USING (query_id)
 MATRYOSHKA_PREFIX = 16  # truncated leading dimensions kept by the cheap index
 
 
+def _matryoshka_sides(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The broadcast query batch (query_id, bv, nb, pbv, pnb) and the
+    candidates (vec_id, av, na, pav, pna): each vector with its
+    {MATRYOSHKA_PREFIX}-dim prefix and both norms, computed once per
+    vector."""
+    pre = F.slice("v", 1, MATRYOSHKA_PREFIX)
+    pn = vec_norm(pre)
+
+    def side(x: str) -> list[Column]:
+        return [*_side(x), pre.alias(f"p{x}v"), pn.alias(f"pn{x}")]
+
+    q = F.broadcast(
+        e.filter(F.col("vec_id") < RECALL_QUERIES).select(
+            F.col("vec_id").alias("query_id"), *side("b")
+        )
+    )
+    cand = e.filter(F.col("vec_id") >= RECALL_QUERIES).select("vec_id", *side("a"))
+    return q, cand
+
+
 def q_sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Truncated-dimension retrieval evaluation in the Matryoshka mold
     (Kusupati et al. 2022, public paper): rank the corpus by cosine over
@@ -1087,29 +1044,9 @@ def q_sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id tiebreak (module determinism discipline), so both engines rank
     identically."""
     e = _emb(spark, sf_dir)
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < RECALL_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("bv")
-        )
-    )
-    cand = e.filter(F.col("vec_id") >= RECALL_QUERIES).select(
-        "vec_id", F.col("v").alias("av")
-    )
-    cos_full = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
-    p = MATRYOSHKA_PREFIX
-    pav, pbv = f"slice(av, 1, {p})", f"slice(bv, 1, {p})"
-    cos_trunc = F.round(
-        F.expr(_SPARK_DOT.replace("av", pav).replace("bv", pbv))
-        / (
-            F.expr(_SPARK_NORM.format(pav))
-            * F.expr(_SPARK_NORM.format(pbv))
-        ),
-        6,
-    )
+    q, cand = _matryoshka_sides(e)
+    cos_full = F.round(cosine("av", "bv", "na", "nb"), 6)
+    cos_trunc = F.round(cosine("pav", "pbv", "pna", "pnb"), 6)
     scored = cand.crossJoin(q).select(
         "query_id",
         "vec_id",
@@ -1142,30 +1079,16 @@ def q_sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_prefix_dot(n: int) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {n + 1}),"
-        f" i -> av[CAST(i AS INT)] * bv[CAST(i AS INT)]))"
-    )
-
-
-def _sql_prefix_norm(col: str, n: int) -> str:
-    return (
-        f"sqrt(list_sum(list_transform(range(1, {n + 1}),"
-        f" i -> {col}[CAST(i AS INT)] * {col}[CAST(i AS INT)])))"
-    )
-
-
 _ORACLE_MATRYOSHKA = f"""
 WITH e AS ({_SQL_EMB}),
 q AS (SELECT vec_id AS query_id, v AS bv FROM e WHERE vec_id < {RECALL_QUERIES}),
 cand AS (SELECT vec_id, v AS av FROM e WHERE vec_id >= {RECALL_QUERIES}),
 scored AS (
   SELECT query_id, vec_id,
-         ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine,
-         ROUND({_sql_prefix_dot(MATRYOSHKA_PREFIX)}
-               / ({_sql_prefix_norm('av', MATRYOSHKA_PREFIX)}
-                  * {_sql_prefix_norm('bv', MATRYOSHKA_PREFIX)}), 6) AS t_cosine
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine,
+         ROUND({sql_dot('av', 'bv', MATRYOSHKA_PREFIX)}
+               / ({sql_norm('av', MATRYOSHKA_PREFIX)}
+                  * {sql_norm('bv', MATRYOSHKA_PREFIX)}), 6) AS t_cosine
   FROM cand, q
 ),
 fulls AS (
@@ -1234,26 +1157,9 @@ def q_sim_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is metadata-scale — and the fused ranking is a third
     WindowGroupLimit window over ≤2·pool rows per query."""
     e = _emb(spark, sf_dir)
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < RECALL_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("bv")
-        )
-    )
-    cand = e.filter(F.col("vec_id") >= RECALL_QUERIES).select(
-        "vec_id", F.col("v").alias("av")
-    )
-    cos_full = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
-    p = MATRYOSHKA_PREFIX
-    pav, pbv = f"slice(av, 1, {p})", f"slice(bv, 1, {p})"
-    cos_trunc = F.round(
-        F.expr(_SPARK_DOT.replace("av", pav).replace("bv", pbv))
-        / (F.expr(_SPARK_NORM.format(pav)) * F.expr(_SPARK_NORM.format(pbv))),
-        6,
-    )
+    q, cand = _matryoshka_sides(e)
+    cos_full = F.round(cosine("av", "bv", "na", "nb"), 6)
+    cos_trunc = F.round(cosine("pav", "pbv", "pna", "pnb"), 6)
     from pyspark.sql import Window
 
     w_full = Window.partitionBy("query_id").orderBy(
@@ -1309,10 +1215,10 @@ q AS (SELECT vec_id AS query_id, v AS bv FROM e WHERE vec_id < {RECALL_QUERIES})
 cand AS (SELECT vec_id, v AS av FROM e WHERE vec_id >= {RECALL_QUERIES}),
 scored AS (
   SELECT query_id, vec_id,
-         ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine,
-         ROUND({_sql_prefix_dot(MATRYOSHKA_PREFIX)}
-               / ({_sql_prefix_norm('av', MATRYOSHKA_PREFIX)}
-                  * {_sql_prefix_norm('bv', MATRYOSHKA_PREFIX)}), 6) AS t_cosine
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine,
+         ROUND({sql_dot('av', 'bv', MATRYOSHKA_PREFIX)}
+               / ({sql_norm('av', MATRYOSHKA_PREFIX)}
+                  * {sql_norm('bv', MATRYOSHKA_PREFIX)}), 6) AS t_cosine
   FROM cand, q
 ),
 ranked AS (
@@ -1488,22 +1394,20 @@ def q_sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics. At 100 TB the eval runs over a fixed probe sample; the
     per-query window partitions stay 8 regardless of corpus size."""
     e = _emb(spark, sf_dir)
-    sig = e.select("vec_id", "v", F.expr(_spark_lsh_bucket("v")).alias("bucket"))
+    sig = e.select(
+        "vec_id", "v", "nv", F.expr(_spark_lsh_bucket("v")).alias("bucket")
+    )
     q = F.broadcast(
         sig.filter(F.col("vec_id") < RECALL_QUERIES).select(
             F.col("vec_id").alias("query_id"),
-            F.col("v").alias("bv"),
+            *_side("b"),
             F.col("bucket").alias("qbucket"),
         )
     )
     cand = sig.filter(F.col("vec_id") >= RECALL_QUERIES).select(
-        "vec_id", F.col("v").alias("av"), "bucket"
+        "vec_id", *_side("a"), "bucket"
     )
-    cos = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     scored = cand.crossJoin(q).select(
         "query_id",
         "vec_id",
@@ -1546,7 +1450,7 @@ q AS (SELECT vec_id AS query_id, v AS bv, bucket AS qbucket
 cand AS (SELECT vec_id, v AS av, bucket FROM sig WHERE vec_id >= {RECALL_QUERIES}),
 scored AS (
   SELECT query_id, vec_id,
-         ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine,
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine,
          bucket = qbucket AS in_bucket
   FROM cand, q
 ),
@@ -1592,17 +1496,11 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") < 8).select(
             F.col("vec_id").alias("anchor_id"),
             F.col("label").alias("anchor_label"),
-            F.col("v").alias("bv"),
+            *_side("b"),
         )
     )
-    cand = e.select(
-        "vec_id", F.col("label").alias("cand_label"), F.col("v").alias("av")
-    )
-    cos = F.round(
-        F.expr(_SPARK_DOT)
-        / (F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cand = e.select("vec_id", F.col("label").alias("cand_label"), *_side("a"))
+    cos = F.round(cosine("av", "bv", "na", "nb"), 6)
     scored = (
         cand.crossJoin(anchors)
         .filter(F.col("cand_label") != F.col("anchor_label"))
@@ -1624,7 +1522,7 @@ a AS (SELECT vec_id AS anchor_id, label AS anchor_label, v AS bv
       FROM e WHERE vec_id < 8),
 scored AS (
   SELECT a.anchor_id, a.anchor_label, c.vec_id, c.label AS cand_label,
-         ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6) AS cosine
+         ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6) AS cosine
   FROM (SELECT vec_id, label, v AS av FROM e) c, a
   WHERE c.label <> a.anchor_label
 )
@@ -1656,13 +1554,9 @@ def q_sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)
-    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("v").alias("bv")))
+    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(*_side("b")))
     corpus = e.filter(F.col("vec_id") != 0)
-    cos = F.round(
-        F.expr(_SPARK_DOT.replace("av", "v"))
-        / (F.expr(_SPARK_NORM.format("v")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    cos = F.round(cosine("v", "bv", "nv", "nb"), 6)
     scored = pin(
         corpus.crossJoin(q).select("vec_id", "label", cos.alias("cosine"))
     )
@@ -1679,12 +1573,8 @@ def q_sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             F.sort_array(F.collect_list(F.struct("idx", "c"))), lambda s: s["c"]
         ).alias("cv")
-    )
-    cell_cos = F.round(
-        F.expr(_SPARK_DOT.replace("av", "cv"))
-        / (F.expr(_SPARK_NORM.format("cv")) * F.expr(_SPARK_NORM.format("bv"))),
-        6,
-    )
+    ).withColumn("nc", vec_norm("cv"))
+    cell_cos = F.round(cosine("cv", "bv", "nc", "nb"), 6)
     cells = cent_arr.crossJoin(q).select("label", cell_cos.alias("cell_cosine"))
     ca = cells.select(F.col("label").alias("la"), F.col("cell_cosine").alias("sa"))
     cb = cells.select(F.col("label").alias("lb"), F.col("cell_cosine").alias("sb"))
@@ -1745,7 +1635,7 @@ WITH e AS ({_SQL_EMB}),
 q AS (SELECT v AS bv FROM e WHERE vec_id = 0),
 scored AS (
   SELECT vec_id, label,
-         ROUND({_SQL_DOT.replace('av', 'v')} / ({_sql_norm('v')} * {_sql_norm('bv')}), 6)
+         ROUND({sql_dot('v', 'bv')} / ({sql_norm('v')} * {sql_norm('bv')}), 6)
            AS cosine
   FROM e, q WHERE vec_id <> 0
 ),
@@ -1765,7 +1655,7 @@ cent AS (
 cent_arr AS (SELECT label, list(c ORDER BY i) AS cv FROM cent GROUP BY label),
 cells AS (
   SELECT label,
-         ROUND({_SQL_DOT.replace('av', 'cv').replace('bv', 'bv')} / ({_sql_norm('cv')} * {_sql_norm('bv')}), 6)
+         ROUND({sql_dot('cv', 'bv')} / ({sql_norm('cv')} * {sql_norm('bv')}), 6)
            AS cell_cosine
   FROM cent_arr, q
 ),
@@ -1832,13 +1722,11 @@ _MMR_LAM_DIV = 3  # 1−λ (×10)
 
 
 def _cos_ppm_expr() -> F.Column:
-    """Integer-ppm cosine between columns av and bv: round(cos, 6) →
-    DECIMAL(10,6) → ×1e6 BIGINT. The double→decimal cast renders the same
-    6-dec value in both engines (the proven exactness bridge), so ppm
-    scores join/compare exactly."""
-    cos = F.expr(_SPARK_DOT) / (
-        F.expr(_SPARK_NORM.format("av")) * F.expr(_SPARK_NORM.format("bv"))
-    )
+    """Integer-ppm cosine between columns av and bv (norms na, nb):
+    round(cos, 6) → DECIMAL(10,6) → ×1e6 BIGINT. The double→decimal cast
+    renders the same 6-dec value in both engines (the proven exactness
+    bridge), so ppm scores join/compare exactly."""
+    cos = cosine("av", "bv", "na", "nb")
     return (F.round(cos, 6).cast("decimal(10,6)") * 1000000).cast("bigint")
 
 
@@ -1864,27 +1752,25 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect either way. Ties break on vec_id everywhere, so the pick
     sequence is unique."""
     e = _emb(spark, sf_dir)
-    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("v").alias("bv")))
+    q = F.broadcast(e.filter(F.col("vec_id") == 0).select(*_side("b")))
     pool = pin(
         e.filter(F.col("vec_id") != 0)
-        .select("vec_id", "label", F.col("v").alias("av"))
+        .select("vec_id", "label", *_side("a"))
         .crossJoin(q)
-        .select("vec_id", "label", "av", _cos_ppm_expr().alias("rel_ppm"))
+        .select("vec_id", "label", "av", "na", _cos_ppm_expr().alias("rel_ppm"))
         .orderBy(F.desc("rel_ppm"), F.asc("vec_id"))
         .limit(MMR_POOL)
     )
     pairs = (
-        pool.select(F.col("vec_id").alias("a_id"), F.col("av").alias("pa"))
+        pool.select(F.col("vec_id").alias("a_id"), "av", "na")
         .crossJoin(
-            pool.select(F.col("vec_id").alias("b_id"), F.col("av").alias("pb"))
+            pool.select(
+                F.col("vec_id").alias("b_id"),
+                F.col("av").alias("bv"),
+                F.col("na").alias("nb"),
+            )
         )
         .filter(F.col("a_id") != F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            F.col("pa").alias("av"),
-            F.col("pb").alias("bv"),
-        )
         .select("a_id", "b_id", _cos_ppm_expr().alias("sim_ppm"))
     )
     # Collect the metadata-sized pool (12 rows) and pair table (132 rows)
@@ -2002,7 +1888,7 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_cos_ppm() -> str:
     return (
-        f"CAST(CAST(ROUND({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')}), 6)"
+        f"CAST(CAST(ROUND({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')}), 6)"
         " AS DECIMAL(10,6)) * 1000000 AS BIGINT)"
     )
 
@@ -2102,18 +1988,15 @@ def q_sim_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") % 7 == 0).select(
             F.col("vec_id").alias("x_id"),
             F.col("label").alias("x_label"),
-            F.col("v").alias("bv"),
+            *_side("b"),
         )
     )
     ys = e.filter(F.col("vec_id") % 7 != 0).select(
         F.col("vec_id").alias("y_id"),
         F.col("label").alias("y_label"),
-        F.col("v").alias("av"),
+        *_side("a"),
     )
-    cos6 = F.expr(
-        f"CAST(round({_SPARK_DOT} / ({_SPARK_NORM.format('av')}"
-        f" * {_SPARK_NORM.format('bv')}) * 1000000, 0) AS BIGINT)"
-    )
+    cos6 = F.round(cosine("av", "bv", "na", "nb") * 1000000, 0).cast("bigint")
     pairs = pin(
         ys.crossJoin(xs).select(
             "x_id", "x_label", "y_id", "y_label", cos6.alias("cos6")
@@ -2195,7 +2078,7 @@ ys AS (SELECT vec_id AS y_id, label AS y_label, v AS av
        FROM e WHERE vec_id % 7 <> 0),
 pairs AS (
   SELECT x_id, x_label, y_id, y_label,
-         CAST(round({_SQL_DOT} / ({_sql_norm('av')} * {_sql_norm('bv')})
+         CAST(round({sql_dot('av', 'bv')} / ({sql_norm('av')} * {sql_norm('bv')})
                     * 1000000, 0) AS BIGINT) AS cos6
   FROM ys, xs
 ),

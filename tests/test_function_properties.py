@@ -152,3 +152,63 @@ def test_round_half_matches_duckdb_round_property(spark, mags, signs, k):
     df = spark.createDataFrame(list(enumerate(values)), "i long, v double")
     got = [r.h for r in df.orderBy("i").select(round_half("v", k).alias("h")).collect()]
     assert got == want, [(v, g, w) for v, g, w in zip(values, got, want) if g != w]
+
+
+_coord = st.builds(
+    lambda m, s: s * m,
+    st.floats(min_value=1e-3, max_value=1e3),
+    st.sampled_from([1.0, -1.0]),
+)
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data(), n=st.sampled_from(["dims", "prefix"]))
+def test_cosine_matches_duckdb_bit_for_bit(spark, data, n):
+    """Spark's ``vec_norm`` and ``cosine`` equal DuckDB's ``sql_norm`` and
+    ``sql_dot / (sql_norm * sql_norm)`` bit for bit on finite, non-zero
+    double vectors of the embedding width and of the Matryoshka prefix
+    width: the one fold rule every similarity oracle rests on."""
+    import duckdb
+    import pyarrow as pa
+
+    from data_ingestion_api_system_spark.functions import (
+        DIMS,
+        cosine,
+        sql_dot,
+        sql_norm,
+        vec_norm,
+    )
+    from data_ingestion_api_system_spark.operators.similarity import MATRYOSHKA_PREFIX
+
+    width = DIMS if n == "dims" else MATRYOSHKA_PREFIX
+    vec = st.lists(_coord, min_size=width, max_size=width)
+    pairs = data.draw(st.lists(st.tuples(vec, vec), min_size=1, max_size=8))
+    vals = pa.table(
+        {
+            "i": range(len(pairs)),
+            "a": [a for a, _ in pairs],
+            "b": [b for _, b in pairs],
+        }
+    )
+    con = duckdb.connect()
+    want = con.execute(
+        f"SELECT {sql_norm('a', width)}, {sql_norm('b', width)},"
+        f" {sql_dot('a', 'b', width)} / ({sql_norm('a', width)} * {sql_norm('b', width)})"
+        " FROM vals ORDER BY i"
+    ).fetchall()
+    con.close()
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "i long, a array<double>, b array<double>",
+    )
+    got = (
+        df.select("i", "a", "b", vec_norm("a").alias("na"), vec_norm("b").alias("nb"))
+        .select("i", "na", "nb", cosine("a", "b", "na", "nb").alias("cos"))
+        .orderBy("i")
+        .collect()
+    )
+    assert [(r.na, r.nb, r.cos) for r in got] == [tuple(w) for w in want]

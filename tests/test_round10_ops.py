@@ -320,3 +320,45 @@ def test_partition_invariance_sample(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+def test_invariance_record_written_only_by_full_registry_run(
+    spark, monkeypatch, tmp_path, capsys
+):
+    """A named-entry run of tools/invariance_check.py prints its verdicts
+    and writes nothing; only a run over the whole registry (here a
+    one-entry registry) writes INVARIANCE.json."""
+    import importlib.util
+    import json
+    from pathlib import Path
+
+    import __spark_entry__
+    from tests.conftest import SF_DIR
+
+    root = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "invariance_check", root / "tools" / "invariance_check.py"
+    )
+    invariance = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(invariance)
+    monkeypatch.setattr(invariance, "ROOT", tmp_path)
+    name = "sim_cosine_topk"
+    one = {name: __spark_entry__.queries()[name]}
+    monkeypatch.setattr(__spark_entry__, "queries", lambda: one)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)  # shared session
+    sf_dir = SF_DIR
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        monkeypatch.setattr("sys.argv", ["invariance_check.py", sf_dir, name])
+        assert invariance.main() == 0
+        assert f"OK   {name}" in capsys.readouterr().out
+        assert sorted(p.name for p in tmp_path.iterdir()) == []
+
+        monkeypatch.setattr("sys.argv", ["invariance_check.py", sf_dir])
+        assert invariance.main() == 0
+        assert sorted(p.name for p in tmp_path.iterdir()) == ["INVARIANCE.json"]
+        record = json.loads((tmp_path / "INVARIANCE.json").read_text())
+        assert (record["checked"], record["failures"]) == (1, {})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")

@@ -17,7 +17,10 @@ IDENTICAL. Any diff is a real nondeterminism bug at scale even when the
 single-config oracle gate passes.
 
 Usage: python tools/invariance_check.py [sf_dir] [query ...]
-Writes INVARIANCE.json; exit 1 on any mismatch.
+A run over the whole registry (no query named) writes INVARIANCE.json,
+checkpointing to INVARIANCE.partial.json as it goes; a run over named
+entries only prints its verdicts, so it never replaces the registry-wide
+record. Exit 1 on any mismatch.
 """
 
 from __future__ import annotations
@@ -57,7 +60,9 @@ def main() -> int:
     qs = entrymod.queries()
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
-    names = [a for a in args if "/" not in a] or list(qs)
+    names = [a for a in args if "/" not in a]
+    full = not names  # only a whole-registry run writes the record
+    names = names or list(qs)
 
     def make_record(checked: int) -> dict:
         return {
@@ -99,11 +104,13 @@ def main() -> int:
         # Written AFTER classification (ADVICE r10): the old finally-block
         # wrote the checkpoint before entry i's cols/rows mismatch was
         # recorded, so an interrupted sweep could drop its last failure.
-        partial.write_text(json.dumps(make_record(done + 1)))
+        if full:
+            partial.write_text(json.dumps(make_record(done + 1)))
 
-    record = make_record(len(names))
-    (ROOT / "INVARIANCE.json").write_text(json.dumps(record, indent=1))
-    partial.unlink(missing_ok=True)
+    if full:
+        record = make_record(len(names))
+        (ROOT / "INVARIANCE.json").write_text(json.dumps(record, indent=1))
+        partial.unlink(missing_ok=True)
     print(
         f"invariance: {len(names) - len(failures)}/{len(names)} identical "
         f"across {CONFIGS[0]} vs {CONFIGS[1]}"
