@@ -82,7 +82,7 @@ def q_io_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate only two partitions — certifying the full sink→source→prune
     cycle: the write lays out one directory per type (the Hive layout
     Delta/Iceberg/plain-Spark tables share), and the read-back filter
-    becomes a PartitionFilters entry (asserted by tools/audit_plans.py),
+    becomes a PartitionFilters entry (asserted by tools/plan_gate.py),
     i.e. 3/5 of the data is never opened. The aggregate must equal the
     oracle computed straight from the original table — any row lost,
     duplicated, or type-mangled by the roundtrip breaks the hash match.

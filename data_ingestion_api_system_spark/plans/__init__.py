@@ -1,5 +1,5 @@
-"""Physical-plan introspection: the library behind ``tools/audit_plans.py``
-and the bucketed-join tests.
+"""Physical-plan introspection: the library behind ``tools/plan_gate.py``
+and the plan-shape tests.
 
 Plan text is the ground truth for every scale claim this repo makes —
 pushdown reached the scan, the small side broadcast, no accidental
@@ -23,11 +23,10 @@ def formatted_plan(df: DataFrame) -> str:
 
 
 def check_plan(
-    df: DataFrame, must: list[str], must_not: list[str]
+    plan: str, must: list[str], must_not: list[str]
 ) -> tuple[list[str], list[str]]:
-    """Return (missing must-patterns, present forbidden-patterns) for the
-    DataFrame's physical plan; both empty = the plan is the one we want."""
-    plan = formatted_plan(df)
+    """Return (missing must-patterns, present forbidden-patterns) for a
+    formatted plan; both empty = the plan is the one we want."""
     missing = [p for p in must if not re.search(p, plan)]
     present = [p for p in must_not if re.search(p, plan)]
     return missing, present
@@ -41,12 +40,11 @@ _UNPART_WSPEC = re.compile(
 )
 
 
-def unpartitioned_windows(df: DataFrame) -> list[str]:
-    """The un-partitioned window specs in the DataFrame's physical plan.
+def unpartitioned_windows(plan: str) -> list[str]:
+    """The un-partitioned window specs in a formatted plan.
     A window with no partitionBy plans Exchange SinglePartition + a global
-    sort — the one shape that cannot scale out — so the audit asserts this
-    list is empty for every query except documented reduced-input
+    sort — the one shape that cannot scale out — so the plan gate asserts
+    this list is empty for every query except documented reduced-input
     exceptions (windows over an already-aggregated sketch of bounded row
     count, e.g. sketch_histogram_quantiles' 64-bin cumulative pass)."""
-    plan = formatted_plan(df)
     return [m.group(0) for m in _UNPART_WSPEC.finditer(plan)]

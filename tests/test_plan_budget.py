@@ -1,4 +1,4 @@
-"""The plan-budget gate (tools/plan_budget.py) counts physical nodes from
+"""The plan gate (tools/plan_gate.py) counts physical nodes from
 explain("formatted") detail headers — these tests pin the parser against
 both a synthetic plan string and a real plan built by the session, so a
 Spark upgrade that reshapes explain output breaks loudly here instead of
@@ -6,12 +6,20 @@ silently zeroing the committed budget."""
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
-from plan_budget import CONTEXT_KEYS, COST_KEYS, count_plan  # noqa: E402
+from plan_gate import (  # noqa: E402
+    CHECKS,
+    CONTEXT_KEYS,
+    COST_KEYS,
+    UNPARTITIONED_WINDOW_ALLOWLIST,
+    count_plan,
+    mask_run_ids,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -99,7 +107,7 @@ def test_committed_budget_covers_registry():
     """PLAN_BUDGET.json must name exactly the registry's entries — a new
     operator landing without a --record leaves it unguarded, and a stale
     name means the record predates a rename. (Counter VALUES are checked
-    by the round-end `plan_budget.py` compare, which builds real plans;
+    by the round-end `plan_gate.py` compare, which builds real plans;
     this pin is the cheap structural half that runs in every suite.)"""
     import json
 
@@ -116,9 +124,90 @@ def test_committed_budget_covers_registry():
         assert set(counters) == set(COST_KEYS) | set(CONTEXT_KEYS)
 
 
+def test_checks_and_allowlist_name_registry_entries():
+    """Every curated check and every window-guard exception names a registry
+    entry: a renamed entry would leave its check silently unrun, and a
+    stale exception would skew the guard's "plans checked" count."""
+    from data_ingestion_api_system_spark.operators import collect_queries
+
+    registry = set(collect_queries()[0])
+    assert set(CHECKS) <= registry, set(CHECKS) - registry
+    assert UNPARTITIONED_WINDOW_ALLOWLIST <= registry, (
+        UNPARTITIONED_WINDOW_ALLOWLIST - registry
+    )
+
+
+def test_budget_recorded_only_by_full_registry_run(
+    spark, monkeypatch, tmp_path, capsys
+):
+    """--record with entry names exits 2 and writes nothing; a run over the
+    whole registry (here a one-entry registry) records the budget, and a
+    named run then prints only that entry's verdicts."""
+    import json
+
+    import __spark_entry__
+    import plan_gate
+
+    budget = tmp_path / "PLAN_BUDGET.json"
+    monkeypatch.setattr(plan_gate, "BUDGET_PATH", budget)
+    name = "sim_cosine_topk"
+    monkeypatch.setattr("sys.argv", ["plan_gate.py", "--record", SF_DIR, name])
+    assert plan_gate.main() == 2
+    assert not budget.exists()
+
+    one = {name: __spark_entry__.queries()[name]}
+    monkeypatch.setattr(__spark_entry__, "queries", lambda: one)
+    monkeypatch.setattr(plan_gate, "get_spark", lambda app_name: spark)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)  # shared session
+    monkeypatch.setattr("sys.argv", ["plan_gate.py", "--record", SF_DIR])
+    assert plan_gate.main() == 0
+    assert json.loads(budget.read_text())["_meta"]["n"] == 1
+
+    capsys.readouterr()
+    monkeypatch.setattr("sys.argv", ["plan_gate.py", SF_DIR, name])
+    assert plan_gate.main() == 0
+    out = capsys.readouterr().out.splitlines()
+    assert out[0].startswith("plan-budget: 1 plans, 0 regressions")
+    assert out[1:] == [
+        f"OK   {name}",
+        "window-guard: 1 plans checked, 0 un-partitioned windows, "
+        "0 documented exceptions",
+    ]
+
+
+def test_mask_run_ids():
+    """Plan dumps mask the ids that differ between two builds of one plan:
+    exchange plan ids and localCheckpoint RDD numbers become N, and
+    expression ids are renumbered by first appearance, so the same plan
+    built after other work (every id shifted) masks to the same text."""
+    plan = (
+        "(1) Scan ExistingRDD\n"
+        "Arguments: [src#1339L, dst#1340L], MapPartitionsRDD[131] at "
+        "localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD\n"
+        "(2) Exchange\n"
+        "Arguments: hashpartitioning(dst#1340L, 32), ENSURE_REQUIREMENTS, "
+        "[plan_id=5043]\n"
+        "Results [2]: [src#1339L, count(1)#1338L AS n#1341L]\n"
+        "Arguments: [a#1339L], ParallelCollectionRDD[7] at readRDDFromFile\n"
+    )
+    masked = (
+        "(1) Scan ExistingRDD\n"
+        "Arguments: [src#1L, dst#2L], MapPartitionsRDD[N] at "
+        "localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD\n"
+        "(2) Exchange\n"
+        "Arguments: hashpartitioning(dst#2L, 32), ENSURE_REQUIREMENTS, "
+        "[plan_id=N]\n"
+        "Results [2]: [src#1L, count(1)#3L AS n#4L]\n"
+        "Arguments: [a#1L], ParallelCollectionRDD[7] at readRDDFromFile\n"
+    )
+    assert mask_run_ids(plan) == masked
+    shifted = re.sub(r"(?<=#)\d+", lambda m: str(int(m.group(0)) + 4), plan)
+    assert mask_run_ids(shifted.replace("5043", "5051")) == masked
+
+
 def test_count_entry_isolated_from_prior_cache_state(spark):
     """VERDICT r13 #1: the ledger's counts must not depend on which entries
-    were planned earlier in the same session. Before the count_entry
+    were planned earlier in the same session. Without the fresh_build
     isolation, a pin()-heavy earlier entry left persisted subtrees in the
     session cache; the cache manager substituted them into later plans and
     their InMemoryRelation build sections inflated the later entry's node
@@ -126,12 +215,17 @@ def test_count_entry_isolated_from_prior_cache_state(spark):
     shared session vs 1 fresh). Pin it: count the sweep, deliberately plan
     the pin-heavy sibling in between, count the sweep again — identical."""
     import __spark_entry__ as entrymod
-    from plan_budget import count_entry
+    from data_ingestion_api_system_spark.operators import fresh_build
+    from data_ingestion_api_system_spark.plans import formatted_plan
 
     q = entrymod.queries()
-    first = count_entry(spark, q["dedup_lsh_tuning_sweep"], SF_DIR)
-    count_entry(spark, q["dedup_lsh_verified"], SF_DIR)  # contamination source
-    second = count_entry(spark, q["dedup_lsh_tuning_sweep"], SF_DIR)
+
+    def count(name):
+        return count_plan(formatted_plan(fresh_build(spark, q[name], SF_DIR)))
+
+    first = count("dedup_lsh_tuning_sweep")
+    count("dedup_lsh_verified")  # contamination source
+    second = count("dedup_lsh_tuning_sweep")
     assert second == first
 
 

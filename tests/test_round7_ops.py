@@ -67,17 +67,16 @@ def test_global_ntile_deterministic_across_materializations(spark):
 
 def test_global_ntile_plan_has_no_window(spark):
     df = spark.createDataFrame([(i, i) for i in range(10)], "id long, v long")
-    out = global_ntile(df, ["v", "id"], 5, "t")
-    assert unpartitioned_windows(out) == []
+    plan = formatted_plan(global_ntile(df, ["v", "id"], 5, "t"))
+    assert unpartitioned_windows(plan) == []
     # stronger: the rank comes from the range layout + broadcast offsets,
     # not from any WindowExec at all
-    assert " Window " not in formatted_plan(out)
+    assert " Window " not in plan
 
 
 def test_rfm_segmentation_plan_is_scale_safe(spark):
-    df = q_events_rfm_segmentation(spark, SF_DIR)
-    assert unpartitioned_windows(df) == []
-    plan = formatted_plan(df)
+    plan = formatted_plan(q_events_rfm_segmentation(spark, SF_DIR))
+    assert unpartitioned_windows(plan) == []
     assert "Exchange SinglePartition" not in plan
     assert "CartesianProduct" not in plan
 

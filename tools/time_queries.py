@@ -3,8 +3,7 @@
 (``bench.time_entry``) for NAMED entries, for re-measuring a suspected
 regression or profiling one entry while optimizing it. Tables are
 pre-counted once so file-index/codegen startup doesn't land on the first
-entry. Records 1-min and 5-min load at start; ``quiet`` is true when both
-are below 1.5.
+entry. Records 1-min and 5-min load at start.
 
 Usage:
     python tools/time_queries.py [sf_dir] name [name ...]
@@ -32,7 +31,6 @@ def main() -> int:
         return 2
 
     load1, load5, _ = os.getloadavg()
-    quiet = load1 < 1.5 and load5 < 1.5
 
     import __spark_entry__ as entrymod
     from bench import time_entry
@@ -63,7 +61,6 @@ def main() -> int:
                 "timing": "warm_b3_m5",
                 "load_1m_at_start": round(load1, 2),
                 "load_5m_at_start": round(load5, 2),
-                "quiet": quiet,
             }
         )
     )
