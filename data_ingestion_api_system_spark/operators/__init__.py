@@ -130,9 +130,11 @@ def tune(spark: SparkSession) -> SparkSession:
 #     eviction is safe; what would NOT be safe is two independent cache-less
 #     materializations, which is exactly what persist-at-the-analyzed-plan
 #     prevents (both branches resolve to the same InMemoryRelation).
-# release_pins() frees executor storage from test teardown / between bench
+# A streaming memory sink's view (pin_view) holds its rows on the driver
+# the same way, so it is released by the same call.
+# release_pins() frees that storage from test teardown / between bench
 # queries — only call it after the consuming query has materialized.
-_PINNED: list[DataFrame] = []
+_PINNED: list[Callable[[], object]] = []
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -140,19 +142,27 @@ def pin(df: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
 
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINNED.append(df)
+    _PINNED.append(df.unpersist)
     return df
 
 
+def pin_view(spark: SparkSession, name: str) -> DataFrame:
+    """The temp view ``name`` (a memory sink's output), registered so
+    release_pins() drops it."""
+    _PINNED.append(lambda: spark.catalog.dropTempView(name))
+    return spark.table(name)
+
+
 def release_pins() -> None:
-    """Unpersist every pinned DataFrame (idempotent; tolerates a stopped
-    session). Call from test teardown or between benchmark queries, AFTER
-    consumers have materialized — a determinism pin released mid-query
-    would let two branches re-materialize independently."""
+    """Unpersist every pinned DataFrame and drop every pinned view
+    (idempotent; tolerates a stopped session). Call from test teardown or
+    between benchmark queries, AFTER consumers have materialized — a
+    determinism pin released mid-query would let two branches
+    re-materialize independently."""
     pinned, _PINNED[:] = _PINNED[:], []
-    for df in pinned:
+    for release in pinned:
         try:
-            df.unpersist()
+            release()
         except Exception:
             pass  # session already stopped / relation already evicted
 

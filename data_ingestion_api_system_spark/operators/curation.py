@@ -415,7 +415,7 @@ def q_text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             # try_divide: a threshold that flags nothing (or an all-negative
             # corpus) must yield NULL like the DuckDB oracle (x/0 -> NULL),
             # not the DIVIDE_BY_ZERO error Spark's default ANSI mode raises
-            # (caught by tests/test_round13_edges.py's single-class corpus)
+            # (caught by tests/test_ops_curation.py's single-class corpus)
             F.round(
                 F.try_divide(F.col("tp"), F.col("tp") + F.col("fp")), 6
             ).alias("precision"),
@@ -968,7 +968,7 @@ def q_prep_epoch_allocator(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose docs all tokenize to ZERO tokens must yield NULL epoch columns
     # like the DuckDB oracle (x/0 -> NULL), not the DIVIDE_BY_ZERO error
     # Spark's default ANSI mode raises (the text_quality_calibration
-    # lesson; pinned by tests/test_round13_edges.py's empty-text slice)
+    # lesson; pinned by tests/test_ops_curation.py's empty-text slice)
     with_alloc = slices.crossJoin(tot).select(
         "lang",
         "source",

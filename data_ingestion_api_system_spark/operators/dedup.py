@@ -31,10 +31,10 @@ N_BANDS = 2
 ROWS_PER_BAND = 4  # 8 minhashes total, banded (4,4): collision prob ≈ j^4
 JACCARD_THRESHOLD = 0.35
 
-# Length-band folded into every LSH band key (SCALE.md's named 100 TB risk:
-# a boilerplate-dominated band bucket collecting docs of wildly different
-# sizes). Base-4 geometric bands over the distinct-shingle count, computed
-# integer-exactly on both engines as (length(bin(n)) - 1) div 2 — i.e.
+# Length-band folded into every LSH band key (the 100 TB risk SCALE.md
+# names under Dedup: a boilerplate-dominated band bucket collecting docs of
+# wildly different sizes). Base-4 geometric bands over the distinct-shingle
+# count, computed integer-exactly on both engines as (length(bin(n)) - 1) div 2 — i.e.
 # floor(log4 n) via binary-digit count, no float log. Lossless for verified
 # output: J(A,B) >= t implies |A|/|B| >= t = 0.35 > 1/4, so |log4|A| -
 # log4|B|| < 1 and the floor bands differ by at most 1; each doc emits its
@@ -107,18 +107,18 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching clause, but it skips the array intersection for pairs that
     cannot clear the threshold.
 
-    Cost law (measured round 11, SCALE.md): this entry is OUTPUT-bound,
-    not plan-bound. At sf0.1, 64,725 of 314,594 in-block pairs (20.6%)
+    Cost law (SCALE.md, Dedup): this entry is OUTPUT-bound, not
+    plan-bound. At sf0.1, 64,725 of 314,594 in-block pairs (20.6%)
     clear jaccard ≥ 0.35 — the result set itself grows quadratically in
     block size (613 → 645 → 64,725 pairs across the three SFs, exactly
     100× over the top decade), so no lossless candidate prune can push
     the exponent below the output's own growth; the measured time
-    exponent (+1.18/decade) is already BELOW the output exponent
+    exponent (+0.84/decade) is already BELOW the output exponent
     (+2.0/decade). The size-ratio prune keeps 100% of pairs here (a
     50-char len_band bounds sizes too tightly for the ratio to bite) and
     prefix filtering generates 40× MORE candidates at t=0.35 — both
-    measured, see SCALE.md. The per-pair cost is minimized instead:
-    |A∪B| is derived arithmetically as n_a + n_b − |A∩B| (exact for
+    measured, see SCALE.md, Dedup. The per-pair cost is minimized
+    instead: |A∪B| is derived arithmetically as n_a + n_b − |A∩B| (exact for
     distinct arrays) so only ONE array op (the intersection) runs per
     pair, not two — ~20% faster at sf0.1, value-identical output.
     """
@@ -524,8 +524,13 @@ def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     rounds pay nothing — and unlike the former ``new = old`` set-equality
     probe it certifies the CURRENT round's output directly, so no extra
     confirmation round runs after the fixpoint is reached. Checkpoints
-    are lazy (``eager=False``): the count that drives the gate is the
-    job that materializes the round, halving the per-round job count.
+    are lazy (``eager=False``), so the count that drives the gate is also
+    the pass that writes the round's checkpointed blocks; an eager
+    checkpoint would run that last stage once more on its own. The
+    laziness does not defer the round's shuffles: under AQE the
+    ``localCheckpoint`` call plans its adaptive query and so runs every
+    shuffle stage of the round itself (9–10 jobs, 0.4–0.8 s per round on
+    the seed-900 sf0.01 tables), and the count then adds 2 jobs.
     Labels then read directly off the star edges: every non-root node
     has exactly one edge to its root; roots label themselves."""
     edges = (

@@ -79,7 +79,7 @@ def q_text_bigram_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned token arrays + index explode (bigrams built per output row
     # AFTER the Generate): bg feeds THREE consumers (c2, c1, the final
     # join), and Generate evaluates an expensive generator child lazily
-    # per consumer — see SCALE.md interpreter-boundary rules
+    # per consumer — see SCALE.md, Interpreter-boundary rules
     d = pin(docs.select("doc_id", "lang", lt.alias("lt")))
     bg = d.select(
         "doc_id",

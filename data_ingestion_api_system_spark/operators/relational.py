@@ -586,7 +586,7 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     required (see q_approx_distinct). Safe shape: the Expand carries only
     declarative aggregates (count) — never co-locate distinct aggregates
     with imperative buffers (HLL/percentile) in one agg (measured 130×
-    cliff, SCALE.md round-10 findings)."""
+    cliff, SCALE.md, Plan rules)."""
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")

@@ -659,8 +659,9 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile buffers get their own clean ObjectHashAggregate pass.
     Three 3-row results broadcast-join under one action: 2.1 s at sf0.1,
     exponent back in the flat band. Same discipline as the
-    layout_column_stats replan (SCALE.md): never co-locate distinct
-    aggregates with imperative-buffer aggregates in one Expand plan."""
+    layout_column_stats replan (SCALE.md, Plan rules): never co-locate
+    distinct aggregates with imperative-buffer aggregates in one Expand
+    plan."""
     li = load_table(spark, sf_dir, "lineitem")
 
     def distinct_counts(col: str, out: str) -> DataFrame:

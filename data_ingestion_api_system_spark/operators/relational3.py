@@ -969,8 +969,8 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     120 edges / 240 symmetrized rows regardless of corpus size — so the
     whole peel is metadata-sized state and folds into ONE expression over
     a collected adjacency array (the same bounded-domain fold rule as the
-    r14 MMR selection; SCALE.md records when the fold applies). The
-    former shape paid, per round, a pinned degree aggregate plus two
+    r14 MMR selection; SCALE.md's Plan rules record when the fold
+    applies). The former shape paid, per round, a pinned degree aggregate plus two
     broadcast semi-joins of the 240-row adjacency — 3 pin
     materialization jobs and 6 broadcast builds of distributed machinery
     over metadata. Each fold round recomputes per-node degrees with
@@ -1255,7 +1255,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(1e9 / ln(degree)) as BIGINT (the ``katz_x64`` convention) — so
     the aggregate is an exact integer sum, order-independent on both
     engines, instead of a float sum whose low bits depend on reduction
-    order. tests/test_round13b_ops.py proves the floor is 1-ulp-safe for
+    order. tests/test_ops_relational3.py proves the floor is 1-ulp-safe for
     every degree this graph can produce.
 
     Plan shape at 100 TB: the weight attaches to the probe side BEFORE

@@ -943,8 +943,8 @@ def q_text_cross_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
     # pin the built span ARRAYS before exploding: the exploded table feeds
     # two consumers (span counts + per-doc rollup), and Generate evaluates
-    # an expensive generator child lazily per consumer (see SCALE.md
-    # interpreter-boundary rules) — exploding from the cached arrays makes
+    # an expensive generator child lazily per consumer (see SCALE.md,
+    # Interpreter-boundary rules) — exploding from the cached arrays makes
     # the n-gram construction run once
     span_arrays = pin(
         docs.select(
@@ -1694,8 +1694,8 @@ def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-PMI_TOP_K collocations by PMI lift over the whole corpus.
 
     Plan shape at 100 TB: ONE tokenization pass (pinned lowercased token
-    arrays feed both the unigram and bigram branches — the
-    interpreter-boundary rule from SCALE.md), two map-side-combined hash
+    arrays feed both the unigram and bigram branches — SCALE.md,
+    Interpreter-boundary rules), two map-side-combined hash
     aggregations whose outputs are VOCABULARY-sized (≪ corpus), the
     support filter applied before any join (a-priori pruning, same as the
     basket miner), then two broadcast-friendly joins of the surviving
@@ -1806,10 +1806,10 @@ def q_text_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one embarrassingly-parallel projection computes every
     rule feature per document (the dominant-token count is a SINGLE
     sorted-run fold — one pass over the token array, per the one-fold
-    interpreter rule in SCALE.md), then one map-side-combinable aggregate
-    over ≤ |stages|×|langs| groups and a broadcast 1-row total for the
-    ppm share. No joins, no windows; documents never shuffle (only the
-    tiny per-group partials move)."""
+    rule in SCALE.md, Interpreter-boundary rules), then one
+    map-side-combinable aggregate over ≤ |stages|×|langs| groups and a
+    broadcast 1-row total for the ppm share. No joins, no windows;
+    documents never shuffle (only the tiny per-group partials move)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = tokens("text")
     n_tokens = F.size(toks)

@@ -48,23 +48,21 @@ def default_driver_memory() -> str:
 
 def get_spark(
     app_name: str = "data_ingestion_api_system_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the SparkSession.
+    """Build (or fetch) the SparkSession; ``extra_conf`` entries override
+    the defaults below.
 
-    ``shuffle_partitions`` defaults to the core count. On a
+    ``spark.sql.shuffle.partitions`` defaults to the core count. On a
     1000-executor cluster this should be sized so a post-shuffle partition is
     ~64-128 MB; AQE's ``coalescePartitions`` makes the initial value a ceiling
     rather than an exact choice, so erring high is safe.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

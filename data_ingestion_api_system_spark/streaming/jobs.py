@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import exact_sum, sql_exact_sum
+from ..operators import pin_view
 from ..tables import footer_schema, load_table, normalize, table_path
 
 
@@ -82,7 +83,8 @@ def _run_to_memory(
     agg: DataFrame, mode: str = "complete", shuffle_partitions: int | None = None
 ) -> DataFrame:
     """Execute a streaming aggregation to completion (availableNow) and
-    return the materialized result.
+    return the materialized result, pinned (``operators.pin_view``) so
+    ``release_pins()`` drops the sink's view and the rows it holds.
 
     ``shuffle_partitions`` (from :func:`_stream_shuffle_partitions`) is
     applied for the lifetime of the streaming query only — the state-store
@@ -106,7 +108,7 @@ def _run_to_memory(
     finally:
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    return pin_view(spark, name)
 
 
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,7 +1,11 @@
-"""Independent re-derivations for the round-7g operators — activity
-streaks (gaps-and-islands) and DAU/WAU engagement series. The oracle gate
-certifies Spark == DuckDB; these tests certify both against a THIRD pure
-Python computation.
+"""Tests of the event-analytics entries (operators/events.py): activity
+streaks and DAU/WAU stickiness.
+
+The oracle gate (tools/check_oracle.py) certifies Spark == DuckDB. These
+tests check both against a third computation over the same parquet (pure
+Python, pandas or numpy, with no SQL engine in the loop where the entry
+allows it), so a misunderstanding shared by the two SQL dialects cannot
+pass, and they pin the edges the generated tables may not exercise.
 """
 
 from __future__ import annotations
@@ -10,7 +14,6 @@ from collections import defaultdict
 from datetime import timedelta
 
 import duckdb
-import pytest
 
 from tests.conftest import SF_DIR
 
@@ -31,10 +34,6 @@ def _user_days(sf_dir: str):
         by_user[uid].add(d)
     return by_user
 
-
-# ---------------------------------------------------------------------------
-# events_streaks
-# ---------------------------------------------------------------------------
 
 def test_streaks_matches_pure_python(spark):
     out = {r.user_id: r for r in q_events_streaks(spark, SF_DIR).collect()}
@@ -58,10 +57,6 @@ def test_streaks_matches_pure_python(spark):
         assert r.latest_streak == streaks[-1]
 
 
-# ---------------------------------------------------------------------------
-# events_dau_wau
-# ---------------------------------------------------------------------------
-
 def test_dau_wau_matches_pure_python(spark):
     out = {r.day: r for r in q_events_dau_wau(spark, SF_DIR).collect()}
     by_user = _user_days(SF_DIR)
@@ -84,9 +79,3 @@ def test_dau_wau_matches_pure_python(spark):
         r = out[day]
         assert (r.dau, r.wau, r.stickiness_ppm) == (dau, wau, ppm)
         assert r.wau >= r.dau  # trailing window always covers the day itself
-
-
-if __name__ == "__main__":
-    import sys
-
-    sys.exit(pytest.main([__file__, "-q"]))

@@ -1,8 +1,8 @@
-"""Focused tests for the round-14 streaming state-partition derivation
-(_stream_shuffle_partitions) and the conf-scoping contract of
-_run_to_memory: the input-size-derived count must scale linearly with
-bytes, respect floor/cap, and never leak into the shared session's
-batch queries."""
+"""Focused tests for the streaming state-partition derivation
+(_stream_shuffle_partitions) and the contract of _run_to_memory: the
+input-size-derived count must scale linearly with bytes, respect
+floor/cap, and never leak into the shared session's batch queries; and
+each run's memory-sink view is dropped by release_pins()."""
 
 from __future__ import annotations
 
@@ -60,3 +60,20 @@ def test_run_to_memory_restores_session_conf(spark):
     out = _run_to_memory(agg, mode="complete", shuffle_partitions=1)
     assert out.count() > 0
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_release_pins_drops_memory_sink_views(spark):
+    from data_ingestion_api_system_spark.operators import release_pins
+
+    def sink_views():
+        return {
+            t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")
+        }
+
+    release_pins()
+    before = sink_views()
+    for _ in range(2):
+        assert jobs.q_streaming_dedup(spark, SF_DIR).count() > 0
+    assert len(sink_views() - before) == 2
+    release_pins()
+    assert sink_views() == set()

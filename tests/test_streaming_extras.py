@@ -16,22 +16,11 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from datetime import datetime, timezone
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-
-def _ts(minute: int, second: int = 0):
-    return datetime(2024, 1, 1, 0, minute, second, tzinfo=timezone.utc)
-
-
-@pytest.fixture()
-def stream_dir(tmp_path):
-    d = tmp_path / "stream"
-    d.mkdir()
-    return str(d)
+from tests.conftest import _ts
 
 
 def _write_batch(spark, tmp_path, stream_dir, name: str, rows, schema) -> None:

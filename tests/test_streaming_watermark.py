@@ -6,22 +6,11 @@ watermark drops events that arrive after their window's watermark passed.
 from __future__ import annotations
 
 import time
-from datetime import datetime, timezone
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-
-def _ts(minute: int, second: int = 0):
-    return datetime(2024, 1, 1, 0, minute, second, tzinfo=timezone.utc)
-
-
-@pytest.fixture()
-def stream_dir(tmp_path):
-    d = tmp_path / "stream"
-    d.mkdir()
-    return str(d)
+from tests.conftest import _ts
 
 
 def test_watermark_drops_late_events(spark, stream_dir, tmp_path):

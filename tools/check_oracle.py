@@ -20,6 +20,7 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from tool_args import split_sf_dir  # noqa: E402  (tools/ sibling)
 from data_ingestion_api_system_spark.tables import TABLE_NAMES as TABLES  # noqa: E402
 
 
@@ -50,13 +51,11 @@ def main() -> int:
     # Arrow settings) the way the DRIVER does, instead of the repo's
     # session factory — a driver-sim mode that catches any query depending
     # on get_spark()'s conf that the registry's operators.tune does not set.
-    # Round-9 pre-certification ran the full window AND all newborns this
-    # way (0 failures); keep running it on new cohorts before they meet
-    # the driver.
+    # Run it on every new entry before it meets the driver.
     args = [a for a in sys.argv[1:] if a != "--vanilla"]
     vanilla = "--vanilla" in sys.argv[1:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    sf_dir, names = split_sf_dir(args, "/root/testdata/sf0.01")
+    only = set(names)
 
     import __spark_entry__ as entrymod
 

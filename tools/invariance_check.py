@@ -36,6 +36,7 @@ sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "tools"))
 
 from check_oracle import normalize  # noqa: E402  (tools/ sibling)
+from tool_args import split_sf_dir  # noqa: E402
 
 CONFIGS = (
     # (shuffle partitions, files.maxPartitionBytes)
@@ -58,9 +59,7 @@ def main() -> int:
 
     spark = get_spark("invariance-check")
     qs = entrymod.queries()
-    args = sys.argv[1:]
-    sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
-    names = [a for a in args if "/" not in a]
+    sf_dir, names = split_sf_dir(sys.argv[1:], "/root/testdata/sf0.01")
     full = not names  # only a whole-registry run writes the record
     names = names or list(qs)
 

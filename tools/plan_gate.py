@@ -73,7 +73,6 @@ Usage:
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
 from pathlib import Path
@@ -81,6 +80,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tool_args import split_sf_dir  # noqa: E402  (tools/ sibling)
 from data_ingestion_api_system_spark.operators import (  # noqa: E402
     fresh_build,
     release_pins,
@@ -1045,8 +1045,7 @@ def main() -> int:
             return 2
         dump = (Path(args[i + 1]), args[i + 2])
         del args[i : i + 3]
-    sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else DEFAULT_SF_DIR
-    names = args
+    sf_dir, names = split_sf_dir(args, DEFAULT_SF_DIR)
     if record and names:
         print("--record writes the whole registry's budget: name no entries")
         return 2

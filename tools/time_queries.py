@@ -19,13 +19,11 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tool_args import split_sf_dir  # noqa: E402  (tools/ sibling)
+
 
 def main() -> int:
-    args = sys.argv[1:]
-    if args and os.path.isdir(args[0]):
-        sf_dir, names = args[0], args[1:]
-    else:
-        sf_dir, names = "/root/testdata/sf0.1", args
+    sf_dir, names = split_sf_dir(sys.argv[1:], "/root/testdata/sf0.1")
     if not names:
         print("usage: time_queries.py [sf_dir] name [name ...]")
         return 2
